@@ -210,8 +210,7 @@ class GraftSession(val spark: SparkSession) {
       seed: Long = 42L,
       persistPath: Option[String] = None): DataFrame = {
     val base = spark.table(baseName)
-    val sampled = StratifiedSampler.sample(base, qcs.map(expr), fraction,
-      reservoirSize, seed, preFilter = true, preFilterFactor = 2.0, rankCols = Nil)
+    val sampled = StratifiedSampler.sample(base, qcs, fraction, reservoirSize, seed)
     registerSample(name, baseName, base, sampled, qcs, fraction, reservoirSize,
       persistPath)
   }
@@ -255,9 +254,10 @@ class GraftSession(val spark: SparkSession) {
         // cache only avoids re-sampling on repeated queries
         sampled.persist()
       case None =>
-        // fraction 1.0: the "sample" is the base plus a broadcast-joined
-        // weight column — recomputing costs about as much as a cache hit
-        // and avoids materializing a full copy of the table
+        // fraction 1.0: the "sample" is a pure projection of the base (a
+        // sentinel weight column, no join, no extra scan) — recomputing
+        // costs about as much as a cache hit and avoids materializing a
+        // full copy of the table
         sampled
     }
     sampleDf.createOrReplaceTempView(name)
@@ -276,8 +276,8 @@ class GraftSession(val spark: SparkSession) {
     val name = state.resolveSample(rawName).getOrElse(
       throw new IllegalArgumentException(s"No sample table named $rawName"))
     val info = state.samples(name)
-    val sampled = StratifiedSampler.sample(df, info.qcs.map(expr), info.fraction,
-      info.reservoirSize, seed, preFilter = true, preFilterFactor = 2.0, rankCols = Nil)
+    val sampled = StratifiedSampler.sample(df, info.qcs, info.fraction,
+      info.reservoirSize, seed)
     val merged = info.persistPath match {
       case Some(path) =>
         // concurrent appends from two sessions serialize on the path lock —
@@ -808,9 +808,8 @@ class GraftSession(val spark: SparkSession) {
             GraftSession.assertStoreFence(spark, path)
             val fenceTag = GraftSession.heldFence(spark, path)
               .map(f => s".e${f.epoch}").getOrElse("")
-            val sampled = StratifiedSampler.sample(df, info.qcs.map(expr),
-              info.fraction, info.reservoirSize, seed, preFilter = true,
-              preFilterFactor = 2.0, rankCols = Nil)
+            val sampled = StratifiedSampler.sample(df, info.qcs,
+              info.fraction, info.reservoirSize, seed)
             val dir = new org.apache.hadoop.fs.Path(path)
             val fs = dir.getFileSystem(conf)
             // the sanitized name alone is NOT collision-free ('a.b' and
@@ -1015,18 +1014,26 @@ class GraftSession(val spark: SparkSession) {
       GraftSession.TopkMetaFile + ".tmp-" +
         java.util.UUID.randomUUID().toString.take(8))
     val metaOut = fs.create(metaTmp, true)
-    try props.store(metaOut, "graft topk registry") finally metaOut.close()
+    try {
+      props.store(metaOut, "graft topk registry")
+      metaOut.write((GraftSession.TopkMetaTrailer + "\n")
+        .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+    } finally metaOut.close()
     GraftSession.assertStoreFence(spark, path)
-    // ATOMIC replace: FileContext.rename(OVERWRITE) swaps the meta in one
-    // operation on local and HDFS filesystems. The previous delete→rename
-    // pair exposed a no-meta window — a concurrent reader (or a reloading
-    // appender in another process) catching it would see "no registry
-    // metadata" and could treat the store as empty, publishing without the
-    // other session's data (lost update)
+    // FileContext.rename(OVERWRITE) swaps the meta in one operation on
+    // HDFS; on the local file system it deletes the old meta and then
+    // renames. A writer killed between the two leaves only this complete
+    // temp copy, which readers then take as the meta
+    // ([[GraftSession.topkMetaPath]]) — never "no store", which would let
+    // a resumed writer re-create the table empty
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(
       fs.makeQualified(metaPath).toUri, conf)
     fc.rename(fs.makeQualified(metaTmp), fs.makeQualified(metaPath),
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    // temp metas of crashed (or fenced-out) publishes are superseded now
+    Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir,
+      GraftSession.TopkMetaFile + ".tmp-*"))).toSeq.flatten
+      .foreach(s => fs.delete(s.getPath, false))
     // retire snapshots two or more versions old (current-1 is kept so a
     // reader holding the previous pointer can still finish its attach)
     fs.listStatus(dir).foreach { s =>
@@ -1082,11 +1089,10 @@ class GraftSession(val spark: SparkSession) {
   private def attachTopKOnce(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path, name: String,
       path: String): graft.topk.TopKState = {
-    val metaPath = new org.apache.hadoop.fs.Path(dir, GraftSession.TopkMetaFile)
-    if (!fs.exists(metaPath)) {
+    val metaPath = GraftSession.topkMetaPath(path,
+      spark.sessionState.newHadoopConf()).getOrElse(
       throw new IllegalArgumentException(
-        s"No TopK registry metadata (${GraftSession.TopkMetaFile}) under $path")
-    }
+        s"No TopK registry metadata (${GraftSession.TopkMetaFile}) under $path"))
     val props = GraftSession.loadPropsTornFree(metaPath,
       spark.sessionState.newHadoopConf())
     import scala.jdk.CollectionConverters._
@@ -1364,8 +1370,7 @@ object GraftSession {
           confidence = opts.get("confidence").map(_.toDouble).getOrElse(0.95),
           reservoirSize = reservoirSize, seed = seed)
       case None =>
-        StratifiedSampler.sample(base, qcs.map(expr), fraction, reservoirSize,
-          seed, preFilter = true, preFilterFactor = 2.0, rankCols = Nil)
+        StratifiedSampler.sample(base, qcs, fraction, reservoirSize, seed)
     }
     (sampled, qcs, fraction, reservoirSize)
   }
@@ -1376,6 +1381,9 @@ object GraftSession {
    * so parquet readers ignore it. */
   val MetaFile = "_graft_sample.meta"
   val TopkMetaFile = "_graft_topk.meta"
+  /** Last line of every TopK meta [[GraftSession.saveTopK]] writes: a temp
+   * meta ending in it was written completely. */
+  private[graft] val TopkMetaTrailer = "#graft topk meta end"
   val TopkBinFile = "_graft_topk.bin"
   /** Versioned one-file snapshots (`_topk.snap.<n>` = spill view + bucket
    * bytes); `__snapversion` in the meta points at the current one. */
@@ -1398,12 +1406,44 @@ object GraftSession {
   /** Current published snapshot version of a path-backed TopK (None for a
    * fresh dir or a legacy two-file layout). */
   private[graft] def readTopkSnapVersion(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path, TopkMetaFile)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    val props = loadPropsTornFree(p, conf)
-    Option(props.getProperty("__snapversion")).map(_.toLong)
+      conf: org.apache.hadoop.conf.Configuration): Option[Long] =
+    topkMetaPath(path, conf).flatMap { p =>
+      Option(loadPropsTornFree(p, conf).getProperty("__snapversion")).map(_.toLong)
+    }
+
+  /**
+   * The TopK meta to read under `path`: `_graft_topk.meta`, or — when a
+   * publish was killed inside the local file system's delete→rename meta
+   * replace ([[GraftSession.saveTopK]]) — the newest complete temp meta
+   * (highest snapshot version, then fence). That temp copy was the publish
+   * in flight: its snapshot is already in place, so it IS the current
+   * state. None when the path holds no TopK store.
+   */
+  private[graft] def topkMetaPath(path: String,
+      conf: org.apache.hadoop.conf.Configuration)
+      : Option[org.apache.hadoop.fs.Path] = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val meta = new org.apache.hadoop.fs.Path(dir, TopkMetaFile)
+    val fs = dir.getFileSystem(conf)
+    if (fs.exists(meta) && fs.getFileStatus(meta).isFile) return Some(meta)
+    val temps = Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir,
+      TopkMetaFile + ".tmp-*"))).toSeq.flatten
+    temps.flatMap { st =>
+      val text =
+        try {
+          val in = fs.open(st.getPath)
+          try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.ISO_8859_1)
+          finally in.close()
+        } catch { case _: java.io.IOException => "" }
+      if (!text.linesIterator.toSeq.lastOption.contains(TopkMetaTrailer)) None
+      else {
+        val props = new java.util.Properties()
+        props.load(new java.io.StringReader(text))
+        Option(props.getProperty("__snapversion")).map { v =>
+          ((v.toLong, props.getProperty("__snapfence", "-1").toLong), st.getPath)
+        }
+      }
+    }.maxByOption(_._1).map(_._2)
   }
 
   /** Attach-retry predicate: a missing snapshot file (GC'd under a reader
@@ -1947,24 +1987,23 @@ object GraftSession {
 
   /** True when `path` holds persisted TopK registry metadata. */
   def topkMetaExists(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path, TopkMetaFile)
-    val fs = p.getFileSystem(conf)
-    fs.exists(p) && fs.getFileStatus(p).isFile
-  }
+      conf: org.apache.hadoop.conf.Configuration): Boolean =
+    topkMetaPath(path, conf).isDefined
 
   /** Persisted TopK registry metadata: (option map without `__`-internal
-   * keys, base-table name). For drift checks before a re-attach. The meta
-   * replace is atomic on local/HDFS ([[GraftSession.saveTopK]]), but object
-   * stores may still expose a brief not-found window mid-publish — retry
-   * it here since drift checks run OUTSIDE [[attachTopKTable]]'s loop. */
+   * keys, base-table name). For drift checks before a re-attach. A
+   * reader can catch the meta replace ([[GraftSession.saveTopK]]) between
+   * its delete and rename, or read a temp meta that the rename then moves
+   * away — retry the not-found here since drift checks run OUTSIDE
+   * [[attachTopKTable]]'s loop. */
   def readTopkMetaOptions(path: String,
       conf: org.apache.hadoop.conf.Configuration): (Map[String, String], String) = {
-    val p = new org.apache.hadoop.fs.Path(path, TopkMetaFile)
     var props: java.util.Properties = null
     var attempt = 0
     while (props == null) {
       attempt += 1
+      val p = topkMetaPath(path, conf)
+        .getOrElse(new org.apache.hadoop.fs.Path(path, TopkMetaFile))
       try props = loadPropsTornFree(p, conf)
       catch {
         case _: java.io.FileNotFoundException if attempt < 5 =>

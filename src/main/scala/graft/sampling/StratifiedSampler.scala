@@ -34,34 +34,39 @@ import org.apache.spark.sql.graft.{PackWeightage, Weightage}
  * design.
  *
  * Scale notes (100 TB): the rank is a per-stratum sort, so a single giant
- * stratum would land on one task. When `fraction` is small, `preFilter`
- * (default on) first computes per-stratum counts with a map-side-combined
+ * stratum would land on one task. When `fraction` is small (below 0.45),
+ * the sampler first computes per-stratum counts with a map-side-combined
  * `groupBy.count` (tiny shuffle), broadcasts them, and Bernoulli-prefilters
- * to ~`preFilterFactor × target + 50` rows by the same hash *before* the
- * window sort. The kept set is unchanged — the target-smallest hashes
- * survive any prefilter keeping all hashes below a threshold at ~margin× the
- * target quantile. The additive cushion covers tiny strata and the
+ * to ~`2 × target + 50` rows by the same hash *before* the window sort.
+ * The kept set is unchanged — the target-smallest hashes survive any
+ * prefilter keeping all hashes below a threshold at ~margin× the target
+ * quantile. The additive cushion covers tiny strata and the
  * multiplicative factor bounds the big-stratum shuffle at ~factor× the
  * sample size: a false cut needs Binomial(total, (f·t+50)/total) < t, i.e.
  * probability ≤ exp(−((f−1)t+50)²/(2(f·t+50))) ≤ e^−25 for every t ≥ 1 at
- * the default f = 2. AQE handles residual skew.
+ * f = 2. AQE handles residual skew.
+ *
+ * One plan per mode, chosen from the inputs alone:
+ *  - `fraction >= 1`: a zero-job projection with a sentinel weight;
+ *  - `fraction == 0`: a one-pass bounded-reservoir aggregate;
+ *  - `0 < fraction < 1`: counts + prefilter + exact rank, the rank sharded
+ *    by hash range when the input is large; at `fraction >= 0.45` the
+ *    prefilter cannot cut and a window count replaces it;
+ *  - error limit: per-stratum targets from the moments, then the same
+ *    prefilter + exact rank as the fraction mode.
  */
 object StratifiedSampler {
-
-  /** Options mirroring the reference's sample-table OPTIONS map. */
-  final case class Options(
-      qcs: Seq[String],
-      fraction: Double = 0.0,
-      reservoirSize: Int = 50,
-      seed: Long = 42L,
-      preFilter: Boolean = true,
-      preFilterFactor: Double = 2.0)
 
   final val WeightColumn: String = Weightage.WeightColumn
 
   private val K = "__graft_key__"
   private val R1 = "__graft_rank__"
   private val TOT = "__graft_total__"
+  private val TGT = "__graft_target__"
+
+  /** Prefilter cushion for small targets: keep ~`PreFilterFactor × target
+    * + 50` rows per stratum before the rank. */
+  private val PreFilterFactor = 2.0
 
   /** Above this per-stratum target, the Bernoulli prefilter cushion drops
     * from `factor × target` to `target + max(5% of target, 50)`: the
@@ -76,13 +81,52 @@ object StratifiedSampler {
 
   /** Full prefilter numerator (target + cushion), the ONE definition both
     * the driver-side and column-side threshold formulas use. */
-  private def cushioned(tgt: Long, factor: Double): Double =
+  private def cushioned(tgt: Long): Double =
     if (tgt >= CushionSwitch) tgt + math.max(math.ceil(tgt * 0.05), 50.0)
-    else tgt * factor + 50.0
+    else tgt * PreFilterFactor + 50.0
 
-  def sample(df: DataFrame, opts: Options): DataFrame =
-    sample(df, opts.qcs.map(expr), opts.fraction, opts.reservoirSize, opts.seed,
-      opts.preFilter, opts.preFilterFactor, rankCols = Nil)
+  private def keyHash: Column = pmod(hash(col(K)), lit(256)).cast("int")
+
+  /** Attach the packed weight and drop every helper column. */
+  private def packed(df: DataFrame, kept: Column, total: Column,
+      dataCols: Seq[Column]): DataFrame =
+    df.withColumn(WeightColumn, PackWeightage(kept, total, keyHash))
+      .select(dataCols :+ col(WeightColumn): _*)
+
+  /** Keep the `target` rows with the smallest R1 per stratum; the target
+    * is attached as TGT after the rank. */
+  private def ranked(df: DataFrame, target: Column): DataFrame =
+    df.withColumn("__graft_rn__",
+        row_number().over(Window.partitionBy(col(K)).orderBy(col(R1))))
+      .withColumn(TGT, target)
+      .filter(col("__graft_rn__") <= col(TGT))
+
+  /**
+   * The exact rank-select shared by the fraction and error-limit modes.
+   * `joined` carries the stratum key K, the content hash R1 and the
+   * stratum total TOT; `target` is the per-stratum row target as a column
+   * over it. A Bernoulli prefilter by the same hash first cuts each
+   * stratum to ~`cushioned(target)` rows, then the rank keeps the `target`
+   * smallest hashes. After a prefilter the kept count can (with
+   * astronomically small probability) fall short of the target, so it is
+   * counted exactly; this window runs on already-sampled data that is
+   * already partitioned by the key.
+   */
+  private def rankSelect(joined: DataFrame, target: Column,
+      dataCols: Seq[Column]): DataFrame = {
+    // column mirror of cushioned() — keep the two bit-identical
+    val cushionedTgt = when(target >= lit(CushionSwitch),
+      target + greatest(ceil(target * lit(0.05)), lit(50.0)))
+      .otherwise(target * lit(PreFilterFactor) + lit(50.0))
+    val p = least(lit(1.0), cushionedTgt / col(TOT))
+    // xxhash64 is uniform over the full signed-long range:
+    // P(h < (2p−1)·MaxLong) = p; p == 1 keeps everything
+    val threshold = (lit(2.0) * p - lit(1.0)) * lit(Long.MaxValue.toDouble)
+    val pre = joined.filter(col(TOT) <= target || col(R1).cast("double") < threshold)
+    val kept = ranked(pre, target).withColumn("__graft_kept__",
+      count(lit(1)).over(Window.partitionBy(col(K))))
+    packed(kept, col("__graft_kept__"), col(TOT), dataCols)
+  }
 
   /** Convenience: qcs by column name / SQL expression strings. */
   def sample(
@@ -92,8 +136,7 @@ object StratifiedSampler {
       reservoirSize: Int = 50,
       seed: Long = 42L,
       rankCols: Seq[String] = Nil): DataFrame =
-    sample(df, qcs.map(expr), fraction, reservoirSize, seed,
-      preFilter = true, preFilterFactor = 2.0, rankCols = rankCols.map(col(_)))
+    sample(df, qcs.map(expr), fraction, reservoirSize, seed, rankCols.map(col(_)))
 
   /**
    * Error-limit sampling (reference `StratifiedSamplerErrorLimit.scala:33-45`,
@@ -106,9 +149,9 @@ object StratifiedSampler {
    *
    * Batch (two-pass) formulation of the reference's adaptive streaming
    * sampler: pass 1 is a map-side-combined per-stratum moment aggregation
-   * (count/avg/variance — tiny shuffle), pass 2 the usual exact rank-select.
-   * The inner expression is rounded to 6 decimals before `ceil` so the
-   * target is robust to last-ulp differences.
+   * (count/avg/variance — tiny shuffle), pass 2 the fraction mode's exact
+   * rank-select with these targets. The inner expression is rounded to 6
+   * decimals before `ceil` so the target is robust to last-ulp differences.
    */
   def sampleWithErrorLimit(
       df: DataFrame,
@@ -136,31 +179,12 @@ object StratifiedSampler {
       pow(lit(z) * col("__graft_sigma__") /
         (lit(limit) * greatest(abs(col("__graft_mu__")), lit(1e-12))), 2.0),
       6)).cast("long")
-    val targets = stats.withColumn("__graft_target__",
+    val targets = stats.withColumn(TGT,
       least(greatest(lit(reservoirSize.toLong), needed), col(TOT)))
-      .select(col(K).as(K + "c"), col(TOT), col("__graft_target__"))
+      .select(col(K).as(K + "c"), col(TOT), col(TGT))
 
-    // same Bernoulli prefilter as the fraction path: cut the per-stratum
-    // sort input to ~2x target + cushion before the exact rank
     val joined = keyed.join(broadcast(targets), col(K) <=> col(K + "c"), "inner")
-    val p = least(lit(1.0),
-      (col("__graft_target__") * lit(2.0) + lit(50.0)) / col(TOT).cast("double"))
-    val threshold = (lit(2.0) * p - lit(1.0)) * lit(Long.MaxValue.toDouble)
-    val pre = joined.filter(col(TOT) <= col("__graft_target__") ||
-      col(R1).cast("double") < threshold)
-
-    val ranked = pre
-      .withColumn("__graft_rn__",
-        row_number().over(Window.partitionBy(col(K)).orderBy(col(R1))))
-      .filter(col("__graft_rn__") <= col("__graft_target__"))
-      .withColumn("__graft_kept__",
-        count(lit(1)).over(Window.partitionBy(col(K))))
-
-    val keyHash = pmod(hash(col(K)), lit(256)).cast("int")
-    ranked
-      .withColumn(WeightColumn,
-        PackWeightage(col("__graft_kept__"), col(TOT), keyHash))
-      .select(dataCols :+ col(WeightColumn): _*)
+    rankSelect(joined, col(TGT), dataCols)
   }
 
   /**
@@ -186,11 +210,11 @@ object StratifiedSampler {
       fraction: Double,
       reservoirSize: Int,
       seed: Long,
-      preFilter: Boolean,
-      preFilterFactor: Double,
       // no default here: a second defaulted overload of `sample` is a
       // compile error; the string-qcs convenience overload carries it
-      rankCols: Seq[Column]): DataFrame = {
+      rankCols: Seq[Column])(
+      // erases to the string-qcs overload's signature without this marker
+      implicit d: DummyImplicit): DataFrame = {
     require(fraction >= 0.0 && fraction <= 1.0, s"fraction must be in [0,1]: $fraction")
     require(reservoirSize > 0 || fraction > 0, "need reservoirSize > 0 or fraction > 0")
 
@@ -204,31 +228,15 @@ object StratifiedSampler {
     // BootstrapAggregate: x/x = 1.0 exactly in IEEE for any x > 0) and
     // the closed-form FPC factor R·(R−L)/(L−1) (ClosedFormAggregate:
     // exactly 0 for L == R ≥ 2; L == R == 1 skips as NaN — the same 0
-    // contribution). So the per-stratum totals pass the old form paid —
-    // one FULL extra scan of the base plus an aggregate pair and a
-    // broadcast round PER QUERY, at 100 TB a second read of the fact
-    // table — computed values whose every use cancels (guide §1.2:
-    // don't compute things you throw away). The sentinel pack(1, 1,
+    // contribution). So a per-stratum totals pass — one FULL extra scan
+    // of the base plus an aggregate pair and a broadcast round PER QUERY,
+    // at 100 TB a second read of the fact table — would compute values
+    // whose every use cancels. The sentinel pack(1, 1,
     // keyHash) preserves every consumer's arithmetic (estimates, bounds,
     // errors, sample_count — see FullFractionWeightSpec) while making
     // the full-fraction "sample" a pure zero-job projection.
-    // `spark.graft.sampler.fullFractionSentinel=off` restores the classic
-    // totals-join plan for A/B.
     if (fraction >= 1.0) {
-      val keyed = df.withColumn(K, key)
-      val keyHash = pmod(hash(col(K)), lit(256)).cast("int")
-      if (df.sparkSession.conf
-          .get("spark.graft.sampler.fullFractionSentinel", "on") != "off") {
-        return keyed
-          .withColumn(WeightColumn, PackWeightage(lit(1L), lit(1L), keyHash))
-          .select(dataCols :+ col(WeightColumn): _*)
-      }
-      val counts = keyed.groupBy(col(K)).agg(count(lit(1)).as(TOT))
-      return keyed
-        .join(broadcast(counts.withColumnRenamed(K, K + "c")),
-          col(K) <=> col(K + "c"), "inner")
-        .withColumn(WeightColumn, PackWeightage(col(TOT), col(TOT), keyHash))
-        .select(dataCols :+ col(WeightColumn): _*)
+      return packed(df.withColumn(K, key), lit(1L), lit(1L), dataCols)
     }
 
     // Content-seeded rank: deterministic for a fixed seed, uniform per row.
@@ -245,29 +253,26 @@ object StratifiedSampler {
       .withColumn(K, key)
       .withColumn(R1, xxhash64(struct(hashInput: _*), lit(seed)))
 
-    // ONE-PASS pure-reservoir mode (fraction == 0): the classic plan below
-    // pays a per-stratum totals scan PLUS a full-width scan feeding the
-    // prefilter + rank window. The selection criterion ("the reservoirSize
-    // rows with the smallest content hash per stratum") and the weight
-    // inputs (kept = min(reservoir, total), total) are both computable in
-    // a single map-side-combined aggregate whose partial buffers hold at
-    // most `reservoirSize` rows per stratum per task
+    // ONE-PASS pure-reservoir mode (fraction == 0): a totals scan PLUS a
+    // full-width scan feeding a prefilter + rank window (the fraction
+    // mode's plan) would cost two scans. The selection criterion ("the
+    // reservoirSize rows with the smallest content hash per stratum") and
+    // the weight inputs (kept = min(reservoir, total), total) are both
+    // computable in a single map-side-combined aggregate whose partial
+    // buffers hold at most `reservoirSize` rows per stratum per task
     // ([[org.apache.spark.sql.graft.BoundedReservoirRows]]), so ONE scan
     // replaces two and the rank-window shuffle disappears — measured at
     // sf0.1 lineitem (ReservoirPhaseProbe): totals pass 0.34 s + hash scan
     // 0.31 s + join/window 0.18 s → one 0.35 s-class pass. The retained
     // multiset is IDENTICAL: ties on the full-width hash are identical
     // rows (or 2⁻⁶⁴ collisions), the same determinism class the rank
-    // window documents above. Knob mirrors the candidate-join policy
-    // (on/off; default on — off restores the classic two-pass plan).
-    if (fraction == 0.0 && df.sparkSession.conf
-        .get("spark.graft.sampler.onePassReservoir", "on") != "off") {
+    // window documents above.
+    if (fraction == 0.0) {
       import org.apache.spark.sql.graft.{BoundedReservoirRows, Exprs}
       val res = Exprs.column(BoundedReservoirRows(
         Exprs.expression(col(R1)),
         Exprs.expression(struct(dataCols: _*)),
         reservoirSize).toAggregateExpression())
-      val keyHash = pmod(hash(col(K)), lit(256)).cast("int")
       val perStratum = keyed.groupBy(col(K)).agg(res.as("__graft_res__"))
       return perStratum
         .select(col(K), col("__graft_res__.total").as(TOT),
@@ -281,18 +286,13 @@ object StratifiedSampler {
     }
 
     def targetOf(total: Column): Column =
-      if (fraction > 0.0) {
-        least(greatest(lit(reservoirSize.toLong), ceil(total * lit(fraction))), total)
-      } else least(lit(reservoirSize.toLong), total)
+      least(greatest(lit(reservoirSize.toLong), ceil(total * lit(fraction))), total)
 
-    // Attach per-stratum total; optionally Bernoulli-prefilter big strata
-    // before the exact rank to keep the per-stratum sort input ~factor×target.
-    // The prefilter applies to reservoir mode (fraction 0) too — there the
-    // target is a constant, so the cut is deepest: a giant stratum shrinks to
-    // ~2·reservoir+50 rows before the sort. Without the prefilter the totals
-    // come from a window count, shuffling every row into one task per stratum.
-    val usePrefilter =
-      preFilter && (fraction == 0.0 || fraction * preFilterFactor < 0.9)
+    // Attach per-stratum total; Bernoulli-prefilter big strata before the
+    // exact rank to keep the per-stratum sort input ~factor×target. At a
+    // fraction the prefilter cannot cut, the totals come from a window
+    // count instead, shuffling every row into one task per stratum.
+    val usePrefilter = fraction * PreFilterFactor < 0.9
 
     // SUB-STRATUM PARALLEL RANK (the low-cardinality-QCS scale path): a
     // plain `row_number over (partitionBy K orderBy R1)` sorts each stratum
@@ -323,27 +323,18 @@ object StratifiedSampler {
     // the classic one-window plan is used unchanged. It is also SIZE-GATED:
     // the extra counts-collect job is pure overhead on an input small
     // enough that the one-task sort is trivial anyway — below the
-    // threshold the classic plan runs (`spark.graft.sampler.shardRank`
-    // on/off/auto overrides, mirroring the candidate-join policy).
+    // threshold the classic plan runs. An input without size statistics
+    // (an RDD-backed frame) counts as large.
     val maxOffsetStrata = 4096
     val B = "__graft_shard__"
     val shardBits = 58 // 64 shards: top 6 bits of the signed hash
     val shardRank = {
-      val spark = df.sparkSession
-      spark.conf.get("spark.graft.sampler.shardRank", "auto") match {
-        case "on" => true
-        case "off" => false
-        case _ =>
-          val threshold =
-            math.max(8L * spark.sessionState.conf.autoBroadcastJoinThreshold,
-              64L * 1024 * 1024)
-          df.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(threshold)
-      }
+      val threshold = math.max(
+        8L * df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold,
+        64L * 1024 * 1024)
+      df.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(threshold)
     }
-    // fraction mode only: reservoir targets are small constants, so the
-    // prefilter already cuts each stratum's sort input to ~2·reservoir+50
-    // rows — a one-task sort of a few hundred rows needs no sharding
-    if (usePrefilter && shardRank && fraction > 0.0) {
+    if (usePrefilter && shardRank) {
       // the ONLY eager job: per-stratum totals on a QCS-pruned scan — R1
       // (which would force every column into the read schema) never
       // enters this branch
@@ -358,7 +349,7 @@ object StratifiedSampler {
           val tot = r.getLong(1)
           val tgt = math.min(math.max(reservoirSize.toLong,
             math.ceil(tot * fraction).toLong), tot)
-          val p = math.min(1.0, cushioned(tgt, preFilterFactor) / tot)
+          val p = math.min(1.0, cushioned(tgt) / tot)
           val threshold = (2.0 * p - 1.0) * Long.MaxValue.toDouble
           org.apache.spark.sql.Row(r.get(0), tot, tgt, threshold)
         }.toSeq
@@ -367,7 +358,7 @@ object StratifiedSampler {
           org.apache.spark.sql.types.StructField(K + "c", keyType),
           org.apache.spark.sql.types.StructField(TOT,
             org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("__graft_target__",
+          org.apache.spark.sql.types.StructField(TGT,
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("__thr__",
             org.apache.spark.sql.types.DoubleType)))
@@ -437,7 +428,7 @@ object StratifiedSampler {
         val preCutKeyed = preCut.fold(keyed)(keyed.filter)
         val survivors0 = preCutKeyed.withColumn(B, shardCol)
           .join(targets, col(K) <=> col(K + "c"), "inner")
-          .filter(col(TOT) <= col("__graft_target__") ||
+          .filter(col(TOT) <= col(TGT) ||
             col(R1).cast("double") < col("__thr__"))
           .drop(K + "c")
         val (survivors, survivorsRdd) = org.apache.spark.sql.graft.Plans
@@ -456,13 +447,13 @@ object StratifiedSampler {
               .orderBy(col(B + "o"))
               .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
           .select(col(K + "o"), col(B + "o"), col("__off__")))
-        val ranked = survivors
+        val shardRanked = survivors
           .join(offsets, col(K) <=> col(K + "o") && col(B) === col(B + "o"),
             "inner")
           .withColumn("__graft_rn__", row_number()
             .over(Window.partitionBy(col(K), col(B)).orderBy(col(R1))) +
             col("__off__"))
-          .filter(col("__graft_rn__") <= col("__graft_target__"))
+          .filter(col("__graft_rn__") <= col(TGT))
         // exact kept count WITHOUT a window over the ranked rows: the rank
         // keeps exactly min(target, survivorsPerStratum) rows, and the
         // per-stratum survivor totals are one tiny aggregation over the
@@ -473,15 +464,10 @@ object StratifiedSampler {
         val keptPerK = broadcast(survCounts
           .groupBy(col(K + "o").as(K + "k"))
           .agg(sum(col("__cnt__")).as("__surv__")))
-        val kept = ranked
+        val kept = shardRanked
           .join(keptPerK, col(K) <=> col(K + "k"), "inner")
-          .withColumn("__graft_kept__",
-            least(col("__graft_target__"), col("__surv__")))
-        val keyHash = pmod(hash(col(K)), lit(256)).cast("int")
-        val out = kept
-          .withColumn(WeightColumn,
-            PackWeightage(col("__graft_kept__"), col(TOT), keyHash))
-          .select(dataCols :+ col(WeightColumn): _*)
+          .withColumn("__graft_kept__", least(col(TGT), col("__surv__")))
+        val out = packed(kept, col("__graft_kept__"), col(TOT), dataCols)
         org.apache.spark.sql.graft.Plans
           .releaseAfterFirstUse(spark, survivorsRdd)
         return out
@@ -490,51 +476,19 @@ object StratifiedSampler {
       // the cluster; the finer counts pass is discarded)
     }
 
-    val withTotal: DataFrame =
-      if (usePrefilter) {
-        val counts = keyed.groupBy(col(K)).agg(count(lit(1)).as(TOT))
-        // null-safe equality: QCS values may be null and must join to their count
-        val joined = keyed.join(broadcast(counts.withColumnRenamed(K, K + "c")),
-          col(K) <=> col(K + "c"), "inner").drop(K + "c")
-        val tgt = targetOf(col(TOT))
-        // column mirror of cushioned() — keep the two bit-identical
-        val cushionedTgt = when(tgt >= lit(CushionSwitch),
-          tgt + greatest(ceil(tgt * lit(0.05)), lit(50.0)))
-          .otherwise(tgt * lit(preFilterFactor) + lit(50.0))
-        val p = least(lit(1.0), cushionedTgt / col(TOT))
-        // xxhash64 is uniform over the full signed-long range:
-        // P(h < (2p−1)·MaxLong) = p; p == 1 keeps everything
-        val threshold = (lit(2.0) * p - lit(1.0)) * lit(Long.MaxValue.toDouble)
-        joined.filter(col(TOT) <= tgt || col(R1).cast("double") < threshold)
-      } else {
-        keyed.withColumn(TOT, count(lit(1)).over(Window.partitionBy(col(K))))
-      }
-
-    val prefiltered = usePrefilter
-    val ranked = withTotal
-      .withColumn("__graft_rn__",
-        row_number().over(Window.partitionBy(col(K)).orderBy(col(R1))))
-      .withColumn("__graft_target__", targetOf(col(TOT)))
-      .filter(col("__graft_rn__") <= col("__graft_target__"))
-
-    // Without a prefilter, rank selection keeps exactly min(target, total)
-    // rows — no extra pass needed. After a prefilter the kept count can (with
-    // astronomically small probability) fall short of the target, so count it
-    // exactly; this extra window runs on already-sampled data that is already
-    // partitioned by the key.
-    val kept =
-      if (prefiltered) {
-        ranked.withColumn("__graft_kept__",
-          count(lit(1)).over(Window.partitionBy(col(K))))
-      } else {
-        ranked.withColumn("__graft_kept__",
-          least(col("__graft_target__"), col(TOT)))
-      }
-
-    val keyHash = pmod(hash(col(K)), lit(256)).cast("int")
-    kept
-      .withColumn(WeightColumn,
-        PackWeightage(col("__graft_kept__"), col(TOT), keyHash))
-      .select(dataCols :+ col(WeightColumn): _*)
+    if (usePrefilter) {
+      val counts = keyed.groupBy(col(K)).agg(count(lit(1)).as(TOT))
+      // null-safe equality: QCS values may be null and must join to their count
+      val joined = keyed.join(broadcast(counts.withColumnRenamed(K, K + "c")),
+        col(K) <=> col(K + "c"), "inner").drop(K + "c")
+      return rankSelect(joined, targetOf(col(TOT)), dataCols)
+    }
+    // without a prefilter, rank selection keeps exactly min(target, total)
+    // rows — no extra pass needed
+    val withTotal =
+      keyed.withColumn(TOT, count(lit(1)).over(Window.partitionBy(col(K))))
+    val kept = ranked(withTotal, targetOf(col(TOT)))
+      .withColumn("__graft_kept__", least(col(TGT), col(TOT)))
+    packed(kept, col("__graft_kept__"), col(TOT), dataCols)
   }
 }

@@ -609,6 +609,11 @@ case class DropTopkTableNode(name: String, ifExists: Boolean)
           graft.GraftSession.assertStoreFence(spark, p)
           val dir = new org.apache.hadoop.fs.Path(p)
           val fs = dir.getFileSystem(conf)
+          // temp metas first: with the meta gone, a complete one would be
+          // read as the store (GraftSession.topkMetaPath)
+          Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir,
+            graft.GraftSession.TopkMetaFile + ".tmp-*"))).toSeq.flatten
+            .foreach(s => fs.delete(s.getPath, false))
           Seq(graft.GraftSession.TopkMetaFile, graft.GraftSession.TopkBinFile)
             .foreach { f =>
               val fp = new org.apache.hadoop.fs.Path(dir, f)

@@ -20,24 +20,25 @@ class AqpSqlSpec extends AnyFunSuite {
 
   test("CREATE SAMPLE TABLE + WITH ERROR: estimates near truth, error fns bound") {
     gs.sql("CREATE SAMPLE TABLE li_sample ON lineitem OPTIONS(qcs 'l_returnflag', fraction '0.2')")
-    val df = gs.sql(
-      """SELECT l_returnflag, sum(l_quantity) AS sum_qty,
-        |       absolute_error(sum_qty) AS abs_err,
-        |       relative_error(sum_qty) AS rel_err,
-        |       lower_bound(sum_qty) AS lb, upper_bound(sum_qty) AS ub
-        |FROM lineitem GROUP BY l_returnflag
-        |WITH ERROR 0.5 CONFIDENCE 0.95""".stripMargin)
-    val rows = df.collect()
-    assert(rows.nonEmpty)
-    val exact = exactByFlag
-    rows.foreach { r =>
-      val (flag, est, abs, rel, lb, ub) = (r.getString(0), r.getDouble(1),
-        r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))
-      assert(abs > 0.0 && rel > 0.0)
-      assert(lb <= est && est <= ub)
-      assert(math.abs(est - exact(flag)) / exact(flag) < 0.2, s"$flag off: $est vs ${exact(flag)}")
-    }
-    gs.dropSampleTable("li_sample")
+    try {
+      val df = gs.sql(
+        """SELECT l_returnflag, sum(l_quantity) AS sum_qty,
+          |       absolute_error(sum_qty) AS abs_err,
+          |       relative_error(sum_qty) AS rel_err,
+          |       lower_bound(sum_qty) AS lb, upper_bound(sum_qty) AS ub
+          |FROM lineitem GROUP BY l_returnflag
+          |WITH ERROR 0.5 CONFIDENCE 0.95""".stripMargin)
+      val rows = df.collect()
+      assert(rows.nonEmpty)
+      val exact = exactByFlag
+      rows.foreach { r =>
+        val (flag, est, abs, rel, lb, ub) = (r.getString(0), r.getDouble(1),
+          r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))
+        assert(abs > 0.0 && rel > 0.0)
+        assert(lb <= est && est <= ub)
+        assert(math.abs(est - exact(flag)) / exact(flag) < 0.2, s"$flag off: $est vs ${exact(flag)}")
+      }
+    } finally gs.dropSampleTable("li_sample")
   }
 
   test("full-fraction sample through SQL gives exact estimates, zero error") {

@@ -258,6 +258,43 @@ class ConcurrentCatalogSpec extends AnyFunSuite {
     }, "attach must read the published snapshot and ignore torn temps")
   }
 
+  test("a publish killed inside the meta replace leaves its temp meta as the store") {
+    val dir = tmpDir("graft_cc_m") + "/tk"
+    val (sA, gA) = freshSession()
+    gA.sql("CREATE TOPK TABLE cc_meta ON events OPTIONS(key 'event_type', " +
+      s"size '5', streamSummary 'true', capacity '100000', path '$dir')")
+    gA.appendToTopK("cc_meta", sA.table("events"))
+    def counts(g: GraftSession): Map[String, Long] = g.queryTopK("cc_meta", k = 5)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val doubled = counts(gA)
+
+    // on the local file system the meta replace deletes the old meta and
+    // then renames the new one in; a writer killed between the two leaves
+    // only its complete temp meta — the state the next lines reproduce
+    val meta = new java.io.File(dir, GraftSession.TopkMetaFile)
+    def crcOf(f: String) = new java.io.File(dir, s".$f.crc")
+    val crashed = GraftSession.TopkMetaFile + ".tmp-crash"
+    assert(meta.renameTo(new java.io.File(dir, crashed)))
+    assert(crcOf(GraftSession.TopkMetaFile).renameTo(crcOf(crashed)))
+    // an even later publish killed while writing its temp meta: incomplete,
+    // so it must not be read
+    val torn = new java.io.FileOutputStream(
+      new java.io.File(dir, GraftSession.TopkMetaFile + ".tmp-torn"))
+    try torn.write("__snapversion=99\n".getBytes("ISO-8859-1")) finally torn.close()
+
+    val (sE, gE) = freshSession()
+    gE.sql("CREATE TOPK TABLE IF NOT EXISTS cc_meta ON events OPTIONS(" +
+      s"key 'event_type', size '5', streamSummary 'true', " +
+      s"capacity '100000', path '$dir')")
+    assert(counts(gE) === doubled,
+      "a resumed session must attach the crashed publish, not re-create the table")
+    // the next publish puts the meta back and clears the temps
+    gE.appendToTopK("cc_meta", sE.table("events"))
+    assert(counts(gE) === doubled.map { case (k, v) => k -> v * 3 / 2 })
+    assert(meta.isFile)
+    assert(new java.io.File(dir).list().forall(!_.contains(".tmp-")))
+  }
+
   test("concurrent sample APPENDs from two sessions: both batches land") {
     val dir = tmpDir("graft_cc_sa") + "/s"
     val (_, gA) = freshSession()

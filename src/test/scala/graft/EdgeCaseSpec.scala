@@ -422,8 +422,7 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory("graft_aqp211").toString + "/s"
     graft.sampling.StratifiedSampler
       .sample(spark.table("li_ec"), Seq(org.apache.spark.sql.functions.col("l_returnflag")),
-        fraction = 0.3, reservoirSize = 50, seed = 42L,
-        preFilter = true, preFilterFactor = 2.0, rankCols = Nil)
+        fraction = 0.3, reservoirSize = 50, seed = 42L, rankCols = Nil)
       .write.parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("li_raw_weighted")
     try {
@@ -461,8 +460,7 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory("graft_aqp211b").toString + "/s"
     graft.sampling.StratifiedSampler
       .sample(spark.table("li_ec"), Seq(org.apache.spark.sql.functions.col("l_returnflag")),
-        fraction = 0.3, reservoirSize = 50, seed = 42L,
-        preFilter = true, preFilterFactor = 2.0, rankCols = Nil)
+        fraction = 0.3, reservoirSize = 50, seed = 42L, rankCols = Nil)
       .write.parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("li_copy_w")
     try {

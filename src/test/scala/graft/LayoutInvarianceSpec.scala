@@ -48,8 +48,7 @@ class LayoutInvarianceSpec extends AnyFunSuite {
     // pure function of row content + seed, never of partition boundaries
     val kept = layouts(li).map { case (name, df) =>
       name -> StratifiedSampler.sample(df, Seq(col("l_returnflag")),
-          fraction = 0.1, reservoirSize = 50, seed = 42L,
-          preFilter = true, preFilterFactor = 2.0, rankCols = Nil)
+          fraction = 0.1, reservoirSize = 50, seed = 42L, rankCols = Nil)
         .collect().map(_.toSeq.mkString("|")).sorted.toSeq
     }
     val (refName, ref) = kept.head

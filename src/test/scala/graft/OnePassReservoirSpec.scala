@@ -6,46 +6,36 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sampling.StratifiedSampler
 
-/** Parity of the one-pass bounded-reservoir plan (fraction == 0,
- * `spark.graft.sampler.onePassReservoir`, r16) against the classic
- * two-pass totals+prefilter+rank-window plan: the selection criterion is
- * identical (the reservoirSize smallest full-width content hashes per
- * stratum), so the sampled multiset and every decoded weight must match
- * exactly — including under duplicate rows (hash ties straddling the
- * reservoir boundary), NULL stratum keys, and strata smaller than the
- * reservoir. */
+/** The one-pass bounded-reservoir plan (fraction == 0) against the
+ * selection rule it implements ([[SamplerOracle]]: the reservoirSize
+ * smallest full-width content hashes per stratum, weighted total/kept):
+ * the sampled multiset and every decoded weight must match exactly —
+ * including under duplicate rows (hash ties straddling the reservoir
+ * boundary), NULL stratum keys, and strata smaller than the reservoir. */
 class OnePassReservoirSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def sampleWith(df: DataFrame, qcs: Seq[String], n: Int,
-      mode: String): DataFrame = {
-    spark.conf.set("spark.graft.sampler.onePassReservoir", mode)
-    try StratifiedSampler.sample(df, qcs, fraction = 0.0, reservoirSize = n)
-    finally spark.conf.set("spark.graft.sampler.onePassReservoir", "on")
+  private def reservoir(df: DataFrame, qcs: Seq[String], n: Int): DataFrame =
+    StratifiedSampler.sample(df, qcs, fraction = 0.0, reservoirSize = n)
+
+  private def assertOracle(df: DataFrame, qcs: Seq[String], n: Int): DataFrame = {
+    val s = reservoir(df, qcs, n)
+    assert(SamplerOracle.actual(s) ===
+      SamplerOracle.expected(df, qcs)(SamplerOracle.fractionTarget(0.0, n)))
+    s
   }
 
-  /** Multiset of full rows (weight column included, decoded). */
-  private def multiset(df: DataFrame): Map[String, Long] = {
-    val cols = df.columns.toSeq
-    df.select(to_json(struct(cols.map(col): _*)).as("j"))
-      .groupBy("j").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-  }
-
-  test("one-pass == classic on a distinct-row corpus (multiset + weights)") {
+  test("one-pass == oracle on a distinct-row corpus (multiset + weights)") {
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
-    val on = sampleWith(li, Seq("l_returnflag", "l_linestatus"), 25, "on")
-    val off = sampleWith(li, Seq("l_returnflag", "l_linestatus"), 25, "off")
-    assert(multiset(on) == multiset(off))
+    assertOracle(li, Seq("l_returnflag", "l_linestatus"), 25)
   }
 
   test("plan shape: one-pass has no window and one exchange") {
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
-    val on = sampleWith(li, Seq("l_returnflag"), 10, "on")
-    val plan = on.queryExecution.executedPlan.toString
+    val plan = reservoir(li, Seq("l_returnflag"), 10).queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"one-pass plan must not sort-window:\n$plan")
-    val off = sampleWith(li, Seq("l_returnflag"), 10, "off")
-    assert(off.queryExecution.executedPlan.toString.contains("Window"))
+    assert(plan.linesIterator.count(_.contains("Exchange")) === 1,
+      s"one-pass plan must shuffle once:\n$plan")
   }
 
   test("duplicate rows: ties at the reservoir boundary keep the same multiset") {
@@ -55,36 +45,32 @@ class OnePassReservoirSpec extends AnyFunSuite {
     // boundary (10 = 7 + 3 of the next tie group)
     val df = (0 until 3).flatMap(v => Seq.fill(7)(("s", v))).toDF("k", "v")
       .repartition(4)
-    val on = sampleWith(df, Seq("k"), 10, "on")
-    val off = sampleWith(df, Seq("k"), 10, "off")
-    assert(on.count() == 10 && off.count() == 10)
-    assert(multiset(on) == multiset(off))
+    assert(assertOracle(df, Seq("k"), 10).count() == 10)
   }
 
-  test("NULL stratum keys and sub-reservoir strata match classic") {
+  test("NULL stratum keys and sub-reservoir strata match the oracle") {
     import spark.implicits._
     val df = Seq(
       (null.asInstanceOf[String], 1L), (null.asInstanceOf[String], 2L),
       ("a", 1L), ("a", 2L), ("a", 3L), ("a", 4L), ("a", 5L),
       ("b", 10L)).toDF("k", "v").repartition(3)
-    val on = sampleWith(df, Seq("k"), 3, "on")
-    val off = sampleWith(df, Seq("k"), 3, "off")
-    assert(multiset(on) == multiset(off))
+    val s = assertOracle(df, Seq("k"), 3)
     // sub-reservoir strata keep everything with weight 1
-    val wOn = on.filter(col("k") === "b")
+    val w = s.filter(col("k") === "b")
       .select(graft.functions.weighted_count(col("v")).as("w"))
-    assert(wOn.collect().head.getDouble(0) == 1.0)
+    assert(w.collect().head.getDouble(0) == 1.0)
   }
 
-  test("weights decode to total/kept in both plans") {
+  test("weights decode to total/kept") {
+    // kept · (total/kept) = total: the weighted count of every stratum is
+    // its exact row count
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
-    def est(df: DataFrame): Map[String, Double] =
-      df.groupBy("l_returnflag")
-        .agg(round(graft.functions.weighted_count(col("l_returnflag")), 6)
-          .as("est"))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val on = est(sampleWith(li, Seq("l_returnflag"), 25, "on"))
-    val off = est(sampleWith(li, Seq("l_returnflag"), 25, "off"))
-    assert(on == off)
+    val est = reservoir(li, Seq("l_returnflag"), 25)
+      .groupBy("l_returnflag")
+      .agg(round(graft.functions.weighted_count(col("l_returnflag")), 6).as("est"))
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val exact = li.groupBy("l_returnflag").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1).toDouble).toMap
+    assert(est === exact)
   }
 }

@@ -65,32 +65,21 @@ class PlanShapeSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       "every gate query needs an oracle (and no orphan oracles)")
   }
 
-  test("full-fraction weight attach: sentinel is join-free, classic broadcasts") {
-    // r17: the sentinel weight (pack(1,1,keyHash) — ratio and FPC invariant
-    // at kept == total) removes the totals scan AND the attach join outright;
-    // the classic fallback plan must still broadcast, never shuffle the fact
-    // table (the r15 pin, kept for the off switch)
-    def planFor(): String = {
-      gs.sql("CREATE SAMPLE TABLE li_ps_bc ON li_ps " +
-        "OPTIONS(qcs 'l_returnflag', fraction '1.0')")
+  test("full-fraction weight attach: sentinel is join-free") {
+    // the sentinel weight (pack(1,1,keyHash) — ratio and FPC invariant at
+    // kept == total) needs no totals scan and no attach join
+    gs.sql("CREATE SAMPLE TABLE li_ps_bc ON li_ps " +
+      "OPTIONS(qcs 'l_returnflag', fraction '1.0')")
+    val plan =
       try gs.sql(
         """SELECT l_returnflag, sum(l_quantity) AS s, absolute_error(s) AS e
           |FROM li_ps GROUP BY l_returnflag WITH ERROR 0.9""".stripMargin)
         .queryExecution.executedPlan.toString
       finally gs.dropSampleTable("li_ps_bc")
-    }
-    val sentinel = planFor()
-    assert(!sentinel.contains("Join"),
-      s"sentinel full-fraction weight attach must not join:\n${sentinel.take(600)}")
-    assert(sentinel.linesIterator.count(_.contains("Scan parquet")) === 1,
+    assert(!plan.contains("Join"),
+      s"sentinel full-fraction weight attach must not join:\n${plan.take(600)}")
+    assert(plan.linesIterator.count(_.contains("Scan parquet")) === 1,
       "sentinel plan must scan the base exactly once")
-    spark.conf.set("spark.graft.sampler.fullFractionSentinel", "off")
-    try {
-      val classic = planFor()
-      assert(classic.contains("BroadcastHashJoin"), classic.take(400))
-      assert(!classic.contains("SortMergeJoin") && !classic.contains("CartesianProduct"),
-        "weight attach must not shuffle the fact table")
-    } finally spark.conf.unset("spark.graft.sampler.fullFractionSentinel")
   }
 
   test("estimator 'auto' picks bootstrap only for avg-with-where (reference analysis-type rule)") {

@@ -121,33 +121,40 @@ class SamplingSpec extends AnyFunSuite {
     assert(a === b)
   }
 
+  /** The sampler picks the sharded rank from the input alone: a frame
+    * above max(8 × broadcast threshold, 64 MB) shards, one below does not.
+    * An RDD-backed copy of a frame has no size statistics (Spark assumes
+    * the default size, far above the gate), so it reaches the sharded path
+    * with the same rows. */
+  private def shardGate: BigInt = BigInt(math.max(
+    8L * spark.sessionState.conf.autoBroadcastJoinThreshold, 64L * 1024 * 1024))
+  private def rddBacked(df: org.apache.spark.sql.DataFrame) =
+    spark.createDataFrame(df.rdd, df.schema)
+
+  /** Sample `df` at fraction 0.1 / reservoir 10, asserting from the input's
+    * statistics and the plan marker which rank path ran. */
+  private def sampleOnPath(df: org.apache.spark.sql.DataFrame, qcs: String,
+      sharded: Boolean): org.apache.spark.sql.DataFrame = {
+    assert((df.queryExecution.optimizedPlan.stats.sizeInBytes > shardGate) === sharded)
+    val s = StratifiedSampler.sample(df, Seq(qcs), fraction = 0.1, reservoirSize = 10)
+    val plan = s.queryExecution.executedPlan.toString
+    assert(plan.contains("__graft_shard__") === sharded,
+      s"sharded=$sharded: the rank window must partition by " +
+        s"${if (sharded) "(stratum, shard)" else "stratum alone"}:\n$plan")
+    s
+  }
+
   test("shard-ranked selection: identical multiset to the classic rank, parallel rank partitions") {
-    // at scale the rank-select shards each stratum across 64 hash ranges
-    // (size-gated off at test scale) — force both paths and pin that the
-    // selected row multiset and weights are IDENTICAL, and that the sharded
-    // plan's rank window partitions on (stratum, shard), not stratum alone
-    def fingerprint(): Long = StratifiedSampler
-      .sample(li, Seq("l_returnflag"), fraction = 0.1, reservoirSize = 10)
-      .agg(sum(hash(col("l_orderkey"), col("l_linenumber"),
-        col("snappy_sampler_weightage")).cast("long")))
-      .collect()(0).getLong(0)
-    spark.conf.set("spark.graft.sampler.shardRank", "off")
-    val classic =
-      try fingerprint()
-      finally spark.conf.set("spark.graft.sampler.shardRank", "on")
-    val (sharded, plan) =
-      try {
-        val df = StratifiedSampler
-          .sample(li, Seq("l_returnflag"), fraction = 0.1, reservoirSize = 10)
-        (df.agg(sum(hash(col("l_orderkey"), col("l_linenumber"),
-          col("snappy_sampler_weightage")).cast("long")))
-          .collect()(0).getLong(0),
-          df.queryExecution.executedPlan.toString)
-      } finally spark.conf.set("spark.graft.sampler.shardRank", "auto")
-    assert(sharded === classic,
-      "sharded and classic rank-select must pick the identical sample")
-    assert(plan.contains("__graft_shard__"),
-      s"sharded plan must partition the rank window by (stratum, shard):\n$plan")
+    // at scale the rank-select shards each stratum across 64 hash ranges;
+    // the parquet input stays under the size gate (classic rank), its
+    // RDD-backed copy goes over it (sharded rank) — both must pick the
+    // oracle's sample: the target smallest hashes per stratum, total/kept
+    val classic = sampleOnPath(li, "l_returnflag", sharded = false)
+    val sharded = sampleOnPath(rddBacked(li), "l_returnflag", sharded = true)
+    val want = SamplerOracle.expected(li, Seq("l_returnflag"))(
+      SamplerOracle.fractionTarget(0.1, 10))
+    assert(SamplerOracle.actual(classic) === want, "classic rank vs oracle")
+    assert(SamplerOracle.actual(sharded) === want, "sharded rank vs oracle")
   }
 
   test("shard-ranked selection with NULL stratum keys matches the classic rank") {
@@ -164,23 +171,14 @@ class SamplingSpec extends AnyFunSuite {
       }
       (i.toLong, g, rnd.nextDouble())
     }.toDF("id", "grp", "v")
-    def fingerprint(): Long = StratifiedSampler
-      .sample(base, Seq("grp"), fraction = 0.1, reservoirSize = 10)
-      .agg(sum(hash(col("id"), col("snappy_sampler_weightage"))
-        .cast("long"))).collect()(0).getLong(0)
-    spark.conf.set("spark.graft.sampler.shardRank", "off")
-    val classic =
-      try fingerprint()
-      finally spark.conf.set("spark.graft.sampler.shardRank", "on")
-    val sharded =
-      try fingerprint()
-      finally spark.conf.set("spark.graft.sampler.shardRank", "auto")
-    assert(sharded === classic,
+    val classic = SamplerOracle.actual(sampleOnPath(base, "grp", sharded = false))
+    val sharded = sampleOnPath(rddBacked(base), "grp", sharded = true)
+    assert(SamplerOracle.actual(sharded) === classic,
       "null-keyed strata must survive the literal pre-cut identically")
+    assert(classic === SamplerOracle.expected(base, Seq("grp"))(
+      SamplerOracle.fractionTarget(0.1, 10)))
     // and the null stratum is represented with its exact target
-    val nulls = StratifiedSampler
-      .sample(base, Seq("grp"), fraction = 0.1, reservoirSize = 10)
-      .filter(col("grp").isNull).count()
+    val nulls = sharded.filter(col("grp").isNull).count()
     assert(nulls === 750L, s"null stratum kept $nulls of 7500 at 0.1")
   }
 

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Stage decomposition of the fraction-mode sampler at sf10u: which part
  * of the 16.9 s (60M rows, 3 strata, fraction 0.1) is plan cost vs
- * machinery. Also times the classic one-window path (shardRank=off) and
- * the prefilter-off path for comparison.
+ * machinery. Also times the survivors-only prefilter (no rank machinery)
+ * for comparison.
  *
  * Usage: Test/runMain graft.perf.Q02Stages [sfDir]
  */
@@ -33,10 +33,7 @@ object Q02Stages {
       graft.sampling.StratifiedSampler.sample(li, Seq("l_returnflag"),
         fraction = 0.1, reservoirSize = 10).count(); ()
     }
-    timed("shard_auto")(sampleCount())
-    spark.conf.set("spark.graft.sampler.shardRank", "off")
-    timed("shard_off")(sampleCount())
-    spark.conf.set("spark.graft.sampler.shardRank", "auto")
+    timed("sampler")(sampleCount())
     // survivors-only: keyed + broadcast-targets filter, no rank machinery
     timed("survivors_only") {
       val K = "__k"; val R1 = "__r"

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * to size the win of a one-pass bounded-reservoir aggregate before
   * building it (r16 optimization round, guide §1: measure first).
   *
-  * Current plan = TWO full scans + a window:
+  * Previous plan = TWO full scans + a window:
   *   pass A: per-stratum totals (QCS-pruned scan, map-side agg)
   *   pass B: full-width scan + full-row xxhash64 + broadcast-join to
   *           totals + Bernoulli prefilter + row_number window over the
@@ -16,9 +16,8 @@ import org.apache.spark.sql.functions._
   *   groupBy(K).agg(total, bounded n-smallest-by-hash rows) — shuffle is
   *   N rows per stratum per map task.
   * This probe times: (a) the totals pass alone, (b) the hash+prefilter
-  * scan alone (no window), (c) the full current sampler, (d) a mock
-  * one-pass shape (collect_list over pre-cut survivors — an upper bound
-  * on the agg cost without the real bounded buffer).
+  * scan alone (no window), (c) the one-pass sampler that replaced the
+  * two-pass plan.
   */
 object ReservoirPhaseProbe {
   def main(args: Array[String]): Unit = {
@@ -55,29 +54,11 @@ object ReservoirPhaseProbe {
         .withColumn("__r__", xxhash64(struct(dataCols: _*), lit(42L)))
         .filter(col("__r__") % 1000 === 0))
     }
-    // (c) the real current sampler
-    time("C: current 2-pass sampler") {
+    // (c) the one-pass sampler (the fraction == 0 plan)
+    time("C: one-pass sampler") {
       noop(graft.sampling.StratifiedSampler
         .sample(li, Seq(col("l_returnflag"), col("l_linestatus")),
-          fraction = 0.0, reservoirSize = 25, seed = 42L,
-          preFilter = true, preFilterFactor = 2.0, rankCols = Nil))
-    }
-    // (d) the one-pass bounded-reservoir plan (after the r16 change)
-    time("D: one-pass sampler") {
-      spark.conf.set("spark.graft.sampler.onePassReservoir", "on")
-      noop(graft.sampling.StratifiedSampler
-        .sample(li, Seq(col("l_returnflag"), col("l_linestatus")),
-          fraction = 0.0, reservoirSize = 25, seed = 42L,
-          preFilter = true, preFilterFactor = 2.0, rankCols = Nil))
-    }
-    // (e) classic plan via the off knob (A/B in one JVM)
-    time("E: classic via off knob") {
-      spark.conf.set("spark.graft.sampler.onePassReservoir", "off")
-      noop(graft.sampling.StratifiedSampler
-        .sample(li, Seq(col("l_returnflag"), col("l_linestatus")),
-          fraction = 0.0, reservoirSize = 25, seed = 42L,
-          preFilter = true, preFilterFactor = 2.0, rankCols = Nil))
-      spark.conf.set("spark.graft.sampler.onePassReservoir", "on")
+          fraction = 0.0, reservoirSize = 25, seed = 42L, rankCols = Nil))
     }
     spark.stop()
   }

@@ -19,16 +19,14 @@ object SamplerBench {
 
     def q37() = graft.sampling.StratifiedSampler
       .sample(li, Seq(col("l_returnflag"), col("l_linestatus")),
-        fraction = 0.0, reservoirSize = 25, seed = 42L,
-        preFilter = true, preFilterFactor = 2.0, rankCols = Nil)
+        fraction = 0.0, reservoirSize = 25, seed = 42L, rankCols = Nil)
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("kept"))
       .collect()
 
     def q02() = graft.sampling.StratifiedSampler
       .sample(li, Seq(col("l_returnflag")),
-        fraction = 0.1, reservoirSize = 10, seed = 42L,
-        preFilter = true, preFilterFactor = 2.0, rankCols = Nil)
+        fraction = 0.1, reservoirSize = 10, seed = 42L, rankCols = Nil)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("sampled_rows"))
       .collect()

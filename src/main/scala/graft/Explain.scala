@@ -34,9 +34,9 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // A/B plan audits: SPARK_GRAFT_CONF="k=v,k2=v2" applies session confs
-    // before planning (e.g. the r17 off-switches, to print the classic
-    // shape an optimization replaced without checking out old code)
+    // SPARK_GRAFT_CONF="k=v,k2=v2" applies session confs before planning
+    // (e.g. spark.sql.autoBroadcastJoinThreshold, to print the plan an
+    // input above the size gates would take)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(',').foreach { kv =>
       kv.split("=", 2) match {
         case Array(k, v) if k.nonEmpty => spark.conf.set(k.trim, v.trim)

@@ -397,8 +397,8 @@ object Ann {
    * A pre-fetch representative collapse was measured and rejected; see the
    * note at the fetch join.
    *
-   * VERIFY is two-stage at corpus scale (`spark.graft.cosineDedup
-   * .adcVerify` auto, on measured estimate > 48 MB): ~56 B PQ stats
+   * VERIFY is two-stage at corpus scale (input estimate > 48 MB —
+   * [[pairPlan]]): ~56 B PQ stats
    * structs ride the banding shuffle (cost linear in n·bands, not in
    * candidate pairs) and only pairs whose RIGOROUS per-pair cosine upper
    * bound ([[org.apache.spark.sql.graft.PqCosineUpperBound]]) can reach
@@ -531,14 +531,62 @@ object Ann {
    * residue pairs (recall-safe by direction). */
   private[graft] val AdcFpEps = 1e-9
 
+  /** Plan of [[cosineDedupPairs]]: two-stage ADC verify; grouped pair emit
+   * in place of the bucket self-join. All four return the same pairs. */
+  private[graft] final case class PairPlan(adc: Boolean, grouped: Boolean)
+
+  /** ADC engages above this input estimate. 48 MB ≈ 180k 64-dim fp32
+   * rows: measured ADC win 1.7× already at a 52.6 MB input (6.6 vs 11.1 s
+   * at 200k vectors), and the wash point sits near ~30–40 MB (fixed
+   * train+encode ≈ 3.5 s vs a win growing with candidate pairs ∝ rows at
+   * the auto sizer's constant bucket occupancy) — 48 keeps margin above
+   * the wash while the sf-gate corpora stay 60× below it. */
+  private[graft] val AdcMinBytes: Long = 48L << 20
+
+  /** Trained ADC codebook shape (residue figures at the verify); another
+   * shape is a caller's `codebooks = Some(pqTrain(..., m, k))`. */
+  private[graft] val AdcM = 32
+  private[graft] val AdcK = 64
+
+  /** Both plan decisions from the ONE input estimate (pure). Grouped
+   * emit needs long ids (the walk's output encoder is typed) and an
+   * estimate where the join form would SHUFFLE — above the broadcast
+   * threshold; below it AQE broadcasts the self-join. */
+  private[graft] def pairPlan(estimate: BigInt, idIsLong: Boolean,
+      broadcastThreshold: Long): PairPlan =
+    PairPlan(adc = estimate > BigInt(AdcMinBytes),
+      grouped = idIsLong &&
+        (broadcastThreshold <= 0 || estimate > BigInt(broadcastThreshold)))
+
+  /** Input size for [[pairPlan]]: planner stats when real; for the
+   * no-stats sentinel (e.g. an RDD-backed plan) the operator's own
+   * `n·(4·dim + 20)`, which tracks the parquet-scan estimate (200k 64-dim
+   * rows → 52.6 MB) — `n` is evaluated only then. */
+  private[graft] def inputEstimate(df: DataFrame, dim: Int,
+      n: => Long): BigInt = {
+    val stats = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (stats < BigInt(df.sparkSession.sessionState.conf.defaultSizeInBytes))
+      stats
+    else BigInt(n) * (4L * dim + 20L)
+  }
+
   def cosineDedupPairs(df: DataFrame, idCol: String, vecCol: String,
+      threshold: Double, numPlanes: Int = 0, bands: Int = 4,
+      seed: Long = 7L, codebooks: Option[PqCodebooks] = None): DataFrame =
+    cosineDedupPairsWith(None)(df, idCol, vecCol, threshold, numPlanes,
+      bands, seed, codebooks)
+
+  /** [[cosineDedupPairs]] under a `forced` plan (test seam) instead of
+   * the one [[pairPlan]] picks from the input. */
+  private[graft] def cosineDedupPairsWith(forced: Option[PairPlan])(
+      df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, numPlanes: Int = 0, bands: Int = 4,
       seed: Long = 7L, codebooks: Option[PqCodebooks] = None): DataFrame = {
     require(numPlanes >= 0 && numPlanes <= 64 && bands >= 1 && bands <= 64,
       s"need 0 <= numPlanes <= 64 (0 = auto) and 1 <= bands <= 64: " +
         s"$numPlanes x $bands")
     // the non-null count feeds both the auto sizer and (stats-less inputs
-    // only) the ADC auto signal — computed at most once either way
+    // only) the input estimate — computed at most once either way
     var nCache: Option[Long] = None
     def nonNullCount(): Long = nCache.getOrElse {
       val c = df.filter(col(vecCol).isNotNull).count(); nCache = Some(c); c
@@ -599,47 +647,7 @@ object Ann {
     // vectors (47.8M candidates, t=0.99): residue 1,000 pairs at the
     // default m=32 (38M at m=16 — 2-dim subspaces are what make the
     // bound bite; 500 at m=64, not worth the wider rows), exact stage
-    // 74 s → 3.1 s. `spark.graft.cosineDedup.adcVerify` on/off/auto
-    // (default auto: engage above `adcVerifyMinBytes` — default 48 MB —
-    // of estimated input, the same planner-stats signal as the
-    // candidate-join policy; small corpora skip the train/encode passes,
-    // and an input with NO planner stats falls back to the operator's
-    // OWN n·dim estimate — never silently into the single-stage fetch
-    // wall).
-    val spark = df.sparkSession
-    val useAdc = spark.conf.get(
-        "spark.graft.cosineDedup.adcVerify", "auto") match {
-      case "on" => true
-      case "off" => false
-      case _ =>
-        val stats = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        // 48 MB ≈ 180k of these 64-dim fp32 rows: measured ON-win 1.7×
-        // already at a 52.6 MB input (6.6 vs 11.1 s at 200k vectors) and
-        // the wash point sits near ~30–40 MB (fixed train+encode ≈ 3.5 s
-        // vs a win growing with candidate pairs ∝ rows at the auto
-        // sizer's constant bucket occupancy) — 48 keeps margin above the
-        // wash while the sf-gate corpora stay 60× below it
-        val minBytes = BigInt(spark.conf.get(
-          "spark.graft.cosineDedup.adcVerifyMinBytes",
-          (48L << 20).toString).toLong)
-        val bytes =
-          if (stats < BigInt(spark.sessionState.conf.defaultSizeInBytes)) {
-            stats
-          } else {
-            // the planner has NO stats (its estimate is the sentinel —
-            // e.g. an RDD-backed plan), but THIS operator knows better
-            // than any planner: n is in hand (the auto sizer counts it;
-            // explicit-planes callers pay the one count only on this
-            // stats-less path) and dim came from the probe above.
-            // n·(4·dim + 20) tracks the parquet-scan estimate on the
-            // measured corpora (200k 64-dim rows → 52.6 MB ≈ 276 B/row)
-            // — without this, an RDD-backed 20M-vector input would
-            // silently pay the single-stage fetch wall (~345 GB of pair
-            // shuffle) the two-stage verify exists to remove
-            BigInt(nonNullCount()) * (4L * dimOpt.get + 20L)
-          }
-        bytes > minBytes
-    }
+    // 74 s → 3.1 s.
     // ---- pair-emit strategy (the r16 verdict's headline residual): at
     // corpus scale the bucket self-join pays the banding exchange's
     // shuffle READ twice (both sides consume the shared exchange), two
@@ -655,39 +663,12 @@ object Ann {
     // (one struct decode per MEMBER, not two per candidate pair). Output
     // pairs are identical by construction (same members, same strict-<
     // canonicalization, same bound arithmetic via the shared
-    // PqCosineUpperBound.boundValue).
-    //
-    // `spark.graft.cosineDedup.pairEmit` = auto|grouped|join. Auto takes
-    // grouped exactly where the join form would SHUFFLE (input estimate —
-    // planner stats, or the operator's own n·dim when the planner has
-    // none — above autoBroadcastJoinThreshold): below that AQE broadcasts
-    // the self-join and no exchange exists to halve, so the classic join
-    // keeps the broadcast plan. Grouped needs long ids (the walk's output
-    // encoder is typed); non-long ids keep the join path.
+    // PqCosineUpperBound.boundValue). Both choices: [[pairPlan]].
     val idIsLong =
       src.schema("id").dataType == org.apache.spark.sql.types.LongType
-    val useGrouped = spark.conf.get(
-        "spark.graft.cosineDedup.pairEmit", "auto") match {
-      case "grouped" | "on" =>
-        if (!idIsLong) {
-          log.warn("cosineDedupPairs: pairEmit=grouped needs a long id " +
-            s"column (got ${src.schema("id").dataType}) — keeping the " +
-            "join path")
-          false
-        } else true
-      case "join" | "off" => false
-      case _ =>
-        idIsLong && {
-          val stats = df.queryExecution.optimizedPlan.stats.sizeInBytes
-          val est: Option[BigInt] =
-            if (stats < BigInt(spark.sessionState.conf.defaultSizeInBytes))
-              Some(stats)
-            else dimOpt.flatMap(d =>
-              nCache.map(n => BigInt(n) * (4L * d + 20L)))
-          val bThresh = spark.sessionState.conf.autoBroadcastJoinThreshold
-          est.exists(b => bThresh <= 0 || b > BigInt(bThresh))
-        }
-    }
+    val plan = forced.getOrElse(pairPlan(
+      inputEstimate(df, dimOpt.get, nonNullCount()), idIsLong,
+      df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold))
     // band i's key = element i of the per-band sign-bit array (ONE pass
     // over the vector; bit-identical to the former fused-long bit-slices
     // where bands x width <= 64, but with no cap on the total plane
@@ -705,11 +686,11 @@ object Ann {
     // exact-cosine verify, so precision is untouched — the documented
     // trade is pair recall INSIDE an over-cap bucket
     val occCap = graft.core.HotBuckets.cap(src)
-    val verifiedPairIds = if (!useAdc) {
+    val verifiedPairIds = if (!plan.adc) {
       val banded = src.select(col("id") +: bandCols: _*)
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
       def clique(rows: DataFrame): DataFrame =
-        if (useGrouped) groupedIdPairs(rows)
+        if (plan.grouped) groupedIdPairs(rows)
         else {
           val a = rows.select(col("band"), col("bucket"), col("id").as("id_a"))
           val b = rows.select(col("band"), col("bucket"), col("id").as("id_b"))
@@ -737,13 +718,8 @@ object Ann {
               s"${c.m * c.dsub}, corpus vectors have ${dimOpt.get}")
           c
         case None =>
-          val mTarget = spark.conf.get(
-            "spark.graft.cosineDedup.adcM", "32").toInt
-          val kTarget = spark.conf.get(
-            "spark.graft.cosineDedup.adcK", "64").toInt
           pqTrain(src.filter(col("v").isNotNull), "v",
-            chooseM(dimOpt.get, mTarget), math.min(256, kTarget),
-            iterations = 10, seed = seed)
+            chooseM(dimOpt.get, AdcM), AdcK, iterations = 10, seed = seed)
       }
       val (gram, k) = sdcGram(cb)
       log.info(s"cosineDedupPairs: ADC two-stage verify engaged " +
@@ -754,7 +730,7 @@ object Ann {
             .as("s") +: bandCols: _*)
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
       def cliqueAdc(rows: DataFrame): DataFrame =
-        if (useGrouped) groupedAdcPairs(rows, gram, k, threshold)
+        if (plan.grouped) groupedAdcPairs(rows, gram, k, threshold)
         else {
           val a = rows.select(col("band"), col("bucket"),
             col("id").as("id_a"), col("s").as("sa"))

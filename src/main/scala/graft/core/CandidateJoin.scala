@@ -43,8 +43,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * runs, so the cap takes 40% of it. On this box (8 GB heap, fraction 0.6,
  * 32 local tasks) that resolves to the r14 constant: ~64 MB — ~3.4× below
  * the measured death, ~3.6× above the largest measured-safe point.
- * `spark.graft.candidateJoin.shuffleHashMaxBytes` overrides the derivation
- * (fixed windows for A/B probes).
  *
  * The decision reads the optimizer's size ESTIMATE of the un-exploded
  * input (each exploded side is a constant small factor of it in narrow
@@ -53,10 +51,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * (Long.MaxValue unless tuned — e.g. an RDD-backed plan), not a
  * measurement: the policy logs the miss and leaves the plan to sort-merge,
  * the spill-safe side of not knowing.
- *
- * `spark.graft.candidateJoin.shuffleHash` overrides: `on` always hints
- * (the at-scale plan pins set this; they measure the shape, not memory),
- * `off` never hints, `auto` (default) applies the size window.
  */
 object CandidateJoin {
 
@@ -93,8 +87,7 @@ object CandidateJoin {
         log.info("candidate join: spark.executor.cores is unset (executors " +
           "may run worker-core-many concurrent tasks) — refusing to derive " +
           "the shuffle-hash cap from geometry; keeping the conservative " +
-          s"$FallbackShuffleHashMaxBytes B fallback (override with " +
-          "spark.graft.candidateJoin.shuffleHashMaxBytes)")
+          s"$FallbackShuffleHashMaxBytes B fallback")
         FallbackShuffleHashMaxBytes
     }
 
@@ -115,37 +108,38 @@ object CandidateJoin {
       sc.getConf.getOption("spark.executor.cores").map(_.toInt))
   }
 
+  /** The size window itself: hint only when the estimate is a real
+   * measurement (below the no-stats `sentinel`), above the broadcast
+   * `threshold` (a threshold ≤ 0 disables broadcast, so nothing is below
+   * it) and at or under the shuffle-hash `cap`. Pure — pinned by
+   * CandidateJoinSpec, including the over-cap edge no local input reaches. */
+  private[graft] def inShuffleHashWindow(estimate: BigInt, threshold: Long,
+      cap: Long, sentinel: Long): Boolean =
+    estimate < BigInt(sentinel) &&
+      (threshold <= 0 || estimate > BigInt(threshold)) &&
+      estimate <= BigInt(cap)
+
   def maybeShuffleHash(input: DataFrame)(side: DataFrame): DataFrame = {
     val spark = input.sparkSession
-    spark.conf.get("spark.graft.candidateJoin.shuffleHash", "auto") match {
-      case "on" => side.hint("shuffle_hash")
-      case "off" => side
-      case _ =>
-        val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-        val maxBytes = BigInt(spark.conf
-          .getOption("spark.graft.candidateJoin.shuffleHashMaxBytes")
-          .map(_.toLong)
-          .getOrElse(sessionShuffleHashMaxBytes(spark)))
-        val bytes = input.queryExecution.optimizedPlan.stats.sizeInBytes
-        val noStats =
-          bytes >= BigInt(spark.sessionState.conf.defaultSizeInBytes)
-        if (noStats) {
-          log.warn(
-            "candidate join: input has no size statistics (estimate is " +
-              s"the no-stats sentinel $bytes) — leaving the plan to " +
-              "sort-merge; give the input file-scan stats (or set " +
-              "spark.graft.candidateJoin.shuffleHash=on) to pin the " +
-              "sortless shape")
-          side
-        } else if (threshold > 0 && bytes <= BigInt(threshold)) side
-        else if (bytes > maxBytes) {
-          log.info(
-            s"candidate join: input estimate $bytes B exceeds the " +
-              s"shuffle-hash cap $maxBytes B — leaving the plan to " +
-              "sort-merge (a shuffled-hash build side cannot spill at " +
-              "this size)")
-          side
-        } else side.hint("shuffle_hash")
+    val conf = spark.sessionState.conf
+    val bytes = input.queryExecution.optimizedPlan.stats.sizeInBytes
+    val cap = sessionShuffleHashMaxBytes(spark)
+    if (inShuffleHashWindow(bytes, conf.autoBroadcastJoinThreshold, cap,
+        conf.defaultSizeInBytes)) side.hint("shuffle_hash")
+    else {
+      if (bytes >= BigInt(conf.defaultSizeInBytes))
+        log.warn(
+          "candidate join: input has no size statistics (estimate is " +
+            s"the no-stats sentinel $bytes) — leaving the plan to " +
+            "sort-merge; give the input file-scan stats to pin the " +
+            "sortless shape")
+      else if (bytes > BigInt(cap))
+        log.info(
+          s"candidate join: input estimate $bytes B exceeds the " +
+            s"shuffle-hash cap $cap B — leaving the plan to " +
+            "sort-merge (a shuffled-hash build side cannot spill at " +
+            "this size)")
+      side
     }
   }
 }

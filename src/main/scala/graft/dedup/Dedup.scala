@@ -371,8 +371,8 @@ object Dedup {
     // 2–3 jobs (materialize, count, and the left-anti check at the fixed
     // point), so a tiny duplicate graph — the common case after content
     // verification — pays ~10 scheduler round-trips to contract 20 edges.
-    // When the deduplicated edge set is driver-bounded (≤ ccMaxDriverEdges,
-    // default 64k ≈ 1 MB of longs; 0 disables) and long-keyed, collect it
+    // When the deduplicated edge set is driver-bounded (≤ 65,536 edges
+    // ≈ 1 MB of longs) and long-keyed, collect it
     // once, contract with union-find + per-component minimum, and emit the
     // SAME star forest the distributed fixed point produces ({(node, min):
     // node ≠ min}) as a broadcast-joined local relation. Larger graphs (or
@@ -380,11 +380,9 @@ object Dedup {
     // size-conditional policy class as the candidate join and the sampler
     // shard-rank. Output is identical by construction; PipelineSpec's
     // union-find-oracle test pins BOTH paths on random graphs.
-    val ccMaxDriverEdges = spark.conf
-      .get("spark.graft.dedup.ccMaxDriverEdges", "65536").toLong
     val idIsLong = edges.schema("src").dataType ==
       org.apache.spark.sql.types.LongType
-    if (edgesCount > 0 && edgesCount <= ccMaxDriverEdges && idIsLong) {
+    if (edgesCount > 0 && edgesCount <= 65536L && idIsLong) {
       val collected = edges.collect()
       edgesRdd.unpersist(blocking = false)
       val parent = new java.util.HashMap[Long, Long]()

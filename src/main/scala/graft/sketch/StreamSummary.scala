@@ -93,16 +93,20 @@ final class StreamSummary(val capacity: Int) extends Serializable {
   def merge(o: StreamSummary): StreamSummary = {
     val m1 = minCount
     val m2 = o.minCount
-    val out = new StreamSummary(capacity)
+    // a full side must leave a full result, or a key absent from both
+    // would read 0: a full smaller side (item fold) caps the capacity
+    val small = if (o.capacity < capacity) o else this
+    val out = new StreamSummary(
+      if (small.counters.size >= small.capacity) small.capacity else capacity)
     (counters.keySet ++ o.counters.keySet).foreach { k =>
       val (c1, e1) = counters.getOrElse(k, (m1, m1))
       val (c2, e2) = o.counters.getOrElse(k, (m2, m2))
       out.put(k, c1 + c2, e1 + e2)
     }
-    if (out.counters.size > capacity) {
+    if (out.counters.size > out.capacity) {
       val drop = out.counters.toSeq
         .sortBy { case (k, (c, _)) => (-c, keySortable(k)) }
-        .drop(capacity)
+        .drop(out.capacity)
       drop.foreach { case (k, (c, _)) => out.removeKey(k, c) }
     }
     out
@@ -115,7 +119,10 @@ final class StreamSummary(val capacity: Int) extends Serializable {
       .sortBy { case (key, c, _) => (-c, keySortable(key)) }
       .take(k)
 
-  def estimateCount(key: Any): (Long, Long) = counters.getOrElse(key, (0L, 0L))
+  /** (count, error); an untracked key may have been evicted at up to the
+   * minimum m (0 while not full), so it answers (m, m), as in [[merge]]. */
+  def estimateCount(key: Any): (Long, Long) =
+    counters.getOrElse(key, (minCount, minCount))
 
   def serialized: Array[Byte] = {
     val entries = counters.toSeq

@@ -14,10 +14,10 @@ import graft.ann.Ann
  *    duplicates, zero and negative vectors);
  *  - PqEncodeStats agrees with a driver-side recomputation of the code,
  *    the true norm and the quantization residual;
- *  - the operator's output with the ADC stage FORCED ON is identical to
- *    the single-stage verify at multiple thresholds (parity end-to-end);
- *  - auto mode stays single-stage on small inputs (no train/encode cost
- *    on gate-sized corpora).
+ *  - every [[Ann.PairPlan]] (ADC on/off × grouped/join emit), run
+ *    through the operator's private plan seam, returns the same pairs;
+ *  - the plan rule itself ([[Ann.pairPlan]]) at both gates, and the input
+ *    estimate it reads (planner stats, or n·dim on a stats-less input).
  */
 class AdcVerifySpec extends AnyFunSuite {
   import TestSpark.spark
@@ -37,14 +37,32 @@ class AdcVerifySpec extends AnyFunSuite {
       (n + 3L, base(2)._2.map(x => x * 1e-6f)))
   }
 
-  private def withConf(k: String, v: String)(body: => Unit): Unit = {
-    val prev = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try body finally prev match {
-      case Some(p) => spark.conf.set(k, p)
-      case None => spark.conf.unset(k)
-    }
-  }
+  private val JoinPlan = Ann.PairPlan(adc = false, grouped = false)
+  private val AllPlans = for (adc <- Seq(false, true);
+      grouped <- Seq(false, true)) yield Ann.PairPlan(adc, grouped)
+
+  /** `cosineDedupPairs` under a forced plan, pairs with cosines rounded
+   * to 1e-9 (the plans agree on pairs; the cosine is the same expression). */
+  private def pairsUnder(plan: Ann.PairPlan, df: org.apache.spark.sql.DataFrame,
+      threshold: Double, planes: Int,
+      codebooks: Option[Ann.PqCodebooks] = None): Set[(Long, Long, Double)] =
+    Ann.cosineDedupPairsWith(Some(plan))(df, "id", "v", threshold,
+      numPlanes = planes, bands = 4, codebooks = codebooks)
+      .collect().map(r => (r.getLong(0), r.getLong(1),
+        math.round(r.getDouble(2) * 1e9) / 1e9)).toSet
+
+  private def hasAdc(out: org.apache.spark.sql.DataFrame): Boolean =
+    out.queryExecution.analyzed.collect { case p =>
+      p.expressions.exists(_.exists {
+        case _: org.apache.spark.sql.graft.PqCosineUpperBound => true
+        case _ => false
+      })
+    }.exists(identity)
+
+  private def hasGroupedEmit(out: org.apache.spark.sql.DataFrame): Boolean =
+    out.queryExecution.analyzed.collect {
+      case _: org.apache.spark.sql.catalyst.plans.logical.MapGroups => true
+    }.nonEmpty
 
   test("chooseM: largest divisor of dim at or under the target") {
     assert(Ann.chooseM(64, 16) === 16)
@@ -126,31 +144,18 @@ class AdcVerifySpec extends AnyFunSuite {
       // null-filtered; banding's posexplode drops null band arrays)
       Seq((20000L, null: Array[Float]), (20001L, null: Array[Float]))
     val df = data.toDF("id", "v")
-    def run(): Set[(Long, Long, Double)] =
-      Ann.cosineDedupPairs(df, "id", "v", threshold = 0.95,
-        numPlanes = 12, bands = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          math.round(r.getDouble(2) * 1e9) / 1e9)).toSet
-    var on: Set[(Long, Long, Double)] = null
-    var off: Set[(Long, Long, Double)] = null
-    withConf("spark.graft.cosineDedup.adcVerify", "on") { on = run() }
-    withConf("spark.graft.cosineDedup.adcVerify", "off") { off = run() }
-    assert(on === off)
+    val adcOn = JoinPlan.copy(adc = true)
+    val on = pairsUnder(adcOn, df, 0.95, planes = 12)
+    assert(on === pairsUnder(JoinPlan, df, 0.95, planes = 12))
     assert(on.nonEmpty) // the planted pairs must be found at all
     // and at a low threshold where background pairs pass too
-    def runLow(): Set[(Long, Long)] =
-      Ann.cosineDedupPairs(df, "id", "v", threshold = 0.2,
-        numPlanes = 6, bands = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    var onL: Set[(Long, Long)] = null
-    var offL: Set[(Long, Long)] = null
-    withConf("spark.graft.cosineDedup.adcVerify", "on") { onL = runLow() }
-    withConf("spark.graft.cosineDedup.adcVerify", "off") { offL = runLow() }
-    assert(onL === offL)
+    val onL = pairsUnder(adcOn, df, 0.2, planes = 6)
+    assert(onL === pairsUnder(JoinPlan, df, 0.2, planes = 6))
     assert(onL.size > on.size)
   }
 
   test("grouped pair-emit parity: grouped == join in all verify modes") {
+    // all four plans, so grouped == join under both verify modes
     val data = randomCorpus(200, 32, seed = 421L) ++
       (0 until 20).flatMap { g =>
         val rnd = new scala.util.Random(4000L + g)
@@ -163,24 +168,12 @@ class AdcVerifySpec extends AnyFunSuite {
       // collapse it in the output and never emit a self-pair
       Seq((50000L, data0dup), (50000L, data0dup.clone()))
     val df = data.toDF("id", "v")
-    def run(threshold: Double, planes: Int): Set[(Long, Long, Double)] =
-      Ann.cosineDedupPairs(df, "id", "v", threshold = threshold,
-        numPlanes = planes, bands = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          math.round(r.getDouble(2) * 1e9) / 1e9)).toSet
-    for (adc <- Seq("on", "off"); (t, p) <- Seq((0.95, 12), (0.2, 6))) {
-      var grouped: Set[(Long, Long, Double)] = null
-      var joined: Set[(Long, Long, Double)] = null
-      withConf("spark.graft.cosineDedup.adcVerify", adc) {
-        withConf("spark.graft.cosineDedup.pairEmit", "grouped") {
-          grouped = run(t, p)
-        }
-        withConf("spark.graft.cosineDedup.pairEmit", "join") {
-          joined = run(t, p)
-        }
+    for ((t, p) <- Seq((0.95, 12), (0.2, 6))) {
+      val want = pairsUnder(JoinPlan, df, t, p)
+      assert(want.nonEmpty, s"t=$t planes=$p found nothing")
+      AllPlans.foreach { plan =>
+        assert(pairsUnder(plan, df, t, p) === want, s"$plan t=$t planes=$p")
       }
-      assert(grouped === joined, s"adc=$adc t=$t planes=$p")
-      assert(grouped.nonEmpty, s"adc=$adc t=$t planes=$p found nothing")
     }
   }
   // a vector shared by the duplicate-id rows above (declared outside the
@@ -195,21 +188,20 @@ class AdcVerifySpec extends AnyFunSuite {
     // on BOTH emit shapes, and the outputs agree
     val rnd = new scala.util.Random(5L)
     val hotVec = Array.fill(32)(rnd.nextGaussian().toFloat)
-    val data = randomCorpus(150, 32, seed = 500L) ++
-      (0 until 60).map(i => (40000L + i, hotVec.clone()))
-    val df = data.toDF("id", "v")
-    def run(): Set[(Long, Long)] =
-      Ann.cosineDedupPairs(df, "id", "v", threshold = 0.99,
-        numPlanes = 12, bands = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    withConf(graft.core.HotBuckets.ConfKey, "20") {
-      var grouped: Set[(Long, Long)] = null
-      var joined: Set[(Long, Long)] = null
-      withConf("spark.graft.cosineDedup.pairEmit", "grouped") { grouped = run() }
-      withConf("spark.graft.cosineDedup.pairEmit", "join") { joined = run() }
-      assert(grouped === joined)
-      assert(grouped.nonEmpty)
-    }
+    // the cap is a session conf read through df.sparkSession: set it on
+    // a clone and build the corpus there
+    val capped = spark.newSession()
+    capped.conf.set(graft.core.HotBuckets.ConfKey, "20")
+    import capped.implicits._
+    val df = (randomCorpus(150, 32, seed = 500L) ++
+      (0 until 60).map(i => (40000L + i, hotVec.clone()))).toDF("id", "v")
+    val want = pairsUnder(JoinPlan, df, 0.99, planes = 12)
+    assert(want.nonEmpty)
+    // the clone's cap engaged: the 60 identical vectors are chained, not
+    // emitted as their full 1770-pair clique
+    assert(want.count(_._1 >= 40000L) < 60 * 59 / 2)
+    AllPlans.foreach(plan =>
+      assert(pairsUnder(plan, df, 0.99, planes = 12) === want, plan.toString))
   }
 
   test("grouped pair-emit falls back to the join path for non-long ids") {
@@ -217,13 +209,19 @@ class AdcVerifySpec extends AnyFunSuite {
     val src = Array.fill(16)(rnd.nextGaussian().toFloat)
     val data = Seq(("a", src), ("b", src.clone()),
       ("c", Array.fill(16)(rnd.nextGaussian().toFloat)))
-    val df = data.toDF("id", "v")
-    withConf("spark.graft.cosineDedup.pairEmit", "grouped") {
-      val out = Ann.cosineDedupPairs(df, "id", "v", threshold = 0.99,
-        numPlanes = 8, bands = 2).collect()
-      assert(out.map(r => (r.getString(0), r.getString(1))).toSet
-        === Set(("a", "b")))
-    }
+    // the plan rule never picks grouped for non-long ids, however large
+    // the input or whatever the broadcast threshold
+    assert(!Ann.pairPlan(BigInt(1L << 40), idIsLong = false, -1L).grouped)
+    // and the operator, with broadcast disabled (where long ids would
+    // take the grouped emit), keeps the join path and its answer
+    val noBroadcast = spark.newSession()
+    noBroadcast.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    import noBroadcast.implicits._
+    val out = Ann.cosineDedupPairs(data.toDF("id", "v"), "id", "v",
+      threshold = 0.99, numPlanes = 8, bands = 2)
+    assert(!hasGroupedEmit(out))
+    assert(out.collect().map(r => (r.getString(0), r.getString(1))).toSet
+      === Set(("a", "b")))
   }
 
   test("a caller-supplied codebook skips training and preserves parity") {
@@ -240,34 +238,29 @@ class AdcVerifySpec extends AnyFunSuite {
     // codebook (the stored residual is exact against whatever centroids
     // produced the code), reuse only shifts residue volume
     val cb = Ann.pqTrain(df, "v", m = 8, k = 16, iterations = 4, seed = 5L)
-    def run(cbs: Option[Ann.PqCodebooks], t: Double): Set[(Long, Long, Double)] =
-      Ann.cosineDedupPairs(df, "id", "v", threshold = t,
-        numPlanes = 12, bands = 4, codebooks = cbs)
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          math.round(r.getDouble(2) * 1e9) / 1e9)).toSet
-    withConf("spark.graft.cosineDedup.adcVerify", "on") {
-      for (t <- Seq(0.95, 0.5)) {
-        val reused = run(Some(cb), t)
-        val trained = run(None, t)
-        assert(reused === trained, s"codebook-reuse parity broke at t=$t")
-        assert(reused.nonEmpty)
-      }
-      // a codebook covering the wrong dimensionality must fail loudly
-      val bad = Ann.pqTrain(randomCorpus(30, 16, 3L).toDF("id", "v"), "v",
-        m = 4, k = 8, iterations = 2)
-      val e = intercept[IllegalArgumentException] {
-        run(Some(bad), 0.9)
-      }
-      assert(e.getMessage.contains("dimension"))
+    val adcOn = JoinPlan.copy(adc = true)
+    for (t <- Seq(0.95, 0.5)) {
+      val reused = pairsUnder(adcOn, df, t, 12, Some(cb))
+      val trained = pairsUnder(adcOn, df, t, 12)
+      assert(reused === trained, s"codebook-reuse parity broke at t=$t")
+      assert(reused.nonEmpty)
     }
+    // a codebook covering the wrong dimensionality must fail loudly
+    val bad = Ann.pqTrain(randomCorpus(30, 16, 3L).toDF("id", "v"), "v",
+      m = 4, k = 8, iterations = 2)
+    val e = intercept[IllegalArgumentException] {
+      pairsUnder(adcOn, df, 0.9, 12, Some(bad))
+    }
+    assert(e.getMessage.contains("dimension"))
   }
 
-  test("auto engages two-stage on a stats-less input via the operator's own n*dim estimate") {
-    // an RDD-backed plan carries the planner's no-stats sentinel — the
-    // r15 behavior warned and stayed single-stage, which at 20M vectors
-    // silently pays the ~345 GB pair-fetch wall the two-stage verify
-    // exists to remove. The operator knows n and dim itself; with the
-    // threshold scaled under the estimate, auto must engage.
+  test("a stats-less input is sized by the operator's own n*dim estimate") {
+    // an RDD-backed plan carries the planner's no-stats sentinel; the
+    // plan rule must see the operator's n·(4·dim + 20) instead, or a
+    // 20M-vector RDD input would silently pay the ~345 GB pair-fetch
+    // wall the two-stage verify exists to remove
+    val small = spark.newSession()
+    small.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
     val rows = randomCorpus(60, 16, seed = 21L)
       .map { case (id, v) => org.apache.spark.sql.Row(id, v) }
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -276,40 +269,48 @@ class AdcVerifySpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructField("v",
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.FloatType))))
-    val rddDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 2), schema)
+    val rddDf = small.createDataFrame(
+      small.sparkContext.parallelize(rows, 2), schema)
     assert(rddDf.queryExecution.optimizedPlan.stats.sizeInBytes >=
-      BigInt(spark.sessionState.conf.defaultSizeInBytes),
+      BigInt(small.sessionState.conf.defaultSizeInBytes),
       "precondition: the input must carry the no-stats sentinel")
-    def hasAdc(t: Double): Boolean =
-      Ann.cosineDedupPairs(rddDf, "id", "v", threshold = t,
-        numPlanes = 8, bands = 2).queryExecution.analyzed.collect { case p =>
-        p.expressions.exists(_.exists {
-          case _: org.apache.spark.sql.graft.PqCosineUpperBound => true
-          case _ => false
-        })
-      }.exists(identity)
-    // 64 rows x (4*16+20) B = 5376 B: above a 1 KB threshold -> engage
-    withConf("spark.graft.cosineDedup.adcVerifyMinBytes", "1024") {
-      assert(hasAdc(0.9), "auto must engage two-stage from n*dim alone")
-    }
-    // and at the default 48 MB threshold the same input stays
-    // single-stage — the estimate is a real measurement, not always-on
-    assert(!hasAdc(0.9))
+    // 64 rows x (4*16 + 20) B
+    assert(Ann.inputEstimate(rddDf, 16, rddDf.count()) === BigInt(64 * 84))
+    // a real planner estimate wins, and n is then never counted
+    val local = randomCorpus(60, 16, seed = 21L).toDF("id", "v")
+    assert(Ann.inputEstimate(local, 16, fail("n counted")) ===
+      local.queryExecution.optimizedPlan.stats.sizeInBytes)
+    // the operator acts on it: 5376 B is above the clone's 1 KB broadcast
+    // threshold, so the grouped emit engages; ADC stays off under 48 MB
+    val out = Ann.cosineDedupPairs(rddDf, "id", "v", threshold = 0.9,
+      numPlanes = 8, bands = 2)
+    assert(hasGroupedEmit(out), "the n*dim estimate must reach the plan rule")
+    assert(!hasAdc(out))
+  }
+
+  test("pairPlan gates: ADC above 48 MB, grouped emit above the broadcast threshold") {
+    val gate = BigInt(Ann.AdcMinBytes)
+    assert(Ann.AdcMinBytes === (48L << 20))
+    assert(!Ann.pairPlan(gate, idIsLong = true, 10L << 20).adc)
+    assert(Ann.pairPlan(gate + 1, idIsLong = true, 10L << 20).adc)
+    // ADC does not depend on the id type
+    assert(Ann.pairPlan(gate + 1, idIsLong = false, 10L << 20).adc)
+    val thr = 10L << 20
+    assert(!Ann.pairPlan(BigInt(thr), idIsLong = true, thr).grouped)
+    assert(Ann.pairPlan(BigInt(thr) + 1, idIsLong = true, thr).grouped)
+    assert(!Ann.pairPlan(BigInt(thr) + 1, idIsLong = false, thr).grouped)
+    // broadcast disabled: every long-id input takes the grouped emit
+    assert(Ann.pairPlan(BigInt(1), idIsLong = true, -1L).grouped)
+    assert(Ann.pairPlan(BigInt(1), idIsLong = true, 0L).grouped)
+    // the default-session plan of a small corpus: join emit, one stage
+    assert(Ann.pairPlan(BigInt(1) << 20, idIsLong = true, thr) === JoinPlan)
   }
 
   test("auto mode stays single-stage on small inputs") {
-    // gate-sized corpora sit far below adcVerifyMinBytes: the plan must
+    // gate-sized corpora sit far below the 48 MB gate: the plan must
     // not contain the PqEncodeStats projection (no train/encode passes)
     val df = randomCorpus(50, 16, seed = 9L).toDF("id", "v")
-    val plan = Ann.cosineDedupPairs(df, "id", "v", threshold = 0.9,
-      numPlanes = 8, bands = 2).queryExecution.analyzed
-    val hasAdc = plan.collect { case p =>
-      p.expressions.exists(_.exists {
-        case _: org.apache.spark.sql.graft.PqCosineUpperBound => true
-        case _ => false
-      })
-    }.exists(identity)
-    assert(!hasAdc)
+    assert(!hasAdc(Ann.cosineDedupPairs(df, "id", "v", threshold = 0.9,
+      numPlanes = 8, bands = 2)))
   }
 }

@@ -42,19 +42,20 @@ class CacheHygieneSpec extends AnyFunSuite {
   }
 
   /** The exchange-reuse pins emulate AT-SCALE planning: on a 100 TB corpus
-   * the size rule keeps the `shuffle_hash` hints
-   * ([[graft.core.CandidateJoin]]); at test scale the rule would drop them
-   * in favor of AQE's broadcast — force them on so the pinned shape is the
-   * one a big cluster runs. */
-  private def atScale[A](body: => A): A = {
-    spark.conf.set("spark.graft.candidateJoin.shuffleHash", "on")
-    try body
-    finally spark.conf.set("spark.graft.candidateJoin.shuffleHash", "auto")
+   * the input sits above the broadcast threshold and the size rule keeps
+   * the `shuffle_hash` hints ([[graft.core.CandidateJoin]]); at test scale
+   * the rule would drop them in favor of AQE's broadcast. A session clone
+   * with the threshold below every test input plans what a big cluster
+   * runs; the body reads its inputs from that clone. */
+  private def atScale[A](body: org.apache.spark.sql.SparkSession => A): A = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
+    body(s)
   }
 
   test("lshCandidatePairs self-join reuses one shuffle (signatures compute once)") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    atScale {
+    atScale { s =>
+      val docs = s.read.parquet(s"$sf/documents.parquet")
       val pairs = graft.dedup.Dedup.lshCandidatePairs(docs, "doc_id", "text")
       pairs.collect()
       val plan = pairs.queryExecution.executedPlan.toString
@@ -64,8 +65,8 @@ class CacheHygieneSpec extends AnyFunSuite {
   }
 
   test("simhashPairs self-join reuses one shuffle") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    atScale {
+    atScale { s =>
+      val docs = s.read.parquet(s"$sf/documents.parquet")
       val pairs = graft.dedup.Dedup.simhashPairs(docs, "doc_id", "text")
       pairs.collect()
       val plan = pairs.queryExecution.executedPlan.toString
@@ -78,11 +79,11 @@ class CacheHygieneSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     // plant exact copies so the result is non-empty — on an empty result
     // AQE propagates EmptyRelation and the exchanges never materialize
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val withCopies = emb.unionByName(
-      emb.orderBy(col("vec_id")).limit(20)
-        .withColumn("vec_id", col("vec_id") + lit(1000000L)))
-    atScale {
+    atScale { s =>
+      val emb = s.read.parquet(s"$sf/embeddings.parquet")
+      val withCopies = emb.unionByName(
+        emb.orderBy(col("vec_id")).limit(20)
+          .withColumn("vec_id", col("vec_id") + lit(1000000L)))
       val pairs = graft.ann.Ann.cosineDedupPairs(withCopies, "vec_id", "embedding", 0.999)
       pairs.collect()
       val plan = pairs.queryExecution.executedPlan.toString

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.UnresolvedHint
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,7 +8,7 @@ import graft.core.CandidateJoin
 
 /** Pins the candidate-join strategy policy's SIZE WINDOW: no hint below
  * the broadcast threshold (AQE broadcasts), `shuffle_hash` inside the
- * window, and NO hint above `shuffleHashMaxBytes` — the r14 third-decade
+ * window, and NO hint above the geometry cap — the r14 third-decade
  * lesson: a shuffled-hash build side cannot spill, and the pinned shape
  * OOM'd at 5M docs ("not enough memory to build hash map") while
  * sort-merge spills and finishes. */
@@ -18,41 +19,51 @@ class CandidateJoinSpec extends AnyFunSuite {
     df.queryExecution.logical.collect { case h: UnresolvedHint => h.name }
       .contains("shuffle_hash")
 
-  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+  /** A session clone with the broadcast threshold set: the policy reads
+   * it through `df.sparkSession`, so frames built from the clone see it
+   * and the shared session's conf is never touched. */
+  private def withThreshold(bytes: Long)(body: SparkSession => Unit): Unit = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", bytes.toString)
+    body(s)
   }
 
-  import spark.implicits._
-  private def frame() = (1 to 1000).map(i => (i.toLong, s"content-$i"))
-    .toDF("id", "text")
+  private def frame(s: SparkSession) = {
+    import s.implicits._
+    (1 to 1000).map(i => (i.toLong, s"content-$i")).toDF("id", "text")
+  }
 
   test("below the broadcast threshold: no hint (AQE broadcasts)") {
-    withConfs("spark.sql.autoBroadcastJoinThreshold" -> (10L << 20).toString) {
-      val df = frame()
+    withThreshold(10L << 20) { s =>
+      val df = frame(s)
       assert(!hinted(CandidateJoin.maybeShuffleHash(df)(df)))
     }
   }
 
   test("inside the window: shuffle_hash pinned") {
-    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "1024") {
-      val df = frame() // estimate is tens of KB: above 1 KB, below 64 MB
+    withThreshold(1024L) { s =>
+      val df = frame(s) // estimate is tens of KB: above 1 KB, below 64 MB
       assert(hinted(CandidateJoin.maybeShuffleHash(df)(df)))
     }
   }
 
   test("above shuffleHashMaxBytes: no hint (sort-merge spills; " +
     "a shuffled-hash build side cannot)") {
-    withConfs(
-      "spark.sql.autoBroadcastJoinThreshold" -> "1024",
-      "spark.graft.candidateJoin.shuffleHashMaxBytes" -> "2048") {
-      val df = frame()
-      assert(!hinted(CandidateJoin.maybeShuffleHash(df)(df)))
-    }
+    // the window on its own: no local input reaches a geometry cap, so
+    // the over-cap edge is pinned on the pure function
+    val cap = CandidateJoin.FallbackShuffleHashMaxBytes
+    val sentinel = Long.MaxValue
+    def window(est: BigInt, threshold: Long): Boolean =
+      CandidateJoin.inShuffleHashWindow(est, threshold, cap, sentinel)
+    assert(window(BigInt(cap), 10L << 20), "at the cap: still hinted")
+    assert(!window(BigInt(cap) + 1, 10L << 20), "over the cap: no hint")
+    assert(!window(BigInt(10L << 20), 10L << 20), "at the threshold: no hint")
+    assert(window(BigInt(10L << 20) + 1, 10L << 20), "just above: hinted")
+    // broadcast disabled: everything up to the cap is hinted
+    assert(window(BigInt(1), -1L))
+    assert(!window(BigInt(cap) + 1, -1L))
+    // the no-stats sentinel is never a measurement
+    assert(!window(BigInt(sentinel), -1L))
   }
 
   test("geometry-derived cap: 2/5 of the per-task execution share") {
@@ -86,7 +97,7 @@ class CandidateJoinSpec extends AnyFunSuite {
     // an RDD-backed plan has no file-scan stats — its estimate is
     // spark.sql.defaultSizeInBytes (Long.MaxValue), which must read as
     // "unknown" (sort-merge, spill-safe), not as "huge input"
-    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "1024") {
+    withThreshold(1024L) { s =>
       val rows = (1 to 100).map(i =>
         org.apache.spark.sql.Row(i.toLong, s"content-$i"))
       val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -94,25 +105,11 @@ class CandidateJoinSpec extends AnyFunSuite {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("text",
           org.apache.spark.sql.types.StringType)))
-      val rddDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 2), schema)
+      val rddDf = s.createDataFrame(
+        s.sparkContext.parallelize(rows, 2), schema)
       assert(rddDf.queryExecution.optimizedPlan.stats.sizeInBytes >=
-        BigInt(spark.sessionState.conf.defaultSizeInBytes))
+        BigInt(s.sessionState.conf.defaultSizeInBytes))
       assert(!hinted(CandidateJoin.maybeShuffleHash(rddDf)(rddDf)))
-    }
-  }
-
-  test("explicit on/off overrides ignore the window") {
-    withConfs(
-      "spark.graft.candidateJoin.shuffleHash" -> "on",
-      "spark.graft.candidateJoin.shuffleHashMaxBytes" -> "1") {
-      val df = frame()
-      assert(hinted(CandidateJoin.maybeShuffleHash(df)(df)))
-    }
-    withConfs("spark.graft.candidateJoin.shuffleHash" -> "off",
-      "spark.sql.autoBroadcastJoinThreshold" -> "1024") {
-      val df = frame()
-      assert(!hinted(CandidateJoin.maybeShuffleHash(df)(df)))
     }
   }
 }

@@ -268,7 +268,7 @@ class PipelineFuzzSpec extends AnyFunSuite {
     //   1. the fixture IS adversarial (candidate volume is quadratic-ish);
     //   2. the capped operator's output is ≤ 2·cap·docs regardless;
     //   3. planted exact duplicates all survive the cap (eq-first rank);
-    //   4. the candidate self-join is a SHUFFLE join in the forced-at-scale
+    //   4. the candidate self-join is a SHUFFLE join in the at-scale
     //      config — the shape AQE's skew handling can split; a broadcast
     //      or cartesian would concentrate the hot bucket on single tasks.
     val rnd = new scala.util.Random(777001L)
@@ -301,23 +301,22 @@ class PipelineFuzzSpec extends AnyFunSuite {
         s"planted exact-dup pair ($i,${i + 10000L}) evicted by LSH noise")
     }
 
-    // (4) plan shape in the at-scale config: shuffle join, never broadcast/
-    // cartesian — two hinted exchanges AQE skew-split can act on
-    val prev = spark.conf.getOption("spark.graft.candidateJoin.shuffleHash")
-    spark.conf.set("spark.graft.candidateJoin.shuffleHash", "on")
-    try {
-      val cands = Dedup.lshCandidatePairIds(df, "doc_id", "text")
-      val plan = cands.queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct"), "cartesian in candidate join")
-      assert(!plan.contains("BroadcastHashJoin"),
-        "hot-bucket self-join must not broadcast in the at-scale config")
-      assert(plan.contains("ShuffledHashJoin") || plan.contains("SortMergeJoin"),
-        s"expected a shuffle join:\n$plan")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.candidateJoin.shuffleHash", v)
-        case None => spark.conf.unset("spark.graft.candidateJoin.shuffleHash")
-      }
+    // (4) plan shape in the at-scale config — an input above the broadcast
+    // threshold, planned on a session clone with the threshold lowered
+    // below this corpus: shuffle join, never broadcast/cartesian — two
+    // hinted exchanges AQE skew-split can act on
+    val atScale = spark.newSession()
+    atScale.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
+    val scaledDf = {
+      import atScale.implicits._
+      (base ++ copies).toDF("doc_id", "text").repartition(8)
     }
+    val cands = Dedup.lshCandidatePairIds(scaledDf, "doc_id", "text")
+    val plan = cands.queryExecution.executedPlan.toString
+    assert(!plan.contains("CartesianProduct"), "cartesian in candidate join")
+    assert(!plan.contains("BroadcastHashJoin"),
+      "hot-bucket self-join must not broadcast in the at-scale config")
+    assert(plan.contains("ShuffledHashJoin") || plan.contains("SortMergeJoin"),
+      s"expected a shuffle join:\n$plan")
   }
 }

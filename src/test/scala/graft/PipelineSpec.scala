@@ -449,7 +449,10 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("cosineDedupPairs: hot-bucket occupancy cap — chain in over-cap buckets, ADC on/off parity") {
-    import spark.implicits._
+    // the cap is read through df.sparkSession: set it on a session clone
+    // and build the corpus there
+    val capped = spark.newSession()
+    capped.conf.set("spark.graft.dedup.maxBucketOccupancy", "8")
     // 40 IDENTICAL embeddings (the replicated-boilerplate pathology the
     // ADC bound cannot cut — identical vectors pass it at cosine 1), an
     // antipodal 3-clique (sign-flips every hyperplane dot, so it never
@@ -458,44 +461,35 @@ class PipelineSpec extends AnyFunSuite {
     val negV = hotV.map(x => -x)
     val s1 = Array(1f, -1f, 1f, -1f, 1f, -1f, 1f, -1f)
     val s2 = Array(-1f, 1f, 1f, 1f, -1f, -1f, 1f, 1f)
-    val df = ((1L to 40L).map(i => (i, hotV.toSeq)) ++
+    val rows = (1L to 40L).map(i => (i, hotV.toSeq)) ++
       (200L to 202L).map(i => (i, negV.toSeq)) ++
-      Seq((300L, s1.toSeq), (301L, s2.toSeq))).toDF("vec_id", "embedding")
-    def run(): Set[(Long, Long)] =
-      graft.ann.Ann.cosineDedupPairs(df, "vec_id", "embedding", 0.999,
+      Seq((300L, s1.toSeq), (301L, s2.toSeq))
+    def run(s: org.apache.spark.sql.SparkSession, adc: Boolean): Set[(Long, Long)] = {
+      import s.implicits._
+      graft.ann.Ann.cosineDedupPairsWith(
+        Some(graft.ann.Ann.PairPlan(adc = adc, grouped = false)))(
+        rows.toDF("vec_id", "embedding"), "vec_id", "embedding", 0.999,
         numPlanes = 16, bands = 4)
         .select(col("id_a"), col("id_b")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val prevCap = spark.conf.getOption("spark.graft.dedup.maxBucketOccupancy")
-    val prevAdc = spark.conf.getOption("spark.graft.cosineDedup.adcVerify")
-    try {
-      spark.conf.set("spark.graft.dedup.maxBucketOccupancy", "8")
-      spark.conf.set("spark.graft.cosineDedup.adcVerify", "off")
-      val capped = run()
-      // hot cluster: the 4-link id chain (36*4 + 3+2+1 = 150 pairs),
-      // every consecutive link present — the connectivity guarantee
-      val hotPairs = capped.filter(_._1 <= 40L)
-      assert(hotPairs.size === 150, s"chain volume: ${hotPairs.size}")
-      (1L until 40L).foreach { i =>
-        assert(hotPairs.contains((i, i + 1)), s"chain link ($i,${i + 1})")
-      }
-      // the under-cap antipodal clique survives in full
-      assert(capped.filter(_._1 >= 200L) ===
-        Set((200L, 201L), (200L, 202L), (201L, 202L)))
-      // ADC two-stage path under the same cap: identical output (chain
-      // pairs ride the bound filter — identical vectors pass it)
-      spark.conf.set("spark.graft.cosineDedup.adcVerify", "on")
-      assert(run() === capped, "ADC on/off must agree under the cap")
-      // knob off (the default): the full 780-pair hot clique
-      spark.conf.unset("spark.graft.dedup.maxBucketOccupancy")
-      assert(run().size === 780 + 3)
-    } finally {
-      Seq("spark.graft.dedup.maxBucketOccupancy" -> prevCap,
-        "spark.graft.cosineDedup.adcVerify" -> prevAdc).foreach {
-        case (key, Some(v)) => spark.conf.set(key, v)
-        case (key, None) => spark.conf.unset(key)
-      }
     }
+    val cappedPairs = run(capped, adc = false)
+    // hot cluster: the 4-link id chain (36*4 + 3+2+1 = 150 pairs),
+    // every consecutive link present — the connectivity guarantee
+    val hotPairs = cappedPairs.filter(_._1 <= 40L)
+    assert(hotPairs.size === 150, s"chain volume: ${hotPairs.size}")
+    (1L until 40L).foreach { i =>
+      assert(hotPairs.contains((i, i + 1)), s"chain link ($i,${i + 1})")
+    }
+    // the under-cap antipodal clique survives in full
+    assert(cappedPairs.filter(_._1 >= 200L) ===
+      Set((200L, 201L), (200L, 202L), (201L, 202L)))
+    // ADC two-stage path under the same cap: identical output (chain
+    // pairs ride the bound filter — identical vectors pass it)
+    assert(run(capped, adc = true) === cappedPairs,
+      "ADC on/off must agree under the cap")
+    // knob off (the default): the full 780-pair hot clique
+    assert(run(spark, adc = false).size === 780 + 3)
   }
 
   test("cosineDedupPairs: duplicate-id corpus collapses to distinct output pairs") {
@@ -776,19 +770,21 @@ class PipelineSpec extends AnyFunSuite {
       val truth = (0 until n).map { i =>
         i.toLong -> (0 until n).filter(j => find(j) == find(i)).min.toLong
       }.toMap
-      // both execution paths must match the oracle: the default driver
-      // union-find gate (small graph) AND the forced-distributed loop
+      // both execution paths must match the oracle: the driver
+      // union-find (small long-id graph) AND the distributed loop, which
+      // string ids always take — zero-padded, so the lexicographic
+      // minimum is the numeric one
       val got = graft.dedup.Dedup.connectedComponents(
         edges.toDF("id_a", "id_b"), (0L until n.toLong).toDF("doc_id"), "doc_id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === truth)
-      spark.conf.set("spark.graft.dedup.ccMaxDriverEdges", "0")
-      try {
-        val gotDist = graft.dedup.Dedup.connectedComponents(
-          edges.toDF("id_a", "id_b"), (0L until n.toLong).toDF("doc_id"), "doc_id")
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(gotDist === truth)
-      } finally spark.conf.unset("spark.graft.dedup.ccMaxDriverEdges")
+      def pad(i: Long): String = f"$i%03d"
+      val gotDist = graft.dedup.Dedup.connectedComponents(
+        edges.map { case (a, b) => (pad(a), pad(b)) }.toDF("id_a", "id_b"),
+        (0L until n.toLong).map(pad).toDF("doc_id"), "doc_id")
+        .collect().map(r => r.getString(0).toLong -> r.getString(1).toLong)
+        .toMap
+      assert(gotDist === truth)
     }
   }
 
@@ -804,15 +800,20 @@ class PipelineSpec extends AnyFunSuite {
     // split labels (ADVICE: unconverged labels assign one component several
     // cluster_ids with no warning)
     // the refuse contract belongs to the DISTRIBUTED loop — the r16
-    // driver union-find gate would contract this tiny graph exactly in
-    // one collect, so force the distributed path for this leg
-    spark.conf.set("spark.graft.dedup.ccMaxDriverEdges", "0")
-    try {
-      val ex = intercept[IllegalStateException] {
-        graft.dedup.Dedup.connectedComponents(pairs, ids, "doc_id", maxIterations = 3)
-          .collect()
-      }
-      assert(ex.getMessage.contains("did not converge"))
-    } finally spark.conf.unset("spark.graft.dedup.ccMaxDriverEdges")
+    // driver union-find gate would contract this tiny long-id graph
+    // exactly in one collect, so the leg uses the same path with
+    // zero-padded string ids, which always take the distributed loop
+    def pad(i: Long): String = f"$i%02d"
+    val strPairs = (0L until 12L).map(i => (pad(i), pad(i + 1)))
+      .toDF("id_a", "id_b")
+    val strIds = (0L to 12L).map(pad).toDF("doc_id")
+    assert(graft.dedup.Dedup.connectedComponents(strPairs, strIds, "doc_id",
+      maxIterations = 20).collect().map(_.getString(1)).distinct.toSeq
+      === Seq("00"))
+    val ex = intercept[IllegalStateException] {
+      graft.dedup.Dedup.connectedComponents(strPairs, strIds, "doc_id",
+        maxIterations = 3).collect()
+    }
+    assert(ex.getMessage.contains("did not converge"))
   }
 }

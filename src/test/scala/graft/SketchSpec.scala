@@ -68,6 +68,35 @@ class SketchSpec extends AnyFunSuite {
     assert((0 until 5).map(i => s"h$i").count(top5.contains) >= 4)
   }
 
+  test("StreamSummary bounds an untracked key by the minimum counter") {
+    val s = new StreamSummary(2)
+    // never full: an absent key is exactly 0
+    s.add("a", 3L)
+    assert(s.estimateCount("zz") === ((0L, 0L)))
+    // a:3, b:2, then c evicts b (count 2 + 1, error 2)
+    s.add("b", 2L); s.add("c", 1L)
+    assert(!s.counters.contains("b"))
+    val (c, e) = s.estimateCount("b")
+    assert(c - e <= 0L && 2L <= c, s"evicted b (true 2) outside [${c - e}, $c]")
+    assert(SummaryInterval(s).estimate("b") === ((0L, 3L, 3L)))
+  }
+
+  test("StreamSummary merge with a full smaller side keeps the untracked bound") {
+    // an item-aggregation fold halves capacity: merging a full folded
+    // summary into a wider, emptier one must still bound keys neither holds
+    val folded = new StreamSummary(2)
+    Seq("a" -> 5L, "b" -> 4L, "c" -> 3L).foreach { case (k, n) => folded.add(k, n) }
+    val wide = new StreamSummary(8)
+    wide.add("d", 1L)
+    val truth = Map("a" -> 5L, "b" -> 4L, "c" -> 3L, "d" -> 1L)
+    for (m <- Seq(wide.merge(folded), folded.merge(wide))) {
+      truth.foreach { case (k, t) =>
+        val (cnt, err) = m.estimateCount(k)
+        assert(cnt - err <= t && t <= cnt, s"$k (true $t) outside [${cnt - err}, $cnt]")
+      }
+    }
+  }
+
   test("StreamSummary merge is exact for non-evicting sides") {
     val a = new StreamSummary(100); val b = new StreamSummary(100)
     (0 until 30).foreach(i => { a.add(s"k${i % 10}"); b.add(s"k${i % 15}") })

@@ -24,6 +24,26 @@ class TopKSpec extends AnyFunSuite {
     assert(got.toSeq === want.toSeq)
   }
 
+  test("Space-Saving queryFrequency bounds an evicted key by the minimum counter") {
+    // capacity 2 over four keys: the summary evicts, and an untracked
+    // key's true count lies anywhere in [0, min counter] — never (0, 0, 0)
+    import spark.implicits._
+    val counts = Seq("ss_a" -> 5, "ss_b" -> 4, "ss_c" -> 3, "ss_d" -> 2)
+    counts.flatMap { case (k, n) => Seq.fill(n)(k) }.toDF("k").coalesce(1)
+      .createOrReplaceTempView("ss_evict_src")
+    gs.sql("CREATE TOPK TABLE tk_ss_evict ON ss_evict_src OPTIONS(key 'k', " +
+      "streamSummary 'true', capacity '2', size '2')")
+    try {
+      val bounds = counts.map { case (k, n) =>
+        (k, n.toLong, gs.queryFrequency("tk_ss_evict", k).get)
+      }
+      bounds.foreach { case (k, n, (lower, est, upper)) =>
+        assert(lower <= n && n <= upper,
+          s"$k: exact count $n outside [$lower, $upper] (estimate $est)")
+      }
+    } finally gs.sql("DROP TOPK TABLE tk_ss_evict")
+  }
+
   test("CMS topk surfaces heavy hitters with sane bounds") {
     gs.sql("CREATE TOPK TABLE tk_types ON events OPTIONS(key 'event_type', " +
       "width '2000', depth '7', size '5')")

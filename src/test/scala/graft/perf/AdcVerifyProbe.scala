@@ -17,7 +17,11 @@ import org.apache.spark.sql.functions._
  *
  * Usage: Test/runMain graft.perf.AdcVerifyProbe <sfDir> <mode> [threshold]
  *        [passes] [m] [k] [pairEmit] — mode = parity | time-on | time-off
- *        | decomp; pairEmit = auto | grouped | join (r17 A/B knob)
+ *        | decomp; pairEmit = auto | grouped | join (auto = the emit the
+ *        operator's plan rule picks for this input). The forced modes run
+ *        through the operator's private plan seam; an m/k other than the
+ *        operator's 32/64 trains that codebook once, outside the timed
+ *        region, and passes it in (`codebooks`).
  */
 object AdcVerifyProbe {
   def main(args: Array[String]): Unit = {
@@ -42,19 +46,31 @@ object AdcVerifyProbe {
     val emb = raw.unionByName(raw.orderBy(col("vec_id")).limit(500)
       .withColumn("vec_id", col("vec_id") + lit(100000000000L)))
 
-    def full(adc: String) = {
-      spark.conf.set("spark.graft.cosineDedup.adcVerify", adc)
-      spark.conf.set("spark.graft.cosineDedup.adcM", mArg.toString)
-      spark.conf.set("spark.graft.cosineDedup.adcK", kArg.toString)
-      spark.conf.set("spark.graft.cosineDedup.pairEmit", pairEmit)
-      graft.ann.Ann.cosineDedupPairs(emb, "vec_id", "embedding", threshold)
+    val vecs = emb.filter(col("embedding").isNotNull)
+    val dim = vecs.select(size(col("embedding"))).head().getInt(0)
+    val grouped = pairEmit match {
+      case "grouped" => true
+      case "join" => false
+      case _ => graft.ann.Ann.pairPlan(
+        graft.ann.Ann.inputEstimate(emb, dim, vecs.count()), idIsLong = true,
+        spark.sessionState.conf.autoBroadcastJoinThreshold).grouped
     }
+    val codebooks =
+      if (mArg == graft.ann.Ann.AdcM && kArg == graft.ann.Ann.AdcK) None
+      else Some(graft.ann.Ann.pqTrain(vecs, "embedding",
+        graft.ann.Ann.chooseM(dim, mArg), math.min(256, kArg),
+        iterations = 10, seed = 7L))
+
+    def full(adc: Boolean) =
+      graft.ann.Ann.cosineDedupPairsWith(
+        Some(graft.ann.Ann.PairPlan(adc, grouped)))(
+        emb, "vec_id", "embedding", threshold, codebooks = codebooks)
 
     mode match {
       case "parity" =>
-        val on = full("on")
+        val on = full(adc = true)
         val nOn = on.count()
-        val off = full("off")
+        val off = full(adc = false)
         val nOff = off.count()
         val onlyOn = on.exceptAll(off).count()
         val onlyOff = off.exceptAll(on).count()
@@ -63,7 +79,7 @@ object AdcVerifyProbe {
           (if (nOn == nOff && onlyOn == 0 && onlyOff == 0) "MATCH"
            else "MISMATCH"))
       case m if m.startsWith("time") =>
-        val adc = if (m == "time-on") "on" else "off"
+        val adc = m == "time-on"
         var pairs = 0L
         def once(): Double = {
           val t0 = System.nanoTime()
@@ -72,13 +88,12 @@ object AdcVerifyProbe {
         }
         if (passes > 1) once()
         val ts = (1 to passes).map(_ => once()).sorted
-        println(f"PROBE adc-$adc sf=$sfDir t=$threshold " +
+        println(f"PROBE adc-${if (adc) "on" else "off"} sf=$sfDir t=$threshold " +
           f"wall=${ts(ts.size / 2)}%.2fs pairs=$pairs")
       case "decomp" =>
         // replicate the operator's internals (codes RIDE the banding
         // shuffle — the operator's own shape) with the residue persisted
         // between the two stages so the candidate join runs once
-        spark.conf.set("spark.graft.cosineDedup.adcVerify", "on")
         import graft.ann.Ann
         val src = emb.select(col("vec_id").as("id"), col("embedding").as("v"))
         val n = src.filter(col("v").isNotNull).count()

@@ -311,7 +311,7 @@ class GraftSession(val spark: SparkSession) {
         // full-fraction append: 0.33 → 0.89–1.16 s), so they keep the
         // lazy-persist form.
         //
-        // DURABILITY GATE (r16 advice): localCheckpoint stores blocks on
+        // DURABILITY GATE: localCheckpoint stores blocks on
         // executors ONLY and severs lineage — in cluster mode an executor
         // loss (or a dynamic-allocation decommission) would make the
         // in-memory sample table permanently unreadable, where the
@@ -636,44 +636,21 @@ class GraftSession(val spark: SparkSession) {
    * does not survive a crash, so replay cannot double-count by
    * construction; the check still fences STOP→START replays in one JVM). */
   def appendToTopKForBatch(name: String, df: DataFrame, batchTimeMs: Long,
-      streamName: String, batchId: Long): Unit =
-    appendToTopKForBatch(name, df, batchTimeMs, streamName, batchId, Nil)
-
-  /** [[appendToTopKForBatch]] with `legacyStreamNames`: prior fence-key
-   * spellings for the SAME logical stream (e.g. the pre-r12 checkpointed
-   * sink key). Legacy watermarks are RETIRED on first consult
-   * ([[graft.topk.TopKState.fenceAndRetire]]): a resumed pre-upgrade
-   * query (batchId at or past the legacy watermark) migrates it into the
-   * current key and stays fenced; a brand-new query (batch ids restarted
-   * at 0) is NOT fenced by another query's stale watermark — pre-retire
-   * code fenced every future sink's batches 0..N on an upgraded store
-   * forever. Only the current key's watermark ever advances. */
-  def appendToTopKForBatch(name: String, df: DataFrame, batchTimeMs: Long,
-      streamName: String, batchId: Long,
-      legacyStreamNames: Seq[String]): Unit = {
+      streamName: String, batchId: Long): Unit = {
     state.topkPaths.get(name.toLowerCase) match {
       case Some(p) =>
         val partials = topkState(name).buildPartials(df)
         GraftSession.withPathLock(spark, p) {
           val st = attachTopKTable(name, p)
-          val (fence, retired) =
-            st.fenceAndRetire(streamName, legacyStreamNames, batchId)
-          if (batchId > fence) {
+          if (batchId > st.appliedStreamBatch(streamName)) {
             st.mergePartialsAt(spark, partials, batchTimeMs)
             st.setAppliedStreamBatch(streamName, batchId)
-            saveTopK(name, p)
-          } else if (retired) {
-            // fenced replay that retired legacy state: persist the
-            // retirement (and any migration) so a crash before the next
-            // applied batch cannot resurrect the stale legacy watermark
             saveTopK(name, p)
           }
         }
       case None =>
         val st = topkState(name)
-        val (fence, _) =
-          st.fenceAndRetire(streamName, legacyStreamNames, batchId)
-        if (batchId > fence) {
+        if (batchId > st.appliedStreamBatch(streamName)) {
           st.append(df, batchTimeMs)
           st.setAppliedStreamBatch(streamName, batchId)
         }
@@ -703,36 +680,7 @@ class GraftSession(val spark: SparkSession) {
    * both contracts pinned by CrossJvmConcurrencySpec's
    * reader-during-recovery case. */
   def appendToSampleForBatch(rawName: String, df: DataFrame,
-      streamName: String, batchId: Long, seed: Long = 43L): DataFrame =
-    appendToSampleForBatch(rawName, df, streamName, batchId, seed, Nil)
-
-  /** [[appendToSampleForBatch]] with `legacyStreamNames` — prior fence-key
-   * spellings of the same logical stream, retired on consult (same
-   * rule as [[graft.topk.TopKState.fenceAndRetire]]): a resumed
-   * pre-upgrade query — recognizable because its batch ids continue past
-   * the legacy watermark — migrates the watermark into the current key
-   * (and records a `__streammigrated.*` marker attributing the legacy
-   * FILE spellings to this stream); a brand-new query (batch ids
-   * restarted at 0) is not fenced by the stale watermark, which pre-retire
-   * code did forever — but the watermark is QUARANTINED under
-   * `__streamretired.<legacy>` rather than deleted, so a pre-upgrade
-   * query that resumes AFTER the new query's consult still finds its
-   * fence (deleting it outright would re-apply the resumed query's
-   * replayed batches 0..N — duplicate rows, the dual of the data-loss
-   * bug). A quarantined key whose pre-upgrade query never resumes stays
-   * FOREVER by design — one small meta property per retired stream, and
-   * sweeping it on any schedule reopens that duplicate window for a
-   * query resuming after the sweep. Boundary (`batchId == legacy`, incl. legacy == 0 vs a new
-   * query's batch 0): treated as the resumed query and fenced — see
-   * [[graft.topk.TopKState.fenceAndRetire]] for why the replay-safe side
-   * of the inherent ambiguity is the right trade. Legacy-spelling
-   * leftover FILES for this batch are cleaned only when the marker
-   * attributes them to this stream — a new query's batch ids overlap a
-   * previous stream's published batches, and deleting by the shared
-   * legacy spelling would destroy published data. */
-  def appendToSampleForBatch(rawName: String, df: DataFrame,
-      streamName: String, batchId: Long, seed: Long,
-      legacyStreamNames: Seq[String]): DataFrame = {
+      streamName: String, batchId: Long, seed: Long = 43L): DataFrame = {
     val name = state.resolveSample(rawName).getOrElse(
       throw new IllegalArgumentException(s"No sample table named $rawName"))
     val info = state.samples(name)
@@ -740,67 +688,9 @@ class GraftSession(val spark: SparkSession) {
       case Some(path) =>
         val conf = spark.sessionState.newHadoopConf()
         val wmKey = s"__streambatch.${streamName.toLowerCase}"
-        val migratedKey = s"__streammigrated.${streamName.toLowerCase}"
-        val legacyWmKeys = legacyStreamNames.map(n =>
-          s"__streambatch.${n.toLowerCase}")
-        val retiredWmKeys = legacyStreamNames.map(n =>
-          s"__streamretired.${n.toLowerCase}")
         GraftSession.withPathLock(spark, path) {
-          // fence BEFORE the retirement meta rewrites below, not just the
-          // batch publish — a zombie's stale-props meta replace could
-          // clobber the successor's watermark (lost update → replayed
-          // batches re-apply as duplicates)
-          GraftSession.assertStoreFence(spark, path)
-          val cur = GraftSession.readSampleMetaProp(path, wmKey, conf)
-            .map(_.toLong)
-          val liveVals = legacyWmKeys.flatMap(k =>
-            GraftSession.readSampleMetaProp(path, k, conf).map(_.toLong))
-          val retiredVals = retiredWmKeys.flatMap(k =>
-            GraftSession.readSampleMetaProp(path, k, conf).map(_.toLong))
-          val allLegacy = liveVals ++ retiredVals
-          val migrating = cur.isEmpty && allLegacy.nonEmpty &&
-            batchId >= allLegacy.max
-          val applied = cur match {
-            // quarantined values do NOT join the defensive max: a new
-            // query's own watermark legitimately sits below them
-            case Some(c) => liveVals.foldLeft(c)(math.max)
-            case None if migrating => allLegacy.max
-            case None => -1L // brand-new stream: stale legacy must not fence
-          }
-          if (allLegacy.nonEmpty) {
-            // retire NOW, in one atomic meta republish — even when the
-            // batch below is fenced, so a crash cannot resurrect the
-            // stale watermark for the next brand-new sink. Three shapes:
-            // migrating — watermark (live or quarantined) moves under the
-            // current key; current-key consult — live spellings are
-            // superseded, quarantine stays for the late-resuming
-            // pre-upgrade query; brand-new consult — live spellings move
-            // into quarantine (per-key max with any prior quarantine)
-            if (migrating) {
-              GraftSession.rewriteSampleMetaProps(path,
-                legacyWmKeys ++ retiredWmKeys,
-                Map(wmKey -> allLegacy.max.toString, migratedKey -> "true"),
-                conf)
-            } else if (cur.isDefined) {
-              GraftSession.rewriteSampleMetaProps(path, legacyWmKeys,
-                Map.empty, conf)
-            } else if (liveVals.nonEmpty) {
-              val quarantined = legacyStreamNames.flatMap { n =>
-                val live = GraftSession.readSampleMetaProp(path,
-                  s"__streambatch.${n.toLowerCase}", conf).map(_.toLong)
-                val prior = GraftSession.readSampleMetaProp(path,
-                  s"__streamretired.${n.toLowerCase}", conf).map(_.toLong)
-                live.map(v => s"__streamretired.${n.toLowerCase}" ->
-                  math.max(v, prior.getOrElse(-1L)).toString)
-              }.toMap
-              GraftSession.rewriteSampleMetaProps(path, legacyWmKeys,
-                quarantined, conf)
-            }
-          }
-          // legacy FILE spellings belong to this stream iff it migrated
-          // (now, or on an earlier consult that crashed before publishing)
-          val ownsLegacyFiles = migrating || GraftSession
-            .readSampleMetaProp(path, migratedKey, conf).isDefined
+          val applied = GraftSession.readSampleMetaProp(path, wmKey, conf)
+            .map(_.toLong).getOrElse(-1L)
           if (batchId > applied) {
             // store-level fence: validated before every mutation below,
             // and stamped into the published file names so readSample can
@@ -824,30 +714,12 @@ class GraftSession(val spark: SparkSession) {
             val prefix = s"stream-$safe-b$batchId-"
             val staging = new org.apache.hadoop.fs.Path(dir,
               s".staging-$safe-b$batchId")
-            // pre-hash file name formats, so a store carrying leftovers of
-            // a publish that crashed BEFORE an upgrade still converges:
-            // this stream's own pre-hash spelling always (the raw key
-            // embeds the checkpoint hash, so it is stream-unique), plus
-            // the SHARED legacy fence-key spellings only when the
-            // migration marker attributes them to this stream — a
-            // brand-new query's batch ids overlap a previous stream's
-            // published batches under the shared spelling, and deleting
-            // by it would destroy that stream's published data
-            val legacyRaws = raw +:
-              (if (ownsLegacyFiles) legacyStreamNames.map(_.toLowerCase)
-               else Nil)
-            val legacyPrefixes = legacyRaws.map { r =>
-              val s = r.replaceAll("[^a-z0-9]", "_")
-              (s"stream-$s-b$batchId-", s".staging-$s-b$batchId")
-            }
             // leftovers of a crashed prior attempt at THIS batch —
             // including readSample-quarantined `.fenced-` spellings of it
             if (fs.exists(dir)) fs.listStatus(dir).foreach { s0 =>
               val n = s0.getPath.getName
               val bare = if (n.startsWith(".fenced-")) n.drop(8) else n
-              if (bare.startsWith(prefix) || n == staging.getName ||
-                  legacyPrefixes.exists { case (pf, st0) =>
-                    bare.startsWith(pf) || n == st0 }) {
+              if (bare.startsWith(prefix) || n == staging.getName) {
                 fs.delete(s0.getPath, true)
               }
             }
@@ -1049,9 +921,6 @@ class GraftSession(val spark: SparkSession) {
         }
       }
     }
-    // the legacy two-file layout is superseded by the snapshot
-    val legacyBin = new org.apache.hadoop.fs.Path(dir, GraftSession.TopkBinFile)
-    if (fs.exists(legacyBin)) fs.delete(legacyBin, false)
     // compacted-away batches become deletable one publish AFTER the
     // snapshot that stopped referencing them — mirroring the snapshot GC's
     // keep-one-back policy, so a reader attaching the retained version-1
@@ -1107,58 +976,49 @@ class GraftSession(val spark: SparkSession) {
       else org.apache.spark.sql.types.LongType
     val st = new graft.topk.TopKState(name, opts, keyType)
     val spillDir = new org.apache.hadoop.fs.Path(dir, GraftSession.TopkSpillDir)
-    Option(props.getProperty("__snapversion")).map(_.toLong) match {
-      case Some(v) =>
-        // fence-stamped publishes name their snapshot `<v>.f<epoch>`; the
-        // meta pointer carries the epoch so readers open EXACTLY the file
-        // the publishing holder renamed — a zombie's same-version file is
-        // a different name and simply never read
-        val fenceSuffix = Option(props.getProperty("__snapfence"))
-          .map(e => s".f$e").getOrElse("")
-        val snapPath = new org.apache.hadoop.fs.Path(dir,
-          s"${GraftSession.TopkSnapPrefix}$v$fenceSuffix")
-        // may throw FileNotFoundException when a concurrent writer advanced
-        // past v and GC'd it — the caller retries with the fresh meta
-        val snapIn = new java.io.DataInputStream(fs.open(snapPath))
-        val (files, spans, bin) =
-          try {
-            val prefix = path.stripSuffix("/") + "/"
-            val fl = (0 until snapIn.readInt()).map { _ =>
-              val rel = snapIn.readUTF()
-              // absolute = rooted path OR any URI scheme — Hadoop qualified
-              // paths can be single-slash (file:/tmp/...), so a bare "://"
-              // test misclassifies them as relative
-              if (rel.startsWith("/") ||
-                  rel.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:/.*")) rel
-              else prefix + rel
-            }
-            val sp = (0 until snapIn.readInt()).map { _ =>
-              (snapIn.readLong(), snapIn.readLong())
-            }
-            val b = new Array[Byte](snapIn.readInt())
-            snapIn.readFully(b)
-            (fl, sp, b)
-          } finally snapIn.close()
-        st.stateLock.synchronized { st.buckets.restoreFrom(bin) }
-        st.restoreSpillView(spark, spillDir.toString, files, spans)
-        Option(props.getProperty("__retired")).foreach { enc =>
-          st.restoreRetired(enc.split('\n').toSeq.filter(_.nonEmpty).map { line =>
-            val sep = line.indexOf('|')
-            (line.take(sep).toLong, line.drop(sep + 1))
-          })
+    // every publish writes `__snapversion`; a meta without it is not a
+    // store this code wrote, and no retry can make it one
+    val v = Option(props.getProperty("__snapversion")).map(_.toLong).getOrElse(
+      throw new IllegalArgumentException(
+        s"TopK meta $metaPath has no __snapversion key; rebuild the store " +
+          "from its base (DROP TOPK TABLE, then CREATE TOPK TABLE)"))
+    // fence-stamped publishes name their snapshot `<v>.f<epoch>`; the
+    // meta pointer carries the epoch so readers open EXACTLY the file
+    // the publishing holder renamed — a zombie's same-version file is
+    // a different name and simply never read
+    val fenceSuffix = Option(props.getProperty("__snapfence"))
+      .map(e => s".f$e").getOrElse("")
+    val snapPath = new org.apache.hadoop.fs.Path(dir,
+      s"${GraftSession.TopkSnapPrefix}$v$fenceSuffix")
+    // may throw FileNotFoundException when a concurrent writer advanced
+    // past v and GC'd it — the caller retries with the fresh meta
+    val snapIn = new java.io.DataInputStream(fs.open(snapPath))
+    val (files, spans, bin) =
+      try {
+        val prefix = path.stripSuffix("/") + "/"
+        val fl = (0 until snapIn.readInt()).map { _ =>
+          val rel = snapIn.readUTF()
+          // absolute = rooted path OR any URI scheme — Hadoop qualified
+          // paths can be single-slash (file:/tmp/...), so a bare "://"
+          // test misclassifies them as relative
+          if (rel.startsWith("/") ||
+              rel.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:/.*")) rel
+          else prefix + rel
         }
-      case None =>
-        // legacy two-file layout: _topk.bin + directory-listed spill store
-        val binPath = new org.apache.hadoop.fs.Path(dir, GraftSession.TopkBinFile)
-        val binIn = fs.open(binPath)
-        val bytes =
-          try {
-            val len = fs.getFileStatus(binPath).getLen.toInt
-            val b = new Array[Byte](len); binIn.readFully(b); b
-          } finally binIn.close()
-        st.stateLock.synchronized { st.buckets.restoreFrom(bytes) }
-        if (fs.exists(spillDir)) st.attachSpill(spark, spillDir.toString)
-        else st.setSpillBase(spillDir.toString)
+        val sp = (0 until snapIn.readInt()).map { _ =>
+          (snapIn.readLong(), snapIn.readLong())
+        }
+        val b = new Array[Byte](snapIn.readInt())
+        snapIn.readFully(b)
+        (fl, sp, b)
+      } finally snapIn.close()
+    st.stateLock.synchronized { st.buckets.restoreFrom(bin) }
+    st.restoreSpillView(spark, spillDir.toString, files, spans)
+    Option(props.getProperty("__retired")).foreach { enc =>
+      st.restoreRetired(enc.split('\n').toSeq.filter(_.nonEmpty).map { line =>
+        val sep = line.indexOf('|')
+        (line.take(sep).toLong, line.drop(sep + 1))
+      })
     }
     Option(props.getProperty("__streambatch")).foreach { enc =>
       st.restoreStreamBatches(enc.split('\n').toSeq.filter(_.nonEmpty).map {
@@ -1384,7 +1244,6 @@ object GraftSession {
   /** Last line of every TopK meta [[GraftSession.saveTopK]] writes: a temp
    * meta ending in it was written completely. */
   private[graft] val TopkMetaTrailer = "#graft topk meta end"
-  val TopkBinFile = "_graft_topk.bin"
   /** Versioned one-file snapshots (`_topk.snap.<n>` = spill view + bucket
    * bytes); `__snapversion` in the meta points at the current one. */
   val TopkSnapPrefix = "_graft_topk.snap."
@@ -1396,15 +1255,15 @@ object GraftSession {
    * keys (sink fence keys, per-batch sample file prefixes): MurmurHash3 is
    * deterministic across JVMs — crash-replay fencing and delete-by-prefix
    * both require the SAME key to reproduce after a restart — and the 'h'
-   * marker keeps the hex from ever reading as a neighbouring name segment
-   * (hex has no 'h', so e.g. a legacy "-b<batchId>-" segment can never
-   * prefix-match a new-format name through an unlucky hash value). */
+   * marker keeps the hash segment from ever reading as the "-b<batchId>-"
+   * segment that follows it in a batch file name (a bare hex value can be
+   * `b1`), so a search for one batch's files cannot match a hash. */
   private[graft] def keyHashSuffix(raw: String): String =
     "h" + java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(raw))
 
   /** Current published snapshot version of a path-backed TopK (None for a
-   * fresh dir or a legacy two-file layout). */
+   * fresh dir). */
   private[graft] def readTopkSnapVersion(path: String,
       conf: org.apache.hadoop.conf.Configuration): Option[Long] =
     topkMetaPath(path, conf).flatMap { p =>
@@ -1935,7 +1794,7 @@ object GraftSession {
                 try java.sql.Date.valueOf(t).toLocalDate.atStartOfDay()
                 catch {
                   case _: IllegalArgumentException =>
-                    // legacy tolerance (single-digit month/day fields)
+                    // lenient user input: single-digit month/day fields
                     java.sql.Timestamp.valueOf(t).toLocalDateTime
                 }
             }
@@ -2080,31 +1939,6 @@ object GraftSession {
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** Read-modify-write of SEVERAL registry-metadata properties in ONE
-   * atomic republish (remove then set) — the legacy fence-key retirement
-   * must delete the stale keys and land any migrated watermark together,
-   * or a crash between two single-prop updates leaves half-retired state.
-   * CALLER holds the path lock. No-op when there is nothing to change. */
-  private[graft] def rewriteSampleMetaProps(path: String,
-      remove: Seq[String], set: Map[String, String],
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    val fs = p.getFileSystem(conf)
-    val props = loadPropsTornFree(p, conf)
-    val changed = remove.count(k => props.remove(k) != null) > 0 ||
-      set.exists { case (k, v) => props.getProperty(k) != v }
-    if (!changed) return
-    set.foreach { case (k, v) => props.setProperty(k, v) }
-    val tmp = new org.apache.hadoop.fs.Path(path, MetaFile + ".tmp-" +
-      java.util.UUID.randomUUID().toString.take(8))
-    val out = fs.create(tmp, true)
-    try props.store(out, "graft sample registry") finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(p).toUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(p),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
   def readSampleMeta(path: String,
       conf: org.apache.hadoop.conf.Configuration)
       : Option[(String, Seq[String], Double, Int)] = {
@@ -2121,7 +1955,8 @@ object GraftSession {
   }
 
   /** The create-time DECLARED option map stored alongside a persisted
-   * sample (`opt.*` meta keys; empty for pre-existing metas). */
+   * sample (`opt.*` meta keys; empty for a meta written without declared
+   * options, as `createSampleTable` and `sampleSink` write it). */
   def readSampleDeclaredOpts(path: String,
       conf: org.apache.hadoop.conf.Configuration): Map[String, String] = {
     val p = new org.apache.hadoop.fs.Path(path, MetaFile)

@@ -1222,8 +1222,8 @@ object SparkEntry {
       val raw = tbl(s, dir, "events")
       raw.createOrReplaceTempView("events_q51")
       // the declared column type and the cut predicate follow the loaded
-      // ts type (timestamp_ntz for timestamp[us] parquet; long for the
-      // legacy nanos vintage) — cut is 2024-01-08T00:00:00Z either way
+      // ts type (timestamp_ntz for timestamp[us] parquet; long for
+      // timestamp[ns] parquet) — cut is 2024-01-08T00:00:00Z either way
       val tsT = tsType(raw)
       val cutPred = tsT match {
         case org.apache.spark.sql.types.TimestampNTZType =>

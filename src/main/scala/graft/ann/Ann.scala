@@ -627,10 +627,10 @@ object Ann {
     val src = graft.core.Fanout(df)
       .select(col(idCol).as("id"), col(vecCol).as("v"))
     val hint = graft.core.CandidateJoin.maybeShuffleHash(src) _
-    // ---- two-stage verify (the r14 q11 fingerprint-fetch lesson applied
-    // to the operator that cannot use equality): at corpus scale the
-    // exact-cosine verify fetch dominates everything — 653M candidate
-    // pairs × ~530 B of vector bytes ≈ 345 GB of shuffle at 20M vectors
+    // ---- two-stage verify (filter on a compact fingerprint before
+    // fetching full rows, for the operator that cannot use equality): at
+    // corpus scale the exact-cosine verify fetch dominates everything —
+    // 653M candidate pairs × ~530 B of vector bytes ≈ 345 GB of shuffle at 20M vectors
     // (BENCH_sf1 addendum 13), a single-box disk wall and a real cost at
     // any scale. When engaged, ~56 B/row PqEncodeStats structs (m-byte
     // code, true norm, exact quantization residual) RIDE THE BANDING
@@ -648,7 +648,7 @@ object Ann {
     // default m=32 (38M at m=16 — 2-dim subspaces are what make the
     // bound bite; 500 at m=64, not worth the wider rows), exact stage
     // 74 s → 3.1 s.
-    // ---- pair-emit strategy (the r16 verdict's headline residual): at
+    // ---- pair-emit strategy (the largest remaining cost at 20M vectors): at
     // corpus scale the bucket self-join pays the banding exchange's
     // shuffle READ twice (both sides consume the shared exchange), two
     // 140M-row sorts (SMJ above the shuffle-hash cap), and a per-pair

@@ -19,8 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    pure overhead — the hint is dropped and the optimizer picks the plan.
  *  - ABOVE the shuffle-hash cap (below), the hint is dropped so the planner
  *    takes SORT-MERGE: a shuffled-hash join's build side CANNOT SPILL, and
- *    per-partition build maps grow linearly with the corpus. Measured at
- *    the r14 third-decade point: the pinned shuffle-hash shape OOM'd at 5M
+ *    per-partition build maps grow linearly with the corpus. Measured: the
+ *    pinned shuffle-hash shape OOM'd at 5M
  *    docs ("not enough memory to build hash map" — 80M banded rows over 32
  *    partitions, ~200 MB of hash map per task × 32 concurrent tasks in an
  *    8 GB heap) where the same query at 500k docs (estimate 17.6 MB) ran
@@ -30,8 +30,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *
  * The cap derives from EXECUTOR GEOMETRY rather than a constant, because
  * the thing it guards — the per-task in-memory build map — is a function
- * of per-task execution memory, not of the data alone (r14's measured
- * window was a property of THIS box's 8 GB ÷ 32 tasks; a 4 GB × 8-core
+ * of per-task execution memory, not of the data alone (the measured
+ * window was a property of an 8 GB ÷ 32-task executor; a 4 GB × 8-core
  * executor halves the safe point, a 16 GB × 4-core one quadruples it):
  *
  *   cap = heap × spark.memory.fraction ÷ concurrentTasks × 2/5
@@ -40,9 +40,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * tracks the per-task build size ~1:0.9 at the measured death point
  * (218 MB estimate → ~200 MB build maps), and the build must leave the
  * execution share room for the probe side and whatever else the stage
- * runs, so the cap takes 40% of it. On this box (8 GB heap, fraction 0.6,
- * 32 local tasks) that resolves to the r14 constant: ~64 MB — ~3.4× below
- * the measured death, ~3.6× above the largest measured-safe point.
+ * runs, so the cap takes 40% of it. At 8 GB heap, fraction 0.6 and 32
+ * local tasks that resolves to ~64 MB — ~3.4× below the measured death,
+ * ~3.6× above the largest measured-safe point.
  *
  * The decision reads the optimizer's size ESTIMATE of the un-exploded
  * input (each exploded side is a constant small factor of it in narrow

@@ -367,7 +367,7 @@ object Dedup {
     // carry each round's count forward — recounting the already-materialized
     // previous frame would spend an extra job per round
     var edgesCount = edges.count()
-    // SIZE-GATED driver union-find (r16): each alternating-star round costs
+    // SIZE-GATED driver union-find: each alternating-star round costs
     // 2–3 jobs (materialize, count, and the left-anti check at the fixed
     // point), so a tiny duplicate graph — the common case after content
     // verification — pays ~10 scheduler round-trips to contract 20 edges.

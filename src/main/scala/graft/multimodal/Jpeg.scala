@@ -4,7 +4,7 @@ package graft.multimodal
  * Pure-JVM JPEG decoder (ITU-T T.81, Huffman entropy coding) — the last
  * image format that rode the `javax.imageio` fallback. Covers the
  * overwhelming majority of real corpora: SOF0/SOF1 baseline/extended
- * sequential frames AND (r10) SOF2 progressive frames — spectral
+ * sequential frames AND SOF2 progressive frames — spectral
  * selection, successive approximation, EOB runs, AC refinement per T.81
  * G.2 — with 8-bit samples, 1 (grayscale) or 3 (YCbCr) components at any
  * of the standard sampling factors (4:4:4, 4:2:2, 4:2:0, 4:1:1), restart

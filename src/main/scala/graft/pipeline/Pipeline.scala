@@ -64,9 +64,9 @@ object Pipeline {
     // duplicates) = the t-th smallest h; dups = how many copies of hb sit
     // within the top t. The former formulation joined the ranked subtree
     // against its own rn==t row (a second window evaluation, a second
-    // full-width hash scan and an extra chained broadcast round — the
-    // r16 split profile put the whole split at 1.9 s over a CACHED 5k-doc
-    // input, latency-dominated by exactly these chained rounds); the
+    // full-width hash scan and an extra chained broadcast round — a split
+    // profile put the whole split at 1.9 s over a CACHED 5k-doc input,
+    // latency-dominated by exactly these chained rounds); the
     // (K, h)-count → max_by rewrite states the same two numbers with no
     // self-join. Labels are unchanged: same hb, same dups, same below/
     // at-boundary logic.
@@ -207,7 +207,7 @@ object Pipeline {
           .get("spark.graft.prefixSum.bucketBytes", (8L << 20).toString).toLong
         def wantOf(b: BigInt): Long =
           ((b + target - 1) / target).min(BigInt(buckets)).toLong
-        // floor by the LEAF scans' bytes (r16 advice): an intermediate
+        // floor by the LEAF scans' bytes: an intermediate
         // node's size estimate is an optimizer guess that can understate a
         // large input and silently collapse the window to one task — the
         // scan leaves' sizes are measurements (file-index bytes), so never

@@ -541,8 +541,6 @@ final class TimeBucketedSketch(
     }
     out.writeInt(folds.size)
     folds.foreach { case (iv, f) => out.writeLong(iv); out.writeInt(f) }
-    // combined-mode flag rides at the tail so pre-combined-mode snapshots
-    // (no trailing byte) still parse — the reader defaults it to false
     out.writeBoolean(timeAndItem)
     out.flush()
     bos.toByteArray
@@ -572,8 +570,7 @@ object TimeBucketedSketch {
     (0 until in.readInt()).foreach { _ =>
       val iv = in.readLong(); fs += ((iv, in.readInt()))
     }
-    val timeAndItem =
-      try in.readBoolean() catch { case _: java.io.EOFException => false }
+    val timeAndItem = in.readBoolean()
     val t = new TimeBucketedSketch(maxInterval,
       () => IntervalSketch.fromBytes(proto), itemAggregation, minWidth, timeAndItem)
     t.intervals ++= ivs

@@ -37,9 +37,9 @@ class SampleSource extends CreatableRelationProvider with RelationProvider
 
   /** True when a stored qcs entry is the time-slot bucket expression the
    * option engine derives from `timeSeriesColumn` (one of the four
-   * templates in [[graft.GraftSession.sampleByOptions]]) — the entry a
-   * legacy combined-qcs comparison must ignore, since the user never
-   * declared it. */
+   * templates in [[graft.GraftSession.sampleByOptions]]) — the entry the
+   * combined-qcs comparison for a meta without declared options must
+   * ignore, since the user never declared it. */
   private def isDerivedTimeSlot(entry: String, tsCol: String): Boolean = {
     val e = entry.toLowerCase.replaceAll("\\s", "")
     val ts = java.util.regex.Pattern.quote(tsCol.toLowerCase)
@@ -164,12 +164,12 @@ class SampleSource extends CreatableRelationProvider with RelationProvider
       } else sampled.write.mode(writeMode).parquet(path)
       // persist the declared options of the GOVERNING scheme (original on
       // append, this statement's on create/overwrite), minus storage keys.
-      // A legacy-meta append must NOT upgrade the meta to `opt.*` from its
-      // own (possibly partial) declared set: recording only this append's
-      // options as "what the user originally typed" makes a later append
-      // restating an original-but-unrecorded option fail with "created
-      // without it" — the meta stays legacy until a create/overwrite
-      // declares the full governing set
+      // An append to a meta without declared options must NOT add `opt.*`
+      // keys from its own (possibly partial) declared set: recording only
+      // this append's options as "what the user originally typed" makes a
+      // later append restating an original-but-unrecorded option fail with
+      // "created without it" — the meta stays option-less until a
+      // create/overwrite declares the full governing set
       val governing =
         if (appending && storedDeclared.isEmpty) Map.empty[String, String]
         else (if (appending) storedDeclared

@@ -49,23 +49,6 @@ object StreamSinks {
         s"sink:$structName:${java.util.UUID.randomUUID().toString.take(8)}"
     }
 
-  /** Fence-key spellings PRIOR code used for the same logical sink, fed to
-   * the ForBatch appends' retire-on-first-consult fallback: a structure
-   * that applied batch N under the old key must not re-apply N after this
-   * upgrade changed the key format (the watermark lives in the structure's
-   * durable state, so the old spelling survives the restart even though no
-   * new code ever writes it). The appends MIGRATE the old watermark into
-   * the new key when the consulting query's batch ids continue past it
-   * (the resumed pre-upgrade query) and DROP it when they restarted at 0
-   * (a brand-new query, which a stale watermark must not fence) — either
-   * way the legacy key is deleted, so upgraded stores don't carry the
-   * shared-key spelling forever. Pre-r12 checkpointed sinks keyed on the
-   * bare structure name; without a checkpoint the old keys were
-   * start()-unique and fence nothing durable. */
-  private def legacySinkKeys(structName: String,
-      checkpointLocation: Option[String]): Seq[String] =
-    if (checkpointLocation.isDefined) Seq(s"sink:$structName") else Nil
-
   /** Attach a TopK structure (created via `createTopK` or here) as a sink of
    * a streaming DataFrame. Each micro-batch runs the distributed sketch
    * aggregation and merges interval sketches into the driver-held state.
@@ -159,14 +142,13 @@ object StreamSinks {
         gs.state.topks.put(topkName.toLowerCase, buildState())
     }
     val streamKey = sinkFenceKey(topkName, checkpointLocation)
-    val legacyKeys = legacySinkKeys(topkName, checkpointLocation)
     val writer0 = stream.writeStream.outputMode("append").trigger(trigger)
     val writer = checkpointLocation
       .fold(writer0)(c => writer0.option("checkpointLocation", c))
     writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         gs.appendToTopKForBatch(topkName, batch,
-          System.currentTimeMillis(), streamKey, batchId, legacyKeys)
+          System.currentTimeMillis(), streamKey, batchId)
       }
       .start()
   }
@@ -195,7 +177,6 @@ object StreamSinks {
       checkpointLocation: Option[String] = None): StreamingQuery = {
     val spark = gs.spark
     val streamKey = sinkFenceKey(sampleName, checkpointLocation)
-    val legacyKeys = legacySinkKeys(sampleName, checkpointLocation)
     val writer0 = stream.writeStream.outputMode("append").trigger(trigger)
     val writer = checkpointLocation
       .fold(writer0)(c => writer0.option("checkpointLocation", c))
@@ -264,7 +245,7 @@ object StreamSinks {
             }
           }
           gs.appendToSampleForBatch(sampleName, batch, streamKey, batchId,
-            seed = 42L + batchId, legacyStreamNames = legacyKeys)
+            seed = 42L + batchId)
         }
         ()
       }

@@ -128,7 +128,6 @@ object StreamSql {
     val src = sourceFor(spark, d)
     val historyPath = d.options.getOrElse("historypath",
       s"${System.getProperty("java.io.tmpdir")}/graft_streams/${d.name}")
-    migrateLegacyHistory(spark, historyPath)
     src.writeStream
       .outputMode("append")
       // persistent checkpoint next to the history: STREAMING STOP → START
@@ -142,45 +141,6 @@ object StreamSql {
         ()
       }
       .start()
-  }
-
-  /** Histories written before the exactly-once layout were flat appends at
-   * the history root; the per-batch layout (`__graft_batch=N` partition
-   * dirs) cannot coexist with root-level part files — partition discovery
-   * fails with a conflicting-directory-structures error and kills the
-   * populator. The source checkpoint is deliberately persistent, so a
-   * resumed stream table CAN land on a legacy history after an upgrade:
-   * migrate root-level data files into a `__graft_batch=-1` dir once,
-   * before the query starts (-1 sorts below any real batch id and no
-   * replayed batch ever overwrites it). Dot/underscore-prefixed files
-   * (_SUCCESS, .crc) are invisible to parquet readers and stay put. */
-  private def migrateLegacyHistory(spark: org.apache.spark.sql.SparkSession,
-      historyPath: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(historyPath)
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return
-    // two sessions (or JVMs) issuing STREAMING START on the same stream
-    // table race this migration — serialize on the shared path lock, and
-    // tolerate a file that vanished because the winner already moved it
-    // (the list above ran before the lock was acquired in the loser)
-    graft.GraftSession.withPathLock(spark, historyPath) {
-      graft.GraftSession.assertStoreFence(spark, historyPath)
-      val legacy = fs.listStatus(dir).filter { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith(".") && !n.startsWith("_")
-      }
-      if (legacy.nonEmpty) {
-        val dst = new org.apache.hadoop.fs.Path(dir, "__graft_batch=-1")
-        fs.mkdirs(dst)
-        legacy.foreach { s =>
-          val moved = fs.rename(s.getPath,
-            new org.apache.hadoop.fs.Path(dst, s.getPath.getName))
-          require(moved || !fs.exists(s.getPath),
-            s"could not migrate legacy history file ${s.getPath}")
-        }
-      }
-    }
   }
 
   /** One micro-batch: history append + dependent sample/TopK population.

@@ -305,86 +305,6 @@ final class TopKState(val name: String, val opts: TopKOptions, val keyType: Data
     streamBatches.getOrElse(stream.toLowerCase, -1L)
   }
 
-  /** Fence consult with retirement of legacy fence-key spellings
-   * (pre-upgrade keys like `sink:<name>` that prior code wrote for the
-   * same logical stream). Returns `(fence watermark for this consult,
-   * whether the map changed — i.e. a path-backed structure should
-   * persist)`.
-   *
-   * Retirement semantics: a legacy watermark must fence the RESUMED
-   * pre-upgrade query's replayed batches (its batch ids continue past the
-   * watermark, so its first post-upgrade consult arrives with
-   * `batchId >= legacy`) — that consult MIGRATES the watermark into the
-   * current key. A consult with `batchId < legacy` and no current-key
-   * history is a BRAND-NEW query whose batch ids restarted at 0; fencing
-   * it against another query's stale watermark silently drops its
-   * batches 0..N forever (the r12 shared-key data-loss bug, persisting
-   * indefinitely for upgraded stores), so that consult is unfenced — but
-   * the legacy watermark is QUARANTINED under a `__streamretired.` pseudo
-   * key rather than deleted: a resumed pre-upgrade query may consult
-   * AFTER the new query did, and with the watermark gone its replayed
-   * batches 0..N would re-apply (duplicate rows / double-counted merges —
-   * the dual of the data-loss bug). A later no-history consult with
-   * `batchId >=` the quarantined value is that late-resuming query and
-   * migrates from quarantine; current-key consults ignore quarantined
-   * values entirely (the new query's own watermark may legitimately sit
-   * BELOW them, and maxing them in would re-fence it).
-   *
-   * Boundary: when the legacy watermark is exactly 0, a brand-new query's
-   * first consult (batchId = 0) satisfies `0 >= 0` and is treated as the
-   * resumed pre-upgrade query — its batch 0 stays fenced. The ambiguity
-   * at `batchId == legacy` is inherent (a strict `>` would instead
-   * re-apply the resumed query's replayed batch `legacy`, duplicating
-   * rows); we keep the replay-safe side: a fence can only suppress the
-   * one overlapping batch, a duplicate corrupts the store. Pinned in
-   * StreamingSpec ("legacy watermark 0 boundary").
-   *
-   * Retention: a `__streamretired.*` key whose pre-upgrade query never
-   * resumes is kept FOREVER by design — one small meta property per
-   * retired stream key, and deleting it on any schedule reopens the
-   * duplicate-replay window for a query that resumes after the sweep. */
-  def fenceAndRetire(current: String, legacyKeys: Seq[String],
-      batchId: Long): (Long, Boolean) = stateLock.synchronized {
-    val cur = current.toLowerCase
-    val c = streamBatches.get(cur)
-    val legacyLc = legacyKeys.map(_.toLowerCase)
-    val retiredLc = legacyLc.map(k => s"__streamretired.$k")
-    val liveVals = legacyLc.flatMap(streamBatches.get)
-    val retiredVals = retiredLc.flatMap(streamBatches.get)
-    if (liveVals.isEmpty && retiredVals.isEmpty) (c.getOrElse(-1L), false)
-    else {
-      val l = (liveVals ++ retiredVals).max
-      c match {
-        // current key live: live legacy spellings are superseded (defensive
-        // max — post-upgrade writes only ever land above them); quarantined
-        // values stay for the late-resuming pre-upgrade query and do NOT
-        // join the max (they may exceed this query's own watermark)
-        case Some(v) =>
-          val changed = liveVals.nonEmpty
-          legacyLc.foreach(streamBatches.remove)
-          (liveVals.foldLeft(v)(math.max), changed)
-        case None if batchId >= l =>
-          // resumed pre-upgrade query (live spelling, or late-resuming via
-          // quarantine): migrate the watermark under its current key
-          legacyLc.foreach(streamBatches.remove)
-          retiredLc.foreach(streamBatches.remove)
-          streamBatches.put(cur, l)
-          (l, true)
-        case None =>
-          // brand-new query: unfenced; move live spellings into quarantine
-          var changed = false
-          legacyLc.foreach { k =>
-            streamBatches.remove(k).foreach { v =>
-              val rk = s"__streamretired.$k"
-              streamBatches.put(rk, math.max(v, streamBatches.getOrElse(rk, -1L)))
-              changed = true
-            }
-          }
-          (-1L, changed)
-      }
-    }
-  }
-
   def setAppliedStreamBatch(stream: String, batchId: Long): Unit =
     stateLock.synchronized {
       val k = stream.toLowerCase
@@ -432,40 +352,6 @@ final class TopKState(val name: String, val opts: TopKOptions, val keyType: Data
     deferDeletes = true
     spillFiles.clear(); spillFiles ++= files
     spilledSpans.clear(); spilledSpans ++= spans
-  }
-
-  /** Fallback attach for a spill dir with no recorded view (pre-snapshot
-   * stores): adopt every batch currently present. Only safe when no other
-   * session is writing the path — the snapshot-recorded view is the
-   * consistent path. */
-  def attachSpill(spark: SparkSession, dir: String): Unit = stateLock.synchronized {
-    sparkRef = spark
-    spillPath = Some(dir)
-    spilledSpans.clear(); spillFiles.clear()
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) {
-      val entries = fs.listStatus(p).toSeq
-      spillFiles ++= entries
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch-"))
-        .map(_.getPath.toString).sorted
-      if (spillFiles.isEmpty) {
-        // legacy flat store: before batch subdirs, spillOldest appended
-        // part-files straight into the dir. Adopt each data file as its own
-        // batch so its spans are restored — skipping them would make
-        // spillMerged return None and every time-range query silently
-        // undercount the spilled intervals.
-        spillFiles ++= entries
-          .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
-            !s.getPath.getName.endsWith(".crc"))
-          .map(_.getPath.toString).sorted
-      }
-      if (spillFiles.nonEmpty) {
-        spilledSpans ++= spark.read.parquet(spillFiles.toSeq: _*)
-          .select(col("start"), col("len"))
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-      }
-    }
   }
 
   private def sparkOrActive: SparkSession =
@@ -606,7 +492,7 @@ final class TopKState(val name: String, val opts: TopKOptions, val keyType: Data
    * accumulates more than `compactThreshold` batches, THAT level's batches
    * merge into one batch at level+1 (`batch-L<n>-<uuid>` — the level rides
    * in the dir name, so it survives snapshots and re-attaches unchanged,
-   * and legacy un-levelled names parse as level 0). Each record is
+   * and a name without an `L<n>` tag is level 0). Each record is
    * rewritten at most once per level promotion, so cumulative write volume
    * is O(events·log_threshold(events)) — the previous whole-store rewrite
    * was amortized O(events²/threshold), which a years-lived table on a

@@ -614,11 +614,9 @@ case class DropTopkTableNode(name: String, ifExists: Boolean)
           Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir,
             graft.GraftSession.TopkMetaFile + ".tmp-*"))).toSeq.flatten
             .foreach(s => fs.delete(s.getPath, false))
-          Seq(graft.GraftSession.TopkMetaFile, graft.GraftSession.TopkBinFile)
-            .foreach { f =>
-              val fp = new org.apache.hadoop.fs.Path(dir, f)
-              if (fs.exists(fp)) fs.delete(fp, false)
-            }
+          val meta = new org.apache.hadoop.fs.Path(dir,
+            graft.GraftSession.TopkMetaFile)
+          if (fs.exists(meta)) fs.delete(meta, false)
           // versioned snapshots (and any orphaned publish temps) go too
           if (fs.exists(dir)) fs.listStatus(dir).foreach { s =>
             if (s.getPath.getName.startsWith(graft.GraftSession.TopkSnapPrefix)) {

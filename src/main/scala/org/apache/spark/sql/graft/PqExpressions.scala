@@ -40,9 +40,9 @@ private[graft] object PqExpressions {
 
   /** Registers a generated kernel as its OWN private method
    * (`ctx.addNewFunction`) and returns the callee name. Inlining the loop
-   * bodies at the call site is how round 16's first codegen attempt
-   * failed: Java forbids a block-local declaration that SHADOWS any
-   * in-scope local of the enclosing generated method (janino:
+   * bodies at the call site fails to compile: Java forbids a block-local
+   * declaration that SHADOWS any in-scope local of the enclosing generated
+   * method (janino:
    * "Redefinition of local variable"), and the surrounding whole-stage /
    * projection code owns names like `i` at many insertion points — the
    * fallback was silent outside the logs. A method body is its own scope

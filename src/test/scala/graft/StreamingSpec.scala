@@ -564,6 +564,13 @@ class StreamingSpec extends AnyFunSuite {
     // a DIFFERENT stream feeding the same structure has its own watermark
     gs.appendToTopKForBatch("fb_topk", batch, 3000L, "fb_other", 0L)
     assert(gs.queryFrequency("fb_topk", "k1").map(_._2) === Some(31L))
+    gs.appendToSampleForBatch("fb_sample", batch, "fb_other", 0L)
+    assert(spark.read.parquet(s"$root/sample").count() === createRows + 30,
+      "another stream's batch 0 must not be fenced by fb_stream's watermark")
+    // the watermark lives in the meta under the stream's own key
+    val conf = spark.sessionState.newHadoopConf()
+    assert(GraftSession.readSampleMetaProp(s"$root/sample",
+      "__streambatch.fb_stream", conf) === Some("1"))
     // and the fences survive a fresh attach (persisted with the state):
     // a resumed JVM replaying the last committed batch must skip it
     val s2 = spark.newSession()
@@ -576,8 +583,15 @@ class StreamingSpec extends AnyFunSuite {
       "the TopK watermark must survive the snapshot round-trip")
     g2.attachSampleTable("fb_sample2", s"$root/sample")
     g2.appendToSampleForBatch("fb_sample2", batch, "fb_stream", 1L)
-    assert(s2.read.parquet(s"$root/sample").count() === createRows + 20,
+    assert(s2.read.parquet(s"$root/sample").count() === createRows + 30,
       "the sample watermark must survive the meta round-trip")
+    // the resumed stream's NEXT batch applies after the re-attach
+    g2.appendToTopKForBatch("fb_topk2", batch, 4000L, "fb_stream", 2L)
+    assert(g2.queryFrequency("fb_topk2", "k1").map(_._2) === Some(41L))
+    g2.appendToSampleForBatch("fb_sample2", batch, "fb_stream", 2L)
+    assert(s2.read.parquet(s"$root/sample").count() === createRows + 40)
+    assert(GraftSession.readSampleMetaProp(s"$root/sample",
+      "__streambatch.fb_stream", conf) === Some("2"))
     // IN-MEMORY samples fence too (session-level watermark): a same-JVM
     // STOP->START replays the last uncommitted batch and must not
     // double-append
@@ -590,269 +604,6 @@ class StreamingSpec extends AnyFunSuite {
       "a replayed in-memory sample batch must not double-append")
     gs.appendToSampleForBatch("fb_mem", batch, "fb_stream", 1L)
     assert(spark.table("fb_mem").count() === mem0 + 20)
-  }
-
-  test("legacy fence keys are honored but never advanced (key-format upgrade)") {
-    // a structure that applied batch N under a PRIOR fence-key spelling
-    // (pre-r12 checkpointed sinks keyed on the bare structure name) must
-    // not re-apply N when the resumed sink presents the new hashed key —
-    // the legacy spelling rides the structure's durable state across the
-    // upgrade even though no new code writes it
-    val gs = new GraftSession(spark)
-    val root = java.nio.file.Files.createTempDirectory("graft_lf").toString
-    Seq("k1").toDF("event_type").createOrReplaceTempView("lf_base")
-    gs.sql("CREATE SAMPLE TABLE lf_sample ON lf_base OPTIONS(" +
-      s"qcs 'event_type', fraction '1.0', path '$root/sample')")
-    gs.sql("CREATE TOPK TABLE lf_topk ON lf_base OPTIONS(" +
-      "key 'event_type', streamSummary 'true', capacity '10000', " +
-      s"size '3', path '$root/topk')")
-    val batch = Seq.fill(10)("k1").toDF("event_type")
-    val legacy = "sink:lf"
-    val renamed = "sink:lf:hdeadbeef"
-    // the pre-upgrade code applied batch 0 under the legacy spelling
-    gs.appendToSampleForBatch("lf_sample", batch, legacy, 0L)
-    gs.appendToTopKForBatch("lf_topk", batch, 1000L, legacy, 0L)
-    val rows0 = spark.read.parquet(s"$root/sample").count()
-    val tk0 = gs.queryFrequency("lf_topk", "k1").map(_._2).get
-    // post-upgrade replay of batch 0 under the NEW key, legacy declared
-    gs.appendToSampleForBatch("lf_sample", batch, renamed, 0L, 42L, Seq(legacy))
-    gs.appendToTopKForBatch("lf_topk", batch, 1000L, renamed, 0L, Seq(legacy))
-    assert(spark.read.parquet(s"$root/sample").count() === rows0,
-      "legacy-applied batch must not re-apply under the new key")
-    assert(gs.queryFrequency("lf_topk", "k1").map(_._2) === Some(tk0))
-    // a genuinely new batch lands, and advances only the NEW key
-    gs.appendToSampleForBatch("lf_sample", batch, renamed, 1L, 42L, Seq(legacy))
-    gs.appendToTopKForBatch("lf_topk", batch, 2000L, renamed, 1L, Seq(legacy))
-    assert(spark.read.parquet(s"$root/sample").count() === rows0 + 10)
-    assert(gs.queryFrequency("lf_topk", "k1").map(_._2) === Some(tk0 + 10))
-    gs.sql("DROP SAMPLE TABLE lf_sample")
-    gs.sql("DROP TOPK TABLE lf_topk")
-  }
-
-  test("legacy watermarks are retired: stale state never fences a brand-new query") {
-    // the r12 upgrade path left the pre-upgrade `sink:<name>` watermark in
-    // the structure's durable state FOREVER, and honored it on every
-    // consult — so on an upgraded store every future brand-new
-    // checkpointed sink (fresh query, batch ids restarting at 0) had its
-    // batches 0..N silently fenced out by another query's stale watermark.
-    // Retirement rule: a consult whose batch ids CONTINUE past the legacy
-    // watermark is the resumed pre-upgrade query and migrates it; one
-    // whose ids restarted below it is a new query and drops it — either
-    // way the legacy key is deleted after the first consult.
-    val gs = new GraftSession(spark)
-    val root = java.nio.file.Files.createTempDirectory("graft_lr").toString
-    Seq("k1").toDF("event_type").createOrReplaceTempView("lr_base")
-    gs.sql("CREATE SAMPLE TABLE lr_sample ON lr_base OPTIONS(" +
-      s"qcs 'event_type', fraction '1.0', path '$root/sample')")
-    gs.sql("CREATE TOPK TABLE lr_topk ON lr_base OPTIONS(" +
-      "key 'event_type', streamSummary 'true', capacity '10000', " +
-      s"size '3', path '$root/topk')")
-    val batch = Seq.fill(10)("k1").toDF("event_type")
-    val legacy = "sink:lr"
-    val created = spark.read.parquet(s"$root/sample").count()
-    // pre-upgrade sink applied batches 0..2 under the legacy spelling
-    (0L to 2L).foreach { b =>
-      gs.appendToSampleForBatch("lr_sample", batch, legacy, b)
-      gs.appendToTopKForBatch("lr_topk", batch, 1000L * (b + 1), legacy, b)
-    }
-    val rows0 = spark.read.parquet(s"$root/sample").count()
-    val tk0 = gs.queryFrequency("lr_topk", "k1").map(_._2).get
-    // brand-new checkpointed query A: fresh checkpoint, batch ids restart
-    // at 0 — the stale watermark (2) must NOT fence it
-    val keyA = "sink:lr:haaaa1111"
-    gs.appendToSampleForBatch("lr_sample", batch, keyA, 0L, 42L, Seq(legacy))
-    gs.appendToTopKForBatch("lr_topk", batch, 9000L, keyA, 0L, Seq(legacy))
-    assert(spark.read.parquet(s"$root/sample").count() === rows0 + 10,
-      "a brand-new query's batch 0 must apply despite the stale legacy watermark")
-    assert(gs.queryFrequency("lr_topk", "k1").map(_._2) === Some(tk0 + 10))
-    // ...and the legacy spelling's PUBLISHED files survive (retirement
-    // must not delete another stream's data by the shared spelling)
-    assert(rows0 === created + 30L,
-      "legacy-published batches must remain intact")
-    // A's own replay of batch 0 is still fenced by A's new-key watermark
-    gs.appendToSampleForBatch("lr_sample", batch, keyA, 0L, 42L, Seq(legacy))
-    gs.appendToTopKForBatch("lr_topk", batch, 9000L, keyA, 0L, Seq(legacy))
-    assert(spark.read.parquet(s"$root/sample").count() === rows0 + 10)
-    assert(gs.queryFrequency("lr_topk", "k1").map(_._2) === Some(tk0 + 10))
-    // the legacy watermark is GONE from the durable state (retired on
-    // first consult, not just out-voted) — a second new query B is clean
-    val conf = spark.sessionState.newHadoopConf()
-    assert(GraftSession.readSampleMetaProp(s"$root/sample",
-      s"__streambatch.$legacy", conf).isEmpty,
-      "sample legacy watermark must be deleted on first consult")
-    val keyB = "sink:lr:hbbbb2222"
-    gs.appendToSampleForBatch("lr_sample", batch, keyB, 0L, 42L, Seq(legacy))
-    gs.appendToTopKForBatch("lr_topk", batch, 9500L, keyB, 0L, Seq(legacy))
-    assert(spark.read.parquet(s"$root/sample").count() === rows0 + 20)
-    assert(gs.queryFrequency("lr_topk", "k1").map(_._2) === Some(tk0 + 20))
-    // migration variant persists durably: a RESUMED pre-upgrade query on a
-    // fresh structure (batch ids continuing past the watermark) stays
-    // fenced across a re-attach in a NEW session (crash/resume shape)
-    gs.sql("CREATE SAMPLE TABLE lm_sample ON lr_base OPTIONS(" +
-      s"qcs 'event_type', fraction '1.0', path '$root/m_sample')")
-    gs.appendToSampleForBatch("lm_sample", batch, "sink:lm", 5L)
-    val m0 = spark.read.parquet(s"$root/m_sample").count()
-    val keyM = "sink:lm:hcccc3333"
-    // replay of batch 5 under the new key: fenced AND migrated
-    gs.appendToSampleForBatch("lm_sample", batch, keyM, 5L, 42L, Seq("sink:lm"))
-    assert(spark.read.parquet(s"$root/m_sample").count() === m0)
-    assert(GraftSession.readSampleMetaProp(s"$root/m_sample",
-      s"__streambatch.sink:lm", conf).isEmpty, "migrated key must be retired")
-    assert(GraftSession.readSampleMetaProp(s"$root/m_sample",
-      s"__streambatch.$keyM", conf) === Some("5"),
-      "the watermark must move under the resumed query's new key")
-    // a fresh session over the same store still fences the replay
-    val gs2 = new GraftSession(spark)
-    gs2.attachSampleTable("lm_sample2", s"$root/m_sample")
-    gs2.appendToSampleForBatch("lm_sample2", batch, keyM, 5L, 42L,
-      Seq("sink:lm"))
-    assert(spark.read.parquet(s"$root/m_sample").count() === m0,
-      "migrated watermark must fence the replay after re-attach")
-    gs.sql("DROP SAMPLE TABLE lr_sample")
-    gs.sql("DROP SAMPLE TABLE lm_sample")
-    gs.sql("DROP TOPK TABLE lr_topk")
-  }
-
-  test("quarantined legacy watermark still fences a late-resuming pre-upgrade query") {
-    // the dual of the retirement data-loss bug: when a brand-new query
-    // consults FIRST, deleting the legacy watermark outright would let the
-    // pre-upgrade query — resuming later, replaying batches 0..N from its
-    // checkpoint — re-apply every one of them (duplicate rows / doubled
-    // TopK counts). Retirement must QUARANTINE the watermark
-    // (__streamretired.<legacy>) and honor it for the late consult.
-    val gs = new GraftSession(spark)
-    val root = java.nio.file.Files.createTempDirectory("graft_lq").toString
-    Seq("k1").toDF("event_type").createOrReplaceTempView("lq_base")
-    gs.sql("CREATE SAMPLE TABLE lq_sample ON lq_base OPTIONS(" +
-      s"qcs 'event_type', fraction '1.0', path '$root/sample')")
-    gs.sql("CREATE TOPK TABLE lq_topk ON lq_base OPTIONS(" +
-      "key 'event_type', streamSummary 'true', capacity '10000', " +
-      s"size '3', path '$root/topk')")
-    val batch = Seq.fill(10)("k1").toDF("event_type")
-    val legacy = "sink:lq"
-    // pre-upgrade sink applied batches 0..2 under the legacy spelling
-    (0L to 2L).foreach { b =>
-      gs.appendToSampleForBatch("lq_sample", batch, legacy, b)
-      gs.appendToTopKForBatch("lq_topk", batch, 1000L * (b + 1), legacy, b)
-    }
-    val rows0 = spark.read.parquet(s"$root/sample").count()
-    val tk0 = gs.queryFrequency("lq_topk", "k1").map(_._2).get
-    // brand-new query A consults first: unfenced, and the legacy
-    // watermark moves into quarantine instead of vanishing
-    val keyA = "sink:lq:haaaa1111"
-    gs.appendToSampleForBatch("lq_sample", batch, keyA, 0L, 42L, Seq(legacy))
-    gs.appendToTopKForBatch("lq_topk", batch, 9000L, keyA, 0L, Seq(legacy))
-    assert(spark.read.parquet(s"$root/sample").count() === rows0 + 10)
-    val conf = spark.sessionState.newHadoopConf()
-    assert(GraftSession.readSampleMetaProp(s"$root/sample",
-      s"__streamretired.$legacy", conf) === Some("2"),
-      "the dropped legacy watermark must be quarantined, not deleted")
-    // A consults again (replay of its own batch 0): fenced by A's own
-    // watermark — the quarantined value (2) must NOT max into A's fence
-    // or A's batches 1..2 would be silently dropped
-    gs.appendToSampleForBatch("lq_sample", batch, keyA, 1L, 42L, Seq(legacy))
-    gs.appendToTopKForBatch("lq_topk", batch, 9100L, keyA, 1L, Seq(legacy))
-    assert(spark.read.parquet(s"$root/sample").count() === rows0 + 20,
-      "a quarantined watermark must not fence the new query's later batches")
-    assert(GraftSession.readSampleMetaProp(s"$root/sample",
-      s"__streamretired.$legacy", conf) === Some("2"),
-      "a current-key consult must leave the quarantine in place")
-    // NOW the pre-upgrade query resumes (new key spelling, batch ids
-    // continuing: replays its last batch 2) — must stay fenced
-    val keyR = "sink:lq:hrrrr2222"
-    gs.appendToSampleForBatch("lq_sample", batch, keyR, 2L, 42L, Seq(legacy))
-    gs.appendToTopKForBatch("lq_topk", batch, 3000L, keyR, 2L, Seq(legacy))
-    assert(spark.read.parquet(s"$root/sample").count() === rows0 + 20,
-      "the late-resuming pre-upgrade query's replayed batch must stay fenced")
-    assert(gs.queryFrequency("lq_topk", "k1").map(_._2) === Some(tk0 + 20),
-      "the replayed batch must not double-count TopK merges")
-    // ...and the quarantine migrated under the resumed query's key
-    assert(GraftSession.readSampleMetaProp(s"$root/sample",
-      s"__streamretired.$legacy", conf).isEmpty,
-      "migration must clear the quarantine")
-    assert(GraftSession.readSampleMetaProp(s"$root/sample",
-      s"__streambatch.$keyR", conf) === Some("2"))
-    // its NEXT batch (3) applies normally
-    gs.appendToSampleForBatch("lq_sample", batch, keyR, 3L, 42L, Seq(legacy))
-    gs.appendToTopKForBatch("lq_topk", batch, 4000L, keyR, 3L, Seq(legacy))
-    assert(spark.read.parquet(s"$root/sample").count() === rows0 + 30)
-    assert(gs.queryFrequency("lq_topk", "k1").map(_._2) === Some(tk0 + 30))
-    gs.sql("DROP SAMPLE TABLE lq_sample")
-    gs.sql("DROP TOPK TABLE lq_topk")
-  }
-
-  test("legacy watermark 0 boundary: batchId == legacy is the fenced side") {
-    // when the legacy watermark is exactly 0, a consult at batchId = 0 is
-    // ambiguous — the resumed pre-upgrade query replaying its batch 0, or
-    // a brand-new query's first batch. `batchId >= legacy` picks the
-    // replay-safe side: the consult is treated as the resumed query and
-    // FENCED (a wrong fence suppresses one batch; the other side would
-    // duplicate the resumed query's replayed rows). This pin records the
-    // chosen trade — see TopKState.fenceAndRetire.
-    val gs = new GraftSession(spark)
-    val root = java.nio.file.Files.createTempDirectory("graft_lz").toString
-    Seq("k1").toDF("event_type").createOrReplaceTempView("lz_base")
-    gs.sql("CREATE SAMPLE TABLE lz_sample ON lz_base OPTIONS(" +
-      s"qcs 'event_type', fraction '1.0', path '$root/sample')")
-    val batch = Seq.fill(10)("k1").toDF("event_type")
-    val legacy = "sink:lz"
-    gs.appendToSampleForBatch("lz_sample", batch, legacy, 0L)
-    val rows0 = spark.read.parquet(s"$root/sample").count()
-    val keyN = "sink:lz:hnnnn1111"
-    gs.appendToSampleForBatch("lz_sample", batch, keyN, 0L, 42L, Seq(legacy))
-    assert(spark.read.parquet(s"$root/sample").count() === rows0,
-      "batchId 0 vs legacy watermark 0 is treated as the resumed " +
-        "pre-upgrade query's replay and fenced (the replay-safe side)")
-    val conf = spark.sessionState.newHadoopConf()
-    assert(GraftSession.readSampleMetaProp(s"$root/sample",
-      s"__streambatch.$keyN", conf) === Some("0"),
-      "the 0 watermark must migrate under the consulting key")
-    // batch 1 under the same key applies — the fence is one batch wide
-    gs.appendToSampleForBatch("lz_sample", batch, keyN, 1L, 42L, Seq(legacy))
-    assert(spark.read.parquet(s"$root/sample").count() === rows0 + 10)
-    gs.sql("DROP SAMPLE TABLE lz_sample")
-  }
-
-  test("a pre-upgrade flat history migrates into __graft_batch=-1 on START") {
-    // the exactly-once layout stores history as per-batch partition dirs;
-    // a history written by the old flat-append layout (reachable because
-    // the checkpoint is persistent across upgrades) would make partition
-    // discovery fail with conflicting-directory-structures and kill the
-    // populator — START must migrate the root-level files first
-    val gs = new GraftSession(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_legacy_hist").toString
-    val histDir = s"$dir/hist"
-    new java.io.File(histDir).mkdirs()
-    // simulate the legacy layout: bare part files at the history root
-    val stage = java.nio.file.Files.createTempDirectory("graft_legacy_stage")
-    (1L to 30L).map(i => (i, "legacy", i.toDouble))
-      .toDF("user_id", "event_type", "value")
-      .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    new java.io.File(stage.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).zipWithIndex.foreach { case (f, i) =>
-        java.nio.file.Files.move(f.toPath,
-          java.nio.file.Paths.get(histDir, s"part-legacy-$i.parquet"))
-      }
-    (31L to 50L).map(i => (i, "fresh", i.toDouble))
-      .toDF("user_id", "event_type", "value")
-      .coalesce(1).write.mode("append").parquet(s"$dir/in")
-    gs.sql("STREAMING INIT 0 MS")
-    gs.sql("CREATE STREAM TABLE ev_legacy (user_id long, event_type string, value double) " +
-      s"USING parquet OPTIONS(path '$dir/in', historypath '$histDir')")
-    gs.sql("STREAMING START")
-    try {
-      gs.state.activeStreams("ev_legacy").processAllAvailable()
-      // legacy rows and the new batch coexist in one partitioned layout
-      assert(spark.table("ev_legacy").count() === 50,
-        "legacy flat history rows must survive the migration")
-      assert(new java.io.File(s"$histDir/__graft_batch=-1").isDirectory,
-        "legacy files must move into the -1 batch dir")
-      assert(spark.table("ev_legacy")
-        .filter(col("event_type") === "legacy").count() === 30)
-    } finally {
-      gs.sql("STREAMING STOP")
-      gs.sql("DROP STREAM TABLE IF EXISTS ev_legacy")
-    }
   }
 
   test("dropping a sample (or its stream) clears the in-memory replay fence") {

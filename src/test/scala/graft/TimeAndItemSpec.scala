@@ -185,14 +185,6 @@ class TimeAndItemSpec extends AnyFunSuite {
       assert(restored.refinedEstimate(start, 24L, "k") ===
         tb.refinedEstimate(start, 24L, "k"))
     }
-    // pre-combined-mode snapshots (no trailing flag byte) still parse
-    val legacy = new TimeBucketedSketch(4, mkCms(128), itemAggregation = true, minWidth = 16)
-    (0L until 6L).foreach(iv => feed(legacy, iv, Seq("k" -> 1L), 128))
-    val legacyBytes = legacy.snapshotBytes
-    val trimmed = java.util.Arrays.copyOf(legacyBytes, legacyBytes.length - 1)
-    val back = TimeBucketedSketch.fromSnapshot(trimmed)
-    assert(!back.timeAndItem)
-    assert(back.intervals.keySet === legacy.intervals.keySet)
   }
 
   test("restoreInterval reinstates a parked member through a re-materialization") {

@@ -365,72 +365,35 @@ class TopKSpec extends AnyFunSuite {
     assert(!spill.getFileSystem(conf).exists(spill))
   }
 
-  test("legacy flat spill store: adopted on attach and intact through a re-save") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tkl_").toString + "/tk"
-    gs.sql("CREATE TOPK TABLE tk_legacy ON events OPTIONS(key 'event_type', " +
-      "streamSummary 'true', capacity '16', size '5', timeSeriesColumn 'ts', " +
-      "timeInterval '86400000', maxInterval '100', timeUnit 'ns', " +
-      s"maxDriverEntries '16', path '$dir')")
-    val st = GraftState.of(spark).topks("tk_legacy")
-      .asInstanceOf[graft.topk.TopKState]
-    assert(st.spilledBucketCount > 0, "the guard must have forced a spill")
-    val expected = spark.table("events").groupBy(col("event_type")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // rewrite the store in the pre-snapshot layout: flat part-files straight
-    // in the spill dir (the old spillOldest appended parquet to the dir
-    // itself), _graft_topk.bin resident-bucket bytes, meta WITHOUT a
-    // __snapversion pointer
+  test("a TopK meta without __snapversion fails fast, naming the path and key") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_tkv_").toString + "/tk"
+    gs.sql("CREATE TOPK TABLE tk_nover ON events OPTIONS(key 'event_type', " +
+      s"size '5', streamSummary 'true', capacity '100000', path '$dir')")
     val conf = spark.sessionState.newHadoopConf()
-    val spillDir = new org.apache.hadoop.fs.Path(dir, GraftSession.TopkSpillDir)
-    val fs = spillDir.getFileSystem(conf)
-    val batches = fs.listStatus(spillDir).filter(_.isDirectory).map(_.getPath)
-    assert(batches.nonEmpty)
-    val tmpFlat = new org.apache.hadoop.fs.Path(dir, "_flat_tmp")
-    spark.read.parquet(batches.map(_.toString).toIndexedSeq: _*)
-      .coalesce(1).write.parquet(tmpFlat.toString)
-    batches.foreach(b => fs.delete(b, true))
-    fs.listStatus(tmpFlat)
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .foreach { s =>
-        fs.rename(s.getPath,
-          new org.apache.hadoop.fs.Path(spillDir, s.getPath.getName))
-      }
-    fs.delete(tmpFlat, true)
-    val binOut = fs.create(
-      new org.apache.hadoop.fs.Path(dir, GraftSession.TopkBinFile), true)
-    try binOut.write(st.buckets.snapshotBytes) finally binOut.close()
     val metaPath = new org.apache.hadoop.fs.Path(dir, GraftSession.TopkMetaFile)
+    val fs = metaPath.getFileSystem(conf)
     val props = new java.util.Properties()
     val metaIn = fs.open(metaPath)
     try props.load(metaIn) finally metaIn.close()
     props.remove("__snapversion")
     val metaOut = fs.create(metaPath, true)
-    try props.store(metaOut, "legacy layout") finally metaOut.close()
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(_.getPath.getName.startsWith(GraftSession.TopkSnapPrefix))
-      .foreach(s => fs.delete(s.getPath, false))
-    // fresh-session attach must adopt the flat store — silently skipping it
-    // would make every time-range query undercount the spilled intervals
-    GraftState.of(spark).topks.remove("tk_legacy")
-    GraftState.of(spark).topkPaths.remove("tk_legacy")
-    spark.catalog.dropTempView("tk_legacy")
-    gs.attachTopKTable("tk_legacy", dir)
-    val got = gs.queryTopK("tk_legacy", k = 5).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got === expected, "legacy flat spill store must be adopted on attach")
-    // re-save after adoption: the adopted paths are listStatus-qualified
-    // single-slash URIs (file:/...) — they must relativize at save and
-    // restore without the table prefix being prepended to a URI
-    gs.saveTopK("tk_legacy", dir)
-    GraftState.of(spark).topks.remove("tk_legacy")
-    GraftState.of(spark).topkPaths.remove("tk_legacy")
-    spark.catalog.dropTempView("tk_legacy")
-    gs.attachTopKTable("tk_legacy", dir)
-    val resaved = gs.queryTopK("tk_legacy", k = 5).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(resaved === expected,
-      "re-saved legacy store must restore spill paths intact")
-    gs.sql("DROP TOPK TABLE tk_legacy")
+    try props.store(metaOut, "no snapshot pointer") finally metaOut.close()
+    GraftState.of(spark).topks.remove("tk_nover")
+    GraftState.of(spark).topkPaths.remove("tk_nover")
+    spark.catalog.dropTempView("tk_nover")
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalArgumentException] {
+      gs.attachTopKTable("tk_nover", dir)
+    }
+    val elapsedMs = (System.nanoTime() - t0) / 1000000L
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("__snapversion"),
+      e.getMessage)
+    assert(!GraftSession.isTransientAttach(e),
+      "a meta without a snapshot pointer is permanent; retrying cannot heal it")
+    // the attach loop sleeps 100 ms between its 8 attempts
+    assert(elapsedMs < 700L, s"attach retried: failed after $elapsedMs ms")
+    assert(!GraftState.of(spark).topks.contains("tk_nover"))
+    fs.delete(new org.apache.hadoop.fs.Path(dir).getParent, true)
   }
 
   test("compaction defers batch deletion one publish: retained snapshots stay readable") {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions.expr
 import graft.sampling.StratifiedSampler
 
 /** Thrown at a publish commit point when the store's fence
- * (`_graft.fence`) has moved past the holder's acquisition epoch — the
+ * ([[graft.store.PathLock]]) has moved past the holder's epoch — the
  * path lock was lease-broken while this process was stalled, and landing
  * the write would interleave with the successor's. The publish is
  * abandoned; any artifacts the zombie landed before detection carry its
@@ -245,8 +245,10 @@ class GraftSession(val spark: SparkSession) {
         val w = sampled.write.mode("overwrite")
         (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
           .parquet(path)
-        GraftSession.writeSampleMeta(path, baseName, qcs, fraction,
-          reservoirSize, spark.sessionState.newHadoopConf())
+        GraftSession.withPathLock(spark, path) {
+          GraftSession.writeSampleMeta(path, baseName, qcs, fraction,
+            reservoirSize, spark.sessionState.newHadoopConf())
+        }
         spark.read.parquet(path)
       case None if fraction < 1.0 =>
         // cached lazily: the sampler is content-hash deterministic, so even
@@ -351,9 +353,8 @@ class GraftSession(val spark: SparkSession) {
   def attachSampleTable(name: String, path: String): DataFrame = {
     val (baseName, qcs, fraction, reservoirSize) =
       GraftSession.readSampleMeta(path, spark.sessionState.newHadoopConf())
-        .getOrElse(
-        throw new IllegalArgumentException(
-          s"No sample registry metadata (${GraftSession.MetaFile}) under $path"))
+        .getOrElse(throw new IllegalArgumentException(
+          s"No sample registry metadata under $path"))
     val sampleDf = spark.read.parquet(path)
     sampleDf.createOrReplaceTempView(name)
     state.samples.put(name, SampleInfo(name, baseName,
@@ -556,10 +557,9 @@ class GraftSession(val spark: SparkSession) {
   /** [[createTopK]] for callers that already hold the path lock
    * ([[GraftSession.withPathLock]] is a file lock — NOT reentrant): the
    * CREATE TOPK TABLE command must decide attach-vs-create and publish
-   * under ONE lock acquisition, or a reader's existence check landing in a
-   * writer's meta-replace window re-creates the table and publishes a
-   * fresh-seed snapshot over the writers' state (observed as a shared-path
-   * poller's counts jumping backwards to creation-time values). */
+   * under ONE lock acquisition, or two sessions that both found no store
+   * both create one, and the later publish replaces the earlier session's
+   * appends with fresh-seed counts. */
   def createTopK(name: String, baseName: String,
       options: Map[String, String], lockHeld: Boolean): graft.topk.TopKState = {
     val opts = graft.topk.TopKOptions.fromOptions(options,
@@ -696,7 +696,7 @@ class GraftSession(val spark: SparkSession) {
             // and stamped into the published file names so readSample can
             // quarantine anything a zombie lands past the checks
             GraftSession.assertStoreFence(spark, path)
-            val fenceTag = GraftSession.heldFence(spark, path)
+            val fenceTag = graft.store.PathLock.heldFence(spark, path)
               .map(f => s".e${f.epoch}").getOrElse("")
             val sampled = StratifiedSampler.sample(df, info.qcs,
               info.fraction, info.reservoirSize, seed)
@@ -763,169 +763,67 @@ class GraftSession(val spark: SparkSession) {
     }
   }
 
-  /** Persist a TopK structure's options + full sketch snapshot under
-   * `path` (Hadoop FS — works for hdfs:// and s3a:// paths like the
-   * sample persist path).
-   *
-   * Publishes are TORN-PROOF: the bucket state + spill view go into one
-   * immutable versioned snapshot file (`_topk.snap.<n>`, written to a temp
-   * name and renamed — a reader can never observe a partial snapshot), and
-   * the small meta file (options + `__snapversion` pointer) is replaced
-   * last. A reader that catches the brief delete→rename gap on the meta, or
-   * a pointer to an already-GC'd snapshot version, retries
-   * ([[attachTopKTable]]); it can be delayed, never corrupted. Callers
-   * mutating a SHARED path hold [[GraftSession.withPathLock]]. */
+  /** Publish a TopK structure's options + full sketch state as the next
+   * snapshot of the store at `path` (Hadoop FS — works for hdfs:// and
+   * s3a:// paths like the sample persist path). A publish is ONE
+   * write-once file ([[graft.store.TopkSnapshot]]): a reader sees the
+   * previous publish or this one, never a mix of the two. Callers mutating
+   * a SHARED path hold [[GraftSession.withPathLock]]; the store fence is
+   * re-validated at the commit point. */
   def saveTopK(name: String, path: String): Unit = {
     val st = topkState(name)
     val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(conf)
-    fs.mkdirs(dir)
-    // store-level fence (validated again at both commit points below);
-    // the held epoch rides in the snapshot FILE NAME, so a zombie's
-    // same-version publish can never clobber the successor's snapshot —
-    // distinct epochs are distinct files, and the meta pointer names
-    // exactly one of them
-    GraftSession.assertStoreFence(spark, path)
-    val fence = GraftSession.heldFence(spark, path)
-    val fenceSuffix = fence.map(f => s".f${f.epoch}").getOrElse("")
-    val version = GraftSession.readTopkSnapVersion(path, conf).getOrElse(0L) + 1
-    // --- snapshot body: spill view + bucket bytes, one immutable file ---
-    val snapPath = new org.apache.hadoop.fs.Path(dir,
-      s"${GraftSession.TopkSnapPrefix}$version$fenceSuffix")
-    val tmpPath = new org.apache.hadoop.fs.Path(dir,
-      s"${GraftSession.TopkSnapPrefix}$version.tmp-" +
-        java.util.UUID.randomUUID().toString.take(8))
-    // capture spill view + bucket bytes under ONE lock hold: a streaming
-    // sink appending between the two reads would snapshot a spill index
-    // inconsistent with the bucket state
-    val ((files, spans), bin) = st.stateLock.synchronized {
-      (st.spillView, st.buckets.snapshotBytes)
-    }
-    val out = new java.io.DataOutputStream(fs.create(tmpPath, true))
-    try {
-      // qualify BOTH sides before stripping: listStatus-derived batch paths
-      // come back scheme-qualified (file:/..., hdfs://nn/...) while the
-      // table path is usually raw — a plain startsWith would store the
-      // qualified form verbatim and a later restore would mangle it into
-      // <table>/file:/... (single-slash URIs defeat the "://" test)
-      val prefix = fs.makeQualified(dir).toString.stripSuffix("/") + "/"
-      out.writeInt(files.size)
-      // batch dirs live under the table path — store them relative so the
-      // whole directory can be relocated/copied
-      files.foreach { f =>
-        val qf = fs.makeQualified(new org.apache.hadoop.fs.Path(f)).toString
-        out.writeUTF(if (qf.startsWith(prefix)) qf.stripPrefix(prefix) else f)
+    var releasedBatches = Seq.empty[String]
+    graft.store.TopkSnapshot.publish(path, conf) { version =>
+      // capture spill view + bucket bytes under ONE lock hold: a streaming
+      // sink appending between the two reads would snapshot a spill index
+      // inconsistent with the bucket state
+      val ((files, spans), bin) = st.stateLock.synchronized {
+        (st.spillView, st.buckets.snapshotBytes)
       }
-      out.writeInt(spans.size)
-      spans.foreach { case (s, l) => out.writeLong(s); out.writeLong(l) }
-      out.writeInt(bin.length)
-      out.write(bin)
-    } finally out.close()
-    GraftSession.assertStoreFence(spark, path)
-    if (fs.exists(snapPath)) fs.delete(snapPath, false) // crashed same-version writer
-    require(fs.rename(tmpPath, snapPath),
-      s"could not publish TopK snapshot $snapPath")
-    // --- meta: options + snapshot pointer, replaced last ---
-    val props = new java.util.Properties()
-    val o = st.opts
-    props.setProperty("key", o.key)
-    o.timeSeriesColumn.foreach(props.setProperty("timeseriescolumn", _))
-    // `timeinterval` only for TIMED tables: its mere presence without a
-    // time-series column marks a table batch-timed at option resolution
-    // (TopKOptions.fromOptions), so writing it for untimed tables would
-    // flip their semantics on re-attach
-    if (o.timeSeriesColumn.isDefined || o.batchTimed) {
-      props.setProperty("timeinterval", o.timeIntervalMs.toString)
-    }
-    if (o.batchTimed) {
-      props.setProperty("batchtimed", "true")
-      // the established origin keeps interval numbering stable across
-      // re-attaches (first-append time unless an epoch was declared)
-      if (st.establishedEpoch >= 0L) {
-        props.setProperty("epoch", st.establishedEpoch.toString)
-      }
-    }
-    props.setProperty("size", o.size.toString)
-    props.setProperty("depth", o.depth.toString)
-    props.setProperty("width", o.width.toString)
-    props.setProperty("maxinterval", o.maxInterval.toString)
-    props.setProperty("streamsummary", o.streamSummary.toString)
-    o.frequencyCol.foreach(props.setProperty("frequencycol", _))
-    props.setProperty("capacity", o.capacity.toString)
-    props.setProperty("seed", o.seed.toString)
-    props.setProperty("timeunit", o.timeUnit)
-    props.setProperty("itemaggregation", o.itemAggregation.toString)
-    props.setProperty("timeanditemaggregation", o.timeAndItemAggregation.toString)
-    props.setProperty("maxdriverentries", o.maxDriverEntries.toString)
-    props.setProperty("__keytype",
-      if (st.keyType == org.apache.spark.sql.types.StringType) "string" else "long")
-    props.setProperty("__base",
-      state.topkBases.getOrElse(name.toLowerCase, ""))
-    props.setProperty("__snapversion", version.toString)
-    fence.foreach(f => props.setProperty("__snapfence", f.epoch.toString))
-    // stamp this publish's retirees and PERSIST the survivors: the next
-    // append re-attaches a fresh state, so an in-memory-only list would be
-    // forgotten and compacted-away batch dirs would leak forever. Deletion
-    // of the released entries happens after the meta replace below.
-    val releasedBatches = st.collectRetired(version)
-    val survivors = st.retiredView
-    if (survivors.nonEmpty) {
-      props.setProperty("__retired",
-        survivors.map { case (v, p) => s"$v|$p" }.mkString("\n"))
-    }
-    // per-stream applied-batch watermarks ride the same atomic meta publish
-    // as the counts they fence (streaming exactly-once — TopKState docs)
-    val streamBatches = st.streamBatchView
-    if (streamBatches.nonEmpty) {
-      props.setProperty("__streambatch",
-        streamBatches.map { case (s, b) => s"$s|$b" }.mkString("\n"))
-    }
-    val metaPath = new org.apache.hadoop.fs.Path(dir, GraftSession.TopkMetaFile)
-    val metaTmp = new org.apache.hadoop.fs.Path(dir,
-      GraftSession.TopkMetaFile + ".tmp-" +
-        java.util.UUID.randomUUID().toString.take(8))
-    val metaOut = fs.create(metaTmp, true)
-    try {
-      props.store(metaOut, "graft topk registry")
-      metaOut.write((GraftSession.TopkMetaTrailer + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    } finally metaOut.close()
-    GraftSession.assertStoreFence(spark, path)
-    // FileContext.rename(OVERWRITE) swaps the meta in one operation on
-    // HDFS; on the local file system it deletes the old meta and then
-    // renames. A writer killed between the two leaves only this complete
-    // temp copy, which readers then take as the meta
-    // ([[GraftSession.topkMetaPath]]) — never "no store", which would let
-    // a resumed writer re-create the table empty
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(metaPath).toUri, conf)
-    fc.rename(fs.makeQualified(metaTmp), fs.makeQualified(metaPath),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    // temp metas of crashed (or fenced-out) publishes are superseded now
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir,
-      GraftSession.TopkMetaFile + ".tmp-*"))).toSeq.flatten
-      .foreach(s => fs.delete(s.getPath, false))
-    // retire snapshots two or more versions old (current-1 is kept so a
-    // reader holding the previous pointer can still finish its attach)
-    fs.listStatus(dir).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith(GraftSession.TopkSnapPrefix) && !n.contains(".tmp-")) {
-        // `<v>` or fence-stamped `<v>.f<epoch>`
-        val core = n.stripPrefix(GraftSession.TopkSnapPrefix)
-        val v = core.takeWhile(_.isDigit)
-        val rest = core.drop(v.length)
-        if (v.nonEmpty && (rest.isEmpty || rest.matches("\\.f[0-9]+")) &&
-            v.toLong < version - 1) {
-          fs.delete(s.getPath, false)
-        }
-      }
+      // stamp this publish's retirees and PERSIST the survivors: the next
+      // append re-attaches a fresh state, so an in-memory-only list would
+      // be forgotten and compacted-away batch dirs would leak forever
+      releasedBatches = st.collectRetired(version)
+      val o = st.opts
+      val header = Seq(
+        "key" -> o.key, "size" -> o.size.toString, "depth" -> o.depth.toString,
+        "width" -> o.width.toString, "maxinterval" -> o.maxInterval.toString,
+        "streamsummary" -> o.streamSummary.toString,
+        "capacity" -> o.capacity.toString, "seed" -> o.seed.toString,
+        "timeunit" -> o.timeUnit,
+        "itemaggregation" -> o.itemAggregation.toString,
+        "timeanditemaggregation" -> o.timeAndItemAggregation.toString,
+        "maxdriverentries" -> o.maxDriverEntries.toString,
+        "__keytype" ->
+          (if (st.keyType == org.apache.spark.sql.types.StringType) "string" else "long"),
+        "__base" -> state.topkBases.getOrElse(name.toLowerCase, "")) ++
+        o.timeSeriesColumn.map("timeseriescolumn" -> _) ++
+        o.frequencyCol.map("frequencycol" -> _) ++
+        // `timeinterval` only for TIMED tables: its mere presence without a
+        // time-series column marks a table batch-timed at option resolution
+        // (TopKOptions.fromOptions), so writing it for untimed tables would
+        // flip their semantics on re-attach
+        Option.when(o.timeSeriesColumn.isDefined || o.batchTimed)(
+          "timeinterval" -> o.timeIntervalMs.toString) ++
+        Option.when(o.batchTimed)("batchtimed" -> "true") ++
+        // the established origin keeps interval numbering stable across
+        // re-attaches (first-append time unless an epoch was declared)
+        Option.when(o.batchTimed && st.establishedEpoch >= 0L)(
+          "epoch" -> st.establishedEpoch.toString) ++
+        Option(st.retiredView).filter(_.nonEmpty).map(r => "__retired" ->
+          r.map { case (v, p) => s"$v|$p" }.mkString("\n")) ++
+        // per-stream applied-batch watermarks ride the same publish as the
+        // counts they fence (streaming exactly-once — TopKState docs)
+        Option(st.streamBatchView).filter(_.nonEmpty).map(b => "__streambatch" ->
+          b.map { case (s, id) => s"$s|$id" }.mkString("\n"))
+      graft.store.TopkSnapshot.Snapshot(header.toMap, files, spans, bin)
     }
     // compacted-away batches become deletable one publish AFTER the
     // snapshot that stopped referencing them — mirroring the snapshot GC's
-    // keep-one-back policy, so a reader attaching the retained version-1
-    // still finds every file it references (collected above, before the
-    // meta write, so the survivors persisted with this publish)
+    // keep-one-back policy, so a reader attaching the retained previous
+    // version still finds every file it references
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     releasedBatches.foreach { f =>
       val hp = new org.apache.hadoop.fs.Path(f)
       if (fs.exists(hp)) fs.delete(hp, true)
@@ -933,103 +831,38 @@ class GraftSession(val spark: SparkSession) {
   }
 
   /** Re-attach a persisted TopK structure in a fresh session without
-   * replaying the base table (counterpart of [[attachSampleTable]]).
-   * Retries through a concurrent writer's publish window (meta replace /
-   * snapshot GC) — see [[saveTopK]]. */
+   * replaying the base table (counterpart of [[attachSampleTable]]): the
+   * latest snapshot [[saveTopK]] published. */
   def attachTopKTable(name: String, path: String): graft.topk.TopKState = {
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(conf)
-    var attempt = 0
-    var result: Option[graft.topk.TopKState] = None
-    while (result.isEmpty) {
-      attempt += 1
-      try result = Some(attachTopKOnce(fs, dir, name, path))
-      catch {
-        case e @ (_: java.io.FileNotFoundException |
-                  _: IllegalArgumentException) if attempt < 8 &&
-            GraftSession.isTransientAttach(e) =>
-          Thread.sleep(100)
-      }
-    }
-    result.get
-  }
-
-  private def attachTopKOnce(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, name: String,
-      path: String): graft.topk.TopKState = {
-    val metaPath = GraftSession.topkMetaPath(path,
-      spark.sessionState.newHadoopConf()).getOrElse(
-      throw new IllegalArgumentException(
-        s"No TopK registry metadata (${GraftSession.TopkMetaFile}) under $path"))
-    val props = GraftSession.loadPropsTornFree(metaPath,
-      spark.sessionState.newHadoopConf())
-    import scala.jdk.CollectionConverters._
-    val optsMap = props.stringPropertyNames().asScala
-      .filterNot(_.startsWith("__"))
-      .map(k => k -> props.getProperty(k)).toMap
-    val opts = graft.topk.TopKOptions.fromOptions(optsMap,
-      GraftSession.sessionZone(spark))
+    val snap = graft.store.TopkSnapshot.read(path, spark.sessionState.newHadoopConf())
+      .getOrElse(throw new IllegalArgumentException(s"No TopK store under $path"))
+    val header = snap.header
+    val opts = graft.topk.TopKOptions.fromOptions(
+      header.filterNot(_._1.startsWith("__")), GraftSession.sessionZone(spark))
     val keyType =
-      if (props.getProperty("__keytype") == "string")
-        org.apache.spark.sql.types.StringType
+      if (header.get("__keytype").contains("string")) org.apache.spark.sql.types.StringType
       else org.apache.spark.sql.types.LongType
     val st = new graft.topk.TopKState(name, opts, keyType)
-    val spillDir = new org.apache.hadoop.fs.Path(dir, GraftSession.TopkSpillDir)
-    // every publish writes `__snapversion`; a meta without it is not a
-    // store this code wrote, and no retry can make it one
-    val v = Option(props.getProperty("__snapversion")).map(_.toLong).getOrElse(
-      throw new IllegalArgumentException(
-        s"TopK meta $metaPath has no __snapversion key; rebuild the store " +
-          "from its base (DROP TOPK TABLE, then CREATE TOPK TABLE)"))
-    // fence-stamped publishes name their snapshot `<v>.f<epoch>`; the
-    // meta pointer carries the epoch so readers open EXACTLY the file
-    // the publishing holder renamed — a zombie's same-version file is
-    // a different name and simply never read
-    val fenceSuffix = Option(props.getProperty("__snapfence"))
-      .map(e => s".f$e").getOrElse("")
-    val snapPath = new org.apache.hadoop.fs.Path(dir,
-      s"${GraftSession.TopkSnapPrefix}$v$fenceSuffix")
-    // may throw FileNotFoundException when a concurrent writer advanced
-    // past v and GC'd it — the caller retries with the fresh meta
-    val snapIn = new java.io.DataInputStream(fs.open(snapPath))
-    val (files, spans, bin) =
-      try {
-        val prefix = path.stripSuffix("/") + "/"
-        val fl = (0 until snapIn.readInt()).map { _ =>
-          val rel = snapIn.readUTF()
-          // absolute = rooted path OR any URI scheme — Hadoop qualified
-          // paths can be single-slash (file:/tmp/...), so a bare "://"
-          // test misclassifies them as relative
-          if (rel.startsWith("/") ||
-              rel.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:/.*")) rel
-          else prefix + rel
-        }
-        val sp = (0 until snapIn.readInt()).map { _ =>
-          (snapIn.readLong(), snapIn.readLong())
-        }
-        val b = new Array[Byte](snapIn.readInt())
-        snapIn.readFully(b)
-        (fl, sp, b)
-      } finally snapIn.close()
-    st.stateLock.synchronized { st.buckets.restoreFrom(bin) }
-    st.restoreSpillView(spark, spillDir.toString, files, spans)
-    Option(props.getProperty("__retired")).foreach { enc =>
+    val spillDir =
+      new org.apache.hadoop.fs.Path(path, GraftSession.TopkSpillDir).toString
+    st.stateLock.synchronized { st.buckets.restoreFrom(snap.buckets) }
+    st.restoreSpillView(spark, spillDir, snap.files, snap.spans)
+    header.get("__retired").foreach { enc =>
       st.restoreRetired(enc.split('\n').toSeq.filter(_.nonEmpty).map { line =>
         val sep = line.indexOf('|')
         (line.take(sep).toLong, line.drop(sep + 1))
       })
     }
-    Option(props.getProperty("__streambatch")).foreach { enc =>
+    header.get("__streambatch").foreach { enc =>
       st.restoreStreamBatches(enc.split('\n').toSeq.filter(_.nonEmpty).map {
         line =>
           val sep = line.lastIndexOf('|')
           (line.take(sep), line.drop(sep + 1).toLong)
       })
     }
-    st.setSpillBase(spillDir.toString)
+    st.setSpillBase(spillDir)
     state.topks.put(name.toLowerCase, st)
-    props.getProperty("__base", "") match {
+    header.getOrElse("__base", "") match {
       case "" =>
       case b => state.topkBases.put(name.toLowerCase, b)
     }
@@ -1235,18 +1068,6 @@ object GraftSession {
     (sampled, qcs, fraction, reservoirSize)
   }
 
-  /** Registry metadata persisted next to a path-backed sample, so a FRESH
-   * session can re-attach the sample without resampling (the reference's
-   * samples survive restarts through its store catalog). Underscore-prefixed
-   * so parquet readers ignore it. */
-  val MetaFile = "_graft_sample.meta"
-  val TopkMetaFile = "_graft_topk.meta"
-  /** Last line of every TopK meta [[GraftSession.saveTopK]] writes: a temp
-   * meta ending in it was written completely. */
-  private[graft] val TopkMetaTrailer = "#graft topk meta end"
-  /** Versioned one-file snapshots (`_topk.snap.<n>` = spill view + bucket
-   * bytes); `__snapversion` in the meta points at the current one. */
-  val TopkSnapPrefix = "_graft_topk.snap."
   /** Subdirectory (under a path-backed TopK's path) holding spilled
    * interval buckets as parquet. */
   val TopkSpillDir = "_graft_topk_spill"
@@ -1262,440 +1083,26 @@ object GraftSession {
     "h" + java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(raw))
 
-  /** Current published snapshot version of a path-backed TopK (None for a
-   * fresh dir). */
-  private[graft] def readTopkSnapVersion(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Option[Long] =
-    topkMetaPath(path, conf).flatMap { p =>
-      Option(loadPropsTornFree(p, conf).getProperty("__snapversion")).map(_.toLong)
-    }
+  /** Serialize mutations of a shared persist path (sample/TopK appends,
+   * snapshot publishes) across sessions and JVMs, holding a fence epoch
+   * the critical section's publishes are checked against — see
+   * [[graft.store.PathLock]]. Not reentrant. */
+  def withPathLock[A](spark: SparkSession, path: String)(body: => A): A =
+    graft.store.PathLock.withPathLock(spark, path)(body)
 
-  /**
-   * The TopK meta to read under `path`: `_graft_topk.meta`, or — when a
-   * publish was killed inside the local file system's delete→rename meta
-   * replace ([[GraftSession.saveTopK]]) — the newest complete temp meta
-   * (highest snapshot version, then fence). That temp copy was the publish
-   * in flight: its snapshot is already in place, so it IS the current
-   * state. None when the path holds no TopK store.
-   */
-  private[graft] def topkMetaPath(path: String,
-      conf: org.apache.hadoop.conf.Configuration)
-      : Option[org.apache.hadoop.fs.Path] = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val meta = new org.apache.hadoop.fs.Path(dir, TopkMetaFile)
-    val fs = dir.getFileSystem(conf)
-    if (fs.exists(meta) && fs.getFileStatus(meta).isFile) return Some(meta)
-    val temps = Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir,
-      TopkMetaFile + ".tmp-*"))).toSeq.flatten
-    temps.flatMap { st =>
-      val text =
-        try {
-          val in = fs.open(st.getPath)
-          try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.ISO_8859_1)
-          finally in.close()
-        } catch { case _: java.io.IOException => "" }
-      if (!text.linesIterator.toSeq.lastOption.contains(TopkMetaTrailer)) None
-      else {
-        val props = new java.util.Properties()
-        props.load(new java.io.StringReader(text))
-        Option(props.getProperty("__snapversion")).map { v =>
-          ((v.toLong, props.getProperty("__snapfence", "-1").toLong), st.getPath)
-        }
-      }
-    }.maxByOption(_._1).map(_._2)
-  }
-
-  /** Attach-retry predicate: a missing snapshot file (GC'd under a reader
-   * holding the previous pointer) or a momentarily-absent meta (the
-   * delete→rename publish gap) heals on retry; anything else is real. */
-  private[graft] def isTransientAttach(e: Throwable): Boolean = e match {
-    case _: java.io.FileNotFoundException => true
-    case ia: IllegalArgumentException =>
-      Option(ia.getMessage).exists(_.startsWith("No TopK registry metadata"))
-    case _ => false
-  }
-
-  /**
-   * Serialize mutations of a shared persist path (sample/TopK appends,
-   * snapshot publishes) across sessions and JVMs: an exclusive lock file
-   * (`_graft.lock`) created atomically (`FileSystem.create` with
-   * `overwrite = false` — atomic on HDFS; on a LOCAL filesystem Hadoop's
-   * create(false) is check-then-act, so acquisition goes through
-   * `File.createNewFile` there, which is an atomic `open(O_CREAT|O_EXCL)`
-   * across processes on one host), with a HEARTBEAT LEASE: the holder
-   * refreshes the lock file's mtime every `leaseMs / 4` from a daemon
-   * thread, and a waiter may break the lock only when the heartbeat is
-   * STALE — mtime older than `spark.graft.pathLock.leaseMs` (default
-   * 120 s). Liveness, not wall time, gates breaking: a live holder may
-   * run arbitrarily long past the lease (recovery republication scales
-   * with store size; a fixed must-finish-inside-the-lease contract broke
-   * a live slow holder in practice), while a crashed holder stops
-   * heartbeating and is broken within one lease as before. Waiters give
-   * up loudly after `spark.graft.pathLock.acquireTimeoutMs` (default
-   * 2 × leaseMs) — the holder is then known live, just slow.
-   *
-   * Residual hazard of the lease alone: a WHOLE-PROCESS stall longer
-   * than the lease — the daemon heartbeat thread itself frozen, e.g. a
-   * VM pause — lets a waiter break a lock whose holder later resumes.
-   * The holder detects the break on its next heartbeat (the lock file's
-   * token no longer matches), flags the loss, skips deleting the
-   * successor's lock on exit, and logs loudly — but its in-flight writes
-   * could interleave with the new holder's for up to one heartbeat
-   * period. STORE-LEVEL FENCING closes that window (classic
-   * fencing-token design): every acquisition bumps a monotonic epoch in
-   * `_graft.fence` (readable by all sessions), the held epoch is exposed
-   * to the critical section via [[GraftSession.heldFence]], publishes
-   * stamp their artifacts with it, every commit point re-validates it
-   * ([[GraftSession.assertStoreFence]], throwing
-   * [[FencedLockException]] for a broken holder), and [[readSample]]
-   * quarantines same-batch files from a superseded epoch — so a zombie
-   * publish that slips past the ms-scale validation window is IGNORED by
-   * readers rather than served. Long-running distributed writes
-   * (streaming batch publishes, ad-hoc appends via
-   * [[GraftSession.publishAppend]]) stage dot-prefixed and re-validate
-   * AFTER the job, so a whole-job freeze cannot land files either. The
-   * epoch bump itself is verified after its write (lock still ours,
-   * fence carries our token) before the critical section is entered — a
-   * holder frozen between the lock create and the bump stands down on
-   * resume instead of publishing under a duplicate epoch, and the one
-   * thing such a pre-verify zombie CAN do (clobber the fence file with
-   * the live holder's own epoch under a foreign token) is detected and
-   * repaired by the live holder's next commit-point check.
-   */
-  def withPathLock[A](spark: SparkSession, path: String)(body: => A): A = {
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val lockPath = new org.apache.hadoop.fs.Path(dir, "_graft.lock")
-    val fs = lockPath.getFileSystem(conf)
-    fs.mkdirs(dir)
-    val localFile: Option[java.io.File] =
-      fs.makeQualified(lockPath).toUri match {
-        case u if u.getScheme == "file" => Some(new java.io.File(u.getPath))
-        case _ => None
-      }
-    // unique per acquisition: lets the heartbeat (and the final release)
-    // verify the lock file is still OURS after a possible lease break
-    val token = java.util.UUID.randomUUID().toString
-    val tokenBytes = token.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    def tryCreate(): Boolean = localFile match {
-      case Some(f) =>
-        // RawLocalFileSystem.create(overwrite=false) does exists()-then-
-        // create — two processes can BOTH succeed in the gap and the lock
-        // silently admits two writers (observed as a lost TopK append
-        // under load). createNewFile is a single atomic O_EXCL open.
-        if (!f.createNewFile()) false
-        else {
-          val out = new java.io.FileOutputStream(f)
-          try {
-            out.write(java.nio.ByteBuffer.allocate(8)
-              .putLong(System.currentTimeMillis()).array())
-            out.write(tokenBytes)
-          } finally out.close()
-          true
-        }
-      case None =>
-        val out = fs.create(lockPath, false)
-        try {
-          out.writeLong(System.currentTimeMillis())
-          out.write(tokenBytes)
-        } finally out.close()
-        true
-    }
-    def readLockToken(): Option[String] = readLockTokenAt(dir, conf)
-    val leaseMs = spark.conf.get("spark.graft.pathLock.leaseMs", "120000").toLong
-    val acquireTimeoutMs = spark.conf.get(
-      "spark.graft.pathLock.acquireTimeoutMs", (2 * leaseMs).toString).toLong
-    val deadline = System.currentTimeMillis() + acquireTimeoutMs
-    var acquired = false
-    while (!acquired) {
-      try {
-        if (tryCreate()) acquired = true
-        else throw new java.io.IOException("lock held")
-      } catch {
-        case _: java.io.IOException =>
-          val age =
-            try System.currentTimeMillis() -
-              fs.getFileStatus(lockPath).getModificationTime
-            catch { case _: java.io.FileNotFoundException => 0L }
-          if (age > leaseMs) {
-            // the holder's heartbeat is STALE (a live holder refreshes
-            // every leaseMs/4) — presume it dead and break the lease via
-            // atomic rename to a unique tombstone: of N waiters that all
-            // observed the stale lock, only the rename winner removes it.
-            // A plain delete races — waiter A deletes and re-creates, then
-            // waiter B's in-flight delete removes A's FRESH lock and two
-            // writers enter the section.
-            val tomb = new org.apache.hadoop.fs.Path(dir,
-              s"_graft.lock.tomb-${java.util.UUID.randomUUID().toString.take(8)}")
-            try {
-              if (fs.rename(lockPath, tomb)) fs.delete(tomb, false)
-            } catch { case _: java.io.IOException => /* another breaker won */ }
-          } else if (System.currentTimeMillis() > deadline) {
-            throw new IllegalStateException(
-              s"could not acquire $lockPath within $acquireTimeoutMs ms — " +
-                "a LIVE writer holds it (its heartbeat is fresh); raise " +
-                "spark.graft.pathLock.acquireTimeoutMs to wait longer")
-          } else Thread.sleep(50)
-      }
-    }
-    val lost = new java.util.concurrent.atomic.AtomicBoolean(false)
-    // store-level fencing: bump the monotonic epoch under the
-    // just-acquired exclusivity and expose it to the critical section.
-    // The bump is NOT atomic with the lock create, so the write alone is
-    // not proof of tenure: a process frozen between the two can resume
-    // after a successor broke its lease and clobber `_graft.fence` with
-    // a DUPLICATE epoch under its own token — the live successor would
-    // then fail assertStoreFence while the zombie passed, and duplicate
-    // epochs would defeat readSample's quarantine. So the acquisition is
-    // complete only after a post-write VERIFY of both files: (a) the
-    // lock must still be ours — if not, WE are that zombie and stand
-    // down before the critical section ever runs (so a published epoch
-    // is unique by construction: no holder reaches `body` without having
-    // seen fence==lock==its token after its write); (b) the fence must
-    // carry our token — if a racing zombie clobbered US, re-bump from
-    // ITS value (monotonic either way) and re-verify. Each zombie writes
-    // at most once before standing down, so the loop terminates. The
-    // seed on a MISSING fence file comes from the max epoch stamped into
-    // existing artifact names, not 1 — restarting below live artifact
-    // stamps would turn readSample's max-epoch rule against a
-    // legitimate fresh republish ([[maxArtifactEpoch]]).
-    val fenceEpoch = {
-      var epoch = 0L
-      var verified = false
-      while (!verified) {
-        val prev = readFenceFile(dir, conf).map(_._1)
-          .getOrElse(maxArtifactEpoch(dir, conf))
-        writeFenceFile(dir, prev + 1, token, conf)
-        postFenceWriteHook()
-        if (!readLockTokenAt(dir, conf).contains(token)) {
-          throw new FencedLockException(
-            s"lost $lockPath between acquiring it and publishing the " +
-              "fence epoch (process stall past the lease?) — a successor " +
-              "holds the store now; standing down before the critical " +
-              "section")
-        }
-        readFenceFile(dir, conf) match {
-          case Some((e, t)) if t == token => epoch = e; verified = true
-          case _ => () // a zombie's stale write clobbered ours: re-bump
-        }
-      }
-      epoch
-    }
-    val fenceKey = fs.makeQualified(dir).toString
-    val outerHolds = fenceHolds.get()
-    fenceHolds.set(outerHolds.updated(fenceKey,
-      FenceHold(fenceEpoch, token, lost)))
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val period = math.max(100L, leaseMs / 4)
-    val hb = new Thread(() => {
-      try {
-        while (!stop.get && !lost.get) {
-          Thread.sleep(period)
-          if (heartbeatFreezeHook(lockPath.toString, token)) {
-            // test hook simulating a WHOLE-PROCESS freeze: no refresh and
-            // no loss detection, exactly what a VM pause looks like
-          } else if (!stop.get) {
-            if (readLockToken().contains(token)) {
-              val now = System.currentTimeMillis()
-              try {
-                localFile match {
-                  case Some(f) => f.setLastModified(now)
-                  case None => fs.setTimes(lockPath, now, -1)
-                }
-              } catch { case _: java.io.IOException => /* next check decides */ }
-            } else {
-              // broken by a waiter that saw a stale heartbeat (we were
-              // frozen past the lease) — stop refreshing what is now
-              // someone else's lock and flag the release to stand down
-              lost.set(true)
-              log.warn(s"path lock $lockPath was lease-broken while held " +
-                  "(heartbeat went stale — process stall > " +
-                  s"$leaseMs ms?); in-flight writes may have interleaved " +
-                  "with the new holder's")
-            }
-          }
-        }
-      } catch { case _: InterruptedException => () }
-    })
-    hb.setDaemon(true)
-    hb.setName(s"graft-lock-heartbeat-${dir.getName}")
-    hb.start()
-    try body finally {
-      fenceHolds.set(outerHolds)
-      stop.set(true)
-      hb.interrupt()
-      hb.join(2000)
-      // release only OUR lock: after a detected (or heartbeat-unseen but
-      // token-visible) break, the file under this name is the successor's
-      if (!lost.get && readLockToken().contains(token)) {
-        fs.delete(lockPath, false)
-      }
-    }
-  }
-
-  /** The store-level fencing identity of a held path lock: the monotonic
-   * acquisition epoch (from `_graft.fence`), the lock token, and the
-   * heartbeat's lease-break flag. */
-  private[graft] final case class FenceHold(epoch: Long, token: String,
-      lost: java.util.concurrent.atomic.AtomicBoolean)
-
-  private val fenceHolds = new ThreadLocal[Map[String, FenceHold]] {
-    override def initialValue(): Map[String, FenceHold] = Map.empty
-  }
-
-  /** Test hook: a heartbeat whose (lock path, token) this predicate
-   * matches behaves as a FROZEN process — neither refreshing the lease
-   * nor detecting its break — so specs can reproduce the VM-pause zombie
-   * scenario deterministically. */
-  @volatile private[graft] var heartbeatFreezeHook: (String, String) => Boolean =
-    (_, _) => false
-
-  /** Test hook: runs between the acquire-time fence write and its
-   * verification — specs inject a successor's full takeover (or a
-   * zombie's clobber) into the exact window the non-atomic
-   * create→bump sequence leaves open. */
-  @volatile private[graft] var postFenceWriteHook: () => Unit = () => ()
+  /** Commit-point validation for a publisher holding the path lock: throws
+   * [[FencedLockException]] when the store's fence moved past the held
+   * epoch (see [[graft.store.PathLock.assertStoreFence]]); a caller holding
+   * no lock on the path passes. */
+  def assertStoreFence(spark: SparkSession, path: String): Unit =
+    graft.store.PathLock.assertStoreFence(
+      new org.apache.hadoop.fs.Path(path), spark.sessionState.newHadoopConf())
 
   /** Test hook: runs after [[publishAppend]]'s distributed staging write,
    * before its commit-point fence re-validation — specs inject a
    * successor takeover into the job-duration window a frozen appender
    * could sleep through. */
   @volatile private[graft] var appendStagingHook: () => Unit = () => ()
-
-  /** The fence held BY THIS THREAD for `dir` (qualified), if any — what a
-   * publisher stamps its artifacts with. */
-  private[graft] def heldFence(spark: SparkSession, path: String): Option[FenceHold] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(conf)
-    fenceHolds.get().get(fs.makeQualified(dir).toString)
-  }
-
-  private val FenceFile = "_graft.fence"
-
-  /** Read the token of the CURRENT `_graft.lock` holder under `dir` —
-   * the lock-ownership half of the acquire-time fence verification and
-   * of [[assertStoreFence]]'s clobber-repair path. `None`: no lock file
-   * (or unreadable — both read as "not ours"). */
-  private[graft] def readLockTokenAt(dir: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration): Option[String] = try {
-    val lockPath = new org.apache.hadoop.fs.Path(dir, "_graft.lock")
-    val fs = lockPath.getFileSystem(conf)
-    fs.makeQualified(lockPath).toUri match {
-      case u if u.getScheme == "file" =>
-        val bytes = java.nio.file.Files.readAllBytes(
-          new java.io.File(u.getPath).toPath)
-        if (bytes.length <= 8) None
-        else Some(new String(bytes, 8, bytes.length - 8,
-          java.nio.charset.StandardCharsets.UTF_8))
-      case _ =>
-        val in = fs.open(lockPath)
-        try {
-          in.readLong()
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](256)
-          var n = in.read(chunk)
-          while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-          Some(buf.toString(java.nio.charset.StandardCharsets.UTF_8))
-        } finally in.close()
-    }
-  } catch { case _: java.io.IOException => None }
-
-  /** Highest fence epoch stamped into any published artifact name under
-   * `dir` (`….e<N>.parquet` sample-batch/append stamps, `….f<N>` TopK
-   * snapshot stamps, including `.fenced-`-quarantined spellings) — the
-   * recovery seed when `_graft.fence` itself is lost (store copied, or a
-   * cleanup swept the underscore file): restarting epochs at 1 while
-   * artifacts retain higher stamps would make [[readSample]]'s max-epoch
-   * rule quarantine a legitimate fresh republish in favor of stale
-   * files. 0 when no stamped artifact exists (a genuinely fresh store). */
-  private[graft] def maxArtifactEpoch(dir: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration): Long = {
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return 0L
-    val pat = "\\.(?:e|f)([0-9]+)(?:\\.parquet)?$".r
-    fs.listStatus(dir).foldLeft(0L) { (acc, s) =>
-      pat.findFirstMatchIn(s.getPath.getName) match {
-        case Some(m) => math.max(acc, m.group(1).toLong)
-        case None => acc
-      }
-    }
-  }
-
-  private[graft] def readFenceFile(dir: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration): Option[(Long, String)] = {
-    val p = new org.apache.hadoop.fs.Path(dir, FenceFile)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    val props = loadPropsTornFree(p, conf)
-    for {
-      e <- Option(props.getProperty("epoch"))
-      t <- Option(props.getProperty("token"))
-    } yield (e.toLong, t)
-  }
-
-  private[graft] def writeFenceFile(dir: org.apache.hadoop.fs.Path, epoch: Long,
-      token: String, conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, FenceFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, FenceFile + ".tmp-" +
-      java.util.UUID.randomUUID().toString.take(8))
-    val fs = p.getFileSystem(conf)
-    val props = new java.util.Properties()
-    props.setProperty("epoch", epoch.toString)
-    props.setProperty("token", token)
-    val out = fs.create(tmp, true)
-    try props.store(out, "graft path-lock fence") finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(p).toUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(p),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  /** Commit-point validation for a publisher holding the path lock: the
-   * held fence must still be the store's CURRENT one. A broken holder —
-   * its heartbeat flagged the loss, or `_graft.fence` moved past its
-   * epoch while it was frozen — gets a [[FencedLockException]] BEFORE the
-   * mutation lands, shrinking the zombie-write window from a heartbeat
-   * period to the check→rename microseconds (and [[readSample]]'s
-   * epoch-stamped file quarantine covers even that residue for sample
-   * batches). A caller holding NO fence (no path lock on this thread) is
-   * let through unchanged — fencing guards the cross-session protocol,
-   * not single-owner direct calls. */
-  def assertStoreFence(spark: SparkSession, path: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(conf)
-    fenceHolds.get().get(fs.makeQualified(dir).toString).foreach { h =>
-      def boom(cause: String): Nothing =
-        throw new FencedLockException(
-          s"store fence for $path moved past this holder (epoch " +
-            s"${h.epoch}): $cause — the lease was broken while this " +
-            "process was stalled; standing down instead of interleaving " +
-            "with the successor's writes")
-      if (h.lost.get()) boom("heartbeat flagged the lease break")
-      readFenceFile(dir, conf) match {
-        case Some((e, t)) if e == h.epoch && t == h.token => ()
-        case Some((e, t)) if e == h.epoch &&
-            readLockTokenAt(dir, conf).contains(h.token) =>
-          // our epoch, a FOREIGN token, and the lock is still OURS: a
-          // pre-verify zombie (frozen between its lock create and fence
-          // bump, resumed after we took over) clobbered the fence with
-          // its duplicate-epoch write and then stood down at its own
-          // verify — it never entered its critical section, so no data
-          // moved. WE are the legitimate holder; repair the fence and
-          // pass rather than spuriously fencing the live writer. (A real
-          // successor can never collide on the epoch: it bumps past
-          // whatever the fence held, and on a lost fence file it seeds
-          // from the artifact stamps — both strictly above ours.)
-          log.warn(s"store fence for $path carried our epoch ${h.epoch} " +
-            s"under a foreign token ($t) while we still hold the lock — " +
-            "repairing a pre-verify zombie's clobber")
-          writeFenceFile(dir, h.epoch, h.token, conf)
-        case Some((e, _)) => boom(s"current fence epoch is $e")
-        case None => boom("fence file missing")
-      }
-    }
-  }
 
   /** Publish an ad-hoc (non-streaming) sample append under the held path
    * lock: stage the distributed write into a dot-prefixed directory
@@ -1736,7 +1143,7 @@ object GraftSession {
         catch { case _: java.io.IOException => () /* next append sweeps */ }
         throw e
     }
-    val fenceTag = heldFence(spark, path).map(f => s".e${f.epoch}")
+    val fenceTag = graft.store.PathLock.heldFence(spark, path).map(f => s".e${f.epoch}")
       .getOrElse("")
     var k = 0
     fs.listStatus(staging).foreach { s =>
@@ -1802,170 +1209,75 @@ object GraftSession {
       }
     }
 
-  /**
-   * Load a Properties file tolerating the checksummed-local-FS rename
-   * window: Hadoop's ChecksumFs renames a file and its `.crc` sidecar as
-   * TWO operations, so a reader polling through a concurrent
-   * `rename(OVERWRITE)` publish can briefly see the new data paired with
-   * the old checksum (observed as a ChecksumException in the two-JVM
-   * suite). The DATA rename is atomic — the bytes are always one complete
-   * version — so a checksum mismatch here is a torn-sidecar signal, not
-   * corruption: retry briefly for the sidecar to land, then read the same
-   * bytes with verification off (fresh uncached FS instance; the shared
-   * cached one must not be mutated). HDFS/object stores have no sidecars
-   * and never take the fallback.
-   */
-  private[graft] def loadPropsTornFree(p: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration): java.util.Properties = {
-    val props = new java.util.Properties()
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try {
-        val in = p.getFileSystem(conf).open(p)
-        try props.load(in) finally in.close()
-        return props
-      } catch {
-        case _: org.apache.hadoop.fs.ChecksumException if attempt < 4 =>
-          props.clear()
-          Thread.sleep(50)
-        case _: org.apache.hadoop.fs.ChecksumException =>
-          props.clear()
-          val fs = org.apache.hadoop.fs.FileSystem.newInstance(
-            p.toUri, conf)
-          try {
-            fs.setVerifyChecksum(false)
-            val in = fs.open(p)
-            try props.load(in) finally in.close()
-          } finally fs.close()
-          return props
-      }
-    }
-    props // unreachable
-  }
-
-  /** True when `path` holds persisted TopK registry metadata. */
+  /** True when `path` holds a persisted TopK store. */
   def topkMetaExists(path: String,
       conf: org.apache.hadoop.conf.Configuration): Boolean =
-    topkMetaPath(path, conf).isDefined
+    graft.store.TopkSnapshot.exists(path, conf)
 
-  /** Persisted TopK registry metadata: (option map without `__`-internal
-   * keys, base-table name). For drift checks before a re-attach. A
-   * reader can catch the meta replace ([[GraftSession.saveTopK]]) between
-   * its delete and rename, or read a temp meta that the rename then moves
-   * away — retry the not-found here since drift checks run OUTSIDE
-   * [[attachTopKTable]]'s loop. */
+  /** Persisted TopK options (without `__`-internal keys) and base-table
+   * name, from the latest snapshot's header — for drift checks before a
+   * re-attach. */
   def readTopkMetaOptions(path: String,
       conf: org.apache.hadoop.conf.Configuration): (Map[String, String], String) = {
-    var props: java.util.Properties = null
-    var attempt = 0
-    while (props == null) {
-      attempt += 1
-      val p = topkMetaPath(path, conf)
-        .getOrElse(new org.apache.hadoop.fs.Path(path, TopkMetaFile))
-      try props = loadPropsTornFree(p, conf)
-      catch {
-        case _: java.io.FileNotFoundException if attempt < 5 =>
-          Thread.sleep(100)
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    val opts = props.stringPropertyNames().asScala
-      .filterNot(_.startsWith("__"))
-      .map(k => k -> props.getProperty(k)).toMap
-    (opts, props.getProperty("__base", ""))
+    val header = graft.store.TopkSnapshot.readHeader(path, conf).getOrElse(
+      throw new IllegalArgumentException(s"No TopK store under $path"))
+    (header.filterNot(_._1.startsWith("__")), header.getOrElse("__base", ""))
   }
 
+  /** Publish the sample registry metadata: the latest version with these
+   * keys set, so keys this writer does not set (stream watermarks) carry
+   * over. The CALLER holds the path lock. */
   private[graft] def writeSampleMeta(path: String, baseName: String,
       qcs: Seq[String], fraction: Double, reservoirSize: Int,
       conf: org.apache.hadoop.conf.Configuration,
-      declaredOpts: Map[String, String] = Map.empty): Unit = {
-    val props = new java.util.Properties()
-    props.setProperty("baseName", baseName)
-    props.setProperty("qcs", qcs.mkString(","))
-    props.setProperty("fraction", fraction.toString)
-    props.setProperty("reservoirSize", reservoirSize.toString)
-    // the options AS DECLARED at create time (before time-slot derivation
-    // merges into `qcs`) — appends validate/inherit against these, since
-    // the combined qcs is not what the user ever typed
-    declaredOpts.foreach { case (k, v) =>
-      props.setProperty("opt." + k.toLowerCase, v)
+      declaredOpts: Map[String, String] = Map.empty): Unit =
+    graft.store.SampleMeta.update(path, conf) { props =>
+      props.setProperty("baseName", baseName)
+      props.setProperty("qcs", qcs.mkString(","))
+      props.setProperty("fraction", fraction.toString)
+      props.setProperty("reservoirSize", reservoirSize.toString)
+      // the options AS DECLARED at create time (before time-slot derivation
+      // merges into `qcs`) — appends validate/inherit against these, since
+      // the combined qcs is not what the user ever typed
+      declaredOpts.foreach { case (k, v) =>
+        props.setProperty("opt." + k.toLowerCase, v)
+      }
     }
-    // the sample parquet itself goes through Hadoop FS, so the metadata must
-    // too — a java.io.File here would break OPTIONS(path 'hdfs://…'/'s3a://…').
-    // Published via tmp + rename(OVERWRITE) like the TopK meta: the append
-    // path rewrites this file while lock-free readers in other JVMs may be
-    // mid-attach, and an in-place create(overwrite) would expose a
-    // truncated-file window to them
-    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    val tmp = new org.apache.hadoop.fs.Path(path, MetaFile + ".tmp-" +
-      java.util.UUID.randomUUID().toString.take(8))
-    val fs = p.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try props.store(out, "graft sample registry") finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(p).toUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(p),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
 
   /** One property from a sample's registry metadata (e.g. the per-stream
    * `__streambatch.<name>` applied-batch watermark). */
   private[graft] def readSampleMetaProp(path: String, key: String,
-      conf: org.apache.hadoop.conf.Configuration): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p) || !fs.getFileStatus(p).isFile) return None
-    Option(loadPropsTornFree(p, conf).getProperty(key))
-  }
+      conf: org.apache.hadoop.conf.Configuration): Option[String] =
+    graft.store.SampleMeta.read(path, conf).flatMap(p => Option(p.getProperty(key)))
 
-  /** Read-modify-write of one registry-metadata property, republished via
-   * the same atomic tmp+rename(OVERWRITE) as [[writeSampleMeta]]. The
-   * CALLER holds the path lock — the read-modify-write is only safe
-   * serialized against other writers. */
+  /** Publish the registry metadata with one property changed. The CALLER
+   * holds the path lock. */
   private[graft] def updateSampleMetaProp(path: String, key: String,
-      value: String, conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    val fs = p.getFileSystem(conf)
-    val props = loadPropsTornFree(p, conf)
-    props.setProperty(key, value)
-    val tmp = new org.apache.hadoop.fs.Path(path, MetaFile + ".tmp-" +
-      java.util.UUID.randomUUID().toString.take(8))
-    val out = fs.create(tmp, true)
-    try props.store(out, "graft sample registry") finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(p).toUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(p),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+      value: String, conf: org.apache.hadoop.conf.Configuration): Unit =
+    graft.store.SampleMeta.update(path, conf)(_.setProperty(key, value))
 
   def readSampleMeta(path: String,
       conf: org.apache.hadoop.conf.Configuration)
-      : Option[(String, Seq[String], Double, Int)] = {
-    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p) || !fs.getFileStatus(p).isFile) return None
-    val props = loadPropsTornFree(p, conf)
-    Some((props.getProperty("baseName"),
-      // same top-level split as option parsing: function-expression QCS
-      // entries carry argument commas through the meta round-trip
-      splitTopLevel(props.getProperty("qcs", "")),
-      props.getProperty("fraction").toDouble,
-      props.getProperty("reservoirSize").toInt))
-  }
+      : Option[(String, Seq[String], Double, Int)] =
+    graft.store.SampleMeta.read(path, conf).map { props =>
+      (props.getProperty("baseName"),
+        // same top-level split as option parsing: function-expression QCS
+        // entries carry argument commas through the meta round-trip
+        splitTopLevel(props.getProperty("qcs", "")),
+        props.getProperty("fraction").toDouble,
+        props.getProperty("reservoirSize").toInt)
+    }
 
   /** The create-time DECLARED option map stored alongside a persisted
    * sample (`opt.*` meta keys; empty for a meta written without declared
    * options, as `createSampleTable` and `sampleSink` write it). */
   def readSampleDeclaredOpts(path: String,
       conf: org.apache.hadoop.conf.Configuration): Map[String, String] = {
-    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p) || !fs.getFileStatus(p).isFile) return Map.empty
-    val props = loadPropsTornFree(p, conf)
     import scala.jdk.CollectionConverters._
-    props.stringPropertyNames().asScala
-      .filter(_.startsWith("opt."))
-      .map(k => k.stripPrefix("opt.") -> props.getProperty(k)).toMap
+    graft.store.SampleMeta.read(path, conf).fold(Map.empty[String, String]) { props =>
+      props.stringPropertyNames().asScala
+        .filter(_.startsWith("opt."))
+        .map(k => k.stripPrefix("opt.") -> props.getProperty(k)).toMap
+    }
   }
 }

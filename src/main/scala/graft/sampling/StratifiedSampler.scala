@@ -262,8 +262,8 @@ object StratifiedSampler {
     // buffers hold at most `reservoirSize` rows per stratum per task
     // ([[org.apache.spark.sql.graft.BoundedReservoirRows]]), so ONE scan
     // replaces two and the rank-window shuffle disappears — measured at
-    // sf0.1 lineitem (ReservoirPhaseProbe): totals pass 0.34 s + hash scan
-    // 0.31 s + join/window 0.18 s → one 0.35 s-class pass. The retained
+    // sf0.1 lineitem, timing each phase alone: totals pass 0.34 s + hash
+    // scan 0.31 s + join/window 0.18 s → one 0.35 s-class pass. The retained
     // multiset is IDENTICAL: ties on the full-width hash are identical
     // rows (or 2⁻⁶⁴ collisions), the same determinism class the rank
     // window documents above.

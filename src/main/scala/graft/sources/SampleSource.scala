@@ -153,15 +153,7 @@ class SampleSource extends CreatableRelationProvider with RelationProvider
         }
       val (sampled, qcs, fraction, reservoirSize) =
         graft.GraftSession.sampleByOptions(data, effective)
-      val writeMode = if (appending) "append" else "overwrite"
-      if (appending) {
-        // staged publish: fence re-validated AFTER the distributed write,
-        // part files land epoch-stamped ([[graft.GraftSession.publishAppend]])
-        graft.GraftSession.withPathLock(spark, path) {
-          graft.GraftSession.assertStoreFence(spark, path)
-          graft.GraftSession.publishAppend(spark, path, sampled)
-        }
-      } else sampled.write.mode(writeMode).parquet(path)
+      if (!appending) sampled.write.mode("overwrite").parquet(path)
       // persist the declared options of the GOVERNING scheme (original on
       // append, this statement's on create/overwrite), minus storage keys.
       // An append to a meta without declared options must NOT add `opt.*`
@@ -174,10 +166,21 @@ class SampleSource extends CreatableRelationProvider with RelationProvider
         if (appending && storedDeclared.isEmpty) Map.empty[String, String]
         else (if (appending) storedDeclared
               else declaredLower) -- Seq("path", "basetable")
-      graft.GraftSession.writeSampleMeta(path,
-        parameters.getOrElse("baseTable", parameters.getOrElse("basetable",
-          storedMeta.map(_._1).getOrElse(""))),
-        qcs, fraction, reservoirSize, hadoopConf, governing)
+      // the meta publish runs under the lock with the data publish: it
+      // rewrites the latest meta, keeping the stream watermarks of
+      // concurrent ForBatch appends
+      graft.GraftSession.withPathLock(spark, path) {
+        if (appending) {
+          // staged publish: fence re-validated AFTER the distributed write,
+          // part files land epoch-stamped ([[graft.GraftSession.publishAppend]])
+          graft.GraftSession.assertStoreFence(spark, path)
+          graft.GraftSession.publishAppend(spark, path, sampled)
+        }
+        graft.GraftSession.writeSampleMeta(path,
+          parameters.getOrElse("baseTable", parameters.getOrElse("basetable",
+            storedMeta.map(_._1).getOrElse(""))),
+          qcs, fraction, reservoirSize, hadoopConf, governing)
+      }
     }
     createRelation(sqlContext, parameters)
   }

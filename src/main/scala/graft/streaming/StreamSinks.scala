@@ -122,9 +122,9 @@ object StreamSinks {
     } else path match {
       case Some(p) =>
         // attach-vs-create decided and executed under ONE lock hold, like
-        // the DDL path (CreateTopKTableCommand) — a reader's existence
-        // check landing in a writer's meta-replace window must not
-        // re-create the table over the writer's state
+        // the DDL path (CreateTopKTableCommand) — a store created by a
+        // concurrent session after an unlocked existence check must be
+        // attached, not re-created over that session's state
         val conf = spark.sessionState.newHadoopConf()
         graft.GraftSession.withPathLock(spark, p) {
           if (graft.GraftSession.topkMetaExists(p, conf)) {

@@ -511,12 +511,11 @@ case class CreateTopkTableNode(name: String, base: String,
       def metaExists: Boolean = path.exists(p =>
         graft.GraftSession.topkMetaExists(p, spark.sessionState.newHadoopConf()))
       // optimistic, LOCK-FREE attach: re-attaching readers never contend
-      // with writers (attachTopKTable retries through publish windows).
-      // Only the CREATE fallback takes the path lock — and re-checks there,
-      // because an existence probe can land in a writer's meta-replace
-      // window and read "no meta": creating on that answer would publish a
-      // fresh-seed snapshot over every concurrent writer's data (the
-      // shared-path poller's counts snapping back to creation-time values).
+      // with writers (a publish never leaves the store without a complete
+      // snapshot). Only the CREATE fallback takes the path lock — and
+      // re-checks there, because another session may have created the
+      // store since the probe: creating on the stale answer would publish
+      // a fresh-seed snapshot over that session's data.
       def attachExisting(): Unit = {
         // re-attach only when the options the statement DECLARES agree with
         // the snapshot: silently ignoring a drifted size/capacity/key (or a
@@ -603,26 +602,11 @@ case class DropTopkTableNode(name: String, ifExists: Boolean)
       // counts that no longer correspond to any registered structure
       state.topkPaths.remove(name.toLowerCase).foreach { p =>
         // serialize the retirement against concurrent appenders: without
-        // the lock an in-flight reload-merge-publish could re-create the
-        // meta right after this delete and resurrect the dropped table
+        // the lock an in-flight reload-merge-publish could publish a
+        // snapshot right after this delete and resurrect the dropped table
         graft.GraftSession.withPathLock(spark, p) {
           graft.GraftSession.assertStoreFence(spark, p)
-          val dir = new org.apache.hadoop.fs.Path(p)
-          val fs = dir.getFileSystem(conf)
-          // temp metas first: with the meta gone, a complete one would be
-          // read as the store (GraftSession.topkMetaPath)
-          Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir,
-            graft.GraftSession.TopkMetaFile + ".tmp-*"))).toSeq.flatten
-            .foreach(s => fs.delete(s.getPath, false))
-          val meta = new org.apache.hadoop.fs.Path(dir,
-            graft.GraftSession.TopkMetaFile)
-          if (fs.exists(meta)) fs.delete(meta, false)
-          // versioned snapshots (and any orphaned publish temps) go too
-          if (fs.exists(dir)) fs.listStatus(dir).foreach { s =>
-            if (s.getPath.getName.startsWith(graft.GraftSession.TopkSnapPrefix)) {
-              fs.delete(s.getPath, false)
-            }
-          }
+          graft.store.TopkSnapshot.retire(p, conf)
         }
       }
       // ... and the spill store, wherever it lives (under the table's path

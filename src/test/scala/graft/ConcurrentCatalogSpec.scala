@@ -245,7 +245,7 @@ class ConcurrentCatalogSpec extends AnyFunSuite {
     }, "append must proceed through a stale lock")
 
     // a crashed publish leaves a torn .tmp snapshot — attach must ignore it
-    val torn = new java.io.File(dir, GraftSession.TopkSnapPrefix + "999.tmp-zz")
+    val torn = new java.io.File(dir, graft.store.TopkSnapshot.Kind + ".999.tmp-zz")
     val w = new java.io.FileOutputStream(torn)
     try w.write(Array[Byte](1, 2, 3)) finally w.close()
     val (_, gE) = freshSession()
@@ -258,41 +258,39 @@ class ConcurrentCatalogSpec extends AnyFunSuite {
     }, "attach must read the published snapshot and ignore torn temps")
   }
 
-  test("a publish killed inside the meta replace leaves its temp meta as the store") {
-    val dir = tmpDir("graft_cc_m") + "/tk"
+  test("a sample-meta update killed inside its replace leaves the store attachable") {
+    val dir = tmpDir("graft_cc_sm") + "/s"
     val (sA, gA) = freshSession()
-    gA.sql("CREATE TOPK TABLE cc_meta ON events OPTIONS(key 'event_type', " +
-      s"size '5', streamSummary 'true', capacity '100000', path '$dir')")
-    gA.appendToTopK("cc_meta", sA.table("events"))
-    def counts(g: GraftSession): Map[String, Long] = g.queryTopK("cc_meta", k = 5)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val doubled = counts(gA)
-
-    // on the local file system the meta replace deletes the old meta and
-    // then renames the new one in; a writer killed between the two leaves
-    // only its complete temp meta — the state the next lines reproduce
-    val meta = new java.io.File(dir, GraftSession.TopkMetaFile)
-    def crcOf(f: String) = new java.io.File(dir, s".$f.crc")
-    val crashed = GraftSession.TopkMetaFile + ".tmp-crash"
-    assert(meta.renameTo(new java.io.File(dir, crashed)))
-    assert(crcOf(GraftSession.TopkMetaFile).renameTo(crcOf(crashed)))
-    // an even later publish killed while writing its temp meta: incomplete,
-    // so it must not be read
-    val torn = new java.io.FileOutputStream(
-      new java.io.File(dir, GraftSession.TopkMetaFile + ".tmp-torn"))
-    try torn.write("__snapversion=99\n".getBytes("ISO-8859-1")) finally torn.close()
+    import sA.implicits._
+    Seq("seed").toDF("event_type").createOrReplaceTempView("cc_sm_base")
+    gA.sql("CREATE SAMPLE TABLE cc_smeta ON cc_sm_base OPTIONS(" +
+      s"qcs 'event_type', fraction '1.0', path '$dir')")
+    gA.appendToSampleForBatch("cc_smeta", Seq.fill(30)("b0").toDF("event_type"), "cc_sm", 0L)
+    // the meta replace is one rename to a fresh name: batch 1's meta
+    // update is killed right after it, before the GC of the old version
+    graft.store.Versioned.stepHook = (kind, step) =>
+      if (kind == graft.store.SampleMeta.Kind && step == "rename") {
+        throw new IllegalStateException("killed inside the meta replace")
+      }
+    try intercept[IllegalStateException] {
+      gA.appendToSampleForBatch("cc_smeta", Seq.fill(20)("b1").toDF("event_type"), "cc_sm", 1L)
+    } finally graft.store.Versioned.stepHook = (_, _) => ()
+    sA.catalog.refreshByPath(dir)
+    val full = sA.read.parquet(dir).count()
 
     val (sE, gE) = freshSession()
-    gE.sql("CREATE TOPK TABLE IF NOT EXISTS cc_meta ON events OPTIONS(" +
-      s"key 'event_type', size '5', streamSummary 'true', " +
-      s"capacity '100000', path '$dir')")
-    assert(counts(gE) === doubled,
-      "a resumed session must attach the crashed publish, not re-create the table")
-    // the next publish puts the meta back and clears the temps
-    gE.appendToTopK("cc_meta", sE.table("events"))
-    assert(counts(gE) === doubled.map { case (k, v) => k -> v * 3 / 2 })
-    assert(meta.isFile)
-    assert(new java.io.File(dir).list().forall(!_.contains(".tmp-")))
+    sE.createDataFrame(Seq(Tuple1("seed"))).toDF("event_type")
+      .createOrReplaceTempView("cc_sm_base")
+    gE.sql("CREATE SAMPLE TABLE IF NOT EXISTS cc_smeta ON cc_sm_base OPTIONS(" +
+      s"qcs 'event_type', fraction '1.0', path '$dir')")
+    val attached = sE.table("cc_smeta")
+    assert(attached.count() === full, "a resumed session must attach, not resample")
+    assert(attached.filter(col("event_type") === "b0").count() === 30)
+    assert(attached.filter(col("event_type") === "b1").count() === 20)
+    gE.appendToSampleForBatch("cc_smeta",
+      sE.createDataFrame(Seq.fill(7)(Tuple1("replay"))).toDF("event_type"), "cc_sm", 1L)
+    sE.catalog.refreshByPath(dir)
+    assert(sE.read.parquet(dir).count() === full, "the replay of batch 1 must be fenced")
   }
 
   test("concurrent sample APPENDs from two sessions: both batches land") {

@@ -108,9 +108,9 @@ object CrossJvmWorker {
         val acquiredFlag = new java.io.File(args(2))
         val proceedFlag = new java.io.File(args(3))
         spark.conf.set("spark.graft.pathLock.leaseMs", "800")
-        GraftSession.heartbeatFreezeHook = (_, _) => true
+        graft.store.PathLock.heartbeatFreezeHook = (_, _) => true
         GraftSession.withPathLock(spark, dir) {
-          val epoch = GraftSession.heldFence(spark, dir).get.epoch
+          val epoch = graft.store.PathLock.heldFence(spark, dir).get.epoch
           acquiredFlag.createNewFile()
           val deadline = System.currentTimeMillis() + 120000
           while (!proceedFlag.exists() &&

@@ -113,19 +113,19 @@ class PathLockSpec extends AnyFunSuite {
   // WHOLE-PROCESS stall (VM pause) longer than the lease — the frozen
   // holder resumes after a waiter broke the lock and its in-flight writes
   // would interleave with the successor's. The fence epoch in
-  // `_graft.fence` + commit-point validation + reader-side quarantine
+  // epoch files + commit-point validation + reader-side quarantine
   // close it. heartbeatFreezeHook simulates the freeze deterministically.
   // ---------------------------------------------------------------------
 
   private def withFrozenFirstHolder(dirTag: String)(body: => Unit): Unit = {
     val frozen = new java.util.concurrent.atomic.AtomicReference[String](null)
-    GraftSession.heartbeatFreezeHook = (p, tok) => {
+    graft.store.PathLock.heartbeatFreezeHook = (p, tok) => {
       if (p.contains(dirTag)) {
         frozen.compareAndSet(null, tok)
         tok == frozen.get
       } else false
     }
-    try body finally GraftSession.heartbeatFreezeHook = (_, _) => false
+    try body finally graft.store.PathLock.heartbeatFreezeHook = (_, _) => false
   }
 
   test("a frozen holder's publish is fenced at the commit point") {
@@ -219,8 +219,9 @@ class PathLockSpec extends AnyFunSuite {
       .createOrReplaceTempView("zz_topk_base")
     g.createTopK("zz_topk", "zz_topk_base", Map(
       "key" -> "event_type", "size" -> "5", "path" -> dir))
-    val conf = s.sessionState.newHadoopConf()
-    val metaFile = new java.io.File(dir, "_graft_topk.meta")
+    val (hd, conf) = hadoopDir(s, dir)
+    def snapshots() = graft.store.Versioned.list(hd.getFileSystem(conf), hd,
+      graft.store.TopkSnapshot.Kind).map(_.path.getName)
     s.conf.set("spark.graft.pathLock.leaseMs", "500")
     try withFrozenFirstHolder("graft_fence_topk") {
       val acquired = new CountDownLatch(1)
@@ -236,52 +237,52 @@ class PathLockSpec extends AnyFunSuite {
       })
       holder.start()
       assert(acquired.await(30, TimeUnit.SECONDS))
-      GraftSession.withPathLock(s, dir) { () } // break + bump the fence
-      val metaBefore = java.nio.file.Files.readAllBytes(metaFile.toPath)
-      val versionBefore = GraftSession.readTopkSnapVersion(dir, conf)
+      GraftSession.withPathLock(s, dir) { () } // break + take the next epoch
+      val before = snapshots()
       broken.countDown()
       holder.join(30000)
       assert(outcome.get().isInstanceOf[FencedLockException],
         s"the zombie's saveTopK must be fenced, got: ${outcome.get()}")
-      assert(java.util.Arrays.equals(metaBefore,
-        java.nio.file.Files.readAllBytes(metaFile.toPath)),
-        "the zombie must not have replaced the meta")
-      assert(GraftSession.readTopkSnapVersion(dir, conf) === versionBefore)
+      assert(snapshots() === before, "the zombie must not have published")
     } finally s.conf.unset("spark.graft.pathLock.leaseMs")
   }
 
   // ---------------------------------------------------------------------
-  // Acquire-time fence verification: the epoch bump is NOT atomic with
-  // the lock create. A holder frozen between the two can resume after a
-  // successor's takeover — it must stand down at its own verify, a
-  // clobber it lands against the live holder must be repaired, and fence
-  // state must survive loss of the fence file itself.
+  // Acquire-time fence: the epoch create is NOT atomic with the lock
+  // create. A holder frozen between the two can resume after a
+  // successor's takeover — it must stand down at its own verify. Epoch
+  // files are created exclusively, so no two holders share one, and fence
+  // state must survive loss of the fence files themselves.
   // ---------------------------------------------------------------------
 
   private def hadoopDir(s: org.apache.spark.sql.SparkSession, dir: String) =
     (new org.apache.hadoop.fs.Path(dir), s.sessionState.newHadoopConf())
 
+  private def fenceEpochs(hd: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration): Seq[Long] =
+    graft.store.PathLock.fenceEpochs(hd.getFileSystem(conf), hd)
+
+  private def createEpoch(hd: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration, epoch: Long, token: String): Boolean =
+    graft.store.PathLock.createExclusive(hd.getFileSystem(conf),
+      graft.store.PathLock.fenceFile(hd, epoch), token.getBytes("UTF-8"))
+
   test("a holder frozen between lock create and fence bump stands down") {
     val s = spark.newSession()
     val dir = tmp()
     val (hd, conf) = hadoopDir(s, dir)
-    // the hook fires in the exact window the non-atomic create→bump
-    // leaves open; it simulates the successor's FULL takeover while the
-    // first acquirer was frozen there: lease-break (lock re-created
-    // under a new token) + fence bump past the zombie's write
+    // the hook fires in the exact window the non-atomic create→epoch
+    // sequence leaves open; it simulates the successor's FULL takeover
+    // while the first acquirer was frozen there: lease-break (lock
+    // re-created under a new token) + the next fence epoch
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    GraftSession.postFenceWriteHook = () => {
-      if (fired.compareAndSet(false, true)) {
+    graft.store.Versioned.stepHook = (kind, step) => {
+      if (kind == graft.store.PathLock.FenceKind && step == "create" &&
+          fired.compareAndSet(false, true)) {
         val lock = new java.io.File(dir, "_graft.lock")
         assert(lock.delete())
-        val out = new java.io.FileOutputStream(lock)
-        try {
-          out.write(java.nio.ByteBuffer.allocate(8)
-            .putLong(System.currentTimeMillis()).array())
-          out.write("successor-token".getBytes("UTF-8"))
-        } finally out.close()
-        val cur = GraftSession.readFenceFile(hd, conf).get._1
-        GraftSession.writeFenceFile(hd, cur + 1, "successor-token", conf)
+        java.nio.file.Files.write(lock.toPath, "successor-token".getBytes("UTF-8"))
+        assert(createEpoch(hd, conf, fenceEpochs(hd, conf).max + 1, "successor-token"))
       }
     }
     try {
@@ -291,62 +292,40 @@ class PathLockSpec extends AnyFunSuite {
         }
       }
       assert(e.getMessage.contains("standing down"))
-      // the successor's state is untouched: its fence survives
-      assert(GraftSession.readFenceFile(hd, conf)
-        .exists(_._2 == "successor-token"))
-    } finally GraftSession.postFenceWriteHook = () => ()
+      // the stood-down holder withdrew its epoch; the successor's is the
+      // store's fence
+      assert(fenceEpochs(hd, conf) === Seq(2L))
+      assert(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+        graft.store.PathLock.fenceFile(hd, 2L).toString)), "UTF-8") === "successor-token")
+    } finally graft.store.Versioned.stepHook = (_, _) => ()
   }
 
-  test("a racing clobber between bump and verify re-bumps monotonically") {
+  test("a held fence epoch cannot be taken twice; a higher epoch fences the holder") {
     val s = spark.newSession()
     val dir = tmp()
     val (hd, conf) = hadoopDir(s, dir)
     GraftSession.withPathLock(s, dir) { () } // epoch 1
-    // zombie clobber: same epoch as OUR in-flight bump, foreign token,
-    // but the lock stays ours — acquisition must retry past it, not
-    // stand down and not keep the clobbered value
-    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    GraftSession.postFenceWriteHook = () => {
-      if (fired.compareAndSet(false, true)) {
-        val cur = GraftSession.readFenceFile(hd, conf).get._1
-        GraftSession.writeFenceFile(hd, cur, "zombie-token", conf)
-      }
-    }
-    try {
-      var heldEpoch = -1L
-      GraftSession.withPathLock(s, dir) {
-        heldEpoch = GraftSession.heldFence(s, dir).get.epoch
-        GraftSession.assertStoreFence(s, dir) // and the held fence is live
-      }
-      // first bump wrote 2, the zombie clobbered 2, the re-bump landed 3
-      assert(heldEpoch === 3L)
-      assert(GraftSession.readFenceFile(hd, conf).exists(_._1 == 3L))
-    } finally GraftSession.postFenceWriteHook = () => ()
-  }
-
-  test("the live holder repairs a duplicate-epoch clobber at its commit") {
-    val s = spark.newSession()
-    val dir = tmp()
-    val (hd, conf) = hadoopDir(s, dir)
     GraftSession.withPathLock(s, dir) {
-      val h = GraftSession.heldFence(s, dir).get
-      // a pre-verify zombie's one possible write: OUR epoch, its token
-      GraftSession.writeFenceFile(hd, h.epoch, "zombie-token", conf)
-      // the live holder must not be spuriously fenced — repair and pass
-      GraftSession.assertStoreFence(s, dir)
-      assert(GraftSession.readFenceFile(hd, conf)
-        .contains((h.epoch, h.token)), "the repair must restore our fence")
-      // and a REAL takeover (higher epoch) still fences us
-      GraftSession.writeFenceFile(hd, h.epoch + 1, "successor-token", conf)
+      val h = graft.store.PathLock.heldFence(s, dir).get
+      assert(h.epoch === 2L)
+      // a stalled acquirer that read the same previous epoch: its create
+      // of the held epoch under another token fails
+      assert(!createEpoch(hd, conf, h.epoch, "zombie-token"))
+      GraftSession.assertStoreFence(s, dir) // the holder is not disturbed
+      // a REAL takeover (higher epoch) still fences us
+      assert(createEpoch(hd, conf, h.epoch + 1, "successor-token"))
       intercept[FencedLockException] { GraftSession.assertStoreFence(s, dir) }
     }
+    // the next acquisition moves past the successor's epoch, and GC keeps
+    // only the epoch before its own
+    GraftSession.withPathLock(s, dir) { () }
+    assert(fenceEpochs(hd, conf) === Seq(3L, 4L))
   }
 
   test("fence epochs survive fence-file loss: seeded from artifact stamps") {
     val s = spark.newSession()
     val dir = tmp()
-    val (hd, conf) = hadoopDir(s, dir)
-    // a store whose fence file was lost (copied store, swept underscore
+    // a store whose fence files were lost (copied store, swept underscore
     // files) while published artifacts retain epoch stamps — restarting
     // at 1 would let readSample's max-epoch rule quarantine a legitimate
     // fresh republish in favor of these stale files
@@ -355,12 +334,12 @@ class PathLockSpec extends AnyFunSuite {
     java.nio.file.Files.createFile(java.nio.file.Paths.get(dir,
       ".fenced-stream-x-abcd1234-b0-1.e4.parquet"))
     java.nio.file.Files.createFile(java.nio.file.Paths.get(dir,
-      "_topk.snap.3.f9"))
+      graft.store.TopkSnapshot.Kind + ".3.f9"))
     java.nio.file.Files.createFile(java.nio.file.Paths.get(dir,
       "part-00000-plain.c000.parquet")) // unstamped: contributes nothing
     var heldEpoch = -1L
     GraftSession.withPathLock(s, dir) {
-      heldEpoch = GraftSession.heldFence(s, dir).get.epoch
+      heldEpoch = graft.store.PathLock.heldFence(s, dir).get.epoch
     }
     assert(heldEpoch === 10L,
       s"epoch must seed past the max artifact stamp (9), got $heldEpoch")
@@ -382,8 +361,7 @@ class PathLockSpec extends AnyFunSuite {
     // pre-write check left open): the commit-point re-validation must
     // fence the append before anything reaches the store
     GraftSession.appendStagingHook = () => {
-      val cur = GraftSession.readFenceFile(hd, conf).get._1
-      GraftSession.writeFenceFile(hd, cur + 1, "successor-token", conf)
+      assert(createEpoch(hd, conf, fenceEpochs(hd, conf).max + 1, "successor-token"))
     }
     try {
       intercept[FencedLockException] {

@@ -143,4 +143,31 @@ class SampleSourceSpec extends AnyFunSuite {
       rows.foreach(r => assert(r.getDouble(2) > 0.0))
     } finally gs.dropSampleTable("li_src_attached")
   }
+
+  test("a graft-sample append keeps the stream watermarks: a replayed batch stays fenced") {
+    import spark.implicits._
+    val gs = GraftSession(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft_src_").toString + "/s6"
+    Seq("seed").toDF("event_type").createOrReplaceTempView("ss_wm_base")
+    gs.sql("CREATE SAMPLE TABLE ss_wm ON ss_wm_base OPTIONS(" +
+      s"qcs 'event_type', fraction '1.0', path '$dir')")
+    try {
+      gs.appendToSampleForBatch("ss_wm", Seq.fill(10)("b0").toDF("event_type"), "ss_wm_stream", 0L)
+      gs.appendToSampleForBatch("ss_wm", Seq.fill(10)("b1").toDF("event_type"), "ss_wm_stream", 1L)
+      Seq.fill(5)("adhoc").toDF("event_type").write.format("graft-sample")
+        .mode(SaveMode.Append).save(dir)
+      val conf = spark.sessionState.newHadoopConf()
+      def rows() = {
+        spark.catalog.refreshByPath(dir)
+        spark.read.parquet(dir).groupBy("event_type").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+      }
+      val before = rows()
+      assert(before.get("adhoc") === Some(5L) && before.get("b1") === Some(10L))
+      assert(GraftSession.readSampleMetaProp(dir, "__streambatch.ss_wm_stream", conf) === Some("1"),
+        "the append must keep the stream watermark")
+      gs.appendToSampleForBatch("ss_wm", Seq.fill(3)("replay").toDF("event_type"), "ss_wm_stream", 1L)
+      assert(rows() === before, "a replay of batch 1 must be fenced")
+    } finally gs.dropSampleTable("ss_wm")
+  }
 }

@@ -365,37 +365,6 @@ class TopKSpec extends AnyFunSuite {
     assert(!spill.getFileSystem(conf).exists(spill))
   }
 
-  test("a TopK meta without __snapversion fails fast, naming the path and key") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tkv_").toString + "/tk"
-    gs.sql("CREATE TOPK TABLE tk_nover ON events OPTIONS(key 'event_type', " +
-      s"size '5', streamSummary 'true', capacity '100000', path '$dir')")
-    val conf = spark.sessionState.newHadoopConf()
-    val metaPath = new org.apache.hadoop.fs.Path(dir, GraftSession.TopkMetaFile)
-    val fs = metaPath.getFileSystem(conf)
-    val props = new java.util.Properties()
-    val metaIn = fs.open(metaPath)
-    try props.load(metaIn) finally metaIn.close()
-    props.remove("__snapversion")
-    val metaOut = fs.create(metaPath, true)
-    try props.store(metaOut, "no snapshot pointer") finally metaOut.close()
-    GraftState.of(spark).topks.remove("tk_nover")
-    GraftState.of(spark).topkPaths.remove("tk_nover")
-    spark.catalog.dropTempView("tk_nover")
-    val t0 = System.nanoTime()
-    val e = intercept[IllegalArgumentException] {
-      gs.attachTopKTable("tk_nover", dir)
-    }
-    val elapsedMs = (System.nanoTime() - t0) / 1000000L
-    assert(e.getMessage.contains(dir) && e.getMessage.contains("__snapversion"),
-      e.getMessage)
-    assert(!GraftSession.isTransientAttach(e),
-      "a meta without a snapshot pointer is permanent; retrying cannot heal it")
-    // the attach loop sleeps 100 ms between its 8 attempts
-    assert(elapsedMs < 700L, s"attach retried: failed after $elapsedMs ms")
-    assert(!GraftState.of(spark).topks.contains("tk_nover"))
-    fs.delete(new org.apache.hadoop.fs.Path(dir).getParent, true)
-  }
-
   test("compaction defers batch deletion one publish: retained snapshots stay readable") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tkc_").toString + "/tk"
     gs.sql("CREATE TOPK TABLE tk_compact ON events OPTIONS(key 'event_type', " +
@@ -407,23 +376,11 @@ class TopKSpec extends AnyFunSuite {
     val fs = dirPath.getFileSystem(conf)
     // parse every retained snapshot's spill-file list the way attach does
     def snapshotRefs(): Seq[(String, Seq[String])] =
-      fs.listStatus(dirPath).toSeq
-        .filter { s =>
-          val n = s.getPath.getName
-          n.startsWith(GraftSession.TopkSnapPrefix) && !n.contains(".tmp-")
-        }
-        .map { s =>
-          val in = new java.io.DataInputStream(fs.open(s.getPath))
-          try {
-            val files = (0 until in.readInt()).map { _ =>
-              val rel = in.readUTF()
-              if (rel.startsWith("/") ||
-                  rel.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:/.*")) rel
-              else dir.stripSuffix("/") + "/" + rel
-            }
-            (s.getPath.getName, files)
-          } finally in.close()
-        }
+      graft.store.Versioned.list(fs, dirPath, graft.store.TopkSnapshot.Kind).map { e =>
+        val in = fs.open(e.path)
+        try (e.path.getName, graft.store.TopkSnapshot.decode(in, dir).files)
+        finally in.close()
+      }
     // each shifted append lands in fresh day-intervals, forcing a spill
     // batch per append; 20 appends cross compactThreshold 16 with a
     // publish between every spill, so compaction runs with both retained
@@ -461,7 +418,7 @@ class TopKSpec extends AnyFunSuite {
     assert(got === perApp.map { case (k, v) => k -> v * 21 },
       "counts must be exact through compaction with deferred deletion")
     // NO ORPHANS: the append path re-attaches a FRESH state every time, so
-    // the deferral list must ride the registry meta (`__retired`) — without
+    // the deferral list must ride the snapshot header (`__retired`) — without
     // that, every compacted-away batch dir whose stamped entry died with
     // the previous state leaks as a dir no retained snapshot references
     val latest = GraftState.of(spark).topks("tk_compact")

@@ -292,7 +292,9 @@ class GraftSession(val spark: SparkSession) {
           GraftSession.publishAppend(spark, path, sampled)
         }
         spark.catalog.refreshByPath(path)
-        spark.read.parquet(path)
+        // the store holds the sampler's columns: pinning them skips the
+        // schema-inference job
+        spark.read.schema(sampled.schema).parquet(path)
       case None if info.fraction == 0.0 =>
         // Pure-reservoir sample (bounded by construction: strata ×
         // reservoir rows): materialize the merged sample AND cut its
@@ -457,10 +459,10 @@ class GraftSession(val spark: SparkSession) {
           val files = snapshotFiles()
           if (files.isEmpty) out = Some(info.sampleDf.limit(0))
           else {
-            // schema inference at read() touches only SOME footers, so a
-            // pinned file deleted by a concurrent recovery does not
-            // reliably surface here — verify every pinned name exists
-            // after the read() so churn is caught inside THIS retry
+            // the read takes the registered sample's schema, so read()
+            // opens no footer and a pinned file deleted by a concurrent
+            // recovery does not surface there — verify every pinned name
+            // exists after the read() so churn is caught inside THIS retry
             // budget, not as a task failure in the caller's job. The
             // check-then-run gap stays (a delete can land after the
             // check), but a recovery republishes a churned batch under
@@ -469,7 +471,7 @@ class GraftSession(val spark: SparkSession) {
             // the residual worst case is a LOUD task-level read failure
             // for the caller to retry, exactly the documented contract.
             try {
-              val df = spark.read.parquet(files: _*)
+              val df = spark.read.schema(info.sampleDf.schema).parquet(files: _*)
               val fs = new org.apache.hadoop.fs.Path(path)
                 .getFileSystem(conf)
               val vanished = files.filterNot(f =>
@@ -688,6 +690,10 @@ class GraftSession(val spark: SparkSession) {
       case Some(path) =>
         val conf = spark.sessionState.newHadoopConf()
         val wmKey = s"__streambatch.${streamName.toLowerCase}"
+        // the sampler's output columns (data + weight), once this call
+        // publishes a batch; a replayed batch publishes nothing and the
+        // re-registration below infers them from the store
+        var published: Option[org.apache.spark.sql.types.StructType] = None
         GraftSession.withPathLock(spark, path) {
           val applied = GraftSession.readSampleMetaProp(path, wmKey, conf)
             .map(_.toLong).getOrElse(-1L)
@@ -743,10 +749,11 @@ class GraftSession(val spark: SparkSession) {
             GraftSession.assertStoreFence(spark, path)
             GraftSession.updateSampleMetaProp(path, wmKey,
               batchId.toString, conf)
+            published = Some(sampled.schema)
           }
         }
         spark.catalog.refreshByPath(path)
-        val merged = spark.read.parquet(path)
+        val merged = published.fold(spark.read)(spark.read.schema).parquet(path)
         merged.createOrReplaceTempView(name)
         state.samples.put(name, info.copy(sampleDf = merged))
         merged

@@ -382,14 +382,15 @@ final class TopKState(val name: String, val opts: TopKOptions, val keyType: Data
    * into it, and one sketch fits by the constructor check).
    *
    * Runs with `stateLock` taken only for the driver-map phases, never
-   * across the parquet write (which is a cluster job — holding the lock
-   * there would block every query's [[rangeSnapshot]] for the write's
-   * duration). Phase 1 removes the chosen buckets from the tree and PARKS
-   * them in `pendingSpill` — queries fold parked buckets in, so the write
-   * window never undercounts, while concurrent late appends re-materialize
-   * fresh buckets instead of mutating a mid-write copy. Phase 2 writes the
-   * batch lock-free; a failed write restores the parked buckets (merging
-   * into any freshly re-materialized ones), so nothing is lost. Phase 3
+   * across the parquet write (file I/O on a possibly shared filesystem —
+   * holding the lock there would block every query's [[rangeSnapshot]]
+   * for the write's duration). Phase 1 removes the chosen buckets from the
+   * tree and PARKS them in `pendingSpill` — queries fold parked buckets
+   * in, so the write window never undercounts, while concurrent late
+   * appends re-materialize fresh buckets instead of mutating a mid-write
+   * copy. Phase 2 writes the batch lock-free; a failed write deletes its
+   * partial batch and restores the parked buckets (merging into any
+   * freshly re-materialized ones), so nothing is lost. Phase 3
    * publishes the batch into the spill view. Removal goes through
    * [[TimeBucketedSketch.removeInterval]], which also clears the
    * interval's fold count — a late-arriving re-materialized bucket starts
@@ -454,12 +455,15 @@ final class TopKState(val name: String, val opts: TopKOptions, val keyType: Data
     val rows = moved.map(p => (p.start, p.len, IntervalSketch.toBytes(p.sketch)))
     val dir = ensureSpillDir(spark)
     val batch = s"$dir/batch-${java.util.UUID.randomUUID().toString.take(12)}"
-    try {
-      import spark.implicits._
-      spark.createDataset(rows).toDF("start", "len", "bytes")
-        .coalesce(1).write.mode("overwrite").parquet(batch)
-    } catch {
+    try TopKState.writeSpillBatch(spark, batch, rows)
+    catch {
       case e: Throwable =>
+        // a half-written batch is in no view; remove it so the store holds
+        // only batches some snapshot may reference
+        try {
+          val hp = new org.apache.hadoop.fs.Path(batch)
+          hp.getFileSystem(spark.sessionState.newHadoopConf()).delete(hp, true)
+        } catch { case scala.util.control.NonFatal(_) => }
         stateLock.synchronized {
           pendingSpill --= moved
           moved.foreach { p =>
@@ -524,7 +528,7 @@ final class TopKState(val name: String, val opts: TopKOptions, val keyType: Data
       plan.foreach { case (lvl, old, dir) =>
         val compacted = s"$dir/batch-L${lvl + 1}-" +
           java.util.UUID.randomUUID().toString.take(12)
-        spark.read.parquet(old: _*).coalesce(1)
+        spark.read.schema(TopKState.SpillSchema).parquet(old: _*).coalesce(1)
           .write.mode("overwrite").parquet(compacted)
         val swapped = stateLock.synchronized {
           // a concurrent re-attach (appendToTopK's snapshot resync) may
@@ -571,7 +575,7 @@ final class TopKState(val name: String, val opts: TopKOptions, val keyType: Data
       startIv: Long, endIv: Long): Option[IntervalSketch] = {
     if (!spans.exists(spanOverlaps(startIv, endIv))) return None
     val spark = sparkOrActive
-    val df = spark.read.parquet(files: _*)
+    val df = spark.read.schema(TopKState.SpillSchema).parquet(files: _*)
     val startCond =
       if (endIv == Long.MaxValue) lit(true) else col("start") <= lit(endIv)
     val endCond =
@@ -784,9 +788,9 @@ final class TopKState(val name: String, val opts: TopKOptions, val keyType: Data
 
   /** Phase 2 of an append — the DRIVER part: fold the per-interval partials
    * into the time buckets and spill over-guard buckets. Cheap (no
-   * distributed job except a possible spill write); callers serializing
-   * appends over a shared persist path hold the path lock around exactly
-   * this phase plus the snapshot publish. */
+   * distributed job: a spill writes its batch from the driver); callers
+   * serializing appends over a shared persist path hold the path lock
+   * around exactly this phase plus the snapshot publish. */
   def mergePartials(spark: SparkSession, partials: Seq[(Long, Array[Byte])]): Unit =
     mergePartialsAt(spark, partials, System.currentTimeMillis())
 
@@ -899,8 +903,10 @@ final class TopKState(val name: String, val opts: TopKOptions, val keyType: Data
       StructField("estimated_value", LongType),
       StructField("lower_bound", LongType),
       StructField("error_bounds_info", TopKState.ErrorBoundsType)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+    // a local relation: the rows are already on the driver, so collecting
+    // the answer starts no job
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
   }
 }
 
@@ -916,4 +922,42 @@ object TopKState {
    * stateLock (~couple of ms of driver arithmetic) before answering from
    * the merged path instead. */
   val RefineListingBudget: Long = 2000000L
+
+  /** Columns of a spill batch file, as Spark writes a `(Long, Long,
+   * Array[Byte])` dataset: required int64 `start`/`len`, optional binary
+   * `bytes`. Spill reads pass it, so they infer no schema (no job). */
+  val SpillSchema: StructType = StructType(Seq(
+    StructField("start", LongType, nullable = false),
+    StructField("len", LongType, nullable = false),
+    StructField("bytes", BinaryType)))
+
+  private val SpillParquetType = org.apache.parquet.schema.MessageTypeParser
+    .parseMessageType("message spark_schema { required int64 start; " +
+      "required int64 len; optional binary bytes; }")
+
+  /** Write one spill batch from the driver, with no Spark job: the single
+   * file `<batch>/part-00000.parquet` in the [[SpillSchema]] layout,
+   * compressed with the session's `spark.sql.parquet.compression.codec`.
+   * Readers see the same columns and codec a Spark write would give. */
+  private def writeSpillBatch(spark: SparkSession, batch: String,
+      rows: Seq[(Long, Long, Array[Byte])]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.io.api.Binary
+    val conf = spark.sessionState.newHadoopConf()
+    val file = org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(batch, "part-00000.parquet"), conf)
+    val codec = org.apache.spark.sql.execution.datasources.parquet
+      .ParquetCompressionCodec.fromString(
+        spark.sessionState.conf.parquetCompressionCodec).getCompressionCodec
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(file).withConf(conf).withType(SpillParquetType)
+      .withCompressionCodec(codec).build()
+    try {
+      val groups = new SimpleGroupFactory(SpillParquetType)
+      rows.foreach { case (start, len, bytes) =>
+        writer.write(groups.newGroup().append("start", start)
+          .append("len", len).append("bytes", Binary.fromConstantByteArray(bytes)))
+      }
+    } finally writer.close()
+  }
 }

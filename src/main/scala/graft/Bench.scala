@@ -138,12 +138,6 @@ object Bench {
       // partition count is bytes-driven either way (Spark docs recommend
       // false for exactly this reason).
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // bench inputs are deterministic parquet reads, so the materialized
-      // prefix-sum snapshot can recompute evicted partitions from lineage
-      // instead of spilling them to disk: on a memory-tight harness box
-      // MEMORY_AND_DISK serializes every consumer behind disk I/O while
-      // MEMORY_ONLY re-scans only what was actually evicted
-      .config("spark.graft.materialize.storageLevel", "MEMORY_ONLY")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

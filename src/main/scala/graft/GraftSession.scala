@@ -27,7 +27,28 @@ final case class SampleInfo(
     qcs: Seq[String],
     fraction: Double,
     reservoirSize: Int,
-    persistPath: Option[String] = None)
+    persistPath: Option[String] = None,
+    blocks: Option[org.apache.spark.rdd.RDD[_]] = None) {
+  /** Frees the storage of a dropped in-memory sample's rows now: the
+   * stored rows of a flat leaf (`blocks`, stored by
+   * [[org.apache.spark.sql.graft.Plans.materializeFlat]]) or the cache of
+   * a full-fraction sample's appended frame. */
+  def release(): Unit = {
+    sampleDf.unpersist(blocking = false)
+    blocks.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Frees the rows of an in-memory sample that a re-create or an append
+   * replaced, where a frame planned over them before the swap (a query
+   * racing a streaming append) can still recompute them: an uncached frame
+   * recomputes through its plan. Cut (checkpointed) rows have no other
+   * copy, so they stay until the `ContextCleaner` finds no frame holding
+   * them. */
+  def supersede(): Unit = {
+    if (persistPath.isEmpty) sampleDf.unpersist(blocking = false)
+    blocks.filterNot(_.isCheckpointed).foreach(_.unpersist(blocking = false))
+  }
+}
 
 /**
  * Per-SparkSession AQP state: the sample-table catalog plus session default
@@ -235,7 +256,7 @@ class GraftSession(val spark: SparkSession) {
       sampled: DataFrame, qcs: Seq[String], fraction: Double,
       reservoirSize: Int, persistPath: Option[String],
       partitionBy: Seq[String] = Nil): DataFrame = {
-    val sampleDf = persistPath match {
+    val (sampleDf, blocks) = persistPath match {
       case Some(path) =>
         // `partitionBy` (typically the QCS or the base table's partition
         // columns) gives the persisted sample hive-style partition dirs, so
@@ -249,23 +270,21 @@ class GraftSession(val spark: SparkSession) {
           GraftSession.writeSampleMeta(path, baseName, qcs, fraction,
             reservoirSize, spark.sessionState.newHadoopConf())
         }
-        spark.read.parquet(path)
+        (spark.read.parquet(path), None)
       case None if fraction < 1.0 =>
-        // cached lazily: the sampler is content-hash deterministic, so even
-        // an unmaterialized recompute yields the identical sample — the
-        // cache only avoids re-sampling on repeated queries
-        sampled.persist()
+        val (leaf, rows) = org.apache.spark.sql.graft.Plans.materializeFlat(spark, sampled)
+        (leaf, Some(rows))
       case None =>
         // fraction 1.0: the "sample" is a pure projection of the base (a
         // sentinel weight column, no join, no extra scan) — recomputing
-        // costs about as much as a cache hit and avoids materializing a
-        // full copy of the table
-        sampled
+        // costs about as much as a scan of a copy and avoids materializing
+        // a full copy of the table
+        (sampled, None)
     }
     sampleDf.createOrReplaceTempView(name)
     state.samples.put(name, SampleInfo(name, baseName,
       base.queryExecution.analyzed, sampleDf, qcs, fraction, reservoirSize,
-      persistPath))
+      persistPath, blocks)).foreach(_.supersede())
     sampleDf
   }
 
@@ -280,7 +299,7 @@ class GraftSession(val spark: SparkSession) {
     val info = state.samples(name)
     val sampled = StratifiedSampler.sample(df, info.qcs, info.fraction,
       info.reservoirSize, seed)
-    val merged = info.persistPath match {
+    val (merged, blocks) = info.persistPath match {
       case Some(path) =>
         // concurrent appends from two sessions serialize on the path lock —
         // appends only add files, so serialized appends all land (no lost
@@ -294,57 +313,24 @@ class GraftSession(val spark: SparkSession) {
         spark.catalog.refreshByPath(path)
         // the store holds the sampler's columns: pinning them skips the
         // schema-inference job
-        spark.read.schema(sampled.schema).parquet(path)
-      case None if info.fraction == 0.0 =>
-        // Pure-reservoir sample (bounded by construction: strata ×
-        // reservoir rows): materialize the merged sample AND cut its
-        // lineage. The lazy persist()-then-unpersist-predecessor form
-        // below drops the only evaluated copy of the chain BEFORE the new
-        // union is ever computed, so each append's consumers re-run every
-        // prior append's sampler from scratch, and the union's LOGICAL
-        // plan grows by a full sampler subtree per append (re-analysis +
-        // recompute) — measured on q51's 2-insert gate as a monotone
-        // per-repeat ramp, 1.0 → 2.2 s over 6 repeats, rising GC. An
-        // eager localCheckpoint pins the (tiny) rows and replaces the
-        // plan with a flat scan, so appends stay O(one sampler) no matter
-        // how many preceded: the same gate flattens to 0.55 s per repeat.
-        // The superseded checkpoint's storage is released by the
-        // ContextCleaner once the registry swap below drops the old
-        // frame. fraction > 0 samples scale with the base table — for
-        // them an eager per-append copy measured 3–5x worse (q38's
-        // full-fraction append: 0.33 → 0.89–1.16 s), so they keep the
-        // lazy-persist form.
-        //
-        // DURABILITY GATE: localCheckpoint stores blocks on
-        // executors ONLY and severs lineage — in cluster mode an executor
-        // loss (or a dynamic-allocation decommission) would make the
-        // in-memory sample table permanently unreadable, where the
-        // persist() form recomputed from lineage. Local masters run
-        // blocks in the driver JVM (nothing to lose short of the whole
-        // app), so the lineage cut is safe exactly there; non-local
-        // sessions keep the recomputable persist-with-lineage form and
-        // pay the plan-growth cost the checkpoint exists to remove
-        // (bounded: reservoir samples are tiny, and cluster deployments
-        // normally use path-backed samples, the branch above).
-        if (spark.sparkContext.isLocal) {
-          val m = info.sampleDf.unionByName(sampled).localCheckpoint(true)
-          info.sampleDf.unpersist(blocking = false)
-          m
-        } else {
-          val m = info.sampleDf.unionByName(sampled)
-          m.persist()
-          m.count() // materialize BEFORE dropping the predecessor's copy
-          info.sampleDf.unpersist(blocking = false)
-          m
-        }
+        (spark.read.schema(sampled.schema).parquet(path), None)
+      case None if info.fraction >= 1.0 =>
+        // a full-fraction sample is a copy of the whole table: cached
+        // lazily, as compressed columns, by its first reader instead of
+        // stored row by row now (an eager copy measured 0.24 → 0.88 s on
+        // graft.Bench q38_sample_append at scale 0.1)
+        (info.sampleDf.unionByName(sampled).persist(), None)
       case None =>
-        val m = info.sampleDf.unionByName(sampled)
-        m.persist()
-        info.sampleDf.unpersist()
-        m
+        // the registered leaf plus the batch's sample, materialized into a
+        // fresh flat leaf: an append reads one leaf and runs one sampler
+        // however many appends preceded it
+        val (leaf, rows) = org.apache.spark.sql.graft.Plans
+          .materializeFlat(spark, info.sampleDf.unionByName(sampled))
+        (leaf, Some(rows))
     }
     merged.createOrReplaceTempView(name)
-    state.samples.put(name, info.copy(sampleDf = merged))
+    state.samples.put(name, info.copy(sampleDf = merged, blocks = blocks))
+    info.supersede()
     merged
   }
 
@@ -361,7 +347,7 @@ class GraftSession(val spark: SparkSession) {
     sampleDf.createOrReplaceTempView(name)
     state.samples.put(name, SampleInfo(name, baseName,
       spark.table(baseName).queryExecution.analyzed, sampleDf, qcs, fraction,
-      reservoirSize, Some(path)))
+      reservoirSize, Some(path))).foreach(_.supersede())
     sampleDf
   }
 
@@ -495,7 +481,7 @@ class GraftSession(val spark: SparkSession) {
 
   def dropSampleTable(name: String): Unit = {
     state.resolveSample(name).flatMap(state.samples.remove).foreach { info =>
-      info.sampleDf.unpersist()
+      info.release()
       spark.catalog.dropTempView(info.name)
       // clear the in-memory replay fences keyed by this sample: a
       // same-name sample recreated over a FRESH streaming query (whose

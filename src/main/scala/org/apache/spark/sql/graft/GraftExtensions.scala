@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.physical.{SinglePartition, UnknownPartitioning}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** `private[sql]` helpers surfaced for the public `graft` package. */
 object Plans {
@@ -13,31 +16,79 @@ object Plans {
 
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
 
+  /** Storage level of every materialized frame: partitions that do not fit
+   * in memory spill to disk and are never recomputed, so every scan reads
+   * one snapshot, even of a nondeterministic input. */
+  private val MaterializeLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
   /**
    * Materialize a DataFrame into a persisted RDD-backed frame with O(1)
    * logical-plan depth — for iterative algorithms, where caching alone
    * keeps the ever-deepening logical lineage — plus a release handle that
    * frees the executor storage (localCheckpoint offers no explicit
-   * release). The frame is NOT fault-tolerant to executor loss beyond
-   * normal RDD recompute of the persisted map.
+   * release). The rows persist when the caller's first action reads them;
+   * the frame recomputes through the RDD lineage after an executor loss.
    */
   def materializeWithRdd(spark: SparkSession, df: DataFrame)
-      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
-    // Storage level is a session knob. MEMORY_AND_DISK (default) keeps the
-    // hard "every scan reads one snapshot" guarantee: partitions that do not
-    // fit spill to disk and are never recomputed, so even a nondeterministic
-    // input stays frozen. MEMORY_ONLY trades that for recompute-on-eviction
-    // — on a memory-tight harness disk spill serializes every consumer
-    // behind disk I/O, while recompute re-scans only the evicted partitions.
-    // Callers whose inputs are deterministic under rescan (e.g. the bench
-    // harness) can safely opt in.
-    val level = org.apache.spark.storage.StorageLevel.fromString(
-      spark.conf.get("spark.graft.materialize.storageLevel", "MEMORY_AND_DISK"))
-    val rdd = df.queryExecution.toRdd.map(_.copy()).persist(level)
-    val out = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, df.schema)
-    (out, rdd)
+      : (DataFrame, RDD[InternalRow]) = {
+    val rdd = persistedRows(df)
+    (spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rdd, df.schema), rdd)
   }
+
+  /**
+   * Materialize a DataFrame now into a flat leaf: a `LogicalRDD` scan of
+   * its stored rows that carries their real size and row count as its
+   * statistics, plus the stored RDD. One job, run as a SQL execution of
+   * `df` (so `QueryExecutionListener`s see `df` consumed), stores the rows
+   * and counts their rows and bytes. The leaf narrows the stored partitions
+   * to `ceil(bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)` when
+   * there are more; a one-partition leaf reports `SinglePartition`, so an
+   * aggregate over it needs no exchange.
+   *
+   * DURABILITY GATE: on a local master the blocks live in the driver JVM,
+   * nothing short of the whole application can lose them, and the lineage
+   * is cut (`localCheckpoint`): the leaf's jobs schedule no stage of the
+   * plan that built it, and only the `ContextCleaner` may free the blocks,
+   * once no frame can read them. Elsewhere an executor loss would make a
+   * cut frame unreadable, so the stored RDD keeps its lineage and
+   * recomputes, and `unpersist` is safe at any time.
+   */
+  def materializeFlat(spark: SparkSession, df: DataFrame)
+      : (DataFrame, RDD[InternalRow]) = {
+    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("materialize")) {
+      val rdd = persistedRows(df)
+      if (spark.sparkContext.isLocal) rdd.localCheckpoint()
+      val rowBytes = df.schema.defaultSize
+      val (rows, bytes) = rdd.mapPartitions { it =>
+        var n, b = 0L
+        it.foreach { r =>
+          n += 1
+          b += (r match {
+            case u: UnsafeRow => u.getSizeInBytes
+            case _ => rowBytes
+          })
+        }
+        Iterator.single((n, b))
+      }.collect().foldLeft((0L, 0L)) { case ((n, b), (n1, b1)) => (n + n1, b + b1) }
+      val advisory = cs.sessionState.conf.getConf(
+        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      val parts = math.max(1L, (bytes + advisory - 1) / advisory).toInt
+      val leaf = if (rdd.getNumPartitions <= parts) rdd else rdd.coalesce(parts)
+      val n = leaf.getNumPartitions
+      val plan = LogicalRDD(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(df.schema), leaf,
+        if (n == 1) SinglePartition else UnknownPartitioning(n))(
+        cs, Some(Statistics(sizeInBytes = bytes, rowCount = Some(BigInt(rows)))))
+      (ofRows(spark, plan), rdd)
+    }
+  }
+
+  /** `df`'s rows, copied out of Spark's reused row buffers and persisted. */
+  private def persistedRows(df: DataFrame): RDD[InternalRow] =
+    df.queryExecution.toRdd.map(_.copy()).persist(MaterializeLevel)
 
   /**
    * Unpersist `rdd` as soon as the first query that reads it completes
@@ -62,7 +113,7 @@ object Plans {
       private def consumes(
           qe: org.apache.spark.sql.execution.QueryExecution): Boolean =
         qe.analyzed.exists {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id == rdd.id
+          case l: LogicalRDD => l.rdd.id == rdd.id
           case _ => false
         }
       private def fire(

@@ -1,14 +1,13 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark jobs per call on the ingest-and-read path. At these sizes a job
  * costs more than the work it carries, so the count is the cost: a TopK
  * answer the driver already holds, a spill batch the driver writes and a
- * store whose schema the code knows start no job of their own. */
+ * store whose schema the code knows start no job of their own, and a query
+ * over an in-memory sample schedules only itself. */
 class JobCountSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -16,19 +15,26 @@ class JobCountSpec extends AnyFunSuite {
 
   /** `body`'s result and the Spark jobs started for it on this thread. */
   private def jobsOf[A](body: => A): (A, Int) = {
+    val (out, stages) = jobStagesOf(body)
+    (out, stages.size)
+  }
+
+  /** `body`'s result and, per Spark job started for it on this thread, the
+   * number of stages the job lists (skipped ones included). */
+  private def jobStagesOf[A](body: => A): (A, Seq[Int]) = {
     val sc = spark.sparkContext
     val id = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Integer]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p => p.getProperty(Tag) == id)) n.incrementAndGet()
+        if (Option(e.properties).exists(p => p.getProperty(Tag) == id)) stages.add(e.stageInfos.size)
     }
     sc.addSparkListener(listener)
     sc.setLocalProperty(Tag, id)
     try {
       val out = body
       org.apache.spark.GraftTestBus.drain(sc)
-      (out, n.get)
+      (out, stages.toArray(Array.empty[Integer]).toSeq.map(_.intValue))
     } finally {
       sc.setLocalProperty(Tag, null)
       sc.removeSparkListener(listener)
@@ -102,6 +108,28 @@ class JobCountSpec extends AnyFunSuite {
     } finally {
       gs.sql("DROP TOPK TABLE jc_tk")
       spark.catalog.dropTempView("jc_tk_base")
+    }
+  }
+
+  test("a grouped WITH ERROR over an in-memory sample is one job of one stage") {
+    import spark.implicits._
+    val gs = new GraftSession(spark)
+    (0 until 20000).map(i => (s"t${i % 4}", i.toDouble)).toDF("event_type", "v")
+      .createOrReplaceTempView("jc_q_base")
+    gs.sql("CREATE SAMPLE TABLE jc_q_sample ON jc_q_base OPTIONS(qcs 'event_type', " +
+      "fraction '0.1')")
+    try {
+      val q = "SELECT event_type, sum(v) AS s, absolute_error(s) AS e FROM jc_q_base " +
+        "GROUP BY event_type WITH ERROR 0.5"
+      gs.sql(q).collect() // code generation outside the count
+      val (rows, stages) = jobStagesOf(gs.sql(q).collect())
+      assert(gs.state.lastChosenSample === Some("jc_q_sample"))
+      assert(rows.length === 4)
+      assert(stages === Seq(1), "one job listing one stage: no exchange, and no " +
+        "skipped stage of the sampler that built the sample")
+    } finally {
+      gs.dropSampleTable("jc_q_sample")
+      spark.catalog.dropTempView("jc_q_base")
     }
   }
 

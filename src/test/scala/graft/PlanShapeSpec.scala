@@ -122,6 +122,62 @@ class PlanShapeSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(p.contains("snappy_sampler_weightage"), "weight column not threaded")
   }
 
+  test("a WITH ERROR query over an in-memory sample plans only itself") {
+    val q = gs.sql("SELECT l_returnflag, sum(l_quantity) s, absolute_error(s) e " +
+      "FROM li_ps GROUP BY 1 WITH ERROR 0.5")
+    val analyzed = q.queryExecution.analyzed
+    assert(GraftState.of(spark).lastChosenSample === Some("li_ps_sample"))
+    // the sample is one flat leaf: none of the sampler's windows, joins or
+    // base-table scans are analyzed, optimized or explained with the query
+    assert(!analyzed.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.Window]), analyzed.treeString)
+    val leaves = analyzed.collectLeaves()
+    assert(leaves.size === 1, analyzed.treeString)
+    val leaf = leaves.head.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    assert(leaf.outputPartitioning ===
+      org.apache.spark.sql.catalyst.plans.physical.SinglePartition)
+    assert(leaf.stats.rowCount.exists(_ > 0), "the leaf carries its real row count")
+    q.collect()
+    val plan = q.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"a one-partition sample needs no exchange:\n$plan")
+  }
+
+  test("a sample above the advisory partition size lays out in several partitions") {
+    // the other side of the layout rule: in a session whose advisory
+    // partition size is below the sample's bytes, the leaf keeps the
+    // sampler's several partitions and the aggregate's exchange. With
+    // AQE's coalescing on, the sampler's shuffle of this small input would
+    // merge into one partition (AQE's 1 MB minimum partition size), so it
+    // is off here
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1024")
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val g = new GraftSession(s)
+    s.read.parquet(s"$sf/lineitem.parquet").createOrReplaceTempView("li_ps_wide")
+    g.sql("CREATE SAMPLE TABLE li_ps_wide_s ON li_ps_wide OPTIONS(qcs 'l_returnflag', " +
+      "fraction '0.2')")
+    try {
+      val leaf = s.table("li_ps_wide_s").queryExecution.analyzed.collectLeaves()
+        .head.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+      assert(leaf.stats.sizeInBytes > 1024)
+      assert(leaf.rdd.getNumPartitions > 1, "the leaf must spread over several partitions")
+      assert(leaf.outputPartitioning !==
+        org.apache.spark.sql.catalyst.plans.physical.SinglePartition)
+      val q = g.sql("SELECT l_returnflag, sum(l_quantity) s, absolute_error(s) e " +
+        "FROM li_ps_wide GROUP BY 1 WITH ERROR 0.5")
+      val direct = q.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(GraftState.of(s).lastChosenSample === Some("li_ps_wide_s"))
+      assert(q.queryExecution.executedPlan.toString.contains("Exchange"),
+        "a multi-partition sample keeps the aggregate's exchange")
+      // same sample rows, same answer as the one-partition layout
+      val one = gs.sql("SELECT l_returnflag, sum(l_quantity) s, absolute_error(s) e " +
+        "FROM li_ps GROUP BY 1 WITH ERROR 0.5").collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(direct.keySet === one.keySet)
+      direct.foreach { case (k, v) => assert(math.abs(v - one(k)) <= 1e-9 * math.abs(v), k) }
+    } finally g.dropSampleTable("li_ps_wide_s")
+  }
+
   test("same query without WITH ERROR stays untouched") {
     val p = spark.sql("SELECT l_returnflag, sum(l_quantity) s FROM li_ps GROUP BY 1")
       .queryExecution.analyzed.treeString

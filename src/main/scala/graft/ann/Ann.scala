@@ -2,6 +2,8 @@ package graft.ann
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParamLiteral
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 /**
  * Similarity search over an embedding column (`array<float>`):
@@ -165,7 +167,7 @@ object Ann {
     val bucketed = graft.core.Fanout(df)
       .withColumn("__graft_bucket__", lshBucket(col(vecCol), planes))
     bucketed
-      .filter(col("__graft_bucket__").isInCollection(probes))
+      .filter(ParamLiteral.isIn(col("__graft_bucket__"), probes, LongType))
       .select(col(idCol), cosineToQuery(col(vecCol), query).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol))
       .limit(k)
@@ -233,17 +235,27 @@ object Ann {
   /** Approximate top-k via an IVF index: probe the `nprobe` nearest
    * centroids, re-rank candidates exactly. */
   def ivfKnn(assigned: DataFrame, centroids: Array[Array[Double]], idCol: String,
-      vecCol: String, query: Array[Float], k: Int, nprobe: Int = 4): DataFrame = {
+      vecCol: String, query: Array[Float], k: Int, nprobe: Int = 4): DataFrame =
+    probeClusters(assigned, centroids, query, nprobe)
+      .select(col(idCol), cosineToQuery(col(vecCol), query).as("cosine"))
+      .orderBy(col("cosine").desc, col(idCol))
+      .limit(k)
+
+  /** The rows of the `nprobe` clusters whose centroids are nearest `query`
+   * (squared L2). The cluster ids are [[ParamLiteral]]s, so every probe
+   * shares one generated plan while parquet still pushes the `In` down and
+   * a cached index still prunes its batches by it. */
+  private def probeClusters(indexed: DataFrame, centroids: Array[Array[Double]],
+      query: Array[Float], nprobe: Int): DataFrame = {
+    require(query.length == centroids(0).length, s"query dimension " +
+      s"${query.length} differs from the centroid dimension ${centroids(0).length}")
     val q = query.map(_.toDouble)
     val nearest = centroids.zipWithIndex
       .map { case (c, i) =>
         (i, c.zip(q).map { case (a, b) => (a - b) * (a - b) }.sum)
       }
       .sortBy(_._2).take(nprobe).map(_._1).toSeq
-    assigned.filter(col("__graft_cluster__").isInCollection(nearest))
-      .select(col(idCol), cosineToQuery(col(vecCol), query).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
+    indexed.filter(ParamLiteral.isIn(col("__graft_cluster__"), nearest, IntegerType))
   }
 
   // ---------------------------------------------------------------------------
@@ -316,8 +328,10 @@ object Ann {
    * only), exact cosine re-rank of the top `k × rerankFactor` survivors. */
   def pqKnn(encoded: DataFrame, cb: PqCodebooks, idCol: String, vecCol: String,
       query: Array[Float], k: Int, rerankFactor: Int = 4): DataFrame = {
+    require(query.length == cb.m * cb.dsub, s"query dimension ${query.length} " +
+      s"differs from the codebook dimension ${cb.m * cb.dsub}")
     val q = query.map(_.toDouble)
-    val qnorm = math.sqrt(q.map(x => x * x).sum)
+    val qnorm = ParamLiteral(math.sqrt(q.map(x => x * x).sum), DoubleType)
     val luts = Array.tabulate(cb.m) { j =>
       Array.tabulate(cb.centroids(j).length) { c =>
         val cent = cb.centroids(j)(c)
@@ -327,8 +341,8 @@ object Ann {
       }
     }
     val adc = org.apache.spark.sql.graft.PqAdcDot(col("__graft_pq__"), luts)
-    val approxCos = when(col("__graft_vnorm__") === 0.0 || lit(qnorm) === 0.0, -1.0)
-      .otherwise(adc / (col("__graft_vnorm__") * lit(qnorm)))
+    val approxCos = when(col("__graft_vnorm__") === 0.0 || qnorm === 0.0, -1.0)
+      .otherwise(adc / (col("__graft_vnorm__") * qnorm))
     // The ADC ranking scan must stay narrow — (id, code, norm) only, never
     // the fp32 vectors PQ exists to avoid reading. At 100 TB that is the
     // difference between scanning m bytes/row and scanning the full
@@ -355,16 +369,9 @@ object Ann {
    * full vectors. */
   def ivfPqKnn(indexed: DataFrame, centroids: Array[Array[Double]],
       cb: PqCodebooks, idCol: String, vecCol: String, query: Array[Float],
-      k: Int, nprobe: Int = 4, rerankFactor: Int = 4): DataFrame = {
-    val q = query.map(_.toDouble)
-    val nearest = centroids.zipWithIndex
-      .map { case (c, i) =>
-        (i, c.zip(q).map { case (a, b) => (a - b) * (a - b) }.sum)
-      }
-      .sortBy(_._2).take(nprobe).map(_._1).toSeq
-    pqKnn(indexed.filter(col("__graft_cluster__").isInCollection(nearest)),
+      k: Int, nprobe: Int = 4, rerankFactor: Int = 4): DataFrame =
+    pqKnn(probeClusters(indexed, centroids, query, nprobe),
       cb, idCol, vecCol, query, k, rerankFactor)
-  }
 
   /** Embedding near-duplicate pairs: BANDED hyperplane-LSH candidate join +
    * exact cosine threshold (the embedding analogue of MinHash banding —

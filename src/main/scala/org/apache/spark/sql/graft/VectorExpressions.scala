@@ -1,8 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, In, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -24,6 +24,46 @@ private[graft] object VecReadGen {
        |}
      """.stripMargin
   }
+}
+
+/**
+ * A non-null primitive literal that generated code reads by reference: the
+ * value goes into the references array and is loaded once into a field of
+ * the generated class, never inlined into its source. Two plans that differ
+ * only in such values therefore generate the same Java and share one
+ * compiled class from the codegen cache. To the optimizer, data-source
+ * pushdown and cached-batch pruning it is an ordinary [[Literal]] (same
+ * value, equality, folding and SQL). Build it with the exact type of what it
+ * is compared with: a `Cast` over it folds back into an inlined literal.
+ */
+final class ParamLiteral(value: Any, dataType: DataType)
+    extends Literal(value, dataType) {
+  require(value != null && CodeGenerator.isPrimitiveType(dataType),
+    s"a ParamLiteral holds a non-null primitive value: $value of $dataType")
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    ExprCode.forNonNullValue(JavaCode.global(
+      ParamLiteral.field(ctx, "param", value, dataType), dataType))
+}
+
+object ParamLiteral {
+  /** A field of the generated class holding `value`, set from the
+   * references array when the class is initialized. */
+  private[graft] def field(ctx: CodegenContext, name: String, value: Any,
+      dataType: DataType): String = {
+    val javaType = CodeGenerator.javaType(dataType)
+    val ref = ctx.addReferenceObj(name, value, CodeGenerator.boxedType(dataType))
+    ctx.addMutableState(javaType, name, v => s"$v = $ref.${javaType}Value();",
+      forceInline = true)
+  }
+
+  def apply(value: Any, dataType: DataType): Column =
+    Exprs.column(new ParamLiteral(value, dataType))
+
+  /** `c IN (values)`, each value a [[ParamLiteral]] of `dataType`, which
+   * must be `c`'s own type. */
+  def isIn(c: Column, values: Seq[Any], dataType: DataType): Column =
+    Exprs.column(In(Exprs.expression(c), values.map(new ParamLiteral(_, dataType))))
 }
 
 /**
@@ -164,15 +204,15 @@ case class CosineToQuery(child: Expression, query: Array[Double])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, arr => {
+      // the query and its norm are read by reference, so the kernel's
+      // source is the same for every query vector
       val q = ctx.addReferenceObj("query", query, "double[]")
-      // exact bit-level constant — immune to toString round-trips
-      val qn = "Double.longBitsToDouble(" +
-        s"${java.lang.Double.doubleToRawLongBits(qNorm)}L)"
+      val qn = ParamLiteral.field(ctx, "qNorm", qNorm, DoubleType)
       val fn = PqExpressions.kernel(ctx, "graftCosineToQuery", "double",
         Seq(PqExpressions.ArrayDataT -> "arr"),
         s"""
            |${VecReadGen.copyToDoubles("arr", "vec", elemType)}
-           |int d = Math.min(vec_n, ${query.length});
+           |int d = Math.min(vec_n, $q.length);
            |double dot = 0.0;
            |double nv = 0.0;
            |for (int j = 0; j < d; j++) { dot += vec[j] * $q[j]; }

@@ -137,8 +137,8 @@ class ExpressionParitySpec extends AnyFunSuite {
     // ran. These confs turn a compile failure into a test failure;
     // the kernels now live in their own addNewFunction methods
     // ([[PqExpressions.kernel]]), where shadowing is impossible.
-    val prev = Seq("spark.sql.codegen.fallback", "spark.sql.codegen.factoryMode")
-      .map(k => k -> spark.conf.getOption(k))
+    val prev = Seq("spark.sql.codegen.fallback", "spark.sql.codegen.factoryMode",
+      "spark.sql.codegen.wholeStage").map(k => k -> spark.conf.getOption(k))
     spark.conf.set("spark.sql.codegen.fallback", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
@@ -146,8 +146,12 @@ class ExpressionParitySpec extends AnyFunSuite {
         iterations = 2, seed = 7L)
       val (gram, k) = Ann.sdcGram(cb)
       val planes = Ann.hyperplanes(queryVec.length, 16, seed = 7L)
-      import org.apache.spark.sql.graft.{PqEncodeStats, PqEncode, VecNorm, HyperplaneBandBuckets, NearestCentroid, PqCosineUpperBound, PqAdcDot}
-      val rows = emb.limit(64).select(
+      import org.apache.spark.sql.graft.{PqEncodeStats, PqEncode, VecNorm, HyperplaneBandBuckets, NearestCentroid, PqCosineUpperBound, PqAdcDot, ParamLiteral}
+      import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+      val ids = Set(1L, 3L, 5L)
+      val clusters = Set(0, 2)
+      def kernels() = emb.limit(64).select(
+        col("vec_id"),
         PqEncodeStats(col("embedding"), cb.centroids).as("s"),
         length(PqEncode(col("embedding"), cb.centroids)).as("m"),
         VecNorm(col("embedding")).as("nrm"),
@@ -160,7 +164,11 @@ class ExpressionParitySpec extends AnyFunSuite {
         .withColumn("ub", PqCosineUpperBound(col("s"), col("s"), gram, k))
         .withColumn("adc", PqAdcDot(col("s.code"),
           Array.fill(cb.m)(Array.fill(k)(1.0))))
+        .withColumn("half", col("nrm") * ParamLiteral(0.5, DoubleType))
+        .withColumn("in_id", ParamLiteral.isIn(col("vec_id"), ids.toSeq, LongType))
+        .withColumn("in_c", ParamLiteral.isIn(col("nc"), clusters.toSeq, IntegerType))
         .collect()
+      val rows = kernels()
       assert(rows.length === 64)
       rows.foreach { r =>
         assert(math.abs(r.getAs[Double]("self") - 1.0) < 1e-12)
@@ -172,7 +180,18 @@ class ExpressionParitySpec extends AnyFunSuite {
           "all-ones LUT sums to m")
         assert(r.getAs[Seq[Long]]("bands").length === 2)
         assert(math.abs(r.getAs[Double]("cq")) <= 1.0 + 1e-12)
+        assert(r.getAs[Double]("half") === r.getAs[Double]("nrm") * 0.5)
+        assert(r.getAs[Boolean]("in_id") === ids(r.getAs[Long]("vec_id")))
+        assert(r.getAs[Boolean]("in_c") === clusters(r.getAs[Int]("nc")))
       }
+      // ParamLiteral: the generated class reads the values the interpreter
+      // evaluates
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      def params(rs: Array[org.apache.spark.sql.Row]) = rs.map(r => (r.getAs[Long]("vec_id"),
+        r.getAs[Double]("half"), r.getAs[Boolean]("in_id"), r.getAs[Boolean]("in_c"),
+        r.getAs[Double]("cq"))).sortBy(_._1).toSeq
+      assert(params(kernels()) === params(rows))
     } finally prev.foreach {
       case (key, Some(v)) => spark.conf.set(key, v)
       case (key, None) => spark.conf.unset(key)

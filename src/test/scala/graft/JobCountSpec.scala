@@ -133,6 +133,30 @@ class JobCountSpec extends AnyFunSuite {
     }
   }
 
+  test("an ivfKnn probe over a cached index is one job; a pqKnn probe is two") {
+    import graft.ann.Ann
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val q = emb.select("embedding").first().getSeq[Float](0).toArray
+    val (assigned, cents) = Ann.ivfIndex(emb, "vec_id", "embedding", nClusters = 4)
+    val cb = Ann.pqTrain(emb, "embedding", m = 8, k = 16, iterations = 2)
+    val encoded = Ann.pqEncode(emb, "embedding", cb)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    try {
+      encoded.count()
+      val (ivfRows, ivfJobs) = jobsOf(
+        Ann.ivfKnn(assigned, cents, "vec_id", "embedding", q, 5).collect())
+      assert(ivfRows.length === 5)
+      assert(ivfJobs === 1, "the probe scan, rank and limit are one job")
+      val (pqRows, pqJobs) = jobsOf(
+        Ann.pqKnn(encoded, cb, "vec_id", "embedding", q, 5).collect())
+      assert(pqRows.length === 5)
+      assert(pqJobs === 2, "the broadcast ADC candidates, then the exact re-rank")
+    } finally {
+      assigned.unpersist()
+      encoded.unpersist()
+    }
+  }
+
   test("appendToSampleForBatch at fraction 0.05 is the sampler's jobs plus its write") {
     import spark.implicits._
     val gs = new GraftSession(spark)

@@ -155,49 +155,31 @@ object GraftState {
 /**
  * Public session facade — the DataFrame-API entry point of the engine
  * (reference entry point B/C, SURVEY.md §3: `SnappySession.createSampleTable`
- * / `sample` / `queryTopK`).
+ * / `sample` / `queryTopK`). The SQL surface itself lives in the session:
+ * [[org.apache.spark.sql.graft.GraftExtensions]] comes with the jar, so
+ * `spark.sql` parses, rewrites and plans AQP queries with no facade.
  */
 class GraftSession(val spark: SparkSession) {
   val state: GraftState = GraftState.of(spark)
 
-  // runtime install of error functions + HAC planning strategy, so the
-  // engine works on a stock session (no spark.sql.extensions needed)
-  org.apache.spark.sql.graft.Plans.install(spark)
+  if (!spark.sessionState.analyzer.postHocResolutionRules
+      .exists(_.isInstanceOf[org.apache.spark.sql.graft.AqpRewrite])) {
+    throw new IllegalStateException(
+      "This SparkSession has no AQP hooks: it was built before the graft " +
+        "jar was on the classpath. Build the session after adding the jar, " +
+        "or set spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions " +
+        "before building it.")
+  }
 
   /**
    * SQL entry point with the AQP surface: trailing `WITH ERROR e
    * [CONFIDENCE c] [BEHAVIOR 'b']`, `CREATE SAMPLE TABLE`, error functions
    * `absolute_error/relative_error/lower_bound/upper_bound(alias)`
-   * (reference entry points A and C — SURVEY.md §3). Other SQL passes
-   * through unchanged.
+   * (reference entry points A and C — SURVEY.md §3). The same as
+   * `spark.sql`: DDL runs eagerly, and a query is rewritten once, inside
+   * its own analysis.
    */
-  def sql(text: String): DataFrame = {
-    import org.apache.spark.sql.graft._
-    val parser = new AqpParser(spark.sessionState.sqlParser, Some(spark))
-    parser.parsePlan(text) match {
-      // AQP DDL nodes are runnable commands — run them eagerly, exactly as
-      // Spark's command path does under the extensions wiring (other
-      // commands fall through to ordinary execution below)
-      case cmd @ (_: CreateSampleTableNode | _: CreateSampleTableAsNode |
-                  _: CreateTopkTableNode | _: DropSampleTableNode |
-                  _: DropTopkTableNode | _: CreateStreamTableNode |
-                  _: DropStreamTableNode | _: StreamingControlNode |
-                  _: InsertIntoSampleNode | _: InsertIntoTopkNode) =>
-        cmd.asInstanceOf[org.apache.spark.sql.execution.command.RunnableCommand]
-          .run(spark)
-        spark.emptyDataFrame
-      case show: ShowAqpTablesNode =>
-        // row-producing command: surface the listing as a DataFrame
-        val schema = org.apache.spark.sql.types.StructType(show.output.map(a =>
-          org.apache.spark.sql.types.StructField(a.name, a.dataType, a.nullable)))
-        spark.createDataFrame(
-          new java.util.ArrayList(scala.jdk.CollectionConverters
-            .SeqHasAsJava(show.run(spark)).asJava), schema)
-      case plan =>
-        val analyzed = Plans.analyzed(Plans.ofRows(spark, plan))
-        Plans.ofRows(spark, AqpRewrite(spark)(analyzed))
-    }
-  }
+  def sql(text: String): DataFrame = spark.sql(text)
 
   /** Register a continuous query over a declared stream table (reference
    * `SnappyStreamingContext.registerCQ` — `SELECT ... FROM <stream>
@@ -318,7 +300,7 @@ class GraftSession(val spark: SparkSession) {
         // a full-fraction sample is a copy of the whole table: cached
         // lazily, as compressed columns, by its first reader instead of
         // stored row by row now (an eager copy measured 0.24 → 0.88 s on
-        // graft.Bench q38_sample_append at scale 0.1)
+        // the q38_sample_append query at scale 0.1)
         (info.sampleDf.unionByName(sampled).persist(), None)
       case None =>
         // the registered leaf plus the batch's sample, materialized into a
@@ -950,13 +932,12 @@ class GraftSession(val spark: SparkSession) {
    */
   def withError(df: DataFrame, error: Double = Double.NaN,
       confidence: Double = Double.NaN, behavior: String = null): DataFrame = {
-    import org.apache.spark.sql.graft.{AqpRewrite, ErrorConfidence, Plans}
-    val node = ErrorConfidence(
+    import org.apache.spark.sql.graft.{ErrorConfidence, Plans}
+    Plans.ofRows(spark, ErrorConfidence(
       Option(error).filterNot(_.isNaN),
       Option(confidence).filterNot(_.isNaN),
       Option(behavior),
-      Plans.analyzed(df))
-    Plans.ofRows(spark, AqpRewrite(spark)(node))
+      Plans.analyzed(df)))
   }
 }
 

@@ -7,8 +7,8 @@ import org.apache.spark.sql.graft.{ErrorEstimateStub, Exprs}
  * DataFrame-API error-introspection functions, mirroring the reference's
  * `org.apache.spark.sql.aqp.functions` (`sql/aqp/functions.scala:33-50`).
  * Each wraps its argument in an unresolved stub bound by the AQP rewrite
- * when the enclosing query runs through `GraftSession.withError` /
- * `GraftSession.sql(... WITH ERROR ...)`.
+ * when the enclosing query runs through `GraftSession.withError` or is a
+ * `WITH ERROR` SQL query.
  */
 object functions {
   private def stub(fn: String, c: Column): Column =

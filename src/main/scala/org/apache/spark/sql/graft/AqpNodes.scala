@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, Unevaluable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, Literal,
+  RuntimeReplaceable, Unevaluable, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -44,6 +45,13 @@ object ErrorEstimateStub {
   val names: Seq[String] =
     Seq("absolute_error", "relative_error", "lower_bound", "upper_bound")
 
+  /** An error function's value on an exactly answered query: errors are
+   * 0, bounds are NULL. */
+  def exact(fnName: String): Literal = fnName match {
+    case "absolute_error" | "relative_error" => Literal(0.0, DoubleType)
+    case _ => Literal(null, DoubleType)
+  }
+
   /** Field ordinal in [[ClosedFormAggregate.resultType]] for each function. */
   def fieldOrdinal(fnName: String): Int = fnName match {
     case "lower_bound" => 1
@@ -51,6 +59,17 @@ object ErrorEstimateStub {
     case "absolute_error" => 3
     case "relative_error" => 4
   }
+}
+
+/** An error function over a sample queried with no error clause: its
+ * [[ErrorEstimateStub.exact]] value once optimized, and a stub again when
+ * an [[ErrorConfidence]] later wraps the analyzed plan
+ * (`GraftSession.withError` over a frame that reads a sample). */
+case class InertErrorEstimate(fnName: String, child: Expression)
+    extends UnaryExpression with RuntimeReplaceable {
+  override lazy val replacement: Expression = ErrorEstimateStub.exact(fnName)
+  override protected def withNewChildInternal(newChild: Expression): InertErrorEstimate =
+    copy(child = newChild)
 }
 
 /** Thrown under BEHAVIOR 'strict' when a group's relative error exceeds the

@@ -11,9 +11,8 @@ import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
- * SQL surface of the engine, as a `ParserInterface` delegate (usable either
- * via `SparkSessionExtensions.injectParser` or standalone through
- * `GraftSession.sql`). Handles:
+ * SQL surface of the engine, as the `ParserInterface` that
+ * [[GraftExtensions]] injects in front of the session's own parser. Handles:
  *
  *   - trailing `WITH ERROR e [CONFIDENCE c] [BEHAVIOR 'b']`
  *     (reference grammar `sql/snappyAQPParsers.scala:48-71`), wrapping the
@@ -25,8 +24,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *
  * Everything else passes through to the wrapped Spark parser.
  */
-class AqpParser(delegate: ParserInterface,
-    session: Option[SparkSession] = None) extends ParserInterface {
+class AqpParser(delegate: ParserInterface, session: SparkSession)
+    extends ParserInterface {
   import AqpParser._
 
   override def parsePlan(sqlText: String): LogicalPlan = {
@@ -37,7 +36,7 @@ class AqpParser(delegate: ParserInterface,
     if (createSampleAs.matches()) {
       val opts = parseOptions(createSampleAs.group(2))
       return CreateSampleTableAsNode(createSampleAs.group(1), opts,
-        createSampleAs.group(3))
+        delegate.parsePlan(createSampleAs.group(3)))
     }
     val createSample = CreateSamplePattern.matcher(sqlText)
     if (createSample.matches()) {
@@ -76,16 +75,14 @@ class AqpParser(delegate: ParserInterface,
       // resolve to the registered key: appendToSample looks up exact-case,
       // so `INSERT INTO MySample` must map to the sample registered as
       // `mysample` (temp-view name semantics)
-      val registered = session.flatMap(s =>
-        graft.GraftState.of(s).resolveSample(target))
+      val registered = graft.GraftState.of(session).resolveSample(target)
       if (registered.isDefined) {
-        return InsertIntoSampleNode(registered.get, insert.group(2))
+        return InsertIntoSampleNode(registered.get, delegate.parsePlan(insert.group(2)))
       }
       // same surface for TopK structures: the rows stream into the sketch
       // (the view over TopK state is not insertable through stock Spark)
-      if (session.exists(s =>
-          graft.GraftState.of(s).topks.contains(target.toLowerCase))) {
-        return InsertIntoTopkNode(target, insert.group(2))
+      if (graft.GraftState.of(session).topks.contains(target.toLowerCase)) {
+        return InsertIntoTopkNode(target, delegate.parsePlan(insert.group(2)))
       }
     }
     val dropSample = DropSamplePattern.matcher(sqlText)
@@ -278,21 +275,20 @@ class AqpParser(delegate: ParserInterface,
    * (0,1)) DISABLES implicit AQP and queries return exact base results
    * again; setting only `spark.sql.aqp.confidence` or
    * `spark.sql.aqp.behavior` never enables it (only `error` gates). */
-  private def sessionErrorEnables(s: org.apache.spark.sql.SparkSession): Boolean =
-    s.conf.getOption("spark.sql.aqp.error").exists { v =>
+  private def sessionErrorEnables: Boolean =
+    session.conf.getOption("spark.sql.aqp.error").exists { v =>
       try { val e = v.trim.toDouble; e > 0 && e < 1 }
       catch { case _: NumberFormatException => false }
     }
 
-  private def maybeImplicitAqp(plan: LogicalPlan): LogicalPlan = session match {
-    case Some(s) if sessionErrorEnables(s) &&
+  private def maybeImplicitAqp(plan: LogicalPlan): LogicalPlan =
+    if (sessionErrorEnables &&
         !plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command] &&
         !plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.ParsedStatement] &&
         !plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement] &&
-        !plan.exists(_.isInstanceOf[ErrorConfidence]) =>
+        !plan.exists(_.isInstanceOf[ErrorConfidence])) {
       ErrorConfidence(None, None, None, plan)
-    case _ => plan
-  }
+    } else plan
 
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)
@@ -432,10 +428,8 @@ object AqpParser {
 
 /** AQP DDL nodes are runnable commands (reference maps its DDL through
  * `CreateSampleTableCommand` the same way — `command/
- * CreateSampleTableCommand.scala:27-48`), so they execute under BOTH entry
- * points: `GraftSession.sql` intercepts them pre-analysis, and a stock
- * session with `spark.sql.extensions=...GraftExtensions` runs them through
- * Spark's ordinary eager-command path. */
+ * CreateSampleTableCommand.scala:27-48`), so `spark.sql` runs them once,
+ * through Spark's ordinary eager-command path. */
 case class CreateSampleTableNode(name: String, base: Option[String],
     schemaDdl: Option[String], options: Map[String, String],
     ifNotExists: Boolean = false)
@@ -477,21 +471,23 @@ case class CreateSampleTableNode(name: String, base: Option[String],
 
 /** Appends query results to a registered sample table, re-sampling the new
  * rows per stratum (reference `ColumnFormatSamplingRelation.insert`,
- * `sampling/ColumnFormatSamplingRelation.scala:253-340`). */
-case class InsertIntoSampleNode(name: String, querySql: String)
+ * `sampling/ColumnFormatSamplingRelation.scala:253-340`). The query is
+ * parsed by the wrapped Spark parser, so implicit AQP never approximates
+ * the rows an INSERT stores. */
+case class InsertIntoSampleNode(name: String, query: LogicalPlan)
   extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[org.apache.spark.sql.Row] = {
-    graft.GraftSession(spark).appendToSample(name, spark.sql(querySql))
+    graft.GraftSession(spark).appendToSample(name, Plans.ofRows(spark, query))
     Nil
   }
 }
 
 /** Appends query results into a registered TopK structure's sketches
  * (the SQL counterpart of `appendToTopK`; path-backed TopKs re-persist). */
-case class InsertIntoTopkNode(name: String, querySql: String)
+case class InsertIntoTopkNode(name: String, query: LogicalPlan)
   extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[org.apache.spark.sql.Row] = {
-    graft.GraftSession(spark).appendToTopK(name, spark.sql(querySql))
+    graft.GraftSession(spark).appendToTopK(name, Plans.ofRows(spark, query))
     Nil
   }
 }
@@ -567,11 +563,11 @@ case class CreateTopkTableNode(name: String, base: String,
 }
 
 case class CreateSampleTableAsNode(name: String, options: Map[String, String],
-    query: String)
+    query: LogicalPlan)
   extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[org.apache.spark.sql.Row] = {
     val baseView = name + "_base"
-    spark.sql(query).createOrReplaceTempView(baseView)
+    Plans.ofRows(spark, query).createOrReplaceTempView(baseView)
     graft.GraftSession(spark).createSampleTableFromOptions(name, baseView, options)
     Nil
   }

@@ -37,9 +37,11 @@ case class AqpRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // directly fired on sample table should not compute error estimates if
     // no error clause present" — `ReplaceWithSampleTable.
     // INIFINITE_ERROR_TOLERANCE`): aggregates stay raw/unweighted and the
-    // error functions are inert (bounds = estimate, errors = 0). On a plan
-    // with no sample scan the stubs survive as Unevaluable and raise, as
-    // before — error estimates need an AQP context.
+    // error functions are inert (bounds = estimate, errors = 0). They are
+    // marked inert rather than replaced, so a clause that wraps this
+    // analyzed plan later still finds them. On a plan with no sample scan
+    // the stubs survive as Unevaluable and raise, as before — error
+    // estimates need an AQP context.
     if (p.resolved && !p.exists(_.isInstanceOf[ErrorConfidence]) &&
         p.exists(_.expressions.exists(_.exists(_.isInstanceOf[ErrorEstimateStub])))) {
       val state = graft.GraftState.of(spark)
@@ -49,7 +51,11 @@ case class AqpRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             val sp = i.sampleDf.queryExecution.analyzed
             p.exists(_.sameResult(sp))
           }
-      if (scansSample) stripStubs(p) else p
+      if (scansSample) {
+        p.transformUp { case n => n.transformExpressionsDown {
+          case ErrorEstimateStub(fn, arg) => InertErrorEstimate(fn, arg)
+        } }
+      } else p
     } else p
   }
 
@@ -69,7 +75,9 @@ case class AqpRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       defaultD("spark.sql.aqp.confidence", "0.95").toDouble)
     val behaviorStr = ec.behavior.getOrElse(defaultD("spark.sql.aqp.behavior", "do_nothing"))
     val behavior = HacBehavior.parse(behaviorStr)
-    val child = ec.child
+    val child = ec.child.transformUp { case n => n.transformExpressionsDown {
+      case InertErrorEstimate(fn, arg) => ErrorEstimateStub(fn, arg)
+    } }
     val state = graft.GraftState.of(spark)
 
     // Joining two DIFFERENT sample tables is rejected with the reference's
@@ -535,14 +543,6 @@ case class AqpRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       }
     }
 
-    /** The inert value of an error function over a non-estimatable
-     * aggregate: bounds NULL, errors 0 (same shape as a base-routed
-     * query). */
-    def inertValue(fn: String): Expression = fn match {
-      case "absolute_error" | "relative_error" => Literal(0.0, DoubleType)
-      case _ => Literal(null, DoubleType)
-    }
-
     // Analysis substitutes same-select-list alias references with the full
     // aggregate expression (lateral column alias resolution), so a stub's
     // argument is usually the AggregateExpression itself — bind it directly.
@@ -563,7 +563,7 @@ case class AqpRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           case None =>
             // the stub references an aggregate the struct cannot cover
             // (min/max, …) — inert, never an analysis error
-            Some(inertValue(fn))
+            Some(ErrorEstimateStub.exact(fn))
         }
       }
     }
@@ -666,7 +666,7 @@ case class AqpRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           case attr: Attribute if aliasToStruct.contains(attr.exprId) =>
             extractField(aliasToStruct(attr.exprId), fn)
           case attr: Attribute if inertAliases.contains(attr.exprId) =>
-            inertValue(fn) // error fn over a min/max alias (ENT-57)
+            ErrorEstimateStub.exact(fn) // error fn over a min/max alias (ENT-57)
           case other => bindStub(fn, other, create = false).getOrElse(throw new AnalysisException(
             errorClass = "INTERNAL_ERROR",
             messageParameters = Map("message" ->
@@ -799,10 +799,7 @@ case class AqpRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
    * bounds with zero errors on every exactly-answered query). */
   private def stripStubs(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case n => n.transformExpressionsDown {
-      case ErrorEstimateStub(fn, _) => fn match {
-        case "absolute_error" | "relative_error" => Literal(0.0, DoubleType)
-        case _ => Literal(null, DoubleType)
-      }
+      case ErrorEstimateStub(fn, _) => ErrorEstimateStub.exact(fn)
     }
   }
 }

@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions,
+  SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
@@ -148,46 +149,38 @@ object Plans {
       rel: org.apache.spark.sql.sources.BaseRelation): DataFrame =
     ofRows(spark,
       org.apache.spark.sql.execution.datasources.LogicalRelation(rel))
-
-  /** Ensure runtime hooks (error functions + HAC strategy) are installed on
-   * a stock session — lets the engine work without `spark.sql.extensions`.
-   */
-  def install(spark: SparkSession): Unit = {
-    ErrorEstimateStub.names.foreach { fn =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        fn, exprs => ErrorEstimateStub(fn, exprs.head), "built-in")
-    }
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cs.experimental.extraStrategies.exists(_.isInstanceOf[HacStrategy])) {
-      cs.experimental.extraStrategies =
-        cs.experimental.extraStrategies :+ HacStrategy(spark)
-    }
-  }
 }
 
 /**
- * `SparkSessionExtensions` installer — the "proper" wiring when the session
- * is built with `.withExtensions(new GraftExtensions)` or
- * `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`
- * (reference wires the same surface through `SnappyAQPSessionState`,
- * SURVEY.md §3/§4). `GraftSession` installs the equivalent hooks at runtime
- * for stock sessions.
+ * The AQP SQL surface as session extensions: the parser, the rewrite, the
+ * HAC strategy and the error functions (reference wires the same surface
+ * through `SnappyAQPSessionState`, SURVEY.md §3/§4). Registered as a
+ * `SparkSessionExtensionsProvider` in `META-INF/services`, so every session
+ * built with the jar on the classpath carries it; naming it in
+ * `spark.sql.extensions` or `withExtensions` as well is harmless, because
+ * each `SparkSessionExtensions` takes the hooks once.
  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectParser((session, delegate) => new AqpParser(delegate, Some(session)))
-    // post-hoc, not resolution: the rewrite expects the settled post-analysis
-    // plan shape (lateral column aliases already split into stacked
-    // Projects), exactly what GraftSession.sql hands it on the standalone
-    // path; inside the resolution fixed-point it would see intermediate
-    // shapes with error-fn stubs still inline in the Aggregate
-    e.injectPostHocResolutionRule(session => AqpRewrite(session))
-    e.injectPlannerStrategy(session => HacStrategy(session))
-    ErrorEstimateStub.names.foreach { fn =>
-      e.injectFunction((
-        FunctionIdentifier(fn),
-        new ExpressionInfo(classOf[ErrorEstimateStub].getName, fn),
-        (exprs: Seq[Expression]) => ErrorEstimateStub(fn, exprs.head)))
+class GraftExtensions extends SparkSessionExtensionsProvider {
+  override def apply(e: SparkSessionExtensions): Unit =
+    if (GraftExtensions.applied.synchronized(GraftExtensions.applied.add(e))) {
+      e.injectParser((session, delegate) => new AqpParser(delegate, session))
+      // post-hoc, not resolution: the rewrite expects the settled
+      // post-analysis plan shape (lateral column aliases already split into
+      // stacked Projects); inside the resolution fixed-point it would see
+      // intermediate shapes with error-fn stubs still inline in the Aggregate
+      e.injectPostHocResolutionRule(session => AqpRewrite(session))
+      e.injectPlannerStrategy(session => HacStrategy(session))
+      ErrorEstimateStub.names.foreach { fn =>
+        e.injectFunction((
+          FunctionIdentifier(fn),
+          new ExpressionInfo(classOf[ErrorEstimateStub].getName, fn),
+          (exprs: Seq[Expression]) => ErrorEstimateStub(fn, exprs.head)))
+      }
     }
-  }
+}
+
+object GraftExtensions {
+  /** The extension sets that already hold the hooks (by identity). */
+  private val applied = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkSessionExtensions, java.lang.Boolean]())
 }

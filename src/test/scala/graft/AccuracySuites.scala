@@ -414,20 +414,22 @@ class DatasourceErrorFunctionSpec extends AnyFunSuite {
         spark.conf.set("spark.sql.aqp.fixedSeed", "true")
       }
       try {
-        val rows = sampled.groupBy("l_returnflag")
+        val agg = sampled.groupBy("l_returnflag")
           .agg(org.apache.spark.sql.functions.sum("l_quantity").alias("s"),
             absolute_error("s"), lower_bound("s"), upper_bound("s"))
-          .withError(0.9, 0.95, "do_nothing")
-          .collect()
-        assert(rows.length === truth.size)
-        rows.foreach { r =>
-          val t = truth(r.getString(0))
-          assert(!r.isNullAt(2) && !r.isNullAt(3) && !r.isNullAt(4),
-            s"$estimator: error columns must be live on a disk-read sample")
-          assert(r.getDouble(3) <= r.getDouble(1) && r.getDouble(1) <= r.getDouble(4),
-            s"$estimator: estimate outside its own bounds")
-          assert(math.abs(r.getDouble(1) - t) <= 4 * math.max(r.getDouble(2), 1.0),
-            s"$estimator: estimate ${r.getDouble(1)} too far from truth $t")
+        // the frame itself, and a frame derived from it after its analysis
+        Seq(agg, agg.orderBy("l_returnflag")).foreach { df =>
+          val rows = df.withError(0.9, 0.95, "do_nothing").collect()
+          assert(rows.length === truth.size)
+          rows.foreach { r =>
+            val t = truth(r.getString(0))
+            assert(!r.isNullAt(2) && !r.isNullAt(3) && !r.isNullAt(4),
+              s"$estimator: error columns must be live on a disk-read sample")
+            assert(r.getDouble(3) <= r.getDouble(1) && r.getDouble(1) <= r.getDouble(4),
+              s"$estimator: estimate outside its own bounds")
+            assert(math.abs(r.getDouble(1) - t) <= 4 * math.max(r.getDouble(2), 1.0),
+              s"$estimator: estimate ${r.getDouble(1)} too far from truth $t")
+          }
         }
       } finally {
         spark.conf.set("spark.sql.aqp.estimator", "closedform")

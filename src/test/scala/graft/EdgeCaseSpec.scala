@@ -584,6 +584,11 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("AQP-225: join of two aggregated+limited subqueries under implicit AQP") {
     spark.read.parquet(s"$sf/orders.parquet").createOrReplaceTempView("ord_ec")
+    // the exact oracle runs before the session property makes spark.sql
+    // approximate
+    val exact = spark.sql(
+      "SELECT l_linestatus, count(l_quantity) FROM li_ec GROUP BY 1")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     spark.conf.set("spark.sql.aqp.error", "0.9")
     try {
       // sampled side: top groups of lineitem by estimated count; exact side:
@@ -601,9 +606,6 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
       val rows = df.collect()
       assert(rows.nonEmpty)
       // estimated trip counts are near the exact ones (implicit AQP applied)
-      val exact = spark.sql(
-        "SELECT l_linestatus, count(l_quantity) FROM li_ec GROUP BY 1")
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       rows.foreach { r =>
         val rel = math.abs(r.getLong(1).toDouble / exact(r.getString(0)) - 1)
         assert(rel < 0.2, s"${r.getString(0)} estimate off by $rel")

@@ -5,13 +5,18 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
- * The canonical wiring: a stock SparkSession built with
- * `withExtensions(new GraftExtensions)` must support the whole AQP SQL
- * surface through plain `spark.sql(...)` — parser, DDL commands,
- * resolution-rule rewrite, error functions, HAC strategy — with no
- * GraftSession facade involved.
+ * The one wiring: `GraftExtensions` comes with the jar, so every session
+ * supports the whole AQP SQL surface through plain `spark.sql(...)` —
+ * parser, DDL commands, post-hoc rewrite, error functions, HAC strategy —
+ * and `GraftSession.sql` is the same route. `ext` also names the
+ * extensions explicitly, so it holds them twice over.
  */
 class ExtensionsSpec extends AnyFunSuite {
+  import org.apache.spark.sql.graft.{AqpInfo, ErrorConfidence}
+
+  private def errorConfidences(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
+    plan.collect { case e: ErrorConfidence => e }.size
 
   private lazy val ext: SparkSession = {
     // force TestSpark's context into existence first so we attach to it
@@ -172,5 +177,86 @@ class ExtensionsSpec extends AnyFunSuite {
     } finally {
       SparkSession.setActiveSession(prev.orNull)
     }
+  }
+
+  test("explicit registration on top of the provider's: one set of hooks, same answers") {
+    // ext got GraftExtensions from the provider and from withExtensions
+    assert(ext.sessionState.analyzer.postHocResolutionRules
+      .count(_.isInstanceOf[org.apache.spark.sql.graft.AqpRewrite]) === 1)
+    val spark = TestSpark.spark
+    val gs = GraftSession(spark)
+    spark.read.parquet(s"${TestSpark.sf}/lineitem.parquet")
+      .createOrReplaceTempView("li_twice")
+    gs.sql("CREATE SAMPLE TABLE li_twice_s ON li_twice " +
+      "OPTIONS(qcs 'l_returnflag', fraction '0.3', seed '7')")
+    val prev = SparkSession.getActiveSession
+    SparkSession.setActiveSession(ext)
+    try {
+      ext.read.parquet(s"${TestSpark.sf}/lineitem.parquet")
+        .createOrReplaceTempView("li_twice")
+      ext.sql("CREATE SAMPLE TABLE li_twice_s ON li_twice " +
+        "OPTIONS(qcs 'l_returnflag', fraction '0.3', seed '7')")
+      val q = "SELECT l_returnflag, round(sum(l_quantity), 4) AS s, " +
+        "round(absolute_error(s), 4) AS ae FROM li_twice GROUP BY 1 ORDER BY 1"
+      spark.conf.set("spark.sql.aqp.error", "0.9")
+      ext.conf.set("spark.sql.aqp.error", "0.9")
+      try {
+        // implicit, and an explicit clause under the session property: a
+        // parser wrapped twice would wrap the latter twice
+        Seq(q, q + " WITH ERROR 0.5").foreach { text =>
+          val viaExt = ext.sql(text)
+          assert(errorConfidences(viaExt.queryExecution.logical) === 1, text)
+          assert(AqpInfo.usesSample(viaExt), text)
+          assert(viaExt.collect().toSeq === gs.sql(text).collect().toSeq, text)
+        }
+      } finally {
+        spark.conf.unset("spark.sql.aqp.error")
+        ext.conf.unset("spark.sql.aqp.error")
+        ext.sql("DROP SAMPLE TABLE li_twice_s")
+      }
+    } finally {
+      SparkSession.setActiveSession(prev.orNull)
+      gs.sql("DROP SAMPLE TABLE li_twice_s")
+    }
+  }
+
+  test("GraftSession.sql is spark.sql: a WITH ERROR query is rewritten inside its one analysis") {
+    val spark = TestSpark.spark
+    val gs = GraftSession(spark)
+    spark.read.parquet(s"${TestSpark.sf}/lineitem.parquet")
+      .createOrReplaceTempView("li_route")
+    gs.sql("CREATE SAMPLE TABLE li_route_s ON li_route " +
+      "OPTIONS(qcs 'l_returnflag', fraction '0.3')")
+    try {
+      val df = gs.sql("SELECT l_returnflag, sum(l_quantity) AS s FROM li_route " +
+        "GROUP BY 1 WITH ERROR 0.9")
+      // the parsed plan, clause and all
+      assert(errorConfidences(df.queryExecution.logical) === 1)
+      assert(df.queryExecution.logical.collectFirst {
+        case e: ErrorConfidence => e.error
+      } === Some(Some(0.9)))
+      // the analysis consumed the clause and routed to the sample
+      assert(errorConfidences(df.queryExecution.analyzed) === 0)
+      assert(AqpInfo.usesSample(df))
+      // SHOW is a command like any other: its rows come back as its result
+      assert(gs.sql("SHOW SAMPLE TABLES").collect()
+        .exists(_.getString(0) == "li_route_s"))
+    } finally gs.sql("DROP SAMPLE TABLE li_route_s")
+  }
+
+  test("TopK INSERT through GraftSession.sql counts double, never triple") {
+    val spark = TestSpark.spark
+    val gs = GraftSession(spark)
+    TestSpark.eventsLongNs(spark).createOrReplaceTempView("ev_route")
+    gs.sql("CREATE TOPK TABLE tk_route ON ev_route OPTIONS(key 'event_type', " +
+      "size '5', streamSummary 'true', capacity '100000')")
+    try {
+      val base = gs.queryTopK("tk_route", k = 3).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      gs.sql("INSERT INTO tk_route SELECT * FROM ev_route")
+      val doubled = gs.queryTopK("tk_route", k = 3).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      base.foreach { case (k, v) => assert(doubled(k) === 2 * v, s"$k") }
+    } finally gs.sql("DROP TOPK TABLE tk_route")
   }
 }

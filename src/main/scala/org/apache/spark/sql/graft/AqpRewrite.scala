@@ -37,7 +37,7 @@ case class AqpRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // directly fired on sample table should not compute error estimates if
     // no error clause present" — `ReplaceWithSampleTable.
     // INIFINITE_ERROR_TOLERANCE`): aggregates stay raw/unweighted and the
-    // error functions are inert (bounds = estimate, errors = 0). They are
+    // error functions are inert (bounds NULL, errors 0). They are
     // marked inert rather than replaced, so a clause that wraps this
     // analyzed plan later still finds them. On a plan with no sample scan
     // the stubs survive as Unevaluable and raise, as before — error

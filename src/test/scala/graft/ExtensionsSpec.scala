@@ -201,8 +201,7 @@ class ExtensionsSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.aqp.error", "0.9")
       ext.conf.set("spark.sql.aqp.error", "0.9")
       try {
-        // implicit, and an explicit clause under the session property: a
-        // parser wrapped twice would wrap the latter twice
+        // implicit, and an explicit clause under the session property
         Seq(q, q + " WITH ERROR 0.5").foreach { text =>
           val viaExt = ext.sql(text)
           assert(errorConfidences(viaExt.queryExecution.logical) === 1, text)

@@ -10,15 +10,14 @@ import org.apache.spark.sql.types._
  * travel as opaque `binary` columns with typed metadata structs; decode /
  * feature-extraction runs batched inside `mapPartitions`.
  *
- * Header metadata (format, dimensions, audio frame counts) is decoded FOR
- * REAL by [[HeaderDecoder]] — pure byte-level parsing of PNG / JPEG / GIF /
- * BMP / WAV container headers. Pixel and PCM payloads are ALSO decoded for
- * real by [[PixelDecoder]] (pure-JVM PNG inflate+unfilter, BMP, GIF-LZW,
- * WAV PCM, baseline-JPEG Huffman+DCT; ImageIO only for exotic corners) —
- * see [[decodePixels]],
- * [[pixelStats]], [[audioStats]], [[PixelStatExtractor]]. Only NEURAL
- * feature extraction remains stubbed ([[StubExtractor]] — no NN runtime in
- * this container); its batch contract is what an ONNX/JNI encoder needs.
+ * [[HeaderDecoder]] reads metadata (format, dimensions, audio frame
+ * counts) from the PNG / JPEG / GIF / BMP / WAV / MP4 container headers.
+ * [[PixelDecoder]] decodes pixel and PCM payloads: PNG, BMP, GIF and WAV
+ * from the bytes, JPEG and the other formats' leftover variants through
+ * the JDK's ImageIO readers. See [[decodePixels]], [[pixelStats]],
+ * [[audioStats]] and [[PixelStatExtractor]]. Neural feature extraction is
+ * a stub ([[StubExtractor]]: there is no NN runtime); its batch contract is
+ * what an ONNX/JNI encoder needs.
  */
 object Multimodal {
 

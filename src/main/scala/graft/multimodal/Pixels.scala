@@ -1,21 +1,19 @@
 package graft.multimodal
 
+import java.awt.image.BufferedImage
+import java.io.ByteArrayInputStream
 import java.util.zip.Inflater
+import javax.imageio.ImageIO
+import javax.imageio.stream.MemoryCacheImageInputStream
 
 /**
- * Real pixel/sample decode for the multimodal column path — pure-JVM
- * byte-level decoders for every supported container: PNG's zlib stream,
- * BMP's raw rows, GIF's LZW, WAV's PCM, and baseline JPEG's Huffman+DCT
- * pipeline ([[Jpeg]]). `javax.imageio` remains only as the fallback for
- * the rare unsupported corners (progressive/arithmetic/CMYK JPEG,
- * exotic PNG bit depths).
- *
- * This upgrades the reference-scope "decode is stubbed" position
- * (`Multimodal.StubDecoder`): header metadata AND pixel payloads are now
- * decoded for real. The formats' layouts are public container specs (PNG
- * RFC 2083, BMP BITMAPINFOHEADER, GIF89a, RIFF/WAVE); the hot loops are
- * allocation-free per scanline and run batched inside `mapPartitions`, so
- * the operator scales like any other narrow map at 100 TB.
+ * Pixel and sample decode for the multimodal column path. PNG (zlib
+ * inflate + unfilter), BMP rows, GIF LZW and WAV PCM are decoded from the
+ * bytes by the container specs (PNG RFC 2083, BMP BITMAPINFOHEADER,
+ * GIF89a, RIFF/WAVE); JPEG, and the PNG/BMP/GIF variants those decoders
+ * return null for, go to the JDK's `javax.imageio` readers through
+ * [[viaImageIO]], which checks the header's dimensions before the reader
+ * allocates. Decoding runs per row inside `mapPartitions`.
  */
 object PixelDecoder {
 
@@ -53,14 +51,8 @@ object PixelDecoder {
       val p = gif(bytes)
       return if (p != null) p else viaImageIO(bytes)
     }
-    if (bytes(0) == 0xFF.toByte && bytes(1) == 0xD8.toByte) {
-      // baseline sequential decodes pure-JVM ([[Jpeg]]); progressive /
-      // arithmetic / CMYK fall back to ImageIO like other formats'
-      // unsupported corners
-      val p = Jpeg.decode(bytes)
-      return if (p != null) p else viaImageIO(bytes)
-    }
-    null
+    if (bytes(0) == 0xFF.toByte && bytes(1) == 0xD8.toByte) viaImageIO(bytes)
+    else null
   }
 
   // ---------------------------------------------------------------- PNG ----
@@ -98,6 +90,10 @@ object PixelDecoder {
       i += 12 + len
     }
     if (idatLen == 0) return null
+    // deflate expands at most 1032:1: a header claiming more filtered bytes
+    // than the IDAT stream can inflate to is refused before `raw` exists
+    val rawLen = height.toLong * (1 + width.toLong * srcChannels)
+    if (rawLen > idatLen * 1032L) return null
     val idat = new Array[Byte](idatLen)
     var off = 0
     i = 8
@@ -111,7 +107,7 @@ object PixelDecoder {
     if (colorType == 3 && palette == null) return null
     val bpp = srcChannels // bytes per pixel at depth 8
     val rowBytes = width * bpp
-    val raw = new Array[Byte](height * (1 + rowBytes))
+    val raw = new Array[Byte](rawLen.toInt)
     val inf = new Inflater()
     try {
       inf.setInput(idat)
@@ -391,36 +387,67 @@ object PixelDecoder {
 
   // ------------------------------------------------------------- ImageIO ----
 
-  /** JDK ImageIO fallback (JPEG's Huffman+DCT pipeline is the one codec not
-   * worth hand-rolling). Headless-safe: raster ops only. */
+  /** Largest raster [[viaImageIO]] decodes, counted at 4 bytes per pixel
+   * (RGBA, the widest output). */
+  private val MaxRasterBytes = 1L << 30
+
+  /** Decode through the JDK's `ImageIO` readers. The reader's header
+   * dimensions are checked against [[MaxRasterBytes]] before `read`
+   * allocates anything. Byte-interleaved rasters are copied as they are:
+   * BGR becomes RGB, ABGR becomes RGBA, and gray stays one raw channel.
+   * Any other image type goes through `getRGB`: sRGB, plus alpha when the
+   * color model has it. Null when no reader takes the bytes or the read
+   * fails. Headless-safe: raster ops only. */
   def viaImageIO(bytes: Array[Byte]): Pixels = {
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      catch { case _: Exception => null }
-    if (img == null) return null
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
+    try {
+      val readers = ImageIO.getImageReaders(in)
+      if (!readers.hasNext) return null
+      val reader = readers.next()
+      try {
+        reader.setInput(in, true, true)
+        val w = reader.getWidth(0)
+        val h = reader.getHeight(0)
+        if (w <= 0 || h <= 0 || w.toLong * h * 4 > MaxRasterBytes) null
+        else copyRaster(reader.read(0))
+      } finally reader.dispose()
+    } catch { case _: Exception => null }
+    finally in.close()
+  }
+
+  private def copyRaster(img: BufferedImage): Pixels = {
     val w = img.getWidth
     val h = img.getHeight
-    val hasAlpha = img.getColorModel.hasAlpha
-    val channels = if (hasAlpha) 4 else 3
-    if (w <= 0 || h <= 0 || w.toLong * h * channels > Int.MaxValue) return null
-    val out = new Array[Byte](w * h * channels)
-    val row = new Array[Int](w)
-    var y = 0
-    while (y < h) {
-      img.getRGB(0, y, w, 1, row, 0, w)
-      var x = 0
-      while (x < w) {
-        val argb = row(x)
-        val d = (y * w + x) * channels
-        out(d) = ((argb >> 16) & 0xFF).toByte
-        out(d + 1) = ((argb >> 8) & 0xFF).toByte
-        out(d + 2) = (argb & 0xFF).toByte
-        if (hasAlpha) out(d + 3) = ((argb >>> 24) & 0xFF).toByte
-        x += 1
-      }
-      y += 1
+    img.getType match {
+      case BufferedImage.TYPE_3BYTE_BGR | BufferedImage.TYPE_4BYTE_ABGR |
+          BufferedImage.TYPE_BYTE_GRAY =>
+        // the raster's bands are R, G, B[, A] (or gray) whatever their
+        // byte order in the buffer; getDataElements returns band order
+        val raster = img.getRaster
+        Pixels(w, h, raster.getNumBands,
+          raster.getDataElements(0, 0, w, h, null).asInstanceOf[Array[Byte]])
+      case _ =>
+        val hasAlpha = img.getColorModel.hasAlpha
+        val channels = if (hasAlpha) 4 else 3
+        val out = new Array[Byte](w * h * channels)
+        val row = new Array[Int](w)
+        var y = 0
+        while (y < h) {
+          img.getRGB(0, y, w, 1, row, 0, w)
+          var x = 0
+          while (x < w) {
+            val argb = row(x)
+            val d = (y * w + x) * channels
+            out(d) = ((argb >> 16) & 0xFF).toByte
+            out(d + 1) = ((argb >> 8) & 0xFF).toByte
+            out(d + 2) = (argb & 0xFF).toByte
+            if (hasAlpha) out(d + 3) = ((argb >>> 24) & 0xFF).toByte
+            x += 1
+          }
+          y += 1
+        }
+        Pixels(w, h, channels, out)
     }
-    Pixels(w, h, channels, out)
   }
 
   // ---------------------------------------------------------------- WAV ----

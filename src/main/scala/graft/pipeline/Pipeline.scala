@@ -352,8 +352,8 @@ object Pipeline {
    * and restatable in plain SQL by any engine.
    *
    * Strata present in the data but absent from `targets` are dropped
-   * (target share 0). Only the per-stratum counts (bounded by the number of
-   * strata) ever reach the driver; the selection itself is one broadcast
+   * (target share 0). Only the targeted strata's counts (at most one row
+   * per target) reach the driver; the selection itself is one broadcast
    * join + filter, no shuffle of the corpus.
    *
    * `strataCol` may be any atomic type (int language codes, dates, …) —
@@ -371,22 +371,12 @@ object Pipeline {
       s"resampleToMix id column must be numeric (selection hash is " +
         s"integer arithmetic); got ${idType.simpleString}")
     // key strata by their string form so any atomic stratum type works.
+    // Only targeted strata are counted (the join below drops the rest), so
+    // the collect holds at most `targets.size` rows.
     val sKey = strataCol.cast("string")
-    // The collect is bounded by strata cardinality — small for every
-    // legitimate mixture — but a caller passing a high-cardinality column
-    // (a doc id, a timestamp) must fail LOUDLY, not materialize the
-    // column on the driver: same limit(max+1)-then-check idiom as
-    // StratifiedSampler's offset-strata guard. Legit mixes are far below
-    // the default; override for an unusual many-strata mix.
-    val maxStrata = spark.conf.get(
-      "spark.graft.resampleToMix.maxStrata", "10000").toInt
-    val counted = df.groupBy(sKey.as("__graft_s__")).count()
-      .limit(maxStrata + 1).collect()
-    require(counted.length <= maxStrata,
-      s"resampleToMix: more than $maxStrata distinct strata — the " +
-        "per-stratum count table must stay driver-small; pass a real " +
-        "mixture column (or raise spark.graft.resampleToMix.maxStrata)")
-    val counts = counted.map(r => r.getString(0) -> r.getLong(1)).toMap
+    val counts = df.filter(sKey.isin(targets.keys.toSeq: _*))
+      .groupBy(sKey.as("__graft_s__")).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     // raw weight / count — no normalization: it cancels in ratio/maxR, and
     // skipping it keeps the arithmetic bit-identical to a SQL restatement
     // (a float sum over a Map's iteration order is not reproducible)

@@ -246,24 +246,33 @@ class PipelineOpsSpec extends AnyFunSuite {
         col("lang_code"), col("sid"), intTargets)
     }
     assert(err.getMessage.contains("must be numeric"))
-    // a high-cardinality strata column (the id itself) must fail loudly
-    // instead of materializing the per-stratum count table on the driver
-    val prev = spark.conf.getOption("spark.graft.resampleToMix.maxStrata")
-    spark.conf.set("spark.graft.resampleToMix.maxStrata", "100")
-    try {
-      val card = intercept[IllegalArgumentException] {
-        Pipeline.resampleToMix(intDf, col("id"), col("id"),
-          Map("1" -> 1.0))
-      }
-      assert(card.getMessage.contains("distinct strata"))
-      // at-the-limit cardinality still works (the guard is max+1-then-check)
-      spark.conf.set("spark.graft.resampleToMix.maxStrata", "4")
-      assert(Pipeline.resampleToMix(intDf, col("lang_code"), col("id"),
-        intTargets).count() > 0)
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.graft.resampleToMix.maxStrata", p)
-      case None => spark.conf.unset("spark.graft.resampleToMix.maxStrata")
+  }
+
+  /** Plain-Scala restatement of resampleToMix over (id, stratum) rows:
+   * weight/count ratios of the targeted strata present, thresholds against
+   * the largest ratio, then Knuth's multiplicative hash of the id. */
+  private def mixOracle(rows: Seq[(Long, String)], targets: Map[String, Double]): Set[Long] = {
+    val counts = rows.groupBy(_._2).map { case (k, rs) => k -> rs.size.toLong }
+    val ratios = targets.collect { case (k, t) if counts.contains(k) => k -> t / counts(k) }
+    val maxR = ratios.values.max
+    val thr = ratios.map { case (k, r) => k -> math.floor(r / maxR * 4294967296.0).toLong }
+    def hash(id: Long): Long =
+      Math.floorMod(Math.floorMod(id, 2147483648L) * 2654435761L, 4294967296L)
+    rows.collect { case (id, s) if thr.get(s).exists(hash(id) < _) => id }.toSet
+  }
+
+  test("mixture rebalance: a high-cardinality strata column returns the hash-selection oracle's rows") {
+    import spark.implicits._
+    // the id itself as the strata column: one stratum per row, only the
+    // targeted ones are counted
+    val rows = (1L to 400L).map(i => i -> i.toString)
+    val df = rows.map(_._1).toDF("id")
+    for (targets <- Seq(Map("1" -> 1.0), Map("1" -> 1.0, "2" -> 1.0, "3" -> 0.5))) {
+      val got = Pipeline.resampleToMix(df, col("id"), col("id"), targets)
+        .select("id").collect().map(_.getLong(0)).toSet
+      assert(got === mixOracle(rows, targets), s"targets $targets")
     }
+    assert(mixOracle(rows, Map("1" -> 1.0)) === Set(1L))
   }
 
   test("sequence packing: contiguous offsets, in-bounds placement") {

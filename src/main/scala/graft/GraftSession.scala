@@ -560,6 +560,7 @@ class GraftSession(val spark: SparkSession) {
         state.topkPaths.put(name.toLowerCase, p)
         if (lockHeld) saveTopK(name, p)
         else GraftSession.withPathLock(spark, p)(saveTopK(name, p))
+        installTopkResync(st, p)
       }
     st
   }
@@ -809,33 +810,14 @@ class GraftSession(val spark: SparkSession) {
    * replaying the base table (counterpart of [[attachSampleTable]]): the
    * latest snapshot [[saveTopK]] published. */
   def attachTopKTable(name: String, path: String): graft.topk.TopKState = {
-    val snap = graft.store.TopkSnapshot.read(path, spark.sessionState.newHadoopConf())
-      .getOrElse(throw new IllegalArgumentException(s"No TopK store under $path"))
+    val snap = readTopkSnapshot(path)
     val header = snap.header
-    val opts = graft.topk.TopKOptions.fromOptions(
-      header.filterNot(_._1.startsWith("__")), GraftSession.sessionZone(spark))
     val keyType =
       if (header.get("__keytype").contains("string")) org.apache.spark.sql.types.StringType
       else org.apache.spark.sql.types.LongType
-    val st = new graft.topk.TopKState(name, opts, keyType)
-    val spillDir =
-      new org.apache.hadoop.fs.Path(path, GraftSession.TopkSpillDir).toString
-    st.stateLock.synchronized { st.buckets.restoreFrom(snap.buckets) }
-    st.restoreSpillView(spark, spillDir, snap.files, snap.spans)
-    header.get("__retired").foreach { enc =>
-      st.restoreRetired(enc.split('\n').toSeq.filter(_.nonEmpty).map { line =>
-        val sep = line.indexOf('|')
-        (line.take(sep).toLong, line.drop(sep + 1))
-      })
-    }
-    header.get("__streambatch").foreach { enc =>
-      st.restoreStreamBatches(enc.split('\n').toSeq.filter(_.nonEmpty).map {
-        line =>
-          val sep = line.lastIndexOf('|')
-          (line.take(sep), line.drop(sep + 1).toLong)
-      })
-    }
-    st.setSpillBase(spillDir)
+    val st = new graft.topk.TopKState(name, topkOptionsOf(header), keyType)
+    restoreTopK(st, path, snap)
+    installTopkResync(st, path)
     state.topks.put(name.toLowerCase, st)
     header.getOrElse("__base", "") match {
       case "" =>
@@ -845,6 +827,48 @@ class GraftSession(val spark: SparkSession) {
     refreshTopkView(st)
     st
   }
+
+  private def readTopkSnapshot(path: String): graft.store.TopkSnapshot.Snapshot =
+    graft.store.TopkSnapshot.read(path, spark.sessionState.newHadoopConf())
+      .getOrElse(throw new IllegalArgumentException(s"No TopK store under $path"))
+
+  private def topkOptionsOf(header: Map[String, String]): graft.topk.TopKOptions =
+    graft.topk.TopKOptions.fromOptions(
+      header.filterNot(_._1.startsWith("__")), GraftSession.sessionZone(spark))
+
+  /** Load one snapshot's counts, spill view, retirees and stream watermarks
+   * into `st` under one `stateLock` hold: a query never pairs one
+   * snapshot's buckets with another's spill view. */
+  private def restoreTopK(st: graft.topk.TopKState, path: String,
+      snap: graft.store.TopkSnapshot.Snapshot): Unit = {
+    val spillDir =
+      new org.apache.hadoop.fs.Path(path, GraftSession.TopkSpillDir).toString
+    def entries(key: String): Seq[String] =
+      snap.header.get(key).toSeq.flatMap(_.split('\n')).filter(_.nonEmpty)
+    st.stateLock.synchronized {
+      st.buckets.restoreFrom(snap.buckets)
+      st.restoreSpillView(spark, spillDir, snap.files, snap.spans)
+      st.restoreRetired(entries("__retired").map { line =>
+        val sep = line.indexOf('|')
+        (line.take(sep).toLong, line.drop(sep + 1))
+      })
+      st.restoreStreamBatches(entries("__streambatch").map { line =>
+        val sep = line.lastIndexOf('|')
+        (line.take(sep), line.drop(sep + 1).toLong)
+      })
+      st.setSpillBase(spillDir)
+    }
+  }
+
+  /** A path-backed table's queries re-read the store's latest snapshot when
+   * another session's compaction deleted a spill batch their view lists
+   * (`TopKState.readingSpill`); a snapshot that declares other options is
+   * not loaded. */
+  private def installTopkResync(st: graft.topk.TopKState, path: String): Unit =
+    st.setStoreResync { () =>
+      val snap = readTopkSnapshot(path)
+      topkOptionsOf(snap.header) == st.opts && { restoreTopK(st, path, snap); true }
+    }
 
   /** TopK structures are queryable as tables (`SELECT * FROM topkName` —
    * reference `TopKRelation.buildScan`, `sql/topk/TopKRelation.scala:59-86`)

@@ -248,6 +248,41 @@ final class TopKState(val name: String, val opts: TopKOptions, val keyType: Data
     }
   }
 
+  /** Re-reads this table's store into this state; false when the latest
+   * snapshot declares other options. Set for path-backed tables by
+   * [[graft.GraftSession]]. */
+  @volatile private var storeResync: Option[() => Boolean] = None
+  private[graft] def setStoreResync(f: () => Boolean): Unit = storeResync = Some(f)
+
+  /** Runs a query over this session's view of the spill store. On a shared
+   * path another session's compaction deletes the batches it replaced one
+   * publish after the snapshot that stopped listing them, so a view
+   * attached from an older snapshot can list a batch that is gone: the
+   * query then re-reads the store's latest snapshot and runs again. */
+  @annotation.tailrec
+  private def readingSpill[A](query: () => A, retries: Int = 3): A = {
+    val out =
+      try Right(query())
+      catch {
+        case scala.util.control.NonFatal(e)
+            if retries > 0 && storeResync.isDefined && spillBatchGone => Left(e)
+      }
+    out match {
+      case Right(a) => a
+      case Left(e) =>
+        if (!storeResync.get.apply()) throw e
+        readingSpill(query, retries - 1)
+    }
+  }
+
+  private def spillBatchGone: Boolean = {
+    val conf = sparkOrActive.sessionState.newHadoopConf()
+    spillView._1.exists { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      !p.getFileSystem(conf).exists(p)
+    }
+  }
+
   def spilledBucketCount: Int = spilledSpans.size
   def spillBatchCount: Int = spillFiles.size
 
@@ -504,8 +539,8 @@ final class TopKState(val name: String, val opts: TopKOptions, val keyType: Data
    * O(threshold·levels); spillMerged still reads the flat recorded list.
    * Sessions that attached an OLDER snapshot of a shared path may hold
    * references to deleted batches — their next append re-synchronizes
-   * through the snapshot under the path lock; a read in the window fails
-   * loudly (never silently wrong) and a fresh attach repairs it. */
+   * through the snapshot under the path lock, and a query that finds a
+   * batch gone re-reads the store's latest snapshot ([[readingSpill]]). */
   private[graft] var compactThreshold = 16 // var: tests shrink it to reach deep levels fast
   private def levelOf(path: String): Int = {
     val n = path.substring(path.lastIndexOf('/') + 1)
@@ -846,13 +881,14 @@ final class TopKState(val name: String, val opts: TopKOptions, val keyType: Data
    * [[rangeSnapshot]] acquisition; the spill merge job runs lock-free.
    * Combined-mode tables answer with the n̂-refined estimate while the
    * span is fully resident. */
-  def queryFrequency(key: Any, startMs: Long, endMs: Long): Option[(Long, Long, Long)] = {
-    val snap = rangeSnapshot(startMs, endMs, refineKey = Some(key))
-    snap.refinedKey match {
-      case some @ Some(_) => releaseReader(snap); some
-      case None => mergedAndCoveredFrom(snap)._1.map(_.estimate(key))
+  def queryFrequency(key: Any, startMs: Long, endMs: Long): Option[(Long, Long, Long)] =
+    readingSpill { () =>
+      val snap = rangeSnapshot(startMs, endMs, refineKey = Some(key))
+      snap.refinedKey match {
+        case some @ Some(_) => releaseReader(snap); some
+        case None => mergedAndCoveredFrom(snap)._1.map(_.estimate(key))
+      }
     }
-  }
 
   /** Top-k rows of the merged [startMs, endMs] range plus the actual
    * covered bucket span in epoch ms (for the SQL scan's
@@ -861,20 +897,22 @@ final class TopKState(val name: String, val opts: TopKOptions, val keyType: Data
    * runs lock-free. */
   def topKRows(startMs: Long, endMs: Long,
       k: Int): (Seq[(Any, Long, Long, Long)], Long, Long) = {
-    val snap = rangeSnapshot(startMs, endMs, refineTopK = k)
-    val (rows, covered, base) = snap.refinedRows match {
-      case Some(refined) =>
-        // combined-mode resident answer: candidate set from the merged
-        // resident sketch, every estimate n̂-refined per interval (upper
-        // is the unrefined compressed overestimate — genuinely above est)
-        releaseReader(snap)
-        (refined, snap.localCov, snap.epochBaseMs)
-      case None =>
-        val (merged, cov, b) = mergedAndCoveredFrom(snap)
-        // both families' point estimate IS the upper bound (CMS
-        // overestimate-only; Space-Saving count >= true)
-        (merged.map(_.topK(k).map { case (key, est, lo) => (key, est, lo, est) })
-          .getOrElse(Nil), cov, b)
+    val (rows, covered, base) = readingSpill { () =>
+      val snap = rangeSnapshot(startMs, endMs, refineTopK = k)
+      snap.refinedRows match {
+        case Some(refined) =>
+          // combined-mode resident answer: candidate set from the merged
+          // resident sketch, every estimate n̂-refined per interval (upper
+          // is the unrefined compressed overestimate — genuinely above est)
+          releaseReader(snap)
+          (refined, snap.localCov, snap.epochBaseMs)
+        case None =>
+          val (merged, cov, b) = mergedAndCoveredFrom(snap)
+          // both families' point estimate IS the upper bound (CMS
+          // overestimate-only; Space-Saving count >= true)
+          (merged.map(_.topK(k).map { case (key, est, lo) => (key, est, lo, est) })
+            .getOrElse(Nil), cov, b)
+      }
     }
     val (covS, covE) = covered
       .map { case (s, e) =>

@@ -1,40 +1,64 @@
 package graft
 
 import java.awt.image.BufferedImage
-import java.io.ByteArrayOutputStream
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import javax.imageio.{IIOImage, ImageIO, ImageTypeSpecifier, ImageWriteParam}
+import javax.imageio.metadata.IIOMetadataNode
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.multimodal.{Jpeg, PixelDecoder}
+import graft.multimodal.PixelDecoder
 
 /**
- * Pure-JVM baseline JPEG decoder vs the JDK's own codec AND vs the
- * pre-encode raster. JPEG decoding is not bit-exact across
- * implementations — T.81 bounds IDCT error rather than fixing it, and the
- * JDK reader uses triangle chroma upsampling where we use nearest, which
- * on a steep gradient legitimately differs by ~half the chroma step
- * between adjacent subsampled samples — so ImageIO comparisons branch
- * their tolerance on the stream's ACTUAL sampling factors (sniffed from
- * SOF), and absolute correctness is pinned against the original raster
- * on smooth content where JPEG loss is small. ImageIO's gray path is NOT
- * usable as a reference: `getRGB` on TYPE_BYTE_GRAY runs the linear-gray
- * → sRGB color transform, distorting raw sample values — gray compares
- * go against the raster directly.
+ * JPEG through `PixelDecoder.decode`, which hands every JPEG to the JDK's
+ * reader (`viaImageIO`). Two references: the JDK's own `ImageIO.read` +
+ * `getRGB` on the same bytes, which the decode must equal exactly (it pins
+ * the band-order raster copy), and the pre-encode raster, which the decode
+ * must approach within JPEG loss on smooth content. ImageIO's gray path is
+ * NOT usable as a reference: `getRGB` on TYPE_BYTE_GRAY runs the
+ * linear-gray → sRGB color transform, distorting raw sample values — gray
+ * compares go against the raster directly.
  */
 class JpegSpec extends AnyFunSuite {
 
-  private def encode(img: BufferedImage, quality: Float): Array[Byte] = {
-    val w = javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
+  private def writeJpeg(img: BufferedImage, quality: Float, progressive: Boolean,
+      restartInterval: Int): Array[Byte] = {
+    val w = ImageIO.getImageWritersByFormatName("jpeg").next()
     val p = w.getDefaultWriteParam
-    p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+    p.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
     p.setCompressionQuality(quality)
+    if (progressive) p.setProgressiveMode(ImageWriteParam.MODE_DEFAULT)
+    val meta =
+      if (restartInterval <= 0) null
+      else {
+        // a DRI segment, so the scans hold RSTn markers every `interval` MCUs
+        val m = w.getDefaultImageMetadata(ImageTypeSpecifier.createFromRenderedImage(img), p)
+        val fmt = "javax_imageio_jpeg_image_1.0"
+        val tree = m.getAsTree(fmt).asInstanceOf[org.w3c.dom.Element]
+        val seq = tree.getElementsByTagName("markerSequence").item(0)
+        val dri = new IIOMetadataNode("dri")
+        dri.setAttribute("interval", restartInterval.toString)
+        seq.insertBefore(dri, seq.getFirstChild)
+        m.setFromTree(fmt, tree)
+        m
+      }
     val bos = new ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+    val ios = ImageIO.createImageOutputStream(bos)
     w.setOutput(ios)
-    w.write(null, new javax.imageio.IIOImage(img, null, null), p)
+    w.write(null, new IIOImage(img, null, meta), p)
     ios.close(); w.dispose()
     bos.toByteArray
   }
+
+  private def encode(img: BufferedImage, quality: Float): Array[Byte] =
+    writeJpeg(img, quality, progressive = false, restartInterval = 0)
+
+  private def encodeProgressive(img: BufferedImage, quality: Float): Array[Byte] =
+    writeJpeg(img, quality, progressive = true, restartInterval = 0)
+
+  private def encodeWithDri(img: BufferedImage, interval: Int,
+      progressive: Boolean = false): Array[Byte] =
+    writeJpeg(img, 0.9f, progressive, interval)
 
   private def gradient(w: Int, h: Int): BufferedImage = {
     val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
@@ -47,122 +71,18 @@ class JpegSpec extends AnyFunSuite {
     img
   }
 
-  /** first component's h<<4|v from the SOF0 segment (0x11 = no chroma
-    * subsampling; 0x22 = 4:2:0) */
-  private def sofSampling(bytes: Array[Byte]): Int = {
-    var i = 2
-    while (i + 3 < bytes.length) {
-      val m = bytes(i + 1) & 0xFF
-      if (bytes(i) == 0xFF.toByte && (m == 0xC0 || m == 0xC1 || m == 0xC2))
-        return bytes(i + 4 + 7) & 0xFF
-      if (bytes(i) == 0xFF.toByte && m != 0xD8 && !(m >= 0xD0 && m <= 0xD7))
-        i += 2 + (((bytes(i + 2) & 0xFF) << 8) | (bytes(i + 3) & 0xFF))
-      else i += 2
-    }
-    -1
+  private def noise(rnd: scala.util.Random, w: Int, h: Int): BufferedImage = {
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rnd.nextInt() & 0xFFFFFF)
+    img
   }
 
-  /** (max, mean) per-sample abs diff of our decode vs ImageIO's (RGB) */
-  private def diffVsImageIO(bytes: Array[Byte]): (Int, Double) = {
-    val mine = Jpeg.decode(bytes)
-    assert(mine != null, "baseline stream must decode pure-JVM")
-    val ref = PixelDecoder.viaImageIO(bytes)
-    assert(mine.width === ref.width && mine.height === ref.height)
-    var maxD = 0
-    var sum = 0L
-    var n = 0
-    for (y <- 0 until ref.height; x <- 0 until ref.width; c <- 0 until 3) {
-      val m =
-        if (mine.channels == 1) mine.data(y * mine.width + x) & 0xFF
-        else mine.data((y * mine.width + x) * mine.channels + c) & 0xFF
-      val r = ref.data((y * ref.width + x) * ref.channels + c) & 0xFF
-      val d = math.abs(m - r)
-      if (d > maxD) maxD = d
-      sum += d
-      n += 1
-    }
-    (maxD, sum.toDouble / n)
-  }
-
-  /** (max, mean) per-sample abs diff of our decode vs the ORIGINAL raster */
-  private def diffVsOriginal(bytes: Array[Byte], img: BufferedImage): (Int, Double) = {
-    val mine = Jpeg.decode(bytes)
-    assert(mine != null && mine.width === img.getWidth && mine.height === img.getHeight)
-    var maxD = 0
-    var sum = 0L
-    var n = 0
-    for (y <- 0 until mine.height; x <- 0 until mine.width; c <- 0 until 3) {
-      val m = mine.data((y * mine.width + x) * mine.channels +
-        (if (mine.channels == 1) 0 else c)) & 0xFF
-      val o = (img.getRGB(x, y) >> ((2 - c) * 8)) & 0xFF
-      val d = math.abs(m - o)
-      if (d > maxD) maxD = d
-      sum += d
-      n += 1
-    }
-    (maxD, sum.toDouble / n)
-  }
-
-  test("gradient: matches ImageIO within sampling-aware bounds, original within loss") {
-    for (q <- Seq(0.97f, 0.8f, 0.5f)) {
-      val img = gradient(64, 48)
-      val bytes = encode(img, q)
-      val fac = sofSampling(bytes)
-      val (maxD, meanD) = diffVsImageIO(bytes)
-      // 4:4:4: only IDCT/rounding differences; subsampled: + nearest-vs-
-      // triangle upsampling, bounded by ~half the chroma step per chroma
-      // sample on this gradient (255 * 2 / 64 ≈ 8 chroma units → ~14 RGB)
-      val (maxTol, meanTol) = if (fac == 0x11) (3, 1.0) else (16, 2.5)
-      assert(maxD <= maxTol, s"q=$q fac=$fac max per-sample diff $maxD")
-      assert(meanD <= meanTol, s"q=$q fac=$fac mean per-sample diff $meanD")
-      // absolute pin: smooth content at q>=0.5 stays close to the source
-      val (maxO, meanO) = diffVsOriginal(bytes, img)
-      assert(maxO <= 24 && meanO <= 4.0,
-        s"q=$q decode strays from the original: max $maxO mean $meanO")
-    }
-  }
-
-  test("uniform color decodes to (almost) exactly that color") {
-    val img = new BufferedImage(40, 24, BufferedImage.TYPE_INT_RGB)
-    val g2 = img.createGraphics()
-    g2.setColor(new java.awt.Color(180, 90, 40))
-    g2.fillRect(0, 0, 40, 24)
-    g2.dispose()
-    val p = Jpeg.decode(encode(img, 0.9f))
-    assert(p != null && p.channels === 3 && p.width === 40 && p.height === 24)
-    for (i <- 0 until p.width * p.height) {
-      assert(math.abs((p.data(i * 3) & 0xFF) - 180) <= 3, "R")
-      assert(math.abs((p.data(i * 3 + 1) & 0xFF) - 90) <= 3, "G")
-      assert(math.abs((p.data(i * 3 + 2) & 0xFF) - 40) <= 3, "B")
-    }
-  }
-
-  test("grayscale JPEG decodes raw samples to one channel") {
-    // write the RASTER directly: setRGB/getRGB on TYPE_BYTE_GRAY apply the
-    // gray<->sRGB color transform and would distort the reference values
+  /** 33x17 gray ramp written through the raster: setRGB on TYPE_BYTE_GRAY
+   * would apply the sRGB → linear-gray transform to the samples. */
+  private def grayRamp(): BufferedImage = {
     val img = new BufferedImage(33, 17, BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    for (y <- 0 until 17; x <- 0 until 33)
-      raster.setSample(x, y, 0, (x * 255) / 32)
-    val bytes = encode(img, 0.95f)
-    val p = Jpeg.decode(bytes)
-    assert(p != null && p.channels === 1 && p.width === 33 && p.height === 17)
-    var maxD = 0
-    for (y <- 0 until 17; x <- 0 until 33) {
-      val d = math.abs((p.data(y * 33 + x) & 0xFF) - (x * 255) / 32)
-      if (d > maxD) maxD = d
-    }
-    assert(maxD <= 6, s"gray max diff vs source raster $maxD")
-  }
-
-  test("non-baseline and non-JPEG inputs return null (fallback contract)") {
-    assert(Jpeg.decode(null) === null)
-    assert(Jpeg.decode(Array[Byte](1, 2, 3, 4)) === null)
-    // truncated baseline stream: must not throw, must not loop
-    val bytes = encode(gradient(16, 16), 0.9f)
-    assert(Jpeg.decode(java.util.Arrays.copyOf(bytes, 10)) === null)
-    // PixelDecoder dispatch still answers (pure-JVM or fallback)
-    assert(PixelDecoder.decode(bytes) != null)
+    for (y <- 0 until 17; x <- 0 until 33) img.getRaster.setSample(x, y, 0, (x * 255) / 32)
+    img
   }
 
   private def findMarker(b: Array[Byte], marker: Int): Int = {
@@ -177,156 +97,9 @@ class JpegSpec extends AnyFunSuite {
     -1
   }
 
-  test("grayscale scan is non-interleaved whatever the declared sampling factors") {
-    // T.81 A.2: a one-component scan has one data unit per MCU; the frame
-    // header's factors only govern multi-component interleave. A declared
-    // 2x2 on a gray frame is semantically inert — patched bytes must
-    // decode IDENTICALLY to the original, not to 4x-geometry garbage
-    val img = new BufferedImage(33, 17, BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    for (y <- 0 until 17; x <- 0 until 33)
-      raster.setSample(x, y, 0, (x * 255) / 32)
-    val bytes = encode(img, 0.95f)
-    val sof = findMarker(bytes, 0xC0)
-    assert(sof > 0 && (bytes(sof + 4 + 7) & 0xFF) == 0x11)
-    val p0 = Jpeg.decode(bytes)
-    val patched = bytes.clone()
-    patched(sof + 4 + 7) = 0x22.toByte
-    val p1 = Jpeg.decode(patched)
-    assert(p1 != null && p1.width === 33 && p1.height === 17)
-    assert(java.util.Arrays.equals(p0.data, p1.data),
-      "declared gray sampling factors must not change the decode")
-  }
-
-  private def encodeWithDri(img: BufferedImage, interval: Int,
-      progressive: Boolean = false): Array[Byte] = {
-    val w = javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
-    val p = w.getDefaultWriteParam
-    p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-    p.setCompressionQuality(0.9f)
-    if (progressive)
-      p.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
-    val spec = javax.imageio.ImageTypeSpecifier.createFromRenderedImage(img)
-    val meta = w.getDefaultImageMetadata(spec, p)
-    val fmt = "javax_imageio_jpeg_image_1.0"
-    val tree = meta.getAsTree(fmt).asInstanceOf[org.w3c.dom.Element]
-    val seq = tree.getElementsByTagName("markerSequence").item(0)
-    val dri = new javax.imageio.metadata.IIOMetadataNode("dri")
-    dri.setAttribute("interval", interval.toString)
-    seq.insertBefore(dri, seq.getFirstChild)
-    meta.setFromTree(fmt, tree)
-    val bos = new ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    w.setOutput(ios)
-    w.write(null, new javax.imageio.IIOImage(img, null, meta), p)
-    ios.close(); w.dispose()
-    bos.toByteArray
-  }
-
-  test("restart markers (DRI) decode within the usual tolerance") {
-    val bytes = encodeWithDri(gradient(48, 32), 2)
-    assert(findMarker(bytes, 0xDD) > 0, "stream must actually carry a DRI segment")
-    assert(bytes.sliding(2).exists(s => s(0) == 0xFF.toByte &&
-      (s(1) & 0xFF) >= 0xD0 && (s(1) & 0xFF) <= 0xD7),
-      "stream must actually carry RSTn markers")
-    val (maxD, meanD) = diffVsImageIO(bytes)
-    val tol = if (sofSampling(bytes) == 0x11) 4 else 16
-    assert(maxD <= tol && meanD <= 2.5,
-      s"restart stream diverges: max $maxD mean $meanD")
-  }
-
-  test("out-of-sequence restart marker falls back instead of decoding garbage") {
-    // E.1.4: RSTn sequence numbers cycle D0..D7. A dropped or duplicated
-    // marker (here simulated by renumbering one) means the decoder's MCU
-    // counter and the stream's interval boundary disagree — the pure-JVM
-    // path must REFUSE (return null, routing to ImageIO) rather than
-    // resync blindly and emit plausible-looking misaligned blocks.
-    val bytes = encodeWithDri(gradient(48, 32), 2)
-    val sos = findMarker(bytes, 0xDA)
-    assert(sos > 0)
-    var i = sos
-    var rst = -1
-    while (rst < 0 && i + 1 < bytes.length) {
-      if (bytes(i) == 0xFF.toByte &&
-        (bytes(i + 1) & 0xFF) >= 0xD0 && (bytes(i + 1) & 0xFF) <= 0xD7) rst = i
-      i += 1
-    }
-    assert(rst > 0, "stream must actually carry RSTn markers")
-    val corrupted = bytes.clone()
-    val n = corrupted(rst + 1) & 0x07
-    corrupted(rst + 1) = (0xD0 + ((n + 3) & 7)).toByte // still a valid RSTn, wrong seq
-    assert(Jpeg.decode(bytes) != null, "uncorrupted stream must decode")
-    assert(Jpeg.decode(corrupted) == null,
-      "renumbered restart marker must fall back, not decode misaligned MCUs")
-  }
-
-  test("fill bytes before a marker stay on the pure-JVM path") {
-    val bytes = encode(gradient(16, 16), 0.9f)
-    val sos = findMarker(bytes, 0xDA)
-    assert(sos > 0)
-    val padded = new Array[Byte](bytes.length + 1)
-    System.arraycopy(bytes, 0, padded, 0, sos)
-    padded(sos) = 0xFF.toByte // legal fill byte before the SOS marker
-    System.arraycopy(bytes, sos, padded, sos + 1, bytes.length - sos)
-    val p0 = Jpeg.decode(bytes)
-    val p1 = Jpeg.decode(padded)
-    assert(p1 != null, "fill byte must not knock the stream to the fallback")
-    assert(java.util.Arrays.equals(p0.data, p1.data))
-  }
-
-  test("crafted huge-dimension headers reject fast instead of allocating") {
-    val bytes = encode(gradient(16, 16), 0.9f)
-    val sof = findMarker(bytes, 0xC0)
-    val patched = bytes.clone()
-    // height/width -> 46000x46000: would be ~6 GB of planes
-    patched(sof + 5) = 0xB3.toByte; patched(sof + 6) = 0xB0.toByte
-    patched(sof + 7) = 0xB3.toByte; patched(sof + 8) = 0xB0.toByte
-    val t0 = System.nanoTime()
-    assert(Jpeg.decode(patched) === null)
-    assert((System.nanoTime() - t0) / 1e9 < 2.0, "must reject before decoding")
-  }
-
-  test("noise fuzz: random rasters at random sizes/qualities decode sanely") {
-    // white noise maximizes AC energy — long Huffman codes, ZRL runs, EOB
-    // at every position. Structure must be exact; color fidelity is
-    // compared against the JDK decoding the same bytes, branched on the
-    // sampling mode (subsampled noise maximizes nearest-vs-triangle
-    // divergence, so only the mean is bounded there).
-    val rnd = new scala.util.Random(20260814L)
-    (1 to 8).foreach { i =>
-      val w = 1 + rnd.nextInt(70)
-      val h = 1 + rnd.nextInt(70)
-      val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rnd.nextInt() & 0xFFFFFF)
-      val q = 0.3f + rnd.nextFloat() * 0.65f
-      val bytes = encode(img, q)
-      val mine = Jpeg.decode(bytes)
-      assert(mine != null && mine.width === w && mine.height === h,
-        s"fuzz $i ${w}x$h q=$q")
-      val (maxD, meanD) = diffVsImageIO(bytes)
-      if (sofSampling(bytes) == 0x11) {
-        assert(maxD <= 4, s"fuzz $i ${w}x$h q=$q 4:4:4 max diff $maxD")
-      } else {
-        assert(meanD <= 16.0, s"fuzz $i ${w}x$h q=$q subsampled mean diff $meanD")
-      }
-    }
-  }
-
-  // ---------------------------------------------------- progressive (SOF2) ----
-
-  private def encodeProgressive(img: BufferedImage, quality: Float): Array[Byte] = {
-    val w = javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
-    val p = w.getDefaultWriteParam
-    p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-    p.setCompressionQuality(quality)
-    p.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
-    val bos = new ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    w.setOutput(ios)
-    w.write(null, new javax.imageio.IIOImage(img, null, null), p)
-    ios.close(); w.dispose()
-    bos.toByteArray
-  }
+  private def hasRestartMarkers(b: Array[Byte]): Boolean =
+    b.sliding(2).exists(s => s(0) == 0xFF.toByte &&
+      (s(1) & 0xFF) >= 0xD0 && (s(1) & 0xFF) <= 0xD7)
 
   /** (ss, se, ah, al) of every SOS in the stream — proves which progressive
    * features (spectral bands, successive approximation, refinements) a
@@ -353,6 +126,148 @@ class JpegSpec extends AnyFunSuite {
     out.toSeq
   }
 
+  /** Asserts the RGB decode has the exact size and equals what
+   * `ImageIO.read(bytes).getRGB` yields for the same bytes, sample for sample. */
+  private def assertMatchesImageIO(bytes: Array[Byte], w: Int, h: Int, ctx: String): Unit = {
+    val p = PixelDecoder.decode(bytes)
+    assert(p != null && p.width == w && p.height == h && p.channels == 3 &&
+      p.data.length == w * h * 3, s"$ctx: decode shape")
+    val ref = ImageIO.read(new ByteArrayInputStream(bytes))
+    for (y <- 0 until h; x <- 0 until w; c <- 0 until 3) {
+      val want = (ref.getRGB(x, y) >> ((2 - c) * 8)) & 0xFF
+      val got = p.data((y * w + x) * 3 + c) & 0xFF
+      assert(got == want, s"$ctx: sample ($x,$y,$c) is $got, ImageIO reads $want")
+    }
+  }
+
+  /** (max, mean) per-sample abs diff of the RGB decode vs the ORIGINAL raster */
+  private def diffVsOriginal(bytes: Array[Byte], img: BufferedImage): (Int, Double) = {
+    val p = PixelDecoder.decode(bytes)
+    assert(p != null && p.channels == 3 && p.width == img.getWidth && p.height == img.getHeight)
+    var maxD = 0
+    var sum = 0L
+    for (y <- 0 until p.height; x <- 0 until p.width; c <- 0 until 3) {
+      val d = math.abs((p.data((y * p.width + x) * 3 + c) & 0xFF) -
+        ((img.getRGB(x, y) >> ((2 - c) * 8)) & 0xFF))
+      maxD = math.max(maxD, d)
+      sum += d
+    }
+    (maxD, sum.toDouble / (p.width * p.height * 3))
+  }
+
+  /** Max abs diff of a one-channel decode from the gray ramp it was encoded from. */
+  private def grayDiffVsRamp(bytes: Array[Byte]): Int = {
+    val p = PixelDecoder.decode(bytes)
+    assert(p != null && p.channels == 1 && p.width == 33 && p.height == 17)
+    (for (y <- 0 until 17; x <- 0 until 33)
+      yield math.abs((p.data(y * 33 + x) & 0xFF) - (x * 255) / 32)).max
+  }
+
+  test("gradient: matches ImageIO within sampling-aware bounds, original within loss") {
+    for (q <- Seq(0.97f, 0.8f, 0.5f)) {
+      val img = gradient(64, 48)
+      val bytes = encode(img, q)
+      assert(findMarker(bytes, 0xC0) > 0, "writer must emit SOF0")
+      assertMatchesImageIO(bytes, 64, 48, s"q=$q")
+      // absolute pin: smooth content at q>=0.5 stays close to the source
+      val (maxO, meanO) = diffVsOriginal(bytes, img)
+      assert(maxO <= 24 && meanO <= 4.0,
+        s"q=$q decode strays from the original: max $maxO mean $meanO")
+    }
+  }
+
+  test("uniform color decodes to (almost) exactly that color") {
+    val img = new BufferedImage(40, 24, BufferedImage.TYPE_INT_RGB)
+    val g2 = img.createGraphics()
+    g2.setColor(new java.awt.Color(180, 90, 40))
+    g2.fillRect(0, 0, 40, 24)
+    g2.dispose()
+    val p = PixelDecoder.decode(encode(img, 0.9f))
+    assert(p != null && p.channels == 3 && p.width == 40 && p.height == 24)
+    for (i <- 0 until p.width * p.height; (want, c) <- Seq(180, 90, 40).zipWithIndex)
+      assert(math.abs((p.data(i * 3 + c) & 0xFF) - want) <= 3, s"pixel $i channel $c")
+  }
+
+  test("grayscale JPEG decodes raw samples to one channel") {
+    val maxD = grayDiffVsRamp(encode(grayRamp(), 0.95f))
+    assert(maxD <= 6, s"gray max diff vs source raster $maxD")
+  }
+
+  test("non-baseline and non-JPEG inputs return null (fallback contract)") {
+    assert(PixelDecoder.decode(null) == null)
+    assert(PixelDecoder.decode(Array[Byte](1, 2, 3, 4)) == null)
+    // a JPEG signature over junk: no reader takes it
+    val notJpeg = Array[Byte](0xFF.toByte, 0xD8.toByte) ++ Array.fill[Byte](40)(0x42)
+    assert(PixelDecoder.decode(notJpeg) == null)
+    // cut in the header, or right before the first scan: nothing to decode
+    val bytes = encode(gradient(16, 16), 0.9f)
+    for (cut <- Seq(10, findMarker(bytes, 0xDA)))
+      assert(PixelDecoder.decode(java.util.Arrays.copyOf(bytes, cut)) == null, s"cut $cut")
+    assert(PixelDecoder.decode(bytes) != null)
+  }
+
+  test("grayscale scan is non-interleaved whatever the declared sampling factors") {
+    // T.81 A.2: a one-component scan has one data unit per MCU; the frame
+    // header's factors only govern multi-component interleave. A declared
+    // 2x2 on a gray frame is semantically inert — patched bytes must
+    // decode IDENTICALLY to the original
+    val bytes = encode(grayRamp(), 0.95f)
+    val sof = findMarker(bytes, 0xC0)
+    assert(sof > 0 && (bytes(sof + 4 + 7) & 0xFF) == 0x11)
+    val p0 = PixelDecoder.decode(bytes)
+    val patched = bytes.clone()
+    patched(sof + 4 + 7) = 0x22.toByte
+    val p1 = PixelDecoder.decode(patched)
+    assert(p1 != null && p1.channels == 1 && p1.width == 33 && p1.height == 17)
+    assert(java.util.Arrays.equals(p0.data, p1.data),
+      "declared gray sampling factors must not change the decode")
+  }
+
+  test("restart markers (DRI) decode within the usual tolerance") {
+    val img = gradient(48, 32)
+    val bytes = encodeWithDri(img, 2)
+    assert(findMarker(bytes, 0xDD) > 0, "stream must actually carry a DRI segment")
+    assert(hasRestartMarkers(bytes), "stream must actually carry RSTn markers")
+    assertMatchesImageIO(bytes, 48, 32, "restart stream")
+    val (maxO, meanO) = diffVsOriginal(bytes, img)
+    assert(maxO <= 24 && meanO <= 4.0, s"restart stream strays: max $maxO mean $meanO")
+  }
+
+  test("crafted huge-dimension headers reject fast instead of allocating") {
+    val bytes = encode(gradient(16, 16), 0.9f)
+    val sof = findMarker(bytes, 0xC0)
+    val patched = bytes.clone()
+    // height/width -> 46000x46000: ~8 GB of RGBA raster
+    patched(sof + 5) = 0xB3.toByte; patched(sof + 6) = 0xB0.toByte
+    patched(sof + 7) = 0xB3.toByte; patched(sof + 8) = 0xB0.toByte
+    val t0 = System.nanoTime()
+    val p = try PixelDecoder.decode(patched)
+      catch { case e: Throwable => fail(s"decode threw $e") }
+    assert(p == null)
+    assert((System.nanoTime() - t0) / 1e9 < 2.0, "must reject before decoding")
+  }
+
+  test("noise fuzz: random rasters at random sizes/qualities decode sanely") {
+    // white noise maximizes AC energy — long Huffman codes, ZRL runs, EOB
+    // at every position. Structure must be exact and the raster must be
+    // the JDK's own read of the same bytes.
+    val rnd = new scala.util.Random(20260814L)
+    (1 to 8).foreach { i =>
+      val w = 1 + rnd.nextInt(70)
+      val h = 1 + rnd.nextInt(70)
+      val img = noise(rnd, w, h)
+      val q = 0.3f + rnd.nextFloat() * 0.65f
+      assertMatchesImageIO(encode(img, q), w, h, s"fuzz $i ${w}x$h q=$q")
+    }
+  }
+
+  test("odd dimensions (partial edge MCUs) decode with exact dims") {
+    for ((w, h) <- Seq((1, 1), (7, 5), (17, 9), (9, 17)))
+      assertMatchesImageIO(encode(gradient(w, h), 0.8f), w, h, s"dims ${w}x$h")
+  }
+
+  // ---------------------------------------------------- progressive (SOF2) ----
+
   test("progressive gradient: SOF2 decodes pure-JVM within the usual bounds") {
     for (q <- Seq(0.97f, 0.8f, 0.5f)) {
       val img = gradient(64, 48)
@@ -363,11 +278,7 @@ class JpegSpec extends AnyFunSuite {
       assert(scans.exists(s => s._1 > 0), s"no AC scan found: $scans")
       assert(scans.exists(s => s._3 > 0),
         s"fixture never exercises refinement scans (Ah>0): $scans")
-      val fac = sofSampling(bytes)
-      val (maxD, meanD) = diffVsImageIO(bytes)
-      val (maxTol, meanTol) = if (fac == 0x11) (3, 1.0) else (16, 2.5)
-      assert(maxD <= maxTol, s"q=$q fac=$fac max per-sample diff $maxD")
-      assert(meanD <= meanTol, s"q=$q fac=$fac mean per-sample diff $meanD")
+      assertMatchesImageIO(bytes, 64, 48, s"progressive q=$q")
       val (maxO, meanO) = diffVsOriginal(bytes, img)
       assert(maxO <= 24 && meanO <= 4.0,
         s"q=$q progressive decode strays from the original: max $maxO mean $meanO")
@@ -375,19 +286,9 @@ class JpegSpec extends AnyFunSuite {
   }
 
   test("progressive grayscale decodes raw samples to one channel") {
-    val img = new BufferedImage(33, 17, BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    for (y <- 0 until 17; x <- 0 until 33)
-      raster.setSample(x, y, 0, (x * 255) / 32)
-    val bytes = encodeProgressive(img, 0.95f)
+    val bytes = encodeProgressive(grayRamp(), 0.95f)
     assert(findMarker(bytes, 0xC2) > 0)
-    val p = Jpeg.decode(bytes)
-    assert(p != null && p.channels === 1 && p.width === 33 && p.height === 17)
-    var maxD = 0
-    for (y <- 0 until 17; x <- 0 until 33) {
-      val d = math.abs((p.data(y * 33 + x) & 0xFF) - (x * 255) / 32)
-      if (d > maxD) maxD = d
-    }
+    val maxD = grayDiffVsRamp(bytes)
     assert(maxD <= 6, s"progressive gray max diff vs source raster $maxD")
   }
 
@@ -398,34 +299,23 @@ class JpegSpec extends AnyFunSuite {
     (1 to 8).foreach { i =>
       val w = 1 + rnd.nextInt(70)
       val h = 1 + rnd.nextInt(70)
-      val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rnd.nextInt() & 0xFFFFFF)
+      val img = noise(rnd, w, h)
       val q = 0.3f + rnd.nextFloat() * 0.65f
       val bytes = encodeProgressive(img, q)
       assert(findMarker(bytes, 0xC2) > 0, s"fuzz $i not progressive")
-      val mine = Jpeg.decode(bytes)
-      assert(mine != null && mine.width === w && mine.height === h,
-        s"fuzz $i ${w}x$h q=$q")
-      val (maxD, meanD) = diffVsImageIO(bytes)
-      if (sofSampling(bytes) == 0x11) {
-        assert(maxD <= 4, s"fuzz $i ${w}x$h q=$q 4:4:4 max diff $maxD")
-      } else {
-        assert(meanD <= 16.0, s"fuzz $i ${w}x$h q=$q subsampled mean diff $meanD")
-      }
+      assertMatchesImageIO(bytes, w, h, s"fuzz $i ${w}x$h q=$q")
     }
   }
 
   test("progressive mid-frame DQT redefinition cannot rewrite decoded scans") {
-    // T.81 allows DQT between scans; libjpeg latches each component's
-    // quant table at that component's FIRST scan, so a later redefinition
-    // only affects later-STARTING components — never already-coded data.
-    // Dequantizing from the EOI-time DQT state instead silently rescales
-    // every block. Pin the latch by splicing a hostile table-0
-    // redefinition just before EOI: the output must be bit-identical to
-    // the unspliced stream.
+    // T.81 allows DQT between scans; each component's quant table is
+    // latched at that component's FIRST scan, so a later redefinition only
+    // affects later-STARTING components — never already-coded data. Splice
+    // a hostile table-0 redefinition just before EOI: the output must be
+    // bit-identical to the unspliced stream.
     val bytes = encodeProgressive(gradient(40, 24), 0.85f)
     assert(findMarker(bytes, 0xC2) > 0)
-    val want = Jpeg.decode(bytes)
+    val want = PixelDecoder.decode(bytes)
     assert(want != null)
     // FFDB, len 67, PqTq=0x00 (8-bit, table 0), 64 entries of 255 — an
     // extreme table so any EOI-time dequantize visibly corrupts pixels
@@ -433,72 +323,36 @@ class JpegSpec extends AnyFunSuite {
       Array.fill[Byte](64)(0xFF.toByte)
     val eoi = bytes.length - 2
     assert(bytes(eoi) == 0xFF.toByte && (bytes(eoi + 1) & 0xFF) == 0xD9)
-    val spliced = bytes.take(eoi) ++ dqt ++ bytes.drop(eoi)
-    val got = Jpeg.decode(spliced)
+    val got = PixelDecoder.decode(bytes.take(eoi) ++ dqt ++ bytes.drop(eoi))
     assert(got != null, "DQT-before-EOI is legal; must still decode")
-    assert(got.width === want.width && got.height === want.height &&
-      got.channels === want.channels)
+    assert(got.width == want.width && got.height == want.height &&
+      got.channels == want.channels)
     assert(java.util.Arrays.equals(got.data, want.data),
       "a post-scan DQT redefinition must be inert for decoded components")
   }
 
   test("progressive with restart markers decodes; truncation returns null or partial") {
-    val bytes = encodeWithDri(gradient(48, 32), 2, progressive = true)
+    val img = gradient(48, 32)
+    val bytes = encodeWithDri(img, 2, progressive = true)
     assert(findMarker(bytes, 0xC2) > 0 && findMarker(bytes, 0xDD) > 0)
-    if (bytes.sliding(2).exists(s => s(0) == 0xFF.toByte &&
-      (s(1) & 0xFF) >= 0xD0 && (s(1) & 0xFF) <= 0xD7)) {
-      val (maxD, meanD) = diffVsImageIO(bytes)
-      val tol = if (sofSampling(bytes) == 0x11) 4 else 16
-      assert(maxD <= tol && meanD <= 2.5,
-        s"progressive restart stream diverges: max $maxD mean $meanD")
-    }
-    // truncated mid-stream: must terminate without throwing or looping
-    assert(Jpeg.decode(java.util.Arrays.copyOf(bytes, bytes.length / 3)) === null)
+    assert(hasRestartMarkers(bytes), "stream must actually carry RSTn markers")
+    assertMatchesImageIO(bytes, 48, 32, "progressive restart stream")
+    val (maxO, meanO) = diffVsOriginal(bytes, img)
+    assert(maxO <= 24 && meanO <= 4.0,
+      s"progressive restart stream strays: max $maxO mean $meanO")
+    // truncated mid-stream: must terminate without throwing; the JDK reader
+    // returns what the scans before the cut hold (a progressive stream's
+    // first scans are a whole, coarser image), so a partial keeps the frame
+    val part = PixelDecoder.decode(java.util.Arrays.copyOf(bytes, bytes.length / 3))
+    assert(part == null || (part.width == 48 && part.height == 32),
+      "a partial decode keeps the frame size")
   }
 
   test("progressive odd dimensions decode with exact dims") {
     for ((w, h) <- Seq((1, 1), (7, 5), (17, 9), (9, 17))) {
-      val img = gradient(w, h)
-      val bytes = encodeProgressive(img, 0.8f)
+      val bytes = encodeProgressive(gradient(w, h), 0.8f)
       assert(findMarker(bytes, 0xC2) > 0)
-      val p = Jpeg.decode(bytes)
-      assert(p != null && p.width === w && p.height === h, s"dims ${w}x$h")
-      val ref = PixelDecoder.viaImageIO(bytes)
-      var mineSum = 0L
-      var refSum = 0L
-      for (y <- 0 until h; x <- 0 until w; c <- 0 until 3) {
-        val o = (img.getRGB(x, y) >> ((2 - c) * 8)) & 0xFF
-        mineSum += math.abs((p.data((y * w + x) * 3 + c) & 0xFF) - o)
-        refSum += math.abs((ref.data((y * w + x) * ref.channels + c) & 0xFF) - o)
-      }
-      val n = w * h * 3
-      assert(mineSum.toDouble / n <= refSum.toDouble / n + 4.0,
-        s"${w}x$h progressive strays further from source than ImageIO")
-    }
-  }
-
-  test("odd dimensions (partial edge MCUs) decode with exact dims") {
-    for ((w, h) <- Seq((1, 1), (7, 5), (17, 9), (9, 17))) {
-      val img = gradient(w, h)
-      val bytes = encode(img, 0.8f)
-      val p = Jpeg.decode(bytes)
-      assert(p != null && p.width === w && p.height === h, s"dims ${w}x$h")
-      // tiny steep gradients maximize nearest-vs-triangle divergence, so a
-      // direct decoder-vs-decoder bound conflates policy with bugs; the
-      // honest check is that our decode approximates the SOURCE no worse
-      // than the JDK's does (both decode the same lossy bytes)
-      val ref = PixelDecoder.viaImageIO(bytes)
-      var mineSum = 0L
-      var refSum = 0L
-      for (y <- 0 until h; x <- 0 until w; c <- 0 until 3) {
-        val o = (img.getRGB(x, y) >> ((2 - c) * 8)) & 0xFF
-        mineSum += math.abs((p.data((y * w + x) * 3 + c) & 0xFF) - o)
-        refSum += math.abs((ref.data((y * w + x) * ref.channels + c) & 0xFF) - o)
-      }
-      val n = w * h * 3
-      assert(mineSum.toDouble / n <= refSum.toDouble / n + 4.0,
-        s"${w}x$h: our decode strays further from the source than ImageIO " +
-          s"(${mineSum.toDouble / n} vs ${refSum.toDouble / n})")
+      assertMatchesImageIO(bytes, w, h, s"progressive dims ${w}x$h")
     }
   }
 }

@@ -159,4 +159,35 @@ class TopKSpillLayoutSpec extends AnyFunSuite {
       spark.catalog.dropTempView("tk_spillfail_base")
     }
   }
+
+  test("a reader whose spill batches another session compacted away re-reads the store") {
+    val gw = new GraftSession(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft_tk_resync").toString + "/tk"
+    create(gw, "tk_resync", dir)
+    val sr = spark.newSession()
+    val gr = new GraftSession(sr)
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    try {
+      (1 to 2).foreach(b => gw.appendToTopK("tk_resync", events((2 + 2 * b) until (4 + 2 * b))))
+      val seen = gr.attachTopKTable("tk_resync", dir).spillView._1
+      assert(seen.nonEmpty, "the reader's view lists spill batches")
+      // the writer appends until a level compaction has replaced the
+      // reader's batches and a later publish has deleted them
+      var minutes = 8
+      while (seen.forall(b => fs.exists(new Path(b))) && minutes < 60) {
+        gw.appendToTopK("tk_resync", events(minutes until minutes + 2))
+        minutes += 2
+      }
+      assert(!seen.forall(b => fs.exists(new Path(b))),
+        "the writer's compaction deleted a batch the reader lists")
+      assert(gr.queryFrequency("tk_resync", "u2") === Some((3L * minutes, 3L * minutes, 3L * minutes)),
+        "the reader answers from the store's latest snapshot")
+      assert(topK(gr, "tk_resync", 0 until minutes) === expected(minutes))
+      assert(topK(gr, "tk_resync", 0 until 4) === expected(4), "spilled history")
+    } finally {
+      GraftState.of(sr).topks.remove("tk_resync")
+      gw.sql("DROP TOPK TABLE tk_resync")
+      spark.catalog.dropTempView("tk_resync_base")
+    }
+  }
 }
